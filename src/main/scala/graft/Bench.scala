@@ -30,18 +30,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the test layout is one FILE per table, so scan parallelism comes
-      // entirely from row-group split points; the 128 MB default made
-      // every first stage of a 30× run 1-4 tasks on 32 cores
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
+    val cpus = spark.sparkContext.defaultParallelism
     // Session-wide memoization of the shared interaction-log subtree
     // (the reference memoizes its derived dicts the same way, S2).
     // CacheManager substitutes the persisted plan into every query that

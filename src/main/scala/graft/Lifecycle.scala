@@ -322,12 +322,7 @@ object Lifecycle {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val epochs = args.lift(1).map(_.toInt).getOrElse(3)
     val workDir = java.nio.file.Files.createTempDirectory("lifecycle").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     (1 to epochs).foreach(e => runEpoch(spark, sfDir, workDir, e))
     bestEpochs(spark, workDir).show(50, false)

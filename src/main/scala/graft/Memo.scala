@@ -32,6 +32,9 @@ import scala.collection.mutable
   *    rebuild on next use — correctness is untouched because consumers
   *    always re-fetch through `cached`, never hold released references.
   *
+  * The regime-gate counts (corpus size, eval-set sizes, hot-user share)
+  * live here too, as 8-byte `cachedObj` entries.
+  *
   * Builds run under the registry lock: delta-based RDD attribution is only
   * sound when builds don't interleave (a concurrent build's persist would
   * land in the wrong entry's delta and a later eviction could unpersist a

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only profiler: time named queries (all if none given) against a
   * scale dir, optionally dumping the formatted physical plan first.
   *
@@ -12,15 +10,7 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val explain = args.contains("explain")
     val names = args.drop(1).filterNot(_ == "explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Bench: single-file tables split at row-group boundaries
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     // Spark job counter (r15, VERDICT r14 #3): the ~0.4s floor under the
     // sub-second queries is 1-3 driver job round-trips each — per-query
@@ -79,91 +69,14 @@ object Profile {
         time(s"dev:ndverify_$mode", ext.SimilarityQueries.verifiedNearDup(
           spark, sfDir,
           ext.SimilarityQueries.nearDupCandidates(spark, sfDir, mode)))
-      // digest-input shape A/B (r11): the fused multi-epoch digest fold
-      // fed from the PACKED negatives cache (explode on read) vs the
-      // long-form table (the r10 shape). Fixed /tmp dirs so repeats in
-      // one JVM are read-only; 'rm -rf /tmp/negprobe_*' to rebuild.
-      case s"dev:dig_$shape" if shape == "packed" || shape == "long" =>
-        import org.apache.spark.sql.functions.{col, lit}
-        val packed = etl.SplitCache.writeOnce(spark,
-          etl.Splits.negativeSampleScalablePackedFrom(
-            etl.Splits.rankedFrom(etl.Interactions(spark, sfDir))),
-          s"/tmp/negprobe_packed_${sfDir.replaceAll("[^a-z0-9]", "_")}")
-        val negs =
-          if (shape == "packed") etl.Splits.explodeNegatives(packed)
-          else etl.SplitCache.writeOnce(spark,
-            etl.Splits.explodeNegatives(packed),
-            s"/tmp/negprobe_long_${sfDir.replaceAll("[^a-z0-9]", "_")}")
-        val cands = negs.select(col("user_id"), col("domain"),
-          col("item_id"), lit(0).as("is_positive"))
-        time(s"dev:dig_$shape", rank.Metrics.posRanksDigestMultiFrom(
-          Lifecycle.epochScores(cands, 1 to 3), kMax = 10))
-      // cooc_repart vs cooc_base: the unconfounded pair-kernel A/B —
-      // IDENTICAL prune + collect + cap + positional-explode chain
-      // (no memo, no persist, no count-gate joins on either arm); the
-      // only difference is the explicit repartition on the pair key
-      // before the count agg (skipping the map-side combine over
-      // ~ΣC(d,2) mostly-unique keys) vs the shipped partial-agg shape.
-      // Run both twice in one JVM, take the second of each.
-      case s"dev:cooc_$arm" if arm == "repart" || arm == "base" =>
-        import org.apache.spark.sql.functions._
-        val i = etl.Interactions.cached(spark, sfDir)
-          .filter(col("domain") === "x").select("user_id", "item_id")
-        val keep = i.groupBy("item_id").agg(count(lit(1)).as("n"))
-          .filter(col("n") >= 3).select("item_id")
-        val pruned = i.join(keep, Seq("item_id"), "left_semi")
-        val lists = pruned
-          .groupBy("user_id")
-          .agg(collect_list(struct(
-            graft.Hashing.h60(col("item_id"), lit("cooc")).as("h"),
-            col("item_id").as("it"))).as("hs"))
-          .withColumn("items", expr(
-            "array_sort(transform(slice(array_sort(hs), 1, 500), s -> s.it))"))
-          .filter(size(col("items")) >= 2)
-        val pairs = lists
-          .select(explode(expr(
-            """flatten(transform(items, (x, ix) ->
-              |  transform(slice(items, ix + 2, size(items) - ix - 1),
-              |            y -> named_struct('a', x, 'b', y))))""".stripMargin))
-            .as("p"))
-          .select(col("p.a").as("item_a"), col("p.b").as("item_b"))
-        val shaped =
-          if (arm == "repart") pairs.repartition(col("item_a"), col("item_b"))
-          else pairs
-        time(s"dev:cooc_$arm", shaped
-          .groupBy("item_a", "item_b").agg(count(lit(1)).as("c_ab"))
-          .filter(col("c_ab") >= 3))
-      // past-ceiling twins of the three embedding-exact operators:
-      // maxBroadcast=0 forces the LSH-banded candidate branch a 100 TB
-      // corpus would take, so its cost is measurable on the scale dirs
       // triangle pair-kernel subtree (r15): the explode chain is inside an
       // eager builder, so q_triangles' own explain shows only the final
       // LocalTableScan — this probe explains/times the pair relation itself
       case "dev:tri_pairs" =>
         time("dev:tri_pairs", ext.GraphQueries.trianglePairs(spark, sfDir))
-      // the r14 collect_set shape of the same subtree, kept inline for the
-      // unconfounded bounded-vs-collect_set A/B (plan + warm timing in one
-      // JVM) — per-hub aggregation state is O(distinct suppliers) here,
-      // O(TriCap) in the shipped kernel above
-      case "dev:tri_pairs_cs" =>
-        import org.apache.spark.sql.functions._
-        time("dev:tri_pairs_cs", Tables.orders(spark, sfDir)
-          .join(Tables.lineitem(spark, sfDir),
-            col("l_orderkey") === col("o_orderkey"))
-          .select(col("o_custkey").as("c"),
-            graft.Hashing.h60(col("o_custkey"), col("l_suppkey")).as("h"),
-            col("l_suppkey").as("s"))
-          .groupBy("c")
-          .agg(collect_set(struct(col("h"), col("s"))).as("hs"))
-          .withColumn("ss", expr("array_sort(transform(slice(array_sort(hs)" +
-            s", 1, ${ext.GraphQueries.TriCap}), x -> x.s))"))
-          .filter(size(col("ss")) >= 2)
-          .select(explode(expr(
-            """flatten(transform(ss, (x, ix) ->
-              |  transform(slice(ss, ix + 2, size(ss) - ix - 1),
-              |            y -> named_struct('u', x, 'v', y))))""".stripMargin))
-            .as("p"))
-          .select(col("p.u").as("u"), col("p.v").as("v")).distinct())
+      // past-ceiling twins of the three embedding-exact operators:
+      // maxBroadcast=0 forces the LSH-banded candidate branch a 100 TB
+      // corpus would take, so its cost is measurable on the scale dirs
       case "dev:embed_pc" =>
         time("dev:embed_pc",
           ext.SimilarityQueries.embedNearDup(spark, sfDir, maxBroadcast = 0))
@@ -173,59 +86,6 @@ object Profile {
       case "dev:decontam_pc" =>
         time("dev:decontam_pc",
           ext.SimilarityQueries.semanticDecontam(spark, sfDir, maxBroadcast = 0))
-      // ngram-dedup stage probes: shingle hashing alone, then the
-      // bucket/candidate stage alone (collect_list buckets + pair explode)
-      case "dev:ngram_sh" =>
-        time("dev:ngram_sh", ext.TextOps.wordShingleHashes(spark, sfDir, 4))
-      case "dev:ngram_df_nocoal" =>
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        time("dev:ngram_df_nocoal", {
-          import org.apache.spark.sql.functions._
-          ext.TextOps.wordShingleHashes(spark, sfDir, 4)
-            .groupBy("sh").agg(count(lit(1)).as("df"))
-            .filter(col("df") >= 2 && col("df") <= 5)
-            .select("sh")
-        })
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      case "dev:ngram_df" =>
-        time("dev:ngram_df", {
-          import org.apache.spark.sql.functions._
-          ext.TextOps.wordShingleHashes(spark, sfDir, 4)
-            .groupBy("sh").agg(count(lit(1)).as("df"))
-            .filter(col("df") >= 2 && col("df") <= 5)
-            .select("sh")
-        })
-      case "dev:ngram_buckets" =>
-        time("dev:ngram_buckets", {
-          import org.apache.spark.sql.functions._
-          val sh = ext.TextOps.wordShingleHashes(spark, sfDir, 4)
-          val rare = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-            .filter(col("df") >= 2 && col("df") <= 5)
-            .select("sh")
-          sh.join(rare, "sh")
-            .groupBy("sh").agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        })
-      case "dev:ngram_sets" =>
-        time("dev:ngram_sets", {
-          import org.apache.spark.sql.functions._
-          ext.TextOps.wordShingleHashes(spark, sfDir, 4)
-            .groupBy("doc_id")
-            .agg(sort_array(collect_list(col("sh"))).as("shs"))
-        })
-      case "dev:ngram_cand" =>
-        time("dev:ngram_cand", {
-          import org.apache.spark.sql.functions._
-          val sh = ext.TextOps.wordShingleHashes(spark, sfDir, 4)
-          val rare = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-            .filter(col("df") >= 2 && col("df") <= 5)
-            .select("sh")
-          sh.join(rare, "sh")
-            .groupBy("sh").agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-            .select(explode(col("ds")).as("doc_a"), col("ds"))
-            .select(col("doc_a"), explode(col("ds")).as("doc_b"))
-            .filter(col("doc_a") < col("doc_b"))
-            .distinct()
-        })
       case name =>
         time(name, SparkEntry.defs(name).build(spark, sfDir))
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only recall probe for the LSH-banded embedding-dedup path
   * (VERDICT r9 #6): on a neardup-mutated scale dir (ScaleGen plants
   * in-capacity replicas at E[cos]≈0.69 and sibling pairs straddling the
@@ -32,18 +30,12 @@ object RecallProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1nd")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession(
       // the --planted mass metric rides an observe() node under the
       // hits join; a runtime row-level filter injected below it would
       // silently undercount the candidate mass
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled",
-        "false")
-      .getOrCreate()
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false",
+      "spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

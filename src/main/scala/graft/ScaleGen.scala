@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale amplifier: writes an N× copy of a test-data dir by
@@ -125,14 +125,10 @@ object ScaleGen {
     val modes = args.drop(3).toSet
     val zipf = modes.contains("zipf")
     val neardup = modes.contains("neardup")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the raw spark.read.parquet copies below bypass Tables' loaders, so
+    // a TIMESTAMP(NANOS) events.ts (which Spark 4 rejects) is read as
+    // int64 nanos and copied as such; Tables.events converts on load
+    val spark = LocalSession("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     val OFF = 10000000L
     // mirror the driver layout: each table is a single FILE named

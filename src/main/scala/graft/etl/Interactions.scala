@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,20 +35,18 @@ object Interactions {
     */
   val HOT_USER_SHARE_MAX = 0.02
 
-  private val hotShare =
-    scala.collection.concurrent.TrieMap.empty[String, Double]
-
   /** Largest single-user share of the orders fact — ONE tiny two-level
-    * aggregate (map-side combinable, 1-row result), memoized per sfDir.
+    * aggregate (map-side combinable, 1-row result), memoized in [[Memo]].
     */
   private def maxUserShare(spark: SparkSession, sfDir: String): Double =
-    hotShare.getOrElseUpdate(sfDir, {
+    Memo.cachedObj(spark, sfDir, "etl.hotUserShare",
+        (_: java.lang.Double) => 8L) {
       val r = Tables.orders(spark, sfDir)
         .groupBy("o_custkey").agg(count(lit(1)).as("n"))
         .agg(max("n").as("mx"), sum("n").as("tot")).head()
-      if (r.isNullAt(1) || r.getLong(1) == 0L) 0.0
-      else r.getLong(0).toDouble / r.getLong(1)
-    })
+      Double.box(if (r.isNullAt(1) || r.getLong(1) == 0L) 0.0
+        else r.getLong(0).toDouble / r.getLong(1))
+    }
 
   /** Long-form distinct (user_id, item_id, domain).
     *

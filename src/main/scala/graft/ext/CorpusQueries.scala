@@ -41,8 +41,6 @@ object CorpusQueries {
     * is not.
     */
   private val BLOOM_FPP = 0.01
-  private val evalCount =
-    new scala.collection.concurrent.TrieMap[String, Long]
 
   /** PSI buckets: fixed domain 0..15 over n_chars div 64 (capped), so
     * the bucket space is scale-independent and add-1 smoothing has a
@@ -119,9 +117,7 @@ object CorpusQueries {
     //      size measured ~2× slower, see SCALING.md) while
     //      mightContainLong compiles into the train scan's
     //      WholeStageCodegen span instead of the r9 interpreted per-row
-    //      Scala UDF; PlanAuditSpec asserts the plan is UDF-free.
-    //      (BloomProbe — Spark's BloomFilterMightContain over a literal —
-    //      remains the small-filter/SQL-text variant.) ----
+    //      Scala UDF; PlanAuditSpec asserts the plan is UDF-free. ----
     "q_decontaminate_bloom" -> QueryDef(
       s"""WITH ${TextOps.duckWordShingleHashesCte(5)},
          |ev AS (SELECT DISTINCT sh FROM shingles WHERE doc_id % 7 = 0),
@@ -141,28 +137,22 @@ object CorpusQueries {
       // 5-gram shingles for this corpus (≤ ~n_chars/6 − 4 ≈ 130/doc),
       // which only widens the bit array — false-positive rate can only
       // improve, and the confirm join keeps the output exact regardless
-      val nEvDocs = evalCount.getOrElseUpdate(d,
-        graft.Tables.documents(spark, d)
+      val nEvDocs: Long = graft.Memo.cachedObj(spark, d,
+          "corpus.evalDocCount", (_: java.lang.Long) => 8L) {
+        Long.box(graft.Tables.documents(spark, d)
           .filter(col("doc_id") % 7 === 0).count())
+      }
       val nEvEst = math.max(nEvDocs * 256L, 1L)
       // native codegen probe over a BROADCAST filter (r10, see
       // BloomBcProbe's scaladoc for the measured literal-vs-broadcast
       // story); r11: filter build + broadcast memoized per
       // (SparkContext, sfDir) — a long-lived session rebuilding this
       // query otherwise leaks one ~8 MB broadcast (and one full
-      // eval-side scan) per rebuild. SPARK_GRAFT_BLOOM_UDF=1 is the
-      // dev-only A/B switch back to the r9 broadcast+ScalaUDF probe so
-      // the comparison in SCALING.md is measurable at the same commit
-      // (never set by harnesses)
-      val probe =
-        if (sys.env.contains("SPARK_GRAFT_BLOOM_UDF")) {
-          val bloom = ev.stat.bloomFilter("sh", nEvEst, BLOOM_FPP)
-          val bc = spark.sparkContext.broadcast(bloom)
-          udf((x: Long) => bc.value.mightContainLong(x)).apply(col("sh"))
-        } else graft.functions.BloomBcProbe.cachedColumn(spark,
-          s"decontaminate_bloom:$d", col("sh")) {
-          ev.stat.bloomFilter("sh", nEvEst, BLOOM_FPP)
-        }
+      // eval-side scan) per rebuild
+      val probe = graft.functions.BloomBcProbe.cachedColumn(spark,
+        s"decontaminate_bloom:$d", col("sh")) {
+        ev.stat.bloomFilter("sh", nEvEst, BLOOM_FPP)
+      }
       val tr = sh.filter(col("doc_id") % 7 =!= 0)
       val totals = tr.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
       val evSmall = nEvEst <= TextQueries.EVAL_BROADCAST_MAX

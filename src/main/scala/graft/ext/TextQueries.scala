@@ -101,12 +101,6 @@ object TextQueries {
     */
   val EVAL_BROADCAST_MAX: Long = 20000000L
 
-  /** Memoized eval-shingle counts per scale dir (one count job ever per
-    * dir — the tables are immutable for a session).
-    */
-  private val evalShingleCount =
-    new scala.collection.concurrent.TrieMap[String, Long]
-
   /** Fixed query-term set for q_text_bm25 (mid-frequency corpus terms). */
   private val bm25Terms = Seq("spark", "hash", "merge", "scan")
   private val BmK1 = "1.2"
@@ -319,8 +313,9 @@ object TextQueries {
       // persist()ing ev: a persist inside a lazily-returned plan can
       // never be unpersisted by this builder and would squat in executor
       // storage for the rest of the session (the r4 cache-pressure class)
-      val evSmall = evalShingleCount.getOrElseUpdate(d, ev.count()) <=
-        EVAL_BROADCAST_MAX
+      val nEv: Long = graft.Memo.cachedObj(spark, d,
+        "text.evalShingleCount", (_: java.lang.Long) => 8L)(Long.box(ev.count()))
+      val evSmall = nEv <= EVAL_BROADCAST_MAX
       val joined = sh.filter(col("doc_id") % 10 =!= 0)
         .join(if (evSmall) broadcast(ev) else ev, Seq("sh"), "left")
       joined

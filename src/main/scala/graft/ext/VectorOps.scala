@@ -98,13 +98,16 @@ object VectorOps {
     */
   val CORPUS_BROADCAST_MAX: Long = 10000000L
 
-  /** Corpus row count, memoized per scale dir — four similarity queries
-    * would otherwise each launch an identical count job per build (the
-    * test tables are immutable for a session; a changed dir means a new
-    * path and therefore a new cache key).
+  /** Corpus row count, memoized in [[graft.Memo]] — four similarity
+    * queries would otherwise each launch an identical count job per build
+    * (the test tables are immutable for a session; a changed dir means a
+    * new path and therefore a new cache key).
     */
   def corpusSize(spark: SparkSession, sfDir: String): Long =
-    sizeCache.getOrElseUpdate(sfDir, Tables.embeddings(spark, sfDir).count())
+    graft.Memo.cachedObj(spark, sfDir, "sim.corpusSize",
+        (_: java.lang.Long) => 8L) {
+      Long.box(Tables.embeddings(spark, sfDir).count())
+    }
 
   // ---- auto-scale ANN dials ------------------------------------------
   // The broadcast-vs-join switch already keys off corpusSize; the SAME
@@ -181,9 +184,6 @@ object VectorOps {
     ks.map(k => s"WHEN $nExpr <= ${k.toLong * k} THEN $k")
       .mkString("CASE ", " ", s" ELSE $IVF_MAX_K END")
   }
-
-  private val sizeCache =
-    new scala.collection.concurrent.TrieMap[String, Long]
 
   /** Pair cosines, choosing the formulation by corpus size: broadcast
     * fast path under [[CORPUS_BROADCAST_MAX]] vectors, distributed join

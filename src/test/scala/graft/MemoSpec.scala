@@ -150,6 +150,24 @@ class MemoSpec extends SparkSpec {
     Memo.release(spark, d)
   }
 
+  test("regime-gate counts are Memo entries: built once, dropped by release") {
+    val d = java.nio.file.Files.createTempDirectory("memospec_gate").toString
+    spark.range(7).toDF("vec_id").write.parquet(s"$d/embeddings.parquet")
+    val entry = s"$d:sim.corpusSize"
+    def builds = Memo.telemetry(spark).collectFirst {
+      case (n, _, b) if n == entry => b
+    }.getOrElse(0)
+    assert(ext.VectorOps.corpusSize(spark, d) == 7L)
+    assert(ext.VectorOps.corpusSize(spark, d) == 7L)
+    assert(builds == 1, "the second call reuses the entry")
+    assert(Memo.entries(spark).contains(entry))
+    Memo.release(spark, d)
+    assert(!Memo.entries(spark).contains(entry))
+    assert(ext.VectorOps.corpusSize(spark, d) == 7L)
+    assert(builds == 2, "the call after release rebuilds")
+    Memo.release(spark, d)
+  }
+
   test("release is scoped: other sfDirs and sessions are untouched") {
     val d1 = freshDir("s1"); val d2 = freshDir("s2")
     val a = Memo.cached(spark, d1, "m")(spark.range(10).toDF("id").persist())

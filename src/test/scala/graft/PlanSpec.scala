@@ -385,4 +385,9 @@ class PlanSpec extends SparkSpec {
       s"moment row must broadcast:\n$p")
     assert(!p.contains("SortMergeJoin"), s"scalar join degenerated:\n$p")
   }
+
+  test("the spec session carries the factory's 16 MB file splits") {
+    assert(spark.conf.get("spark.sql.files.maxPartitionBytes") ==
+      s"${16 * 1024 * 1024}")
+  }
 }

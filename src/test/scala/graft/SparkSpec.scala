@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite; small local[4]
-  * pools keep the test JVM light).
+/** Shared local SparkSession for specs, built by [[LocalSession]] so the
+  * specs run under the same config as Bench and Verify.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -15,16 +15,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = LocalSession(
       // bucketed-table specs saveAsTable; keep the warehouse out of the
       // repo working tree
-      .config("spark.sql.warehouse.dir",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
