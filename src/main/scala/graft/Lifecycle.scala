@@ -1,9 +1,11 @@
 package graft
 
-import graft.etl.{Interactions, MetricsSink, SplitCache, Splits}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.etl.{MetricsSink, SplitCache}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** The reference's flagship lifecycle (SURVEY.md §3 E1, main_my.py) as
   * one composed engine run:
@@ -26,120 +28,129 @@ object Lifecycle {
   private def timed[A](stage: String)(body: => A): A =
     StageTiming.timed(s"lifecycle/$stage")(body)
 
-  /** One epoch: score candidates (epoch-salted), compute ranking metrics,
-    * append them to the log. Returns this epoch's metrics.
-    */
-  def runEpoch(spark: SparkSession, sfDir: String, workDir: String,
-      epoch: Int): DataFrame = {
-    val (splits, negatives, _) = timed(s"e$epoch cachedPipeline") {
-      SplitCache.cachedPipeline(spark, sfDir, s"$workDir/cache") }
-    // candidates come from the MEMOIZED negatives scan — epochs must not
-    // re-run the sampler (that is the point of the S2 cache)
-    runEpochOn(epochRanks(candidatesFrom(splits, negatives), epoch),
-      workDir, epoch)
-  }
-
-  /** The candidate relation an epoch scores: sampled negatives plus the
-    * held-out positives, from the S2-cached splits/negatives tables.
-    */
-  def candidatesFrom(splits: DataFrame, negatives: DataFrame): DataFrame =
-    negatives
-      .select(col("user_id"), col("domain"), col("item_id"), lit(0).as("is_positive"))
-      .unionAll(splits.select(col("user_id"), col("domain"),
-        col("test_item").as("item_id"), lit(1).as("is_positive")))
-
-  /** The epoch loop over a MULTI-EPOCH run: the candidate relation is
-    * loop-invariant (only the scoring salt changes — retraining swaps
-    * weights, not the eval set), so ALL epochs' bounded-digest rank
-    * passes fuse into ONE scan of the S2 cache: every epoch's salted
-    * score is a codegen'd column of one `scores` array, and
-    * `posRanksDigestMultiFrom` builds every epoch's TopBuf digest in
-    * the same partial pass (the r6 fused-build pattern, applied to the
-    * epoch loop). The dominant per-epoch cost at the 100× probe was the
-    * fixed input decode + typed-boundary price of a digest pass
-    * (~24s/epoch, md5 itself ~2s), paid for identical bytes each epoch;
-    * fusing pays it once, and the shuffle stays digest-bounded.
+  /** The epoch loop: every epoch's positive ranks straight from the
+    * S2 cache's PACKED negatives ([[packedRanks]]), all epochs' HR/NDCG/
+    * MRR\@K in ONE aggregate keyed by epoch, then one append to the
+    * metrics log per epoch. The candidate set is loop-invariant (only
+    * the scoring salt changes — retraining swaps weights, not the eval
+    * set), so one scan of the cache serves every epoch, and each rank
+    * is computed in the partition that read its row: the digest pass's
+    * |candidates|-row shuffle is gone, and what the aggregate exchanges
+    * is one partial row per (epoch, domain, k) per partition.
+    *
+    * This is NOT the rejected r6 "per-user array packing": that variant
+    * BUILT the arrays with a collect_list shuffle (169s at the 100× dir)
+    * and ranked them in an interpreted higher-order lambda with md5
+    * outside codegen (50-70s/epoch). Here the arrays already sit on disk
+    * (the cache has stored negatives packed since r11) and the rank loop
+    * is the sampler's own compiled `mapPartitions` md5 loop.
     *
     * Probed-and-rejected alternatives at the 100× dir, all epochs
     * included: per-epoch count-of-beats join — one full candidate-set
     * shuffle per epoch, 92s+29s+27s; persisting the widened candidates
     * across the loop — 480M-row cache thrashed the storage tier;
-    * per-user array packing — the epoch pass became an interpreted
-    * higher-order lambda (md5 outside codegen), 50-70s/epoch plus a
-    * 169s collect_list build.
+    * explode → union → per-epoch salted scores → one fused multi-epoch
+    * TopBuf digest pass — paid a |candidates|-row typed digest pass and
+    * shuffle plus a persist for ranks this loop computes in place.
     *
-    * Metrics still append strictly in epoch order, so the metrics log
-    * is byte-identical to the sequential loop (main_my.py:302-320), and
-    * MetricsSpec's multi ≡ single digest equality plus LifecycleSpec's
-    * end-to-end gate keep the q_lifecycle oracle hash unchanged.
-    * Single-epoch callers keep the one-score digest [[runEpoch]] path.
+    * Metrics still append strictly in epoch order, one append per epoch,
+    * so the log holds exactly what the sequential loop wrote
+    * (main_my.py:302-320); LifecycleSpec proves each epoch's packed
+    * ranks equal the single-epoch [[graft.rank.Metrics.posRanksDigestFrom]]
+    * ranks, and each epoch's log rows the metrics over those ranks.
     */
   def runEpochs(spark: SparkSession, sfDir: String, workDir: String,
       epochs: Seq[Int]): Unit = {
     val (splits, negatives, _) = timed("cachedPipeline") {
       SplitCache.cachedPipeline(spark, sfDir, s"$workDir/cache") }
-    val ranksAll = timed("fused digest ranks") {
-      val r = graft.rank.Metrics.posRanksDigestMultiFrom(
-        epochScores(candidatesFrom(splits, negatives), epochs), kMax = 10)
-        .persist()
-      r.count() // materialize under the timer (the relation is ~|users|·|epochs| rows)
-      r
+    val metrics = timed("ranks+metrics") {
+      graft.rank.Metrics.rankingMetricsFromRanks(
+        packedRanks(splits, negatives, epochs, kMax = 10), Seq(5, 10),
+        by = Seq("eix")).collect()
     }
-    try epochs.zipWithIndex.foreach { case (e, i) =>
-      runEpochOn(ranksAll.filter(col("eix") === i).drop("eix"), workDir, e)
-    } finally ranksAll.unpersist(blocking = false)
+    epochs.zipWithIndex.foreach { case (e, i) =>
+      // row layout (eix, domain, k, n_users, hr, ndcg, mrr) → the log's
+      // (domain, k, n_users, hr, ndcg, mrr, epoch)
+      val rows = metrics.filter(_.getInt(0) == i)
+        .map(r => Row.fromSeq(r.toSeq.tail :+ e)).toSeq
+      timed(s"e$e append") {
+        MetricsSink.appendParquet(
+          spark.createDataFrame(rows.asJava, MetricsLogSchema),
+          s"$workDir/metrics_log")
+      }
+    }
   }
 
-  /** Candidates widened with one salted score PER EPOCH as a `scores`
-    * array — the input [[runEpochs]] feeds the fused multi-digest pass.
+  /** The metrics log's schema: what [[runEpochs]] appends and what
+    * [[bestEpochs]] reads back without a footer-inference job.
     */
-  def epochScores(cands: DataFrame, epochs: Seq[Int]): DataFrame =
-    cands.select(col("user_id"), col("domain"), col("item_id"),
-      col("is_positive"),
-      array(epochs.map(e =>
-        Hashing.h60(col("user_id"), col("item_id"), col("domain"),
-          lit(s"epoch$e")) % 1000000L): _*).as("scores"))
+  val MetricsLogSchema: StructType = StructType(Seq(
+    StructField("domain", StringType), StructField("k", IntegerType),
+    StructField("n_users", LongType), StructField("hr", DoubleType),
+    StructField("ndcg", DoubleType), StructField("mrr", DoubleType),
+    StructField("epoch", IntegerType)))
 
-  /** The positive's rank per (user, domain) via the bounded TopBuf
-    * digest (≤⅓ shuffle bytes — DigestShuffleSpec; rn=0 means below
-    * kMax, which every @K≤kMax metric treats as out of range). The
-    * single-epoch [[runEpoch]] path; MetricsSpec proves the fused
-    * multi-epoch digest agrees with it per epoch.
+  /** The positive's rank per (user, domain, epoch index `eix`) from the
+    * PACKED negatives (`user_id, domain, items`) joined to the splits'
+    * `test_item`. One compiled loop per row scores the positive and each
+    * negative with the epoch-salted `h60(user, item, domain, epoch<e>)
+    * mod 1e6` — streamed md5 over `"<u>:" + item + ":<d>:epoch<e>"`,
+    * exactly [[Hashing.h60]]'s bytes — and counts the negatives that
+    * beat the positive in [[graft.rank.TopBuf]]'s order (score desc,
+    * then item asc), stopping at `kMax`. rn = beats + 1, or 0 when the
+    * positive falls below `kMax` — the [[graft.rank.Metrics.posRanksDigestFrom]]
+    * contract, without the digest shuffle.
     */
-  def epochRanks(cands: DataFrame, epoch: Int): DataFrame = {
-    val scored = cands
-      .select(col("user_id"), col("domain"), col("item_id"),
-        col("is_positive"),
-        (Hashing.h60(col("user_id"), col("item_id"), col("domain"),
-          lit(s"epoch$epoch")) % 1000000L).as("score"))
-    graft.rank.Metrics.posRanksDigestFrom(scored, kMax = 10)
-  }
-
-  private def runEpochOn(ranks: DataFrame, workDir: String,
-      epoch: Int): DataFrame = {
-    val metrics = graft.rank.Metrics
-      .rankingMetricsFromRanks(ranks, Seq(5, 10))
-      .withColumn("epoch", lit(epoch))
-    timed(s"e$epoch metrics+append") {
-      MetricsSink.appendParquet(metrics, s"$workDir/metrics_log") }
-    metrics
+  def packedRanks(splits: DataFrame, packedNegatives: DataFrame,
+      epochs: Seq[Int], kMax: Int): DataFrame = {
+    val spark = splits.sparkSession
+    import spark.implicits._
+    val salts = epochs.map(e => s"epoch$e").toArray
+    packedNegatives
+      .join(splits.select("user_id", "domain", "test_item"),
+        Seq("user_id", "domain"))
+      .select(col("user_id"), col("domain"), col("test_item"), col("items"))
+      .as[(Long, String, Long, Array[Long])]
+      .mapPartitions { it =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        val utf8 = java.nio.charset.StandardCharsets.UTF_8
+        it.flatMap { case (u, dom, pos, items) =>
+          val prefix = s"$u:".getBytes(utf8)
+          val posMid = pos.toString
+          val negMids = items.map(_.toString)
+          Iterator.tabulate(salts.length) { e =>
+            val suffix = s":$dom:${salts(e)}".getBytes(utf8)
+            val ps = Hashing.h60JvmParts(md, prefix, posMid, suffix) % 1000000L
+            var beats = 0
+            var j = 0
+            while (j < items.length && beats < kMax) {
+              val s = Hashing.h60JvmParts(md, prefix, negMids(j), suffix) % 1000000L
+              if (s > ps || (s == ps && items(j) < pos)) beats += 1
+              j += 1
+            }
+            (u, dom, e, if (beats < kMax) beats + 1 else 0)
+          }
+        }
+      }
+      .toDF("user_id", "domain", "eix", "rn")
   }
 
   /** Keep-first best epoch per (domain, k, metric) over the accumulated
     * log — the reference's checkpoint-selection rule (strict improvement,
-    * main_my.py:302-320).
+    * main_my.py:302-320). The three metric columns are stacked into one
+    * long (metric, value) relation, so one window ranks them all.
     */
   def bestEpochs(spark: SparkSession, workDir: String): DataFrame = {
-    val log = MetricsSink.readParquet(spark, s"$workDir/metrics_log")
+    val log = spark.read.schema(MetricsLogSchema).parquet(s"$workDir/metrics_log")
     val metrics = Seq("hr", "ndcg", "mrr")
-    metrics.map { m =>
-      log.select(col("domain"), col("k"), lit(m).as("metric"),
-        col(m).as("value"), col("epoch"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("domain", "k")
-            .orderBy(col("value").desc, col("epoch"))))
-        .filter(col("rn") === 1).drop("rn")
-    }.reduce(_ unionAll _)
+    log.select(col("domain"), col("k"), col("epoch"), explode(array(metrics.map(m =>
+        struct(lit(m).as("metric"), col(m).as("value"))): _*)).as("m"))
+      .select(col("domain"), col("k"), col("m.metric").as("metric"),
+        col("m.value").as("value"), col("epoch"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("domain", "k", "metric")
+          .orderBy(col("value").desc, col("epoch"))))
+      .filter(col("rn") === 1).drop("rn")
       .orderBy("domain", "k", "metric")
   }
 
@@ -160,14 +171,15 @@ object Lifecycle {
   /** S3 persist step (main_my.py:304-320): one checkpoint per (domain,
     * metric) at K=10 — the reference's six best_{hr,ndcg,mrr}{1,2}.pkl
     * files — each holding the SELECTED epoch's weights as a parquet
-    * state_dict. Returns (domain, metric) → (epoch, checkpoint path).
+    * state_dict. `best` is the collected [[bestEpochs]] selection, so
+    * the log is read and ranked once per run. Returns (domain, metric)
+    * → (epoch, checkpoint path).
     */
-  def checkpointBest(spark: SparkSession, workDir: String)
+  def checkpointBest(spark: SparkSession, workDir: String, best: Seq[Row])
       : Map[(String, String), (Int, String)] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val winners = bestEpochs(spark, workDir)
-      .filter(col("k") === 10).collect()
+    val winners = best.filter(_.getAs[Int]("k") == 10)
     // the six saves are independent tiny write jobs — submit them
     // concurrently like cachedPipeline does its three relations
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -276,45 +288,47 @@ object Lifecycle {
       import spark.implicits._
       val workDir = java.nio.file.Files.createTempDirectory("graft_lifecycle")
       val wd = workDir.toString
-      runEpochs(spark, d, wd, 1 to EPOCHS)
-      // S3: checkpoint each k=10 winner, then score from the RELOADED
-      // bytes. Weights for an epoch are identical across (domain, metric)
-      // checkpoints, so one scoring pass per distinct winning epoch.
-      val ckpts = timed("checkpointBest") { checkpointBest(spark, wd) }
-      val users = Tables.orders(spark, d).filter(expr(eckUserSlice))
-        .select(col("o_custkey").as("user_id")).distinct()
-      val byEpoch: Map[Int, Long] = timed("reloadScore") {
-        // one scoring pass per DISTINCT winning epoch, submitted
-        // concurrently — the jobs are independent reload→score→sum
-        // chains, so they share the cluster instead of queueing (same
-        // pattern as checkpointBest's six saves)
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val distinct = ckpts.values.toSeq.groupBy(_._1).toSeq
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(EPOCHS, distinct.length)))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try distinct.map { case (e, ps) =>
-          Future {
-            e -> scoreFromCheckpoint(spark, ps.head._2, users)
-              .agg(sum(round(col("score") * 1e6, 0).cast("long"))).as[Long].head()
-          }
-        }.map(Await.result(_, Duration.Inf)).toMap
-        finally pool.shutdown()
+      // the temp workDir (split cache, metrics log, checkpoints) is dead
+      // once the result rows are collected — and on failure too
+      try {
+        runEpochs(spark, d, wd, 1 to EPOCHS)
+        val best = timed("bestEpochs collect") { bestEpochs(spark, wd).collect().toSeq }
+        // S3: checkpoint each k=10 winner, then score from the RELOADED
+        // bytes. Weights for an epoch are identical across (domain, metric)
+        // checkpoints, so one scoring pass per distinct winning epoch.
+        val ckpts = timed("checkpointBest") { checkpointBest(spark, wd, best) }
+        val users = Tables.orders(spark, d).filter(expr(eckUserSlice))
+          .select(col("o_custkey").as("user_id")).distinct()
+        val byEpoch: Map[Int, Long] = timed("reloadScore") {
+          // one scoring pass per DISTINCT winning epoch, submitted
+          // concurrently — the jobs are independent reload→score→sum
+          // chains, so they share the cluster instead of queueing (same
+          // pattern as checkpointBest's six saves)
+          import scala.concurrent.{Await, ExecutionContext, Future}
+          import scala.concurrent.duration.Duration
+          val distinct = ckpts.values.toSeq.groupBy(_._1).toSeq
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(
+            math.max(1, math.min(EPOCHS, distinct.length)))
+          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+          try distinct.map { case (e, ps) =>
+            Future {
+              e -> scoreFromCheckpoint(spark, ps.head._2, users)
+                .agg(sum(round(col("score") * 1e6, 0).cast("long"))).as[Long].head()
+            }
+          }.map(Await.result(_, Duration.Inf)).toMap
+          finally pool.shutdown()
+        }
+        // `best` is already in (domain, k, metric) order
+        best.map { r =>
+          val k = r.getAs[Int]("k"); val e = r.getAs[Int]("epoch")
+          (r.getAs[String]("domain"), k, r.getAs[String]("metric"),
+            r.getAs[Double]("value"), e,
+            if (k == 10) Some(byEpoch(e)) else Option.empty[Long])
+        }.toDF("domain", "k", "metric", "value", "epoch", "reload_checksum")
+      } finally {
+        java.nio.file.Files.walk(workDir).iterator().asScala.toSeq
+          .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
       }
-      val best = timed("bestEpochs collect") { bestEpochs(spark, wd).collect() }.map { r =>
-        val k = r.getAs[Int]("k"); val e = r.getAs[Int]("epoch")
-        (r.getAs[String]("domain"), k, r.getAs[String]("metric"),
-          r.getAs[Double]("value"), e,
-          if (k == 10) Some(byEpoch(e)) else Option.empty[Long])
-      }.toSeq
-      // everything is collected (12 rows + checksums) — the temp workDir
-      // (split cache, metrics log, checkpoints) is dead; remove it
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(workDir).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-      best.toDF("domain", "k", "metric", "value", "epoch", "reload_checksum")
-        .orderBy("domain", "k", "metric")
     })
 
   /** Dev main: run `epochs` scoring rounds and print the selection. */
@@ -324,7 +338,7 @@ object Lifecycle {
     val workDir = java.nio.file.Files.createTempDirectory("lifecycle").toString
     val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
-    (1 to epochs).foreach(e => runEpoch(spark, sfDir, workDir, e))
+    runEpochs(spark, sfDir, workDir, 1 to epochs)
     bestEpochs(spark, workDir).show(50, false)
     spark.stop()
   }

@@ -182,99 +182,32 @@ object Metrics {
       .toDF("user_id", "domain", "rn")
   }
 
-  /** [[posRanksDigestFrom]] for SEVERAL score variants over one scan:
-    * `scored` carries a `scores` ARRAY column (one salted score per
-    * variant — the lifecycle's epochs), and every variant's bounded
-    * TopBuf digest builds in the SAME partial pass. The expensive part
-    * of a digest pass at scale is the input decode plus the typed
-    * Dataset boundary, not the rank arithmetic (100× probe: ~24s/epoch,
-    * of which md5 is ~2s), so an EPOCHS-pass loop pays that fixed cost
-    * EPOCHS times for identical bytes; this pays it once. The shuffle
-    * stays digest-bounded (≤kMax rows per (user, domain) per variant).
-    * Output: (user_id, domain, eix = index into `scores`, rn) with the
-    * exact [[posRanksDigestFrom]] semantics per variant (rn=0 = below
-    * kMax); MetricsSpec proves per-variant equality with the
-    * single-score form.
-    */
-  def posRanksDigestMultiFrom(scored: DataFrame, kMax: Int): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val parts = scored
-      .select(col("user_id"), col("domain"), col("item_id"),
-        col("is_positive"), col("scores"))
-      .as[(Long, String, Long, Int, Array[Long])]
-      .mapPartitions { it =>
-        // hot loop: the map key is (user_id << 8 | domainIdx) in a
-        // primitive LongMap — no per-row Tuple2/boxed-Long allocation.
-        // Domains are a tiny enum (the engine's are 'x'/'y'); the 256
-        // guard fails loudly rather than silently colliding key space.
-        val domIdx = new java.util.HashMap[String, Integer]
-        val doms = scala.collection.mutable.ArrayBuffer.empty[String]
-        val m = scala.collection.mutable.LongMap.empty[Array[TopBuf]]
-        it.foreach { case (u, dom, i, p, ss) =>
-          var di = domIdx.get(dom)
-          if (di == null) {
-            require(doms.length < 256, "digest pass supports < 256 domains")
-            di = Integer.valueOf(doms.length); domIdx.put(dom, di); doms += dom
-          }
-          // per row (two branches): an id >= 2^55 whose packed key
-          // collides with an existing group would otherwise skip a
-          // new-group-only check and silently merge two users' buffers
-          require(u >= 0 && u < (1L << 55),
-            s"digest pass packs user ids below 2^55, got $u")
-          val key = (u << 8) | di.intValue()
-          var bufs = m.getOrNull(key)
-          if (bufs == null) {
-            bufs = Array.fill(ss.length)(new TopBuf(kMax))
-            m.update(key, bufs)
-          }
-          var e = 0
-          while (e < ss.length) { bufs(e).insert(ss(e), i, p == 1); e += 1 }
-        }
-        m.iterator.flatMap { case (key, bufs) =>
-          val u = key >> 8; val dom = doms((key & 0xff).toInt)
-          bufs.iterator.zipWithIndex.map { case (b, e) =>
-            (u, dom, e,
-              b.scores.take(b.n), b.items.take(b.n), b.pos.take(b.n))
-          }
-        }
-      }
-    parts
-      .groupByKey { case (u, dom, e, _, _, _) => (u, dom, e) }
-      .mapGroups { (key: (Long, String, Int),
-          it: Iterator[(Long, String, Int, Array[Long], Array[Long], Array[Boolean])]) =>
-        val b = new TopBuf(kMax)
-        it.foreach { case (_, _, _, ss, ii, pp) =>
-          var j = 0
-          while (j < ss.length) { b.insert(ss(j), ii(j), pp(j)); j += 1 }
-        }
-        (key._1, key._2, key._3, b.rank)
-      }
-      .toDF("user_id", "domain", "eix", "rn")
-  }
-
   /** HR/NDCG/MRR@K from a positive-rank relation (user_id, domain, rn) —
     * the metric tail shared by [[posRanksJoin]], [[posRanksDigest]], and
-    * the per-epoch lifecycle loop. rn = 0 means the positive ranked
+    * the lifecycle's epoch loop. rn = 0 means the positive ranked
     * below the digest bound: counted in n_users, contributes 0 to every
     * @K metric — exactly the window semantics. One cross join against
     * the k values instead of a union of per-k branches: the rank
     * pipeline is computed ONCE (a union would plan — and run — the
-    * whole upstream per branch).
+    * whole upstream per branch). `by` prefixes extra key columns of
+    * `ranks` (the lifecycle's epoch index): one aggregate then serves
+    * every key value, each group's rows equal to the single-key call.
     */
-  def rankingMetricsFromRanks(ranks: DataFrame, ks: Seq[Int]): DataFrame = {
+  def rankingMetricsFromRanks(ranks: DataFrame, ks: Seq[Int],
+      by: Seq[String] = Nil): DataFrame = {
     import ranks.sparkSession.implicits._
     val in = col("rn") >= 1 && col("rn") <= col("k")
+    val keys = by ++ Seq("domain", "k")
     ranks.crossJoin(broadcast(ks.toDF("k")))
-      .groupBy("domain", "k")
+      .groupBy(keys.map(col): _*)
       .agg(
         count(lit(1)).as("n_users"),
         round(avg(when(in, 1.0).otherwise(0.0)), 6).as("hr"),
         round(avg(when(in, log(lit(2.0)) / log(col("rn") + 1))
           .otherwise(0.0)), 6).as("ndcg"),
         round(avg(when(in, lit(1.0) / col("rn")).otherwise(0.0)), 6).as("mrr"))
-      .select("domain", "k", "n_users", "hr", "ndcg", "mrr")
-      .orderBy("domain", "k")
+      .select((keys ++ Seq("n_users", "hr", "ndcg", "mrr")).map(col): _*)
+      .orderBy(keys.map(col): _*)
   }
 
   /** The flagship metric oracle — shared verbatim by the window

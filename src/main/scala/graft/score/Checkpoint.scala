@@ -1,6 +1,7 @@
 package graft.score
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Model-weight checkpointing (S3): the reference saves a state_dict per
   * best validation metric and reloads each for the test pass
@@ -28,15 +29,25 @@ object Checkpoint {
     }.toDF("layer", "i", "j", "w")
   }
 
+  /** The state_dict's schema, passed on reload so no footer-inference
+    * job runs.
+    */
+  val Schema: StructType = StructType(Seq(
+    StructField("layer", StringType), StructField("i", IntegerType),
+    StructField("j", IntegerType), StructField("w", DoubleType)))
+
+  /** One file per checkpoint: `coalesce(1)` is one narrow write job
+    * (`load` rebuilds by (i, j), so row order in the file is free).
+    */
   def save(spark: SparkSession, path: String,
       weights: Map[String, Array[Array[Double]]]): Unit =
-    toDF(spark, weights).repartition(1)
+    toDF(spark, weights).coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(path)
 
   /** Reload a state_dict: k² driver rows per layer, rebuilt dense. */
   def load(spark: SparkSession, path: String): Map[String, Array[Array[Double]]] = {
     import spark.implicits._
-    spark.read.parquet(path).as[(String, Int, Int, Double)].collect()
+    spark.read.schema(Schema).parquet(path).as[(String, Int, Int, Double)].collect()
       .groupBy(_._1)
       .map { case (layer, rows) =>
         val nI = rows.map(_._2).max + 1

@@ -1,26 +1,43 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** E1 lifecycle composition: epochs accumulate in the log, the split
   * cache is written once, and best-epoch selection is keep-first.
   */
 class LifecycleSpec extends SparkSpec {
 
+  /** The single-epoch reference ranks: the long-form candidates (the
+    * exploded negatives plus the held-out positive) scored with the
+    * epoch salt and ranked by the bounded TopBuf digest.
+    */
+  private def digestRanks(splits: DataFrame, packed: DataFrame,
+      epoch: Int): DataFrame = {
+    val cands = etl.Splits.explodeNegatives(packed)
+      .select(col("user_id"), col("domain"), col("item_id"), lit(0).as("is_positive"))
+      .unionAll(splits.select(col("user_id"), col("domain"),
+        col("test_item").as("item_id"), lit(1).as("is_positive")))
+    graft.rank.Metrics.posRanksDigestFrom(
+      cands.withColumn("score", Hashing.h60(col("user_id"), col("item_id"),
+        col("domain"), lit(s"epoch$epoch")) % 1000000L), kMax = 10)
+  }
+
   test("three epochs -> memoized splits, accumulated log, argmax selection") {
     val workDir = Files.createTempDirectory("lc").toString
-    val m1 = Lifecycle.runEpoch(spark, sf(), workDir, 1).collect()
-    assert(m1.nonEmpty)
+    val epochs = 1 to Lifecycle.EPOCHS
+    Lifecycle.runEpochs(spark, sf(), workDir, epochs.take(1))
     val cacheStamp = Files.getLastModifiedTime(
       java.nio.file.Paths.get(s"$workDir/cache/splits/_SUCCESS"))
-    Lifecycle.runEpoch(spark, sf(), workDir, 2)
-    Lifecycle.runEpoch(spark, sf(), workDir, 3)
+    Lifecycle.runEpochs(spark, sf(), workDir, epochs.tail)
     // split cache not recomputed by later epochs
     assert(Files.getLastModifiedTime(
       java.nio.file.Paths.get(s"$workDir/cache/splits/_SUCCESS")) == cacheStamp)
 
     val log = etl.MetricsSink.readParquet(spark, s"$workDir/metrics_log")
-    assert(log.select("epoch").distinct().count() == 3)
+    assert(log.select("epoch").distinct().collect().map(_.getInt(0)).sorted
+      .toSeq == epochs)
 
     val best = Lifecycle.bestEpochs(spark, workDir).collect()
     // one winner per (domain, k, metric)
@@ -35,31 +52,35 @@ class LifecycleSpec extends SparkSpec {
       assert(b.getAs[Double]("value") == slice.map(_.getAs[Double](col)).max)
     }
 
-    // the fused multi-epoch digest (the [[runEpochs]] loop — every
-    // epoch's TopBuf built in one scan) must reproduce the single-epoch
-    // digest ranks EXACTLY, per epoch — this is what keeps the
-    // q_lifecycle oracle hash invariant across the two forms
+    // the packed-cache kernel (every epoch ranked in one loop over the
+    // packed negatives) must reproduce the single-epoch digest ranks
+    // EXACTLY, per epoch, over the same key set — and each epoch's log
+    // rows must be the metrics over those ranks. This is what keeps the
+    // q_lifecycle oracle hash invariant.
     val (sp, ng, _) = etl.SplitCache.cachedPipeline(spark, sf(), s"$workDir/cache")
-    val cands = Lifecycle.candidatesFrom(sp, ng)
-    val epochs = Seq(1, 2, 3)
-    val multi = rank.Metrics.posRanksDigestMultiFrom(
-      Lifecycle.epochScores(cands, epochs), kMax = 10).collect()
+    val packed = Lifecycle.packedRanks(sp, ng, epochs, kMax = 10).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2)) -> r.getInt(3))
       .toMap
-    assert(multi.nonEmpty)
+    assert(packed.nonEmpty)
     epochs.zipWithIndex.foreach { case (e, i) =>
-      val single = Lifecycle.epochRanks(cands, e)
+      val singleDf = digestRanks(sp, ng, e)
+      val single = singleDf
         .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getInt(2)).toMap
       assert(single.keySet.map { case (u, d) => (u, d, i) } ==
-        multi.keySet.filter(_._3 == i))
+        packed.keySet.filter(_._3 == i))
       single.foreach { case ((u, d), rn) =>
-        assert(multi((u, d, i)) == rn, s"($u,$d) e$e: multi vs single")
+        assert(packed((u, d, i)) == rn, s"($u,$d) e$e: packed vs digest")
       }
+      val expected = graft.rank.Metrics.rankingMetricsFromRanks(singleDf, Seq(5, 10))
+        .collect().map(_.toSeq).toSeq
+      val logged = log.filter(col("epoch") === e).drop("epoch")
+        .orderBy("domain", "k").collect().map(_.toSeq).toSeq
+      assert(logged == expected, s"e$e: log rows vs single-epoch metrics")
     }
 
     // S3 persist + reload: six checkpoints (domain × metric at K=10),
     // each reproducing its selected epoch's scores from RELOADED weights
-    val ckpts = Lifecycle.checkpointBest(spark, workDir)
+    val ckpts = Lifecycle.checkpointBest(spark, workDir, best.toSeq)
     assert(ckpts.size == 2 * 3)
     val someUsers = spark.range(1, 20).toDF("user_id")
     ckpts.foreach { case ((_, _), (epoch, path)) =>
@@ -71,5 +92,76 @@ class LifecycleSpec extends SparkSpec {
       assert(fromCkpt.nonEmpty && fromCkpt.sortBy(_.toString)
         .sameElements(direct.sortBy(_.toString)))
     }
+  }
+
+  test("q_lifecycle removes its temp workDir when the build fails") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def workDirs = tmp.listFiles().map(_.getName)
+      .filter(_.startsWith("graft_lifecycle")).toSet
+    val before = workDirs
+    val missing = Files.createTempDirectory("lc_missing").resolve("absent")
+    intercept[Exception] {
+      SparkEntry.defs("q_lifecycle").build(spark, missing.toString).collect()
+    }
+    assert((workDirs -- before).isEmpty, "failed build left its workDir behind")
+  }
+
+  test("q_lifecycle stays under its Spark job ceiling at sf0.001") {
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    val jobs = try {
+      SparkEntry.defs("q_lifecycle").build(spark, sf()).collect()
+      // listener events are asynchronous: poll until the count settles
+      var prev = -1
+      var stable = 0
+      var waited = 0
+      while (stable < 3 && waited < 100) {
+        Thread.sleep(100)
+        val cur = started.get
+        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
+        waited += 1
+      }
+      started.get
+    } finally spark.sparkContext.removeSparkListener(l)
+    // a cold build runs 42 jobs: one packed-cache rank pass and one
+    // metrics aggregate for all epochs, one log read, known-schema
+    // read-backs and single-job checkpoint saves
+    assert(jobs <= 48, s"q_lifecycle ran $jobs Spark jobs")
+  }
+
+  private def shape(df: DataFrame): Seq[(String, String)] =
+    df.schema.fields.map(f => f.name -> f.dataType.catalogString).toSeq
+
+  /** A read that passes the schema its writer used must see what footer
+    * inference would: the same column names, types and rows.
+    */
+  private def sameAsInferred(supplied: DataFrame, path: String): Unit = {
+    val inferred = spark.read.parquet(path)
+    assert(shape(supplied) == shape(inferred), path)
+    assert(supplied.collect().map(_.toSeq.toString).sorted.toSeq ==
+      inferred.collect().map(_.toSeq.toString).sorted.toSeq, path)
+  }
+
+  test("known-schema reads of the split cache, metrics log and checkpoints match inference") {
+    val workDir = Files.createTempDirectory("readschema").toString
+    // cache miss: every relation is written and read back with its own schema
+    val (splits, negatives, train) =
+      etl.SplitCache.cachedPipeline(spark, sf(), s"$workDir/cache")
+    sameAsInferred(splits, s"$workDir/cache/splits")
+    sameAsInferred(negatives, s"$workDir/cache/negatives")
+    sameAsInferred(train, s"$workDir/cache/train")
+
+    Lifecycle.runEpochs(spark, sf(), workDir, Seq(1, 2))
+    val log = s"$workDir/metrics_log"
+    sameAsInferred(spark.read.schema(Lifecycle.MetricsLogSchema).parquet(log), log)
+
+    val ckpt = s"$workDir/ckpt"
+    score.Checkpoint.save(spark, ckpt, Lifecycle.epochWeights(1))
+    sameAsInferred(spark.read.schema(score.Checkpoint.Schema).parquet(ckpt), ckpt)
   }
 }

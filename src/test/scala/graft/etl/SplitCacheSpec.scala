@@ -35,7 +35,10 @@ class SplitCacheSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.toString).sorted.toSeq
     assert(rows(splits) == rows(Splits.leaveTwoOut(spark, sf())))
-    assert(rows(negs) == rows(Splits.negativeSampleScalable(spark, sf())))
+    // negatives come back PACKED; exploded they are the long sampler
+    assert(negs.columns.toSeq == Seq("user_id", "domain", "items"))
+    assert(rows(Splits.explodeNegatives(negs)) ==
+      rows(Splits.negativeSampleScalable(spark, sf())))
     assert(rows(train) == rows(Splits.trainSubsample(spark, sf())))
     // second call is a pure cache hit: no _SUCCESS rewrite on any relation
     val stamps = Seq("splits", "negatives", "train").map(n =>

@@ -80,33 +80,6 @@ class MetricsSpec extends SparkSpec {
     assert(join.nonEmpty && join == digest)
   }
 
-  test("multi-score digest equals the single-score digest per variant") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // synthetic candidates: 40 users × 2 domains × 30 items, positive =
-    // item 7; three deterministic score variants with distinct shapes
-    // (ascending, descending, hash-ish mod) so every variant ranks the
-    // positive differently, including below-kMax cases
-    val rows = for {
-      u <- 1L to 40L; dom <- Seq("x", "y"); i <- 1L to 30L
-    } yield (u, dom, i, if (i == 7L) 1 else 0,
-      Array(i * 31 % 97, (31 - i) * 17 % 89, (u * 7 + i * 13) % 101))
-    val scored = rows.toDF("user_id", "domain", "item_id", "is_positive", "scores")
-    val multi = Metrics.posRanksDigestMultiFrom(scored, kMax = 10)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2)) -> r.getInt(3))
-      .toMap
-    assert(multi.size == 40 * 2 * 3)
-    (0 until 3).foreach { e =>
-      val single = Metrics.posRanksDigestFrom(
-        scored.withColumn("score", col("scores")(e)), kMax = 10)
-        .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getInt(2)).toMap
-      single.foreach { case ((u, d), rn) =>
-        assert(multi((u, d, e)) == rn, s"($u,$d) variant $e")
-      }
-    }
-  }
-
   test("aggregate formulation equals the window formulation end to end") {
     val win = graft.SparkEntry.defs("q_rank_metrics").build(spark, sf()).collect()
     val agg = graft.SparkEntry.defs("q_rank_metrics_agg").build(spark, sf()).collect()
