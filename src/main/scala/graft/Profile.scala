@@ -42,53 +42,7 @@ object Profile {
       else names.toSeq
     // repeat a name to re-time it warm (first run carries JIT/codegen;
     // host noise here swings single measurements up to 4× — see SCALING.md)
-    picked.foreach {
-      // dev probes for the shared base relation (not driver queries):
-      // raw = compute only; persist = compute + cache materialization
-      case "dev:inter" =>
-        time("dev:inter", etl.Interactions(spark, sfDir))
-        spark.catalog.clearCache()
-      case "dev:inter_persist" =>
-        time("dev:inter_persist", etl.Interactions(spark, sfDir).persist())
-        spark.catalog.clearCache()
-      // scaled ANN parameterizations (the production dials; the driver
-      // queries pin the oracle-gated demo constants)
-      // the numeric guard keeps a typo (dev:lshx, dev:ivf-foo) falling
-      // through to the unknown-query error instead of a NumberFormatException
-      case s"dev:lsh$bits" if bits.matches("\\d+") =>
-        time(s"dev:lsh$bits", ext.SimilarityQueries.lshTopK(spark, sfDir,
-          bandBits = bits.toInt, numBands = 2))
-      case s"dev:ivf$k" if k.matches("\\d+") =>
-        time(s"dev:ivf$k", ext.IvfQueries.ivfTopK(spark, sfDir, k = k.toInt))
-      // near-dup candidate-arm probes (r11): count one generator's pair
-      // volume, or run the full verify over one arm, without the CC tail
-      case s"dev:ndcand_$mode" =>
-        time(s"dev:ndcand_$mode",
-          ext.SimilarityQueries.nearDupCandidates(spark, sfDir, mode))
-      case s"dev:ndverify_$mode" =>
-        time(s"dev:ndverify_$mode", ext.SimilarityQueries.verifiedNearDup(
-          spark, sfDir,
-          ext.SimilarityQueries.nearDupCandidates(spark, sfDir, mode)))
-      // triangle pair-kernel subtree (r15): the explode chain is inside an
-      // eager builder, so q_triangles' own explain shows only the final
-      // LocalTableScan — this probe explains/times the pair relation itself
-      case "dev:tri_pairs" =>
-        time("dev:tri_pairs", ext.GraphQueries.trianglePairs(spark, sfDir))
-      // past-ceiling twins of the three embedding-exact operators:
-      // maxBroadcast=0 forces the LSH-banded candidate branch a 100 TB
-      // corpus would take, so its cost is measurable on the scale dirs
-      case "dev:embed_pc" =>
-        time("dev:embed_pc",
-          ext.SimilarityQueries.embedNearDup(spark, sfDir, maxBroadcast = 0))
-      case "dev:hardneg_pc" =>
-        time("dev:hardneg_pc",
-          ext.SimilarityQueries.hardNegatives(spark, sfDir, maxBroadcast = 0))
-      case "dev:decontam_pc" =>
-        time("dev:decontam_pc",
-          ext.SimilarityQueries.semanticDecontam(spark, sfDir, maxBroadcast = 0))
-      case name =>
-        time(name, SparkEntry.defs(name).build(spark, sfDir))
-    }
+    picked.foreach(name => time(name, SparkEntry.defs(name).build(spark, sfDir)))
     spark.stop()
   }
 }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * Optional mode args (4th+): `zipf` — hot-key mode: ~20% of orders land
   * on ONE customer and ~20% of lineitems on ONE supplier (deterministic
   * xxhash64 row selection), modelling the power-law skew a real corpus
-  * has and uniform replication hides (used by [[SkewProbe]] and the
-  * skewed sampler measurements in SCALING.md). `neardup` — mutated
+  * has and uniform replication hides (the skew and skewed-sampler
+  * measurements in SCALING.md). `neardup` — mutated
   * document replication: verbatim replication makes every dup cluster an
   * n-clique, so dedup-family scale numbers measure C(n,2) input growth,
   * not the algorithm. In neardup mode replica i of each document is

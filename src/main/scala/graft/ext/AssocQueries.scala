@@ -81,9 +81,9 @@ object AssocQueries {
     * holds at most `cap` items and emits at most C(cap,2) pairs. Exposed
     * for the AssocSpec capping invariants.
     *
-    * Repartition-vs-combine DECIDED (r15, VERDICT r14 #4) with the
-    * deconfounded dev:cooc_base/dev:cooc_repart A/B (identical chains,
-    * interleaved twice warm in one JVM, sf0.1 at 32 cores): base
+    * Repartition-vs-combine DECIDED (r15, VERDICT r14 #4) with a
+    * deconfounded A/B (identical chains, interleaved twice warm in one
+    * JVM, sf0.1 at 32 cores; OPTIMIZATION_r15.md): base
     * 5.10/3.97s vs repart 5.45/3.71s — alternating sign, within host
     * noise, no win to adopt. The shipped partial-agg shape stays: its
     * map-side combine is the arm that gets BETTER when baskets overlap

@@ -61,11 +61,9 @@ object DedupCluster {
     * relative to its corpus (it holds only verified near-duplicate
     * PAIRS, not documents), so even a 100 TB corpus's post-verification
     * graph usually fits; past the gate the distributed propagation loop
-    * runs unchanged. Env override for probes/specs.
+    * runs unchanged.
     */
-  private[ext] val CC_DRIVER_MAX_EDGES: Long =
-    sys.env.get("SPARK_GRAFT_CC_DRIVER_MAX").map(_.toLong)
-      .getOrElse(2000000L)
+  private val CC_DRIVER_MAX_EDGES = 2000000
 
   /** `pairs(doc_a, doc_b)` undirected edges → `(id, label)` with
     * `label` = min doc_id of the connected component. Only vertices that
@@ -87,13 +85,9 @@ object DedupCluster {
     // through to the propagation loop having collected nothing extra.
     if (fwd.schema.fields.forall(_.dataType ==
         org.apache.spark.sql.types.LongType)) {
-      // clamp before toInt (VERDICT r14 #3): an env override above
-      // Int.MaxValue would wrap negative and limit() would throw
-      val cap = math.min(CC_DRIVER_MAX_EDGES, Int.MaxValue - 1L)
       val t0 = System.nanoTime()
-      val collected =
-        fwd.limit((cap + 1).toInt).collect()
-      if (collected.length <= cap) {
+      val collected = fwd.limit(CC_DRIVER_MAX_EDGES + 1).collect()
+      if (collected.length <= CC_DRIVER_MAX_EDGES) {
         val labels = driverUnionFind(collected)
         graft.StageTiming.record(
           s"cc/propagate(driver uf, ${collected.length} pairs)",

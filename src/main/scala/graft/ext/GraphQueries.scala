@@ -211,8 +211,6 @@ object GraphQueries {
 
   /** The capped co-purchase pair projection (q_triangles' edge set,
     * pre-distinct): ONE customer-keyed shuffle whose aggregate IS the cap.
-    * Exposed for the `dev:tri_pairs` plan/timing probe — the eager
-    * triangles builder's own explain shows only its final LocalTableScan.
     *
     * Pair generation is the cooc cappedPairs kernel, not a self-join, and
     * since r15 the cap is enforced inside a bounded distinct-min-K typed
@@ -229,7 +227,7 @@ object GraphQueries {
     * by construction, each unordered pair once. One exchange, bounded
     * state.
     */
-  private[graft] def trianglePairs(spark: SparkSession, d: String): DataFrame = {
+  private def trianglePairs(spark: SparkSession, d: String): DataFrame = {
     val minK = udaf(new graft.functions.BoundedMinKSet(TriCap))
     Tables.orders(spark, d)
       .join(Tables.lineitem(spark, d), col("l_orderkey") === col("o_orderkey"))

@@ -43,20 +43,7 @@ object IvfQueries {
   val KM_K = 8
   private val KM_ITERS = 3
 
-  /** IVF-Flat top-k parameterized by the inverted-list count — THE scale
-    * dial: cell occupancy is n / k, and probe-candidate cost per query is
-    * nprobe × occupancy, so k must grow with the corpus (the standard
-    * IVF sizing is k ≈ √n). The demo query pins k = [[K]] = 16 for the
-    * oracle-gated small-sf range; at 30× (60 k vectors) k = 64 measured
-    * 3× faster for the same nprobe (SCALING.md r5). Training stays
-    * COUNT-bounded at k·256 — driver memory scales with k, never with
-    * the corpus.
-    */
-  def ivfTopK(spark: org.apache.spark.sql.SparkSession, d: String,
-      k: Int = K, nprobe: Int = NPROBE): org.apache.spark.sql.DataFrame =
-    build(spark, d, k, nprobe)
-
-  /** Oracle SQL for [[ivfTopK]] at a given nlist/nprobe — shared by the
+  /** Oracle SQL for [[build]] at a given nlist/nprobe — shared by the
     * demo query (k=16) and the oracle-gated scale parameterization
     * (q_sim_ivf_wide, k=64).
     */
@@ -730,6 +717,15 @@ object IvfQueries {
     }
   }
 
+  /** IVF-Flat top-k parameterized by the inverted-list count — THE scale
+    * dial: cell occupancy is n / k, and probe-candidate cost per query is
+    * nprobe × occupancy, so k must grow with the corpus (the standard
+    * IVF sizing is k ≈ √n). The demo query pins k = [[K]] = 16 for the
+    * oracle-gated small-sf range; at 30× (60 k vectors) k = 64 measured
+    * 3× faster for the same nprobe (SCALING.md r5). Training stays
+    * COUNT-bounded at k·256 — driver memory scales with k, never with
+    * the corpus.
+    */
   private def build(spark: org.apache.spark.sql.SparkSession, d: String,
       k: Int, nprobe: Int): org.apache.spark.sql.DataFrame = {
       import spark.implicits._
@@ -801,7 +797,7 @@ object IvfQueries {
     * takes over: k_eff = K² cells at n·2K·(dim/2) = n·K·dim assignment
     * cost, so the cell count keeps following n / occ with the
     * assignment term growing only as n·√(n/occ)·dim. The product form
-    * is NOT free — measured at sf1nd (RecallProbe r12 sweep, equal
+    * is NOT free — measured at sf1nd (r12 sweep, equal
     * ~12.6 M candidate mass, nprobe 8): product recall 0.764/0.322 in
     * the [0.6,0.9)/[0.4,0.6) bands vs the flat arm's 0.962/0.504 (the
     * full sweep is SCALING.md's r12 table) — the half-split costs cell
@@ -824,7 +820,7 @@ object IvfQueries {
     * regime edge (n = cap·occ ≈ 8.4M, n·k·dim ≈ 3×10¹³ mults) is
     * minutes on one 32-core box and embarrassingly parallel on a
     * cluster, so the flat regime — whose recall is measured to hold at
-    * 2.4M (planted mid 0.99 — the ivff16 row) — now covers to ~8.4M
+    * 2.4M (planted mid 0.99 at flat nprobe 16) — now covers to ~8.4M
     * vectors, aligning the product switchover with the 10M corpus
     * broadcast ceiling where every other vector path re-plans anyway
     * (made literal in r14 — see [[pairUseProduct]]: the r13 guess that
@@ -849,7 +845,7 @@ object IvfQueries {
   /** Count-derived pair-mining probe count for the FLAT regime (r13,
     * VERDICT r12 #1): fixed-occupancy cells shrink as the corpus grows,
     * so weak-band pair recall decays at fixed nprobe. Measured against
-    * EXACT all-pairs anchors (RecallProbe union path — SCALING.md r13):
+    * EXACT all-pairs anchors (union path — SCALING.md r13 table):
     * 20k vectors (k=256) 0.548 @8; 60k (k=512) 0.406 @8 / 0.550 @16;
     * 200k (k=2048) 0.217 @8 / 0.315 @16 / 0.386 @24. The dial steps
     * 8 → 16 once the cell count passes 256, which holds the weak-band
@@ -1022,12 +1018,12 @@ object IvfQueries {
     * nearest cells, which depends on cell geometry, not on a per-plane
     * agreement probability. Every returned pair is exact-cosine
     * verified downstream (precision 1, same contract as the banded
-    * arm). Recall is MEASURED per cosine band by graft.RecallProbe
-    * (table in SCALING.md).
+    * arm). Recall is MEASURED per cosine band in SCALING.md's r11
+    * recall table.
     */
   /** Product-regime probe count: the half-split's geometry loss is
-    * bought back with probes (measured at sf1nd — see the RecallProbe
-    * table in SCALING.md for the nprobe sweep that set this).
+    * bought back with probes (the sf1nd nprobe sweep in SCALING.md's
+    * r12 table set this).
     */
   val PAIR_NPROBE_PRODUCT = 32
 
@@ -1046,19 +1042,12 @@ object IvfQueries {
     * exact-anchored dirs in SCALING.md's r13 table — hard negatives live
     * at the high-cosine end, where the data-adaptive cells recall ≥0.96
     * and sign-LSH bands recall ~0.45.
-    */
-  private[ext] def annQueryCandidates(spark: org.apache.spark.sql.SparkSession,
-      d: String, qSlice: String, nprobe: Int): org.apache.spark.sql.DataFrame = {
-    val emb = Tables.embeddings(spark, d)
-    annQueryCandidatesFrom(spark, d, emb.filter(expr(qSlice)), emb,
-      VectorOps.corpusSize(spark, d), nprobe)
-  }
-
-  /** [[annQueryCandidates]] over EXPLICIT query/corpus embedding slices —
-    * what the hard-negative representative factoring mines over (one row
-    * per distinct (vector, label) group on each side). `n` is the CORPUS
-    * count: the cell dial and the codebook (trained on the full corpus,
-    * Memo-cached per (dir, k) — shared with the near-dup pair arm) stay
+    *
+    * The slices are EXPLICIT because the hard-negative representative
+    * factoring mines over one row per distinct (vector, label) group on
+    * each side. `n` is the CORPUS count: the cell dial and the codebook
+    * (trained on the full corpus, Memo-cached per (dir, k) — shared with
+    * the near-dup pair arm) stay
     * the corpus's, so group members land in exactly the cells their rep
     * does and the rep-level candidate relation is precisely the dedup of
     * the unfactored one — the row-EQUALITY contract the banded factoring
@@ -1111,15 +1100,13 @@ object IvfQueries {
     * VERDICT r11 #1a): the representative factoring mines over one row
     * per distinct vector; the cell dial follows the SLICE count while
     * the codebooks train on the full corpus (cached per (dir, K)).
-    * `forceProduct`/`nprobeOverride` exist for RecallProbe's regime
-    * ablation only.
+    * `forceProduct` reaches the product-quantizer branch at fixture
+    * size (ExtSpec).
     */
   private[ext] def probePairCandidatesFrom(
       spark: org.apache.spark.sql.SparkSession, d: String,
       embDf: org.apache.spark.sql.DataFrame, n: Long,
-      forceProduct: Boolean = false,
-      nprobeOverride: Int = 0,
-      flatKOverride: Int = 0): org.apache.spark.sql.DataFrame = {
+      forceProduct: Boolean = false): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val vecs = embDf
       .filter(size(col("embedding")) > 0)
@@ -1131,8 +1118,7 @@ object IvfQueries {
     val product = forceProduct || pairUseProduct(n)
     val (home, probes) =
       if (product) {
-        val nprobe =
-          if (nprobeOverride > 0) nprobeOverride else PAIR_NPROBE_PRODUCT
+        val nprobe = PAIR_NPROBE_PRODUCT
         val kHalf = pairHalfKFor(n)
         val (cb1, cb2) = graft.StageTiming.timed("embed/ivf-train") {
           pairCodebooks(spark, d, kHalf)
@@ -1150,11 +1136,9 @@ object IvfQueries {
               probeCells(e, c1, c2, kHalf, nprobe).iterator.map(c => (v, c)) }
           }.toDF("p_id", "cell"))
       } else {
-        val nprobe =
-          if (nprobeOverride > 0) nprobeOverride else pairNprobeFor(n)
+        val nprobe = pairNprobeFor(n)
         val cents = graft.StageTiming.timed("embed/ivf-train") {
-          pairFlatCents(spark, d,
-            if (flatKOverride > 0) flatKOverride else pairFlatKFor(n))
+          pairFlatCents(spark, d, pairFlatKFor(n))
         }
         if (cents.size == 0)
           return spark.emptyDataset[(Long, Long)].toDF("query_id", "vec_id")

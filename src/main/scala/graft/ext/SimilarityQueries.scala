@@ -430,7 +430,7 @@ object SimilarityQueries {
     * per-plane agreement p = 1 − θ/π is 1 − (1 − p^bits)^bands — more
     * bands buy recall LINEARLY in candidate volume (Σ bucket² per band).
     * 8 bands: measured on the 10× neardup dir's planted pairs (b = 10,
-    * RecallProbe — table in SCALING.md): 1.0 identical, 0.96 at
+    * SCALING.md r10 recall table): 1.0 identical, 0.96 at
     * cos ∈ [0.9, 1), 0.45 at [0.6, 0.9), 0.09 below (the r9 value of 2
     * measured 1.0 / ~0.5 / 0.19 / 0.03). The decay at weak cosine is
     * sign-LSH theory, not a tuning miss: keeping Σ bucket² sub-quadratic
@@ -440,7 +440,7 @@ object SimilarityQueries {
     * r11, [[nearDupCandidates]] unions it with the data-adaptive IVF
     * multi-probe arm (IvfQueries.probePairCandidates), whose recall at
     * a given cosine is a cell-geometry property, not a p^bits one
-    * (measured per band in SCALING.md's RecallProbe table). This
+    * (measured per band in SCALING.md's r11 recall table). This
     * generator still owns the identical + strong-cosine mass (≥ 0.96
     * at cos ≥ 0.9). Transitive closure through the base recovers part
     * of the weak tail on top (cluster recall > pair recall).
@@ -468,8 +468,8 @@ object SimilarityQueries {
     bandedJoin(bands.filter(qFilter), bands.filter(cFilter), lowerTriangle)
   }
 
-  /** [[bandedCandidates]] over EXPLICIT embedding slices (r12, VERDICT
-    * r11 #1a): the representative factoring feeds the query side a
+  /** Lower-triangle [[bandedCandidates]] over an EXPLICIT embeddings
+    * slice (r12, VERDICT r11 #1a): the representative factoring feeds a
     * one-row-per-distinct-vector slice, so on duplicated corpora the
     * band buckets hold distinct vectors instead of every copy — the
     * quadratic-in-duplication bucket blow-up never happens at any rep
@@ -477,14 +477,12 @@ object SimilarityQueries {
     * dialed by the SLICE count (`n`): occupancy, and therefore the
     * recall/cost trade, matches a genuine corpus of that size.
     */
-  private[ext] def bandedCandidatesFrom(
-      spark: org.apache.spark.sql.SparkSession,
-      qEmb: org.apache.spark.sql.DataFrame,
-      cEmb: org.apache.spark.sql.DataFrame, n: Long,
-      lowerTriangle: Boolean): org.apache.spark.sql.DataFrame = {
-    val bits = VectorOps.lshBandBitsFor(n)
-    bandedJoin(sparkBandBlocksFrom(spark, qEmb, bits, LSH_NUM_BANDS),
-      sparkBandBlocksFrom(spark, cEmb, bits, LSH_NUM_BANDS), lowerTriangle)
+  private def bandedCandidatesFrom(spark: org.apache.spark.sql.SparkSession,
+      emb: org.apache.spark.sql.DataFrame, n: Long)
+      : org.apache.spark.sql.DataFrame = {
+    def blocks = sparkBandBlocksFrom(spark, emb,
+      VectorOps.lshBandBitsFor(n), LSH_NUM_BANDS)
+    bandedJoin(blocks, blocks, lowerTriangle = true)
   }
 
   private def bandedJoin(qBands: org.apache.spark.sql.DataFrame,
@@ -539,61 +537,19 @@ object SimilarityQueries {
       }.toDF("vec_id", "bi", "blk")
   }
 
-  /** Past-ceiling near-dup candidate generator — the RecallProbe
-    * ablation surface. "union" is the QUERY path (r11): banded sign-LSH
+  /** Past-ceiling near-dup candidate generator (r11): banded sign-LSH
     * (identical + strong-cosine mass, theorem-quantified recall) ∪
     * IVF multi-probe pairs (the data-adaptive arm serving the
     * cos ∈ [0.4, 0.9) band sign-LSH is theorem-bound to miss —
     * IvfQueries.probePairCandidates). Both arms are sub-quadratic and
     * both feed ONE exact-cosine verify, so precision stays 1 whatever
-    * the mix; the union is deduplicated on the unordered pair key
-    * BEFORE the verify, so a pair reaching both arms (or several LSH
-    * bands) is verified once.
+    * the mix; a pair reaching both arms collapses in
+    * [[verifiedNearDup]]'s distinct.
     */
-  private[graft] def nearDupCandidates(spark: org.apache.spark.sql.SparkSession,
-      d: String, mode: String = "union"): org.apache.spark.sql.DataFrame = {
-    def banded = bandedCandidates(spark, d, lit(true), lit(true),
-      lowerTriangle = true)
-    mode match {
-      case "banded" => banded
-      case "ivf" => IvfQueries.probePairCandidates(spark, d)
-      case "union" =>
-        banded.union(IvfQueries.probePairCandidates(spark, d))
-      // product-regime ablation (RecallProbe only): "ivfp<nprobe>"
-      // forces the past-flat-cap quantizer at a given probe count so its
-      // recall price is measurable on dirs small enough to have an
-      // exact anchor
-      case p if p.startsWith("ivfp") =>
-        IvfQueries.probePairCandidatesFrom(spark, d,
-          Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d),
-          forceProduct = true, nprobeOverride = p.stripPrefix("ivfp").toInt)
-      // flat-regime nprobe ablation: "ivff<nprobe>"
-      case p if p.startsWith("ivff") =>
-        IvfQueries.probePairCandidatesFrom(spark, d,
-          Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d),
-          nprobeOverride = p.stripPrefix("ivff").toInt)
-      // equal-mass geometry ablation: "ivfk<k>p<nprobe>" forces BOTH the
-      // flat cell count and the probe count — decides whether holding
-      // weak-band recall at scale should grow nprobe (more small cells
-      // probed) or relax occupancy (fewer, bigger cells): mass is
-      // nprobe·n·(n/k) either way, recall is not
-      case p if p.startsWith("ivfk") =>
-        val Array(ks, ns) = p.stripPrefix("ivfk").split("p")
-        IvfQueries.probePairCandidatesFrom(spark, d,
-          Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d),
-          nprobeOverride = ns.toInt, flatKOverride = ks.toInt)
-      // union ablation at a forced flat nprobe: "unionf<nprobe>" — the
-      // exact query-path shape (banded ∪ IVF) at a candidate dial, so
-      // pairNprobeFor(n) is set on measured UNION recall, not the IVF
-      // arm alone (the banded arm adds ~0.04 in the weak band)
-      case p if p.startsWith("unionf") =>
-        banded.union(IvfQueries.probePairCandidatesFrom(spark, d,
-          Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d),
-          nprobeOverride = p.stripPrefix("unionf").toInt))
-      case other => throw new IllegalArgumentException(
-        s"nearDupCandidates mode must be banded|ivf|union|ivfp<n>|ivff<n>|unionf<n>, got $other")
-    }
-  }
+  private[ext] def nearDupCandidates(spark: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    bandedCandidates(spark, d, lit(true), lit(true), lowerTriangle = true)
+      .union(IvfQueries.probePairCandidates(spark, d))
 
   /** The union candidate generator over an EXPLICIT embeddings slice —
     * the past-rep-ceiling arm of the representative factoring (r12,
@@ -607,7 +563,7 @@ object SimilarityQueries {
   private def nearDupCandidatesFrom(spark: org.apache.spark.sql.SparkSession,
       d: String, embDf: org.apache.spark.sql.DataFrame, n: Long)
       : org.apache.spark.sql.DataFrame =
-    bandedCandidatesFrom(spark, embDf, embDf, n, lowerTriangle = true)
+    bandedCandidatesFrom(spark, embDf, n)
       .union(IvfQueries.probePairCandidatesFrom(spark, d, embDf, n))
 
   /** Exact-cosine verify of candidate pairs against the near-dup
@@ -618,7 +574,7 @@ object SimilarityQueries {
     * dot each inside the narrow verify and collapse in the distinct
     * over the ~10³× smaller survivor set, so output pairs stay unique.
     */
-  private[graft] def verifiedNearDup(spark: org.apache.spark.sql.SparkSession,
+  private[ext] def verifiedNearDup(spark: org.apache.spark.sql.SparkSession,
       d: String, cand: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     VectorOps.cosineAuto(spark, d, cand)
@@ -940,12 +896,12 @@ object SimilarityQueries {
       numBands = 2)
 
   /** Past-ceiling hard-negative probe count: 16 probed cells per query,
-    * set by the r13 generator ablation (RecallProbe --hardneg, exact
-    * top-[[NEG_K]] SET recall on anchored dirs): banded sign-LSH mine
+    * set by the r13 generator ablation (exact top-[[NEG_K]] SET recall
+    * on anchored dirs — SCALING.md r13 table): banded sign-LSH mine
     * 0.101 (20k) / 0.080 (60k); ANN cells 0.362/0.267 @8 and
     * 0.494/0.388 @16. Hard negatives live at the high-cosine end, where
     * data-adaptive cells dominate sign bands 3-5× at comparable mass —
-    * the ADOPTED generator (SCALING.md r13 table has the losing case).
+    * the adopted generator.
     */
   val HN_NPROBE = 16
 
@@ -957,10 +913,10 @@ object SimilarityQueries {
     * weak band (quadratic chance mass — see
     * [[IvfQueries.pairNprobeFor]]'s deliberate stop), the top-K target
     * is a FIXED per-query set, so recall here is a real quantity worth
-    * holding, and the r14 anchored sweep (RecallProbe --hardneg through
-    * the SHIPPED factored pipeline, exact top-K set recall — SCALING.md
-    * r14 table) shows recall is governed by the PROBED CELL FRACTION
-    * np/k, not by np: at 6.25% of cells every scale recalls ≥ 0.494
+    * holding, and the r14 anchored sweep (through the shipped factored
+    * pipeline, exact top-K set recall — SCALING.md r14 table) shows
+    * recall is governed by the PROBED CELL FRACTION np/k, not by np:
+    * at 6.25% of cells every scale recalls ≥ 0.494
     * (0.494 at 10×, 0.529 at 30×, 0.651 at 100× — rising with n, since
     * finer cells at equal fraction waste less probe mass, the same
     * geometry the r13 equal-mass ablation measured for pairs). So the
@@ -973,12 +929,9 @@ object SimilarityQueries {
     * (k/16)·(n/k) = n/16 — a FIXED 1/16 of the corpus, 16× cheaper
     * than the exact scan at every n (and past [[IvfQueries
     * .PAIR_FLAT_MAX_K]] the capped k with growing occupancy keeps the
-    * fraction exactly 1/16), in exchange for recall ≈ 0.5 held flat.
-    * A consumer that needs sub-quadratic total mass instead keeps the
-    * fixed-np arm via `nprobeOverride` and inherits the MEASURED decay
-    * (0.494 → 0.388 → see the r14 table's fixed-16 column): both arms
-    * are contracted, the dial is the default because a mine whose
-    * recall silently halves per 10× of corpus is the worse surprise.
+    * fraction exactly 1/16), in exchange for recall ≈ 0.5 held flat —
+    * a mine whose recall silently halves per 10× of corpus (the r14
+    * table's fixed-16 column) is the worse surprise.
     */
   def hnNprobeFor(n: Long): Int =
     math.max(HN_NPROBE, IvfQueries.pairFlatKFor(n) / 16)
@@ -990,18 +943,16 @@ object SimilarityQueries {
     * broadcast corpus + label map with a bounded per-query heap — the
     * exact oracle anchor. Past it: mine within probed flat-IVF cells
     * before the label filter ([[IvfQueries.annQueryCandidatesFrom]] at
-    * [[HN_NPROBE]] probes — r13, adopted over the r9 banded-bucket mine
-    * on the measured top-K recall table above; `gen = "banded"` keeps
-    * the losing generator measurable). The mined negatives are the
-    * hardest IN-CELL near-misses — the high-cosine vectors contrastive
-    * training wants; a vector outside every probed cell is a
-    * low-similarity easy negative that carried no gradient anyway.
+    * [[hnNprobeFor]] probes — r13, adopted over the r9 banded-bucket
+    * mine on the measured top-K recall table above). The mined
+    * negatives are the hardest IN-CELL near-misses — the high-cosine
+    * vectors contrastive training wants; a vector outside every probed
+    * cell is a low-similarity easy negative that carried no gradient
+    * anyway.
     */
   def hardNegatives(spark: org.apache.spark.sql.SparkSession, d: String,
       maxBroadcast: Long = VectorOps.CORPUS_BROADCAST_MAX,
-      factorOverride: Option[Boolean] = None,
-      gen: String = "ann",
-      nprobeOverride: Option[Int] = None)
+      factorOverride: Option[Boolean] = None)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val labels = Tables.embeddings(spark, d).select(col("vec_id"), col("label"))
@@ -1044,18 +995,10 @@ object SimilarityQueries {
           qStats.getLong(0) >= 2 * qStats.getLong(1))
       val emb0 = Tables.embeddings(spark, d)
       val corpusN = VectorOps.corpusSize(spark, d)
-      val np = nprobeOverride.getOrElse(hnNprobeFor(corpusN))
       def genCand(qEmb: org.apache.spark.sql.DataFrame,
-          cEmb: org.apache.spark.sql.DataFrame) = gen match {
-        case "ann" =>
-          IvfQueries.annQueryCandidatesFrom(spark, d, qEmb, cEmb,
-            corpusN, np)
-        case "banded" =>
-          bandedCandidatesFrom(spark, qEmb, cEmb, corpusN,
-            lowerTriangle = false)
-        case other => throw new IllegalArgumentException(
-          s"hardNegatives gen must be ann|banded, got $other")
-      }
+          cEmb: org.apache.spark.sql.DataFrame) =
+        IvfQueries.annQueryCandidatesFrom(spark, d, qEmb, cEmb,
+          corpusN, hnNprobeFor(corpusN))
       val cand =
         if (!factor)
           genCand(emb0.filter(expr(negSlice)), emb0)
@@ -1065,22 +1008,18 @@ object SimilarityQueries {
           val cGroups = e8
             .groupBy("vh", "vh2", "label").agg(min(col("vec_id")).as("crep"))
           val emb = Tables.embeddings(spark, d)
-          // band dial stays the CORPUS count, NOT the rep count: members
-          // co-bucket exactly as their reps do at the same width, so the
+          // cell dial stays the CORPUS count, NOT the rep count: members
+          // home in exactly the cells their reps do, so the
           // rep-level candidate relation is precisely the dedup of the
           // unfactored one and the expansion reproduces its rows — a row
           // EQUALITY contract (spec-proven), not a re-dialed recall
           // trade like the near-dup factoring's
-          // the rep-level mine (banded candidates → label filter → exact
+          // the rep-level mine (ANN candidates → label filter → exact
           // cosine → rank-with-ties) is a Memo entry: materialized inside
           // the build so its cost lands as a memo/ stage line in bench
           // artifacts (VERDICT r12 #5), persisted under the byte budget,
           // and shared if anything else in the session needs it
-          // key carries the probe count: a sweep (RecallProbe --hardneg)
-          // runs several nprobe values in one session, and a dial-blind
-          // key would hand later values the first build's rows
-          val repTop = graft.Memo.cached(spark, d,
-              s"sim.hardNegRepTop.$gen.np$np") {
+          val repTop = graft.Memo.cached(spark, d, "sim.hardNegRepTop") {
             val repCand = genCand(
               emb.join(qGroups.select(col("qrep").as("vec_id")), "vec_id"),
               emb.join(cGroups.select(col("crep").as("vec_id")), "vec_id"))
@@ -1092,11 +1031,11 @@ object SimilarityQueries {
               .select("query_id", "vec_id")
             // cosineAuto (r14): in production this branch only runs past
             // the corpus-broadcast ceiling, where auto resolves to the
-            // SAME distributed join as before — but a forced probe run
-            // (maxBroadcast = 0 on an anchored dir) now scores pairs
-            // against the broadcast matrix instead of spilling a
-            // pairs×embeddings join to disk (the |Q|·n/16-row shuffle
-            // at the 100× dial exceeded this box's disk)
+            // distributed join — but a forced run (maxBroadcast = 0 on a
+            // small dir, as the specs do) scores pairs against the
+            // broadcast matrix instead of spilling a pairs×embeddings
+            // join to disk (the |Q|·n/16-row shuffle at the 100× dial
+            // exceeded the measurement host's disk)
             VectorOps.cosineAuto(spark, d, repPairs)
               .withColumn("rk", rank().over(Window.partitionBy("query_id")
                 .orderBy(col("cos").desc)))
@@ -1125,7 +1064,7 @@ object SimilarityQueries {
         .filter(col("label") =!= col("qlab"))
         .select("query_id", "vec_id")
       // cosineAuto: same production plan (join form past the ceiling),
-      // broadcast scoring on forced probe runs — see the factored branch
+      // broadcast scoring on forced runs — see the factored branch
       return VectorOps.cosineAuto(spark, d, pairs)
         .withColumn("rn", row_number().over(Window.partitionBy("query_id")
           .orderBy(col("cos").desc, col("vec_id"))))
@@ -1203,10 +1142,7 @@ object SimilarityQueries {
       // n — 0.494 (10×) / 0.529 (30×) / 0.651 (100×) — where the r13
       // fixed nprobe 16 decays 0.494 → 0.388 → 0.270. Misses are rank
       // DISPLACEMENTS: a missed true top-K negative is replaced by the
-      // next-hardest in-cell near-miss, not by an easy negative. The
-      // fixed-np arm stays selectable (nprobeOverride) for consumers
-      // trading that recall for linear total mass; its decay is the
-      // measured column in the same table.
+      // next-hardest in-cell near-miss, not by an easy negative.
       hardNegatives(spark, d)
     },
 

@@ -46,6 +46,9 @@ object EventQueries {
     */
   val ActCap = 16
 
+  /** q_stream_join's output budget in rows; the query's note sizes it. */
+  private val STREAM_JOIN_BUDGET = 100000000L
+
   /** The capped click-candidate relation: rank filter over a
     * user-partitioned (ts, event_id) desc order. `row_number <= K`
     * rewrites to WindowGroupLimit — partial per-partition top-K before
@@ -285,11 +288,10 @@ object EventQueries {
         .head()
       val bound = (if (boundRow.isNullAt(0)) 0L else boundRow.getLong(0)) +
         (if (boundRow.isNullAt(1)) 0L else boundRow.getLong(1))
-      val budget = sys.env.get("SPARK_GRAFT_STREAM_JOIN_BUDGET")
-        .map(_.toLong).getOrElse(100000000L)
-      if (bound > budget)
+      if (bound > STREAM_JOIN_BUDGET)
         throw new graft.QueryRefusedException(
-          s"q_stream_join output bound $bound rows exceeds budget $budget: " +
+          s"q_stream_join output bound $bound rows exceeds budget " +
+            s"$STREAM_JOIN_BUDGET: " +
             "the pair relation is output-quadratic in a hot key's activity " +
             "(semantics, not plan) — use q_stream_join_capped, the " +
             "state-bounded twin, on power-law data")

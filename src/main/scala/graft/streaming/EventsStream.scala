@@ -75,23 +75,9 @@ object EventsStream {
     // the crossover is state-exceeds-heap, not data size). The conf is
     // read at query start, so set-around-start scopes it to this query.
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val clKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    // Env dial (r15, VERDICT r14 #5): SPARK_GRAFT_STREAM_PROVIDER=
-    // rocksdb | rocksdb_changelog flips EVERY bounded streaming run to the
-    // RocksDB provider (± changelog checkpointing) so the whole family's
-    // floor is measurable at any core count without per-query edits.
-    // Results are provider-independent (EventsStreamSpec); the default
-    // stays the in-memory provider — measured faster at bench scale,
-    // RocksDB's win is state-exceeds-heap (see scaladoc above).
-    val provider = sys.env.get("SPARK_GRAFT_STREAM_PROVIDER")
-    val useRocks = rocksDbState || provider.exists(_.startsWith("rocksdb"))
-    val useChangelog = provider.contains("rocksdb_changelog")
     val prev = spark.conf.getOption(key)
-    val prevCl = spark.conf.getOption(clKey)
-    if (useRocks) spark.conf.set(key,
+    if (rocksDbState) spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    if (useChangelog) spark.conf.set(clKey, "true")
     try {
       // stage line per streaming run (r14): the streaming queries were
       // the last bench tails with no stages entry — artifact-only
@@ -105,13 +91,9 @@ object EventsStream {
         q.awaitTermination()
       }
     } finally {
-      if (useRocks) prev match {
+      if (rocksDbState) prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
-      }
-      if (useChangelog) prevCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None => spark.conf.unset(clKey)
       }
     }
     spark.table(name)

@@ -168,6 +168,23 @@ class MemoSpec extends SparkSpec {
     Memo.release(spark, d)
   }
 
+  test("a failed build leaves no pinned storage behind") {
+    val d = freshDir("fail")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val err = intercept[IllegalStateException] {
+      Memo.cached(spark, d, "boom") {
+        val r = spark.range(100).persist()
+        r.count()
+        throw new IllegalStateException("build failed after persisting")
+      }
+    }
+    assert(err.getMessage.contains("after persisting"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "a failed build's persisted RDDs must be unpersisted")
+    assert(Memo.entries(spark).forall(!_.startsWith(d)))
+    spark.range(100).unpersist() // drop the plan-cache entry too
+  }
+
   test("release is scoped: other sfDirs and sessions are untouched") {
     val d1 = freshDir("s1"); val d2 = freshDir("s2")
     val a = Memo.cached(spark, d1, "m")(spark.range(10).toDF("id").persist())

@@ -139,8 +139,13 @@ class ExtSpec extends SparkSpec {
     graft.Memo.release(spark, sf())
     def objEntries = graft.Memo.entries(spark)
       .filter(e => e.startsWith(sf()) && e.contains("sim.pair"))
-    SimilarityQueries.nearDupCandidates(spark, sf(), "ivff8")
-    SimilarityQueries.nearDupCandidates(spark, sf(), "ivfp8")
+    // flat codebook: the query path's candidate plan; product codebook:
+    // the forced product-quantizer arm (fixture size is far below its
+    // regime edge)
+    SimilarityQueries.nearDupCandidates(spark, sf())
+    IvfQueries.probePairCandidatesFrom(spark, sf(),
+      graft.Tables.embeddings(spark, sf()), VectorOps.corpusSize(spark, sf()),
+      forceProduct = true)
     val after = objEntries
     assert(after.exists(_.contains("sim.pairFlatCents.k")), s"entries: $after")
     assert(after.exists(_.contains("sim.pairCodebooks.k")), s"entries: $after")
@@ -149,11 +154,11 @@ class ExtSpec extends SparkSpec {
       .map(_._3).sum
     val flatBuilds = builds("sim.pairFlatCents")
     // cached: a second plan build must NOT re-train
-    SimilarityQueries.nearDupCandidates(spark, sf(), "ivff8")
+    SimilarityQueries.nearDupCandidates(spark, sf())
     assert(builds("sim.pairFlatCents") == flatBuilds, "second build must hit the cache")
     graft.Memo.release(spark, sf())
     assert(objEntries.isEmpty, s"release must drop codebook entries: $objEntries")
-    SimilarityQueries.nearDupCandidates(spark, sf(), "ivff8")
+    SimilarityQueries.nearDupCandidates(spark, sf())
     assert(builds("sim.pairFlatCents") == flatBuilds + 1,
       "post-release build must re-train")
     graft.Memo.release(spark, sf())
@@ -176,6 +181,18 @@ class ExtSpec extends SparkSpec {
     assert(lsh.nonEmpty)
     lsh.foreach { case (k, c) =>
       assert(exact.get(k).contains(c), s"LSH pair $k not exact-verified") }
+    // the product-quantizer IVF arm, forced at fixture size and run
+    // through the same exact verify: precision 1 against the exact set
+    def productArm(d: String) = SimilarityQueries.verifiedNearDup(spark, d,
+      IvfQueries.probePairCandidatesFrom(spark, d,
+        graft.Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d),
+        forceProduct = true)).collect()
+      .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")) ->
+        r.getAs[Double]("cos")).toMap
+    val product = productArm(sf())
+    assert(product.nonEmpty)
+    product.foreach { case (k, c) =>
+      assert(exact.get(k).contains(c), s"product-IVF pair $k not exact-verified") }
     // identical-vector recall needs identical vectors — the sf0.001
     // fixture has none, so build one: every base vector duplicated
     // under a shifted id. Identical vectors share every band signature,
@@ -197,6 +214,12 @@ class ExtSpec extends SparkSpec {
     nonZero.foreach { id =>
       assert(dup.get((id, id + OFF)).contains(1.0),
         s"identical pair ($id, ${id + OFF}) missed by the LSH branch") }
+    // identical vectors share their home cell, which each one probes
+    val dupProduct = productArm(tmp)
+    nonZero.foreach { id =>
+      assert(dupProduct.get((id, id + OFF)).contains(1.0),
+        s"identical pair ($id, ${id + OFF}) missed by the product-IVF arm") }
+    graft.Memo.release(spark, tmp)
   }
 
   test("LSH ANN results carry exact cosines for EVERY returned pair") {
