@@ -1,6 +1,6 @@
 package graft
 
-import graft.etl.{MetricsSink, SplitCache}
+import graft.etl.SplitCache
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 /** The reference's flagship lifecycle (SURVEY.md §3 E1, main_my.py) as
   * one composed engine run:
   *
-  *   load interactions → memoized splits/negatives/train (S2) →
+  *   load interactions → memoized splits/negatives (S2) →
   *   candidate assembly → batch scoring → HR/NDCG/MRR\@K (E3) →
   *   append to the metrics log (S4) → keep-first best-epoch selection
   *   over the accumulated log (A7 / S3's checkpoint-selection logic).
@@ -61,7 +61,7 @@ object Lifecycle {
     */
   def runEpochs(spark: SparkSession, sfDir: String, workDir: String,
       epochs: Seq[Int]): Unit = {
-    val (splits, negatives, _) = timed("cachedPipeline") {
+    val (splits, negatives) = timed("cachedPipeline") {
       SplitCache.cachedPipeline(spark, sfDir, s"$workDir/cache") }
     val metrics = timed("ranks+metrics") {
       graft.rank.Metrics.rankingMetricsFromRanks(
@@ -74,9 +74,8 @@ object Lifecycle {
       val rows = metrics.filter(_.getInt(0) == i)
         .map(r => Row.fromSeq(r.toSeq.tail :+ e)).toSeq
       timed(s"e$e append") {
-        MetricsSink.appendParquet(
-          spark.createDataFrame(rows.asJava, MetricsLogSchema),
-          s"$workDir/metrics_log")
+        spark.createDataFrame(rows.asJava, MetricsLogSchema)
+          .write.mode("append").parquet(s"$workDir/metrics_log")
       }
     }
   }
@@ -181,7 +180,7 @@ object Lifecycle {
     import scala.concurrent.duration.Duration
     val winners = best.filter(_.getAs[Int]("k") == 10)
     // the six saves are independent tiny write jobs — submit them
-    // concurrently like cachedPipeline does its three relations
+    // concurrently like cachedPipeline does its two relations
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(6, winners.length)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -242,7 +241,7 @@ object Lifecycle {
       s"""WITH ${etl.Interactions.duckCte},
          |${etl.Splits.duckLeaveTwoOutCte},
          |${etl.Interactions.duckDenseItemsCte},
-         |${etl.Splits.duckNegativeSampleScalableCte(160)},
+         |${etl.Splits.duckNegativeSampleScalableCte},
          |${etl.Splits.duckCandidatesCte},
          |escored AS (
          |  SELECT ep.epoch, c.user_id, c.domain, c.item_id, c.is_positive,

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed materialization — the cluster-scale companion to
   * [[SplitCache]]: where writeOnce removes RECOMPUTATION, bucketing
@@ -63,44 +63,6 @@ object Bucketing {
       .sortBy(cols.head, cols.tail: _*)
       .saveAsTable(table)
     spark.table(table)
-  }
-
-  /** The interaction log bucketed on its universal key. The default
-    * table name encodes the source dir so two sfDirs in one session get
-    * distinct materializations instead of silently overwriting each
-    * other's managed table.
-    */
-  def bucketedInteractions(spark: SparkSession, sfDir: String,
-      table: String = "", buckets: Int = 32): DataFrame = {
-    val t = if (table.nonEmpty) table
-            else s"inter_bucketed_${tableSuffix(sfDir)}"
-    writeBucketed(Interactions(spark, sfDir), t, buckets,
-      Seq("user_id", "domain"))
-  }
-
-  /** The document corpus bucketed by doc_id — the layout a 100 TB
-    * dedup/decontamination deployment materializes ONCE: every per-doc
-    * aggregate in the dedup family (shingle sets, shingle counts,
-    * Jaccard-verify sizes) then reads bucket-local files with no
-    * Exchange (BucketedDocsSpec asserts it via the relational shingle
-    * path, TextOps.wordShingleHashesRel).
-    */
-  def bucketedDocuments(spark: SparkSession, sfDir: String,
-      table: String = "", buckets: Int = 32): DataFrame = {
-    val t = if (table.nonEmpty) table
-            else s"docs_bucketed_${tableSuffix(sfDir)}"
-    writeBucketed(graft.Tables.documents(spark, sfDir), t, buckets, Seq("doc_id"))
-  }
-
-  /** The embedding corpus bucketed by vec_id: the ANN family's element
-    * and norm aggregates, and the exact re-rank join's corpus side, read
-    * it exchange-free (VectorOps.cosineFrom).
-    */
-  def bucketedEmbeddings(spark: SparkSession, sfDir: String,
-      table: String = "", buckets: Int = 32): DataFrame = {
-    val t = if (table.nonEmpty) table
-            else s"embs_bucketed_${tableSuffix(sfDir)}"
-    writeBucketed(graft.Tables.embeddings(spark, sfDir), t, buckets, Seq("vec_id"))
   }
 
   /** Stable identifier-safe suffix for a source path. */

@@ -190,7 +190,7 @@ object EtlQueries {
         Seq("user_id"), "dense_id")
         .select(lit("user").as("kind"), lit("*").as("domain"),
           col("user_id").as("raw_id"), col("dense_id"))
-      val items = Interactions.denseItems(spark, d)
+      val items = Interactions.denseItems(Interactions(spark, d))
         .select(lit("item").as("kind"), col("domain"),
           col("item_id").as("raw_id"), col("dense_id"))
       users.unionAll(items).orderBy("kind", "domain", "raw_id")
@@ -312,7 +312,7 @@ object EtlQueries {
          |       COUNT(*) AS n_kept, CAST(SUM(item_id) AS BIGINT) AS sum_kept
          |FROM train GROUP BY user_id, domain
          |ORDER BY user_id, domain""".stripMargin) { (spark, d) =>
-      Splits.trainSubsample(spark, d)
+      Splits.trainSubsample(Interactions(spark, d))
         .groupBy("user_id", "domain")
         .agg(min(col("n_train")).as("n_train"), count(lit(1)).as("n_kept"),
           sum(col("item_id")).as("sum_kept"))
@@ -326,7 +326,7 @@ object EtlQueries {
          |${Splits.duckNegativeSampleCte(subsetWhere)}
          |SELECT user_id, domain, item_id, rn FROM negs
          |ORDER BY user_id, domain, rn""".stripMargin) { (spark, d) =>
-      Splits.negativeSampleExactBounded(spark, d, SLICE_N)
+      Splits.negativeSampleExact(Interactions(spark, d), SLICE_N)
         .orderBy("user_id", "domain", "rn")
     },
 
@@ -335,13 +335,13 @@ object EtlQueries {
     "q_neg_sample_scalable" -> QueryDef(
       s"""WITH ${Interactions.duckCte},
          |${Interactions.duckDenseItemsCte},
-         |${Splits.duckNegativeSampleScalableCte(160)}
+         |${Splits.duckNegativeSampleScalableCte}
          |SELECT user_id, domain, COUNT(*) AS n_neg,
          |       CAST(SUM(item_id) AS BIGINT) AS sum_ids,
          |       CAST(SUM(rn * item_id) AS BIGINT) AS ord_checksum
          |FROM negs_scalable GROUP BY user_id, domain
          |ORDER BY user_id, domain""".stripMargin) { (spark, d) =>
-      Splits.negativeSampleScalable(spark, d)
+      Splits.explodeNegatives(Splits.negativeSampleScalable(Interactions(spark, d)))
         .groupBy("user_id", "domain")
         .agg(count(lit(1)).as("n_neg"), sum(col("item_id")).as("sum_ids"),
           sum(col("rn") * col("item_id")).as("ord_checksum"))
@@ -354,7 +354,7 @@ object EtlQueries {
       s"""WITH ${Interactions.duckCte},
          |${Splits.duckLeaveTwoOutCte},
          |${Interactions.duckDenseItemsCte},
-         |${Splits.duckNegativeSampleScalableCte(160)},
+         |${Splits.duckNegativeSampleScalableCte},
          |${Splits.duckCandidatesCte}
          |SELECT user_id, domain, COUNT(*) AS n_cand,
          |       CAST(SUM(is_positive) AS BIGINT) AS n_pos,

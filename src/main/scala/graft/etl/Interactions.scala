@@ -116,11 +116,7 @@ object Interactions {
     * (~10⁶ even at web scale). The UNBOUNDED axis (users) is ranked with
     * [[DenseRank.zipIndex]] instead (see q_id_densify).
     */
-  def denseItems(spark: SparkSession, sfDir: String): DataFrame =
-    denseItemsFrom(apply(spark, sfDir))
-
-  /** [[denseItems]] over an explicit interactions relation. */
-  def denseItemsFrom(inter: DataFrame): DataFrame = {
+  def denseItems(inter: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     inter
       .select("domain", "item_id").distinct()

@@ -82,37 +82,38 @@ object SplitCache {
     writtenSchema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
   }
 
-  /** The reference's six cached relations in one call: splits, negatives
-    * and train for a scale dir, memoized under `cacheDir`.
+  /** The reference's split cache in one call: the splits and the sampled
+    * negatives for a scale dir, memoized under `cacheDir`.
     *
-    * The cold build is ONE shared-scan pass: all three relations key on
-    * the same (user_id, domain) shuffle, so the pipeline materializes
-    * `Splits.rankedFrom(interactions)` once — the single expensive
-    * window sort — and derives each sink narrowly from it (splits = one
-    * hash agg; train = window-agg filter + in-partition re-rank, no join
-    * back to the splits table; negatives = one collect_set agg). Earlier
-    * shapes paid the interactions scan and/or the leave-two-out window
-    * up to three times (r5 cold build ~6s of the 11s q_lifecycle line);
-    * this pays it once. Memory discipline at scale still holds: exactly
-    * one full-log window sort exists in the whole build (the r4
-    * all-parallel variant with THREE simultaneous full-log sorts spilled
-    * and collapsed at 30× — 269s), and the two concurrent writes after
-    * `ranked` lands are narrow consumers of the persisted relation. The
-    * persist is owned by this call and released in `finally`; the
+    * The cold build is ONE shared-scan pass: both relations key on the
+    * same (user_id, domain) shuffle, so the pipeline materializes
+    * `Splits.ranked(interactions)` once — the single expensive window
+    * sort — and derives each sink narrowly from it (splits = one hash
+    * agg; negatives = one collect_set agg). Earlier shapes paid the
+    * interactions scan and/or the leave-two-out window up to three times
+    * (r5 cold build ~6s of the 11s q_lifecycle line); this pays it once.
+    * Memory discipline at scale still holds: exactly one full-log window
+    * sort exists in the whole build (the r4 all-parallel variant with
+    * THREE simultaneous full-log sorts spilled and collapsed at 30× —
+    * 269s), and the concurrent writes after `ranked` lands are narrow
+    * consumers of the persisted relation. The persist is owned by this
+    * call and released in `finally`, after every write has finished; the
     * session-shared interactions cache entry (Bench/Verify pre-persist
     * it) is never touched, so no cross-query eviction (the r4 bench bug).
-    * On a warm cache this is three `_SUCCESS` stats — no job, no persist.
+    * On a warm cache this is two `_SUCCESS` stats — no job, no persist.
     *
-    * Returns scans of the three written tables, `(splits, negatives,
-    * train)`: splits `(user_id, domain, deg, vali_item, test_item)`,
-    * negatives PACKED `(user_id, domain, items)` — the sampled negatives
-    * in draw order, ≤[[Splits.NUM_NEG]] per (user, domain);
-    * [[Splits.explodeNegatives]] gives the long form — and train. A
-    * cold build reads each back with the schema it just wrote (see
-    * [[writeOnce]]), so no read-back runs a footer-inference job.
+    * Returns scans of the written tables, `(splits, negatives)`: splits
+    * `(user_id, domain, deg, vali_item, test_item)`, negatives PACKED
+    * `(user_id, domain, items)` — the sampled negatives in draw order,
+    * ≤[[Splits.NUM_NEG]] per (user, domain); [[Splits.explodeNegatives]]
+    * gives the long form. A cold build reads each back with the schema it
+    * just wrote (see [[writeOnce]]), so no read-back runs a
+    * footer-inference job. The train subsample is not cached: nothing
+    * here trains (the lifecycle's epochs stand in for training with
+    * `Lifecycle.epochWeights`), and q_train_subsample gates the operator.
     */
   def cachedPipeline(spark: SparkSession, sfDir: String, cacheDir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     def complete(path: String) = {
@@ -120,11 +121,11 @@ object SplitCache {
       p.getFileSystem(spark.sessionState.newHadoopConf())
         .exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
     }
-    val allCached = Seq("splits", "negatives", "train")
+    val allCached = Seq("splits", "negatives")
       .forall(n => complete(s"$cacheDir/$n"))
     val ranked =
       if (allCached) null
-      else Splits.rankedFrom(Interactions(spark, sfDir)).persist()
+      else Splits.ranked(Interactions(spark, sfDir)).persist()
     // always-on stage (r14, VERDICT r13 #4): the r14 skew probe showed
     // this materialization is the ONLY axis-dependent stage of the
     // whole lifecycle (89.4s zipf vs 19.1s nd warm — the leave-two-out
@@ -134,34 +135,31 @@ object SplitCache {
     // r13's capstone read "negatives write 74s" for what is really the
     // ranked window — so the cost now lands under its own name in
     // every artifact. The extra count() action is shared work: the
-    // three concurrent writes reuse the persisted relation it
-    // materializes. It runs inside the try, so a failed materialization
-    // still releases the persisted relation.
+    // concurrent writes reuse the persisted relation it materializes.
+    // It runs inside the try, so a failed materialization still
+    // releases the persisted relation.
     try {
       if (ranked != null) timed("ranked materialize") { ranked.count() }
-      // train no longer consumes the written splits table (both derive
-      // from `ranked`), so all three writes are independent narrow
-      // consumers of the one persisted relation and can run concurrently:
-      // the only full-log sort in the build is `ranked` itself, so the
-      // 30× memory collapse of the old all-parallel variant (three
-      // simultaneous full-log window sorts) cannot recur.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+      // both writes are independent narrow consumers of the one
+      // persisted relation, so they run concurrently: the only full-log
+      // sort in the build is `ranked` itself
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       try {
         val splitsF = Future(timed("splits write") { writeOnce(spark,
-          Splits.leaveTwoOutFromRanked(ranked), s"$cacheDir/splits") })
+          Splits.leaveTwoOut(ranked), s"$cacheDir/splits") })
         // the negatives table is stored PACKED — one (user, domain,
         // items[99]) row instead of 99 long rows (the long form's
         // ~300M-row parquet encode was the single longest stage of the
         // 100× build, VERDICT r10 #6)
         val negF = Future(timed("negatives write") { writeOnce(spark,
-          Splits.negativeSampleScalablePackedFrom(ranked),
-          s"$cacheDir/negatives") })
-        val trainF = Future(timed("train write") { writeOnce(spark,
-          Splits.trainSubsampleFromRanked(ranked, Splits.TRAIN_PCT),
-          s"$cacheDir/train") })
-        (Await.result(splitsF, Duration.Inf), Await.result(negF, Duration.Inf),
-          Await.result(trainF, Duration.Inf))
+          Splits.negativeSampleScalable(ranked), s"$cacheDir/negatives") })
+        // wait for BOTH writes before rethrowing either failure: a write
+        // still running when `ranked` is unpersisted recomputes it from
+        // lineage, and a caller cleaning up `cacheDir` would race its
+        // temp directory
+        Seq(splitsF, negF).foreach(Await.ready(_, Duration.Inf))
+        (splitsF.value.get.get, negF.value.get.get)
       } finally pool.shutdown()
     } finally {
       if (ranked != null) ranked.unpersist(false)

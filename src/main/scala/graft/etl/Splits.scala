@@ -39,46 +39,28 @@ object Splits {
   private def duckHOrder(salt: String): String =
     Hashing.duckH60("user_id", "item_id", "domain", s"'$salt'")
 
-  /** Leave-two-out split (Dataset_CDAE.py:91-145): per (user, domain) the
-    * first item in seeded order is vali, the second is test; degree-1 users
-    * get the same item for both (Dataset_CDAE.py:106-108 — the edge that
-    * changes metric denominators, SURVEY.md §7 risk 6).
+  /** The leave-two-out rank: interactions plus `rn`, each item's
+    * position in seeded order within its (user, domain) — ONE
+    * (user_id, domain) shuffle + ONE in-partition sort. The splits and
+    * the negatives are narrow derivations of this relation (agg /
+    * collect_set agg), so the cache build (SplitCache.cachedPipeline)
+    * pays the expensive window exactly once instead of once per sink —
+    * and every derivation keeps the same hash partitioning, so none of
+    * them re-shuffles.
     */
-  def leaveTwoOut(spark: SparkSession, sfDir: String): DataFrame =
-    leaveTwoOutFrom(Interactions(spark, sfDir))
-
-  /** [[leaveTwoOut]] over an explicit interactions relation. */
-  def leaveTwoOutFrom(inter: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id", "domain")
-      .orderBy(hOrder(SEED_SPLIT), col("item_id"))
-    inter
-      .withColumn("rn", row_number().over(w))
-      .groupBy("user_id", "domain")
-      .agg(
-        count(lit(1)).as("deg"),
-        min(when(col("rn") === 1, col("item_id"))).as("vali_item"),
-        coalesce(min(when(col("rn") === 2, col("item_id"))),
-          min(when(col("rn") === 1, col("item_id")))).as("test_item"))
-  }
-
-  /** The shared single-pass base for the memoized pipeline: interactions
-    * plus the leave-two-out rank, ONE (user_id, domain) shuffle + ONE
-    * in-partition sort. Splits, train and negatives are all narrow
-    * derivations of this relation (agg / filter+re-rank / agg), so the
-    * cache build (SplitCache.cachedPipeline) pays the expensive window
-    * exactly once instead of once per sink — and every derivation keeps
-    * the same hash partitioning, so none of them re-shuffles.
-    */
-  def rankedFrom(inter: DataFrame): DataFrame = {
+  def ranked(inter: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id", "domain")
       .orderBy(hOrder(SEED_SPLIT), col("item_id"))
     inter.withColumn("rn", row_number().over(w))
   }
 
-  /** [[leaveTwoOutFrom]] as the aggregate of a pre-[[rankedFrom]]
-    * relation — value-identical (same agg body), shuffle-free over it.
+  /** Leave-two-out split (Dataset_CDAE.py:91-145) as the aggregate of a
+    * [[ranked]] relation: per (user, domain) the first item in seeded
+    * order is vali, the second is test; degree-1 users get the same item
+    * for both (Dataset_CDAE.py:106-108 — the edge that changes metric
+    * denominators, SURVEY.md §7 risk 6). Shuffle-free over `ranked`.
     */
-  def leaveTwoOutFromRanked(ranked: DataFrame): DataFrame =
+  def leaveTwoOut(ranked: DataFrame): DataFrame =
     ranked
       .groupBy("user_id", "domain")
       .agg(
@@ -86,31 +68,6 @@ object Splits {
         min(when(col("rn") === 1, col("item_id"))).as("vali_item"),
         coalesce(min(when(col("rn") === 2, col("item_id"))),
           min(when(col("rn") === 1, col("item_id")))).as("test_item"))
-
-  /** [[trainSubsampleWith]] from a pre-[[rankedFrom]] relation: the
-    * hold-out columns come from window AGGREGATES over the same
-    * partition key (no join back to the splits table, no new exchange),
-    * then the identical degree/hold-out filter and SEED_TRAIN re-rank.
-    */
-  def trainSubsampleFromRanked(ranked: DataFrame, pct: Double): DataFrame = {
-    val grp = Window.partitionBy("user_id", "domain")
-    val held = ranked
-      .withColumn("deg", count(lit(1)).over(grp))
-      .withColumn("vali_item",
-        min(when(col("rn") === 1, col("item_id"))).over(grp))
-      .withColumn("test_item",
-        coalesce(min(when(col("rn") === 2, col("item_id"))).over(grp),
-          min(when(col("rn") === 1, col("item_id"))).over(grp)))
-      .filter(!(col("item_id") === col("vali_item")) &&
-        !(col("deg") > 2 && col("item_id") === col("test_item")))
-    val w = Window.partitionBy("user_id", "domain")
-      .orderBy(hOrder(SEED_TRAIN), col("item_id"))
-    held
-      .withColumn("rn2", row_number().over(w))
-      .withColumn("n_train", count(lit(1)).over(grp))
-      .filter(col("rn2") <= floor(lit(pct) * col("n_train") + 0.5))
-      .select("user_id", "domain", "item_id", "n_train")
-  }
 
   val duckLeaveTwoOutCte: String =
     s"""ranked AS (
@@ -131,26 +88,11 @@ object Splits {
     * empty train), then keep the first floor(pct·n + 0.5) items in seeded
     * order (Dataset_CDAE.py:78-84; floor(+0.5) is the engine's defined
     * rounding — identical in both engines, sidestepping banker's-rounding
-    * drift, SURVEY.md §2.8).
+    * drift, SURVEY.md §2.8). The hold-out columns come from a join back to
+    * the [[leaveTwoOut]] splits, the shape the oracle CTE replays.
     */
-  def trainSubsample(spark: SparkSession, sfDir: String, pct: Double = TRAIN_PCT): DataFrame =
-    trainSubsampleFrom(Interactions(spark, sfDir), pct)
-
-  /** [[trainSubsample]] over an explicit interactions relation. */
-  def trainSubsampleFrom(inter: DataFrame, pct: Double): DataFrame =
-    trainSubsampleWith(inter, leaveTwoOutFrom(inter), pct)
-
-  /** [[trainSubsample]] against an ALREADY-COMPUTED splits relation —
-    * callers holding a materialized split cache (SplitCache) pass its
-    * scan here so the hold-out join reads parquet instead of re-running
-    * the leave-two-out window over the full interaction log (at 30×
-    * scale that recompute was the cache build's largest redundant sort).
-    */
-  def trainSubsampleWith(inter: DataFrame, splits: DataFrame,
-      pct: Double): DataFrame = {
-    val train = inter.join(
-      splits.select("user_id", "domain", "deg", "vali_item", "test_item"),
-      Seq("user_id", "domain"))
+  def trainSubsample(inter: DataFrame, pct: Double = TRAIN_PCT): DataFrame = {
+    val train = inter.join(leaveTwoOut(ranked(inter)), Seq("user_id", "domain"))
       .filter(!(col("item_id") === col("vali_item")) &&
         !(col("deg") > 2 && col("item_id") === col("test_item")))
     val w = Window.partitionBy("user_id", "domain")
@@ -192,10 +134,17 @@ object Splits {
 
   /** Catalog size above which the executor-broadcast formulation is
     * refused: past ~2×10⁷ items the collected array risks driver OOM and
-    * the broadcast stops paying for itself — the samplers switch to the
-    * distributed join formulation ([[negativeSampleScalableDistributedFrom]]).
+    * the broadcast stops paying for itself — the scalable sampler
+    * switches to the distributed join formulation ([[distributedNegatives]]).
     */
   val CATALOG_BROADCAST_MAX: Long = 20000000L
+
+  /** Hash-indexed draws per (user, domain) in the scalable sampler: the
+    * first [[NUM_NEG]] draws that are neither a repeat nor a positive are
+    * kept, so a user ends with fewer only when more than DRAWS − NUM_NEG
+    * draws are wasted.
+    */
+  val DRAWS = 160
 
   private def distinctItems(inter: DataFrame): DataFrame =
     inter.select("domain", "item_id").distinct()
@@ -226,13 +175,13 @@ object Splits {
     * materialized once per executor: catalogs are ~10⁶ items even at web
     * scale (megabytes), far under broadcast limits. Guarded: a catalog
     * past [[CATALOG_BROADCAST_MAX]] fails fast with a pointer to the
-    * distributed sampler instead of OOMing the driver mid-collect.
+    * scalable sampler instead of OOMing the driver mid-collect.
     */
   private def itemCatalog(inter: DataFrame): Map[String, Array[Long]] =
     collectCatalogCapped(distinctItems(inter), CATALOG_BROADCAST_MAX).getOrElse {
       throw new IllegalStateException(
         s"item catalog exceeds the $CATALOG_BROADCAST_MAX-item broadcast " +
-          "ceiling; use negativeSampleScalableFrom, which switches to the " +
+          "ceiling; use negativeSampleScalable, which switches to the " +
           "distributed join formulation past the threshold")
     }
 
@@ -246,42 +195,23 @@ object Splits {
     * all domain items the user never touched, in seeded order, first 99.
     * The complement is computed per row against the broadcast item array —
     * O(|slice|·|items|) compute but ZERO extra shuffles. The reference's
-    * semantics are O(U×I) by definition, which is why [[userFilter]] gates
-    * it; the 100 TB path is [[negativeSampleScalable]].
+    * semantics are O(U×I) by definition, so the operator is gated to a
+    * COUNT-bounded user slice: the first `n` distinct users in
+    * deterministic h60 order (a distributed TakeOrderedAndProject + tiny
+    * broadcast semi-join). A fractional slice (`user_id % m`) keeps the
+    * operator quadratic in scale — slice AND catalog both grow with the
+    * corpus; a count bound makes it O(n·|catalog|), linear in the corpus
+    * (measured 328s → 11s for q_neg_sample at 30×). The item catalog
+    * still comes from the FULL relation (the complement's universe must
+    * not shrink with the slice). The 100 TB path is
+    * [[negativeSampleScalable]].
     */
-  def negativeSampleExact(spark: SparkSession, sfDir: String,
-      userFilter: Column = lit(true)): DataFrame =
-    negativeSampleExactFrom(Interactions(spark, sfDir), userFilter)
-
-  /** [[negativeSampleExactFrom]] gated to a COUNT-bounded user slice:
-    * the first `n` distinct users in deterministic h60 order (a
-    * distributed TakeOrderedAndProject + tiny broadcast semi-join).
-    * A fractional slice (`user_id % m`) keeps the operator quadratic in
-    * scale — slice AND catalog both grow with the corpus; a count bound
-    * makes it O(n·|catalog|), linear in the corpus (measured 328s → 11s
-    * for q_neg_sample at 30×). The item catalog still comes from the
-    * FULL relation (the complement's universe must not shrink with the
-    * slice).
-    */
-  def negativeSampleExactBounded(spark: SparkSession, sfDir: String,
-      n: Int): DataFrame = {
-    val inter = Interactions(spark, sfDir)
+  def negativeSampleExact(inter: DataFrame, n: Int): DataFrame = {
+    import inter.sparkSession.implicits._
     val users = inter.select("user_id").distinct()
       .orderBy(graft.Hashing.h60(col("user_id")), col("user_id")).limit(n)
-    samplePositives(
-      userPositives(inter, lit(true)).join(broadcast(users), "user_id"),
-      inter)
-  }
-
-  /** [[negativeSampleExact]] over an explicit interactions relation. */
-  def negativeSampleExactFrom(inter: DataFrame,
-      userFilter: Column = lit(true)): DataFrame =
-    samplePositives(userPositives(inter, userFilter), inter)
-
-  private def samplePositives(positives: DataFrame, inter: DataFrame): DataFrame = {
-    import inter.sparkSession.implicits._
     val bcItems = inter.sparkSession.sparkContext.broadcast(itemCatalog(inter))
-    positives
+    userPositives(inter, lit(true)).join(broadcast(users), "user_id")
       .select("user_id", "domain", "pos").as[PosIn]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
@@ -339,7 +269,7 @@ object Splits {
        |)""".stripMargin
 
   /** Scalable negative sampling — the 100 TB replacement for the O(U×I)
-    * complement (SURVEY.md §4.3 "physical notes"): draw `draws`
+    * complement (SURVEY.md §4.3 "physical notes"): draw [[DRAWS]]
     * hash-indexed candidates per (user, domain) — O(U·draws) — map the
     * dense index to a real item id via the broadcast catalog, drop
     * collisions (first-draw-wins = min r) and positives, keep the first
@@ -349,56 +279,36 @@ object Splits {
     * copies — the r1 formulation spent 4 shuffles of the drawn rows on
     * the same semantics, and the first r2 version shipped the catalog as
     * a join column (O(U·|items|) bytes).
-    */
-  def negativeSampleScalable(spark: SparkSession, sfDir: String,
-      draws: Int = 160): DataFrame =
-    negativeSampleScalableFrom(Interactions(spark, sfDir), draws)
-
-  /** [[negativeSampleScalable]] over an explicit interactions relation.
+    *
+    * Returns one PACKED row per (user, domain): the sampled negatives as
+    * an `items` array in draw order. This is the shape the split cache
+    * WRITES (r11, VERDICT r10 #6): the long form pushes U·99 rows through
+    * shuffle-free parquet encode — ~300M rows and the single longest
+    * stage of the 100× q_lifecycle build — while the packed form writes
+    * U rows of 99 longs each (same bytes of item data, 99× less row/page
+    * overhead). [[explodeNegatives]] gives the long (user_id, domain,
+    * item_id, rn) form losslessly (rn = array position + 1, exactly the
+    * draw order).
+    *
     * `userFilter` restricts the SAMPLED users only — the item catalog and
     * positives stay global, so each user's draws are identical whether or
     * not other users are sampled (what lets callers slice users without
-    * changing per-user results).
-    *
-    * Catalogs past `maxBroadcastItems` switch to the all-join distributed
-    * formulation ([[negativeSampleScalableDistributedFrom]]) — identical
-    * results (SplitsSpec proves row equality), unbounded catalog axis.
+    * changing per-user results). Catalogs past `maxBroadcastItems` switch
+    * to the all-join distributed formulation ([[distributedNegatives]]) —
+    * identical results (SplitsSpec proves row equality), unbounded
+    * catalog axis.
     */
-  def negativeSampleScalableFrom(inter: DataFrame, draws: Int = 160,
-      userFilter: Column = lit(true),
-      maxBroadcastItems: Long = CATALOG_BROADCAST_MAX): DataFrame =
-    collectCatalogCapped(distinctItems(inter), maxBroadcastItems) match {
-      case None => // catalog past the broadcast ceiling
-        negativeSampleScalableDistributedFrom(inter, draws, userFilter)
-      case Some(c) =>
-        explodeNegatives(packedFromCatalog(inter, c, draws, userFilter))
-    }
-
-  /** One PACKED row per (user, domain): the [[NUM_NEG]] sampled
-    * negatives as an `items` array in draw order. This is the shape the
-    * split cache WRITES (r11, VERDICT r10 #6): the long form pushes
-    * U·99 rows through shuffle-free parquet encode — ~300M rows and the
-    * single longest stage of the 100× q_lifecycle build — while the
-    * packed form writes U rows of 99 longs each (same bytes of item
-    * data, 99× less row/page overhead). [[explodeNegatives]] restores
-    * the long form losslessly (rn = array position + 1, exactly the
-    * draw order), so the oracle-gated long-form gate (`q_neg_sample
-    * _scalable`) and every consumer keep their schema — SplitsSpec
-    * proves explode(packed) ≡ the long sampler row-for-row.
-    */
-  def negativeSampleScalablePackedFrom(inter: DataFrame, draws: Int = 160,
-      userFilter: Column = lit(true),
+  def negativeSampleScalable(inter: DataFrame, userFilter: Column = lit(true),
       maxBroadcastItems: Long = CATALOG_BROADCAST_MAX): DataFrame =
     collectCatalogCapped(distinctItems(inter), maxBroadcastItems) match {
       case None =>
         // the distributed long form already shuffles on (user, domain)
         // for its row_number window, so the pack agg reuses that
         // partitioning — no extra exchange
-        val long = negativeSampleScalableDistributedFrom(inter, draws, userFilter)
-        long.groupBy("user_id", "domain")
+        distributedNegatives(inter, userFilter).groupBy("user_id", "domain")
           .agg(expr("transform(array_sort(collect_list(struct(rn, item_id)))," +
             " x -> x.item_id)").as("items"))
-      case Some(c) => packedFromCatalog(inter, c, draws, userFilter)
+      case Some(c) => packedFromCatalog(inter, c, userFilter)
     }
 
   /** The long (user_id, domain, item_id, rn) relation from a packed one
@@ -411,8 +321,7 @@ object Splits {
         (col("p") + 1).cast("int").as("rn"))
 
   private def packedFromCatalog(inter: DataFrame,
-      catalog: Map[String, Array[Long]], draws: Int,
-      userFilter: Column): DataFrame = {
+      catalog: Map[String, Array[Long]], userFilter: Column): DataFrame = {
     import inter.sparkSession.implicits._
     val bcItems = inter.sparkSession.sparkContext.broadcast(catalog)
     userPositives(inter, userFilter)
@@ -425,15 +334,15 @@ object Splits {
           val items = cat(r.domain)
           // md5 input is "<user>:<r>:<domain>:<salt>"; stream the fixed
           // prefix/suffix into the digest instead of concatenating a
-          // fresh string per draw (the draw loop runs U×160 times)
+          // fresh string per draw (the draw loop runs U×DRAWS times)
           val prefix = s"${r.user_id}:".getBytes(ascii)
           val suffix = s":${r.domain}:$SEED_NEG".getBytes(ascii)
           val n = items.length
           val posSet = r.pos.toSet
-          val seen = new java.util.HashSet[Long](2 * draws)
+          val seen = new java.util.HashSet[Long](2 * DRAWS)
           val out = new scala.collection.mutable.ArrayBuffer[Long](NUM_NEG)
           var d = 1
-          while (d <= draws && out.length < NUM_NEG) {
+          while (d <= DRAWS && out.length < NUM_NEG) {
             val dense = Hashing.h60JvmParts(md, prefix, d.toString, suffix) % n
             if (seen.add(dense)) {
               val item = items(dense.toInt)
@@ -446,30 +355,30 @@ object Splits {
       }.toDF()
   }
 
-  /** The distributed-join formulation of [[negativeSampleScalableFrom]] —
-    * the unbounded-catalog path (10⁸⁺ items, where the broadcast array
-    * would OOM the driver). Semantically identical to the broadcast loop:
-    * draw r=1..draws dense ids `h60(user, r, domain, salt) mod |items|`,
-    * first-draw-wins on collisions (min r per dense id), map dense → item
-    * via [[Interactions.denseItemsFrom]] as a JOIN keyed (domain,
-    * dense_id), anti-join out positives, keep the first [[NUM_NEG]] by
-    * draw order. This is exactly the shape the DuckDB oracle CTE
-    * ([[duckNegativeSampleScalableCte]]) replays.
+  /** The distributed-join formulation of [[negativeSampleScalable]] in
+    * long form — the unbounded-catalog path (10⁸⁺ items, where the
+    * broadcast array would OOM the driver). Semantically identical to the
+    * broadcast loop: draw r=1..DRAWS dense ids `h60(user, r, domain,
+    * salt) mod |items|`, first-draw-wins on collisions (min r per dense
+    * id), map dense → item via [[Interactions.denseItems]] as a JOIN
+    * keyed (domain, dense_id), anti-join out positives, keep the first
+    * [[NUM_NEG]] by draw order. This is exactly the shape the DuckDB
+    * oracle CTE ([[duckNegativeSampleScalableCte]]) replays.
     *
     * Cost vs broadcast path: three extra shuffles (dense-id dedup, the
     * dense→item join, the positives anti-join) — all keyed on bounded-
     * cardinality keys, no axis materializes U×I. The per-domain counts
     * are a tiny broadcast.
     */
-  def negativeSampleScalableDistributedFrom(inter: DataFrame, draws: Int = 160,
-      userFilter: Column = lit(true)): DataFrame = {
-    val di = Interactions.denseItemsFrom(inter)
+  private def distributedNegatives(inter: DataFrame,
+      userFilter: Column): DataFrame = {
+    val di = Interactions.denseItems(inter)
     val nItems = di.groupBy("domain").agg(count(lit(1)).as("n_items"))
     val drawn = inter.filter(userFilter)
       .select("user_id", "domain").distinct()
       .join(broadcast(nItems), "domain")
       .select(col("user_id"), col("domain"), col("n_items"),
-        explode(sequence(lit(1), lit(draws))).as("r"))
+        explode(sequence(lit(1), lit(DRAWS))).as("r"))
       .select(col("user_id"), col("domain"), col("r"),
         (Hashing.h60(col("user_id"), col("r"), col("domain"), lit(SEED_NEG))
           % col("n_items")).as("dense_id"))
@@ -485,7 +394,7 @@ object Splits {
       .select("user_id", "domain", "item_id", "rn")
   }
 
-  def duckNegativeSampleScalableCte(draws: Int): String =
+  val duckNegativeSampleScalableCte: String =
     s"""n_items AS (
        |  SELECT domain, COUNT(*) AS n_items FROM dense_items GROUP BY domain
        |), drawn AS (
@@ -495,7 +404,7 @@ object Splits {
        |      t.r
        |    FROM (SELECT DISTINCT user_id, domain FROM interactions) u
        |    JOIN n_items n ON u.domain = n.domain
-       |    CROSS JOIN (SELECT unnest(generate_series(1, $draws)) AS r) t)
+       |    CROSS JOIN (SELECT unnest(generate_series(1, $DRAWS)) AS r) t)
        |  GROUP BY user_id, domain, dense_id
        |), negs_scalable AS (
        |  SELECT user_id, domain, item_id, rn FROM (
@@ -510,16 +419,16 @@ object Splits {
        |  WHERE rn <= $NUM_NEG
        |)""".stripMargin
 
-  /** [[leaveTwoOut]] persisted once per (session, scale dir): the split
-    * table is the pipeline's second shared base relation after the
-    * interaction log — candidate assembly AND the join-formulation
+  /** The [[leaveTwoOut]] splits persisted once per (session, scale dir):
+    * the split table is the pipeline's second shared base relation after
+    * the interaction log — candidate assembly AND the join-formulation
     * positives both read it, and a real evaluation run materializes the
     * splits once (SplitCache), not per reader. Lazy persist — the first
     * consumer pays the window.
     */
   def leaveTwoOutCached(spark: SparkSession, sfDir: String): DataFrame =
     graft.Memo.cached(spark, sfDir, "splits.leaveTwoOut") {
-      leaveTwoOut(spark, sfDir).persist()
+      leaveTwoOut(ranked(Interactions(spark, sfDir))).persist()
     }
 
   /** The UNFILTERED [[candidates]] relation persisted once per (session,
@@ -539,7 +448,9 @@ object Splits {
     }
 
   /** Candidate assembly (my_utils.py:132-133): the 99 negatives plus the
-    * planted held-out positive, per (user, domain).
+    * planted held-out positive, per (user, domain). `userFilter` slices
+    * users without changing any user's candidate set (see
+    * [[negativeSampleScalable]]).
     */
   def candidates(spark: SparkSession, sfDir: String,
       userFilter: Column = lit(true)): DataFrame = {
@@ -550,18 +461,9 @@ object Splits {
     // three, turning two redundant orders⋈lineitem distincts into
     // in-memory scans (the same sharing cachedPipeline does explicitly)
     val inter = Interactions.cached(spark, sfDir)
-    candidatesFrom(inter, leaveTwoOutCached(spark, sfDir), userFilter)
-  }
-
-  /** [[candidates]] over explicit relations; `userFilter` slices users
-    * without changing any user's candidate set (see
-    * [[negativeSampleScalableFrom]]).
-    */
-  def candidatesFrom(inter: DataFrame, splits: DataFrame,
-      userFilter: Column = lit(true)): DataFrame = {
-    val negs = negativeSampleScalableFrom(inter, 160, userFilter)
+    val negs = explodeNegatives(negativeSampleScalable(inter, userFilter))
       .select(col("user_id"), col("domain"), col("item_id"), lit(0).as("is_positive"))
-    val pos = splits.filter(userFilter)
+    val pos = leaveTwoOutCached(spark, sfDir).filter(userFilter)
       .select(col("user_id"), col("domain"), col("test_item").as("item_id"),
         lit(1).as("is_positive"))
     negs.unionAll(pos)

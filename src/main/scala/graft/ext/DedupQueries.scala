@@ -366,9 +366,9 @@ object DedupQueries {
     }
 
   /** The candidate+verify stages with an injectable shingle relation —
-    * a bucketed-layout deployment passes
-    * `TextOps.wordShingleHashesRel(bucketedDocuments(...), 5)` so the
-    * verify's per-doc aggregates and pair⋈shingle joins read the corpus
+    * a bucketed-layout deployment passes `TextOps.wordShingleHashesRel`
+    * over the documents bucketed on doc_id (`Bucketing.writeBucketed`) so
+    * the verify's per-doc aggregates and pair⋈shingle joins read the corpus
     * side exchange-free (BucketedDocsSpec proves plan + value equality).
     */
   def minhashVerifiedPairsWith(spark: SparkSession, d: String,

@@ -94,7 +94,7 @@ object Metrics {
     s"""WITH ${Interactions.duckCte},
        |${Splits.duckLeaveTwoOutCte},
        |${Interactions.duckDenseItemsCte},
-       |${Splits.duckNegativeSampleScalableCte(160)},
+       |${Splits.duckNegativeSampleScalableCte},
        |${Splits.duckCandidatesCte},
        |$duckScoredCte""".stripMargin
 

@@ -20,7 +20,8 @@ class BucketingSpec extends SparkSpec {
 
   private lazy val bucketed: DataFrame = {
     spark.catalog.clearCache()
-    Bucketing.bucketedInteractions(spark, sf(), buckets = 4)
+    Bucketing.writeBucketed(Interactions(spark, sf()),
+      s"inter_bucketed_${Bucketing.tableSuffix(sf())}", 4, Seq("user_id", "domain"))
   }
 
   test("bucketed scan satisfies the aggregate's distribution: no exchange") {
@@ -35,10 +36,10 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("leave-two-out window runs bucket-local: no exchange above the scan") {
-    val split = Splits.leaveTwoOutFrom(bucketed)
+    val split = Splits.leaveTwoOut(Splits.ranked(bucketed))
     assert(shuffles(fmt(split)) == 0,
       s"window + groupBy on the bucket key must not shuffle:\n${fmt(split)}")
-    val plain = Splits.leaveTwoOutFrom(Interactions(spark, sf()))
+    val plain = Splits.leaveTwoOut(Splits.ranked(Interactions(spark, sf())))
     assert(split.orderBy("user_id", "domain").collect().toSeq ==
       plain.orderBy("user_id", "domain").collect().toSeq)
   }

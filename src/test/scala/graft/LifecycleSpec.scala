@@ -35,7 +35,7 @@ class LifecycleSpec extends SparkSpec {
     assert(Files.getLastModifiedTime(
       java.nio.file.Paths.get(s"$workDir/cache/splits/_SUCCESS")) == cacheStamp)
 
-    val log = etl.MetricsSink.readParquet(spark, s"$workDir/metrics_log")
+    val log = spark.read.parquet(s"$workDir/metrics_log")
     assert(log.select("epoch").distinct().collect().map(_.getInt(0)).sorted
       .toSeq == epochs)
 
@@ -57,7 +57,7 @@ class LifecycleSpec extends SparkSpec {
     // EXACTLY, per epoch, over the same key set — and each epoch's log
     // rows must be the metrics over those ranks. This is what keeps the
     // q_lifecycle oracle hash invariant.
-    val (sp, ng, _) = etl.SplitCache.cachedPipeline(spark, sf(), s"$workDir/cache")
+    val (sp, ng) = etl.SplitCache.cachedPipeline(spark, sf(), s"$workDir/cache")
     val packed = Lifecycle.packedRanks(sp, ng, epochs, kMax = 10).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2)) -> r.getInt(3))
       .toMap
@@ -150,11 +150,10 @@ class LifecycleSpec extends SparkSpec {
   test("known-schema reads of the split cache, metrics log and checkpoints match inference") {
     val workDir = Files.createTempDirectory("readschema").toString
     // cache miss: every relation is written and read back with its own schema
-    val (splits, negatives, train) =
+    val (splits, negatives) =
       etl.SplitCache.cachedPipeline(spark, sf(), s"$workDir/cache")
     sameAsInferred(splits, s"$workDir/cache/splits")
     sameAsInferred(negatives, s"$workDir/cache/negatives")
-    sameAsInferred(train, s"$workDir/cache/train")
 
     Lifecycle.runEpochs(spark, sf(), workDir, Seq(1, 2))
     val log = s"$workDir/metrics_log"

@@ -35,7 +35,7 @@ class InteractionsSpec extends SparkSpec {
     // reuses it
     // string-match the plan: AdaptiveSparkPlanExec hides its input plan
     // from TreeNode.collect, so node-type collects see zero exchanges
-    val plan = Splits.leaveTwoOut(spark, sf())
+    val plan = Splits.leaveTwoOut(Splits.ranked(Interactions(spark, sf())))
       .queryExecution.executedPlan.toString
     val userExchanges =
       "Exchange hashpartitioning\\(user_id".r.findAllIn(plan).length

@@ -8,9 +8,11 @@ import java.nio.file.Files
   */
 class SplitCacheSpec extends SparkSpec {
 
+  private def splitsOf = Splits.leaveTwoOut(Splits.ranked(Interactions(spark, sf())))
+
   test("writeOnce materializes once and replays identically") {
     val dir = Files.createTempDirectory("splitcache").toString
-    val live = Splits.leaveTwoOut(spark, sf()).orderBy("user_id", "domain")
+    val live = splitsOf.orderBy("user_id", "domain")
     val first = SplitCache.writeOnce(spark, live, s"$dir/splits")
     val mtime = Files.getLastModifiedTime(
       java.nio.file.Paths.get(s"$dir/splits/_SUCCESS"))
@@ -27,28 +29,54 @@ class SplitCacheSpec extends SparkSpec {
 
   test("cachedPipeline: concurrent materialization equals direct recompute") {
     val dir = Files.createTempDirectory("splitcache").toString
-    val (splits, negs, train) =
+    val (splits, negs) =
       SplitCache.cachedPipeline(spark, sf(), s"$dir/cache")
-    // the three concurrently-built caches must equal their sequential
+    // the concurrently-built caches must equal their sequential
     // recomputes row-for-row (the persist/futures path changes scheduling
     // only, never bytes)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.toString).sorted.toSeq
-    assert(rows(splits) == rows(Splits.leaveTwoOut(spark, sf())))
+    assert(rows(splits) == rows(splitsOf))
+    // ... and the Memo'd splits the suite's queries read
+    assert(rows(splits) == rows(Splits.leaveTwoOutCached(spark, sf())))
+    graft.Memo.releaseOne(spark, sf(), "splits.leaveTwoOut")
     // negatives come back PACKED; exploded they are the long sampler
     assert(negs.columns.toSeq == Seq("user_id", "domain", "items"))
     assert(rows(Splits.explodeNegatives(negs)) ==
-      rows(Splits.negativeSampleScalable(spark, sf())))
-    assert(rows(train) == rows(Splits.trainSubsample(spark, sf())))
+      rows(Splits.explodeNegatives(
+        Splits.negativeSampleScalable(Interactions(spark, sf())))))
+    assert(new java.io.File(s"$dir/cache").list().sorted.toSeq ==
+      Seq("negatives", "splits"))
     // second call is a pure cache hit: no _SUCCESS rewrite on any relation
-    val stamps = Seq("splits", "negatives", "train").map(n =>
+    val stamps = Seq("splits", "negatives").map(n =>
       Files.getLastModifiedTime(
         java.nio.file.Paths.get(s"$dir/cache/$n/_SUCCESS")))
     SplitCache.cachedPipeline(spark, sf(), s"$dir/cache")
-    val after = Seq("splits", "negatives", "train").map(n =>
+    val after = Seq("splits", "negatives").map(n =>
       Files.getLastModifiedTime(
         java.nio.file.Paths.get(s"$dir/cache/$n/_SUCCESS")))
     assert(stamps == after)
+  }
+
+  test("cachedPipeline rethrows a failed write only after the other write finished") {
+    val cache = Files.createTempDirectory("splitcache").toString + "/cache"
+    // a committed but corrupt splits table: its read-back fails while the
+    // negatives write is still running
+    val corrupt = java.nio.file.Paths.get(s"$cache/splits")
+    Files.createDirectories(corrupt)
+    Files.write(corrupt.resolve("part-00000.parquet"), Array[Byte](0, 1, 2))
+    Files.createFile(corrupt.resolve("_SUCCESS"))
+    intercept[Exception] { SplitCache.cachedPipeline(spark, sf(), cache) }
+    // the status tracker is fed by listener events: deliver the queued
+    // ones, so a job counts as active only if it is still running
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+      .invoke(bus, Long.box(10000L))
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      "cachedPipeline returned while a cache write was still running")
+    val strays = new java.io.File(cache).list().filter(_.contains("__tmp"))
+    assert(strays.isEmpty, s"temp output left under the cache: ${strays.toSeq}")
   }
 
   test("racing writeOnce callers converge on one committed copy") {
@@ -56,7 +84,7 @@ class SplitCacheSpec extends SparkSpec {
     import scala.concurrent.duration.Duration
     val dir = Files.createTempDirectory("splitcache").toString
     val path = s"$dir/splits"
-    val expected = Splits.leaveTwoOut(spark, sf()).collect()
+    val expected = splitsOf.collect()
       .map(_.toSeq.toString).sorted.toSeq
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -64,7 +92,7 @@ class SplitCacheSpec extends SparkSpec {
       // four threads race the same destination; deterministic bytes mean
       // whoever wins, every reader must see one complete committed copy
       val futures = (1 to 4).map(_ => Future {
-        SplitCache.writeOnce(spark, Splits.leaveTwoOut(spark, sf()), path)
+        SplitCache.writeOnce(spark, splitsOf, path)
           .collect().map(_.toSeq.toString).sorted.toSeq
       })
       futures.map(Await.result(_, Duration.Inf)).foreach(r =>
@@ -84,7 +112,7 @@ class SplitCacheSpec extends SparkSpec {
     val path = java.nio.file.Paths.get(s"$dir/splits")
     Files.createDirectories(path)
     Files.write(path.resolve("part-00000.parquet"), Array[Byte](0, 1, 2))
-    val live = Splits.leaveTwoOut(spark, sf()).orderBy("user_id", "domain")
+    val live = splitsOf.orderBy("user_id", "domain")
     val recovered = SplitCache.writeOnce(spark, live, s"$dir/splits")
     assert(Files.exists(path.resolve("_SUCCESS")))
     assert(recovered.count() == live.count())

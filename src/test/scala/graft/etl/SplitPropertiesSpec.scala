@@ -28,7 +28,7 @@ class SplitPropertiesSpec extends SparkSpec {
     import spark.implicits._
     for (rows <- samples(8) if rows.nonEmpty) {
       val inter = rows.toDF("user_id", "item_id", "domain")
-      val splits = Splits.leaveTwoOutFrom(inter).collect()
+      val splits = Splits.leaveTwoOut(Splits.ranked(inter)).collect()
         .map(r => (r.getLong(0), r.getString(1)) ->
           (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
       val interSet = rows.map(r => (r._1, r._3, r._2)).toSet
@@ -40,7 +40,7 @@ class SplitPropertiesSpec extends SparkSpec {
         if (deg == 1) assert(vali == test) else assert(vali != test)
       }
 
-      val train = Splits.trainSubsampleFrom(inter, 1.0).collect()
+      val train = Splits.trainSubsample(inter, 1.0).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       train.foreach { case (u, d, i) =>
         val (deg, vali, test) = splits((u, d))
@@ -48,7 +48,8 @@ class SplitPropertiesSpec extends SparkSpec {
         if (deg > 2) assert(i != test)
       }
 
-      val negs = Splits.negativeSampleScalableFrom(inter, draws = 16).collect()
+      val negs = Splits.explodeNegatives(Splits.negativeSampleScalable(inter))
+        .collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       negs.foreach { case (u, d, i) =>
         assert(!interSet.contains((u, d, i)), s"negative ($u,$d,$i) is a positive")

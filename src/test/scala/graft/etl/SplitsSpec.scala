@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Split/sampling semantics against reference-shaped fixtures
@@ -24,8 +24,16 @@ class SplitsSpec extends SparkSpec {
       .toDF("user_id", "item_id", "domain")
   }
 
+  /** The scalable sampler's long form; `maxBroadcastItems = 0` forces
+    * the distributed join formulation.
+    */
+  private def scalable(userFilter: Column = lit(true),
+      maxBroadcastItems: Long = Splits.CATALOG_BROADCAST_MAX): DataFrame =
+    Splits.explodeNegatives(
+      Splits.negativeSampleScalable(fixture, userFilter, maxBroadcastItems))
+
   test("leave-two-out: degree-1 user gets vali == test") {
-    val s = Splits.leaveTwoOutFrom(fixture).collect()
+    val s = Splits.leaveTwoOut(Splits.ranked(fixture)).collect()
       .map(r => (r.getLong(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val (deg1, vali1, test1) = s((1L, "x"))
@@ -36,11 +44,11 @@ class SplitsSpec extends SparkSpec {
   }
 
   test("train subsample: holdout removal honors the degree predicate") {
-    val train = Splits.trainSubsampleFrom(fixture, 1.0)
+    val train = Splits.trainSubsample(fixture, 1.0)
     val byUser = train.collect()
       .groupBy(r => (r.getLong(0), r.getString(1)))
       .view.mapValues(_.map(_.getLong(2)).toSet).toMap
-    val splits = Splits.leaveTwoOutFrom(fixture).collect()
+    val splits = Splits.leaveTwoOut(Splits.ranked(fixture)).collect()
       .map(r => (r.getLong(0), r.getString(1)) -> (r.getLong(3), r.getLong(4))).toMap
 
     // degree-1 user: only item is vali -> train empty
@@ -55,13 +63,14 @@ class SplitsSpec extends SparkSpec {
   }
 
   test("train subsample: pct keeps floor(pct*n + 0.5) per group") {
-    val train = Splits.trainSubsampleFrom(fixture, 0.5)
+    val train = Splits.trainSubsample(fixture, 0.5)
     val n3 = train.filter(col("user_id") === 3 && col("domain") === "x").count()
     assert(n3 == 2) // 3 survivors * 0.5 -> floor(1.5 + 0.5) = 2
   }
 
   test("negative samples exclude positives and respect the cap") {
-    val negs = Splits.negativeSampleExactFrom(fixture).collect()
+    // n = 4 slices every fixture user
+    val negs = Splits.negativeSampleExact(fixture, n = 4).collect()
       .groupBy(r => (r.getLong(0), r.getString(1)))
       .view.mapValues(_.map(_.getLong(2)).toSet).toMap
     val itemsX = Set(10L, 11L, 12L, 13L, 14L)
@@ -74,9 +83,9 @@ class SplitsSpec extends SparkSpec {
   }
 
   test("scalable sampler: no positives, no duplicates, deterministic") {
-    val a = Splits.negativeSampleScalableFrom(fixture, draws = 8).collect()
+    val a = scalable().collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getInt(3)))
-    val b = Splits.negativeSampleScalableFrom(fixture, draws = 8).collect()
+    val b = scalable().collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getInt(3)))
     assert(a.sorted.sameElements(b.sorted))
     val pos = fixture.collect().map(r => (r.getLong(0), r.getString(2), r.getLong(1))).toSet
@@ -91,14 +100,13 @@ class SplitsSpec extends SparkSpec {
   test("packed sampler explodes to exactly the long-form relation, both paths") {
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getInt(3))).sorted
-    val long = rows(Splits.negativeSampleScalableFrom(fixture, draws = 8))
+    val long = rows(scalable())
     val viaPackedB = rows(Splits.explodeNegatives(
-      Splits.negativeSampleScalablePackedFrom(fixture, draws = 8)))
+      Splits.negativeSampleScalable(fixture)))
     assert(viaPackedB.nonEmpty && viaPackedB.sameElements(long))
     // distributed pack (the past-broadcast-ceiling write shape)
     val viaPackedJ = rows(Splits.explodeNegatives(
-      Splits.negativeSampleScalablePackedFrom(fixture, draws = 8,
-        maxBroadcastItems = 0)))
+      Splits.negativeSampleScalable(fixture, maxBroadcastItems = 0)))
     assert(viaPackedJ.sameElements(long))
   }
 
@@ -114,17 +122,15 @@ class SplitsSpec extends SparkSpec {
   test("distributed sampler formulation matches the broadcast path") {
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getInt(3))).sorted
-    val viaBroadcast = rows(Splits.negativeSampleScalableFrom(fixture, draws = 8))
+    val viaBroadcast = rows(scalable())
     // maxBroadcastItems = 0 forces the distributed join formulation
-    val viaJoin = rows(Splits.negativeSampleScalableFrom(fixture, draws = 8,
-      maxBroadcastItems = 0))
+    val viaJoin = rows(scalable(maxBroadcastItems = 0))
     assert(viaJoin.nonEmpty)
     assert(viaJoin.sameElements(viaBroadcast))
     // user slicing must not change any sampled user's rows on either path
     val f = col("user_id") === 1L
-    val slicedB = rows(Splits.negativeSampleScalableFrom(fixture, 8, f))
-    val slicedJ = rows(Splits.negativeSampleScalableFrom(fixture, 8, f,
-      maxBroadcastItems = 0))
+    val slicedB = rows(scalable(f))
+    val slicedJ = rows(scalable(f, maxBroadcastItems = 0))
     assert(slicedB.nonEmpty) // else the equalities below pass vacuously
     assert(slicedB.sameElements(viaBroadcast.filter(_._1 == 1L)))
     assert(slicedJ.sameElements(slicedB))

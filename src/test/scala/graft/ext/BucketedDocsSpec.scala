@@ -19,7 +19,8 @@ class BucketedDocsSpec extends SparkSpec {
   }
 
   test("per-doc shingle aggregates over bucketed documents plan zero exchanges") {
-    val bucketed = Bucketing.bucketedDocuments(spark, sf(), "t_docs_b", 4)
+    val bucketed = Bucketing.writeBucketed(graft.Tables.documents(spark, sf()),
+      "t_docs_b", 4, Seq("doc_id"))
     val sizesB = TextOps.wordShingleHashesRel(bucketed, 5)
       .groupBy("doc_id").agg(count(lit(1)).as("ns"))
     assert(shuffles(sizesB) == 0,
@@ -48,7 +49,8 @@ class BucketedDocsSpec extends SparkSpec {
   }
 
   test("norms over bucketed embeddings plan zero exchanges; cosine agrees") {
-    val bucketed = Bucketing.bucketedEmbeddings(spark, sf(), "t_embs_b", 4)
+    val bucketed = Bucketing.writeBucketed(graft.Tables.embeddings(spark, sf()),
+      "t_embs_b", 4, Seq("vec_id"))
     val nB = VectorOps.normsFrom(bucketed)
     assert(shuffles(nB) == 0,
       s"bucketed norm agg must not shuffle:\n${nB.queryExecution.executedPlan}")
