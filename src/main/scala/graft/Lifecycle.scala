@@ -28,6 +28,26 @@ object Lifecycle {
   private def timed[A](stage: String)(body: => A): A =
     StageTiming.timed(s"lifecycle/$stage")(body)
 
+  /** Runs independent driver-side tasks (each one or more Spark jobs)
+    * concurrently, so their jobs share the cluster instead of queueing,
+    * and returns the results in task order. It waits for EVERY task
+    * before it returns or rethrows the first failure: a failed task's
+    * siblings may still be writing or running jobs, and a caller's
+    * cleanup (an unpersist, a work-dir delete) must not race them.
+    */
+  private[graft] def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, tasks.length))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val running = tasks.map(t => Future(t()))
+      running.foreach(Await.ready(_, Duration.Inf))
+      running.map(_.value.get.get)
+    } finally pool.shutdown()
+  }
+
   /** The epoch loop: every epoch's positive ranks straight from the
     * S2 cache's PACKED negatives ([[packedRanks]]), all epochs' HR/NDCG/
     * MRR\@K in ONE aggregate keyed by epoch, then one append to the
@@ -56,7 +76,7 @@ object Lifecycle {
     * Metrics still append strictly in epoch order, one append per epoch,
     * so the log holds exactly what the sequential loop wrote
     * (main_my.py:302-320); LifecycleSpec proves each epoch's packed
-    * ranks equal the single-epoch [[graft.rank.Metrics.posRanksDigestFrom]]
+    * ranks equal the single-epoch [[graft.rank.Metrics.posRanksDigest]]
     * ranks, and each epoch's log rows the metrics over those ranks.
     */
   def runEpochs(spark: SparkSession, sfDir: String, workDir: String,
@@ -97,7 +117,7 @@ object Lifecycle {
     * exactly [[Hashing.h60]]'s bytes — and counts the negatives that
     * beat the positive in [[graft.rank.TopBuf]]'s order (score desc,
     * then item asc), stopping at `kMax`. rn = beats + 1, or 0 when the
-    * positive falls below `kMax` — the [[graft.rank.Metrics.posRanksDigestFrom]]
+    * positive falls below `kMax` — the [[graft.rank.Metrics.posRanksDigest]]
     * contract, without the digest shuffle.
     */
   def packedRanks(splits: DataFrame, packedNegatives: DataFrame,
@@ -175,28 +195,18 @@ object Lifecycle {
     * → (epoch, checkpoint path).
     */
   def checkpointBest(spark: SparkSession, workDir: String, best: Seq[Row])
-      : Map[(String, String), (Int, String)] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val winners = best.filter(_.getAs[Int]("k") == 10)
-    // the six saves are independent tiny write jobs — submit them
-    // concurrently like cachedPipeline does its two relations
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(6, winners.length)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      winners.map { r =>
-        val (domain, metric, epoch) =
-          (r.getAs[String]("domain"), r.getAs[String]("metric"),
-            r.getAs[Int]("epoch"))
-        val path = s"$workDir/ckpt/best_${metric}_$domain"
-        Future {
-          score.Checkpoint.save(spark, path, epochWeights(epoch))
-          (domain, metric) -> (epoch, path)
-        }
-      }.map(Await.result(_, Duration.Inf)).toMap
-    } finally pool.shutdown()
-  }
+      : Map[(String, String), (Int, String)] =
+    // the six saves are independent tiny write jobs
+    concurrently(best.filter(_.getAs[Int]("k") == 10).map { r =>
+      val (domain, metric, epoch) =
+        (r.getAs[String]("domain"), r.getAs[String]("metric"),
+          r.getAs[Int]("epoch"))
+      val path = s"$workDir/ckpt/best_${metric}_$domain"
+      () => {
+        score.Checkpoint.save(spark, path, epochWeights(epoch))
+        (domain, metric) -> (epoch, path)
+      }
+    }).toMap
 
   /** S3 reload step (main_my.py:351-370): load one saved checkpoint and
     * score users with the RELOADED weights — the reference's
@@ -299,23 +309,13 @@ object Lifecycle {
         val users = Tables.orders(spark, d).filter(expr(eckUserSlice))
           .select(col("o_custkey").as("user_id")).distinct()
         val byEpoch: Map[Int, Long] = timed("reloadScore") {
-          // one scoring pass per DISTINCT winning epoch, submitted
-          // concurrently — the jobs are independent reload→score→sum
-          // chains, so they share the cluster instead of queueing (same
-          // pattern as checkpointBest's six saves)
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val distinct = ckpts.values.toSeq.groupBy(_._1).toSeq
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.max(1, math.min(EPOCHS, distinct.length)))
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          try distinct.map { case (e, ps) =>
-            Future {
+          // one scoring pass per DISTINCT winning epoch: independent
+          // reload→score→sum chains, run concurrently
+          concurrently(ckpts.values.toSeq.groupBy(_._1).toSeq.map {
+            case (e, ps) => () =>
               e -> scoreFromCheckpoint(spark, ps.head._2, users)
                 .agg(sum(round(col("score") * 1e6, 0).cast("long"))).as[Long].head()
-            }
-          }.map(Await.result(_, Duration.Inf)).toMap
-          finally pool.shutdown()
+          }).toMap
         }
         // `best` is already in (domain, k, metric) order
         best.map { r =>

@@ -21,8 +21,6 @@ final case class QueryDef(
 object QueryDef {
   def apply(oracleSql: String)(build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(build, Some(oracleSql))
-  def noOracle(build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(build, None)
 }
 
 /** Thrown by a query whose OUTPUT (not its plan) is provably beyond a

@@ -59,26 +59,18 @@ object DedupQueries {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** [[jaccardVerify]] reformulated over per-doc sorted shingle arrays:
-    * ni comes from the native two-pointer `sorted_intersect_size` instead
-    * of the cand⋈shingles⋈shingles explosion. The row-level verify joins
-    * fan each candidate out by the docs' shingle counts (~doc length) and
+  /** [[jaccardVerify]] reformulated over a prebuilt per-doc sorted
+    * shingle-array relation `(doc_id, shs)`: ni comes from the native
+    * two-pointer `sorted_intersect_size` instead of the
+    * cand⋈shingles⋈shingles explosion. The row-level verify joins fan
+    * each candidate out by the docs' shingle counts (~doc length) and
     * shuffle on (doc_b, sh); here the fan-out is exactly 1 row per
     * candidate — two doc-level array joins plus a codegen'd merge. Same
     * (ni, jac) by construction (shingles are per-doc distinct), so the
     * oracle SQL is untouched. 123s → array form at the 100× probe
-    * (SCALING.md r8) with identical hashes.
-    */
-  private def jaccardVerifyArrays(cand: DataFrame, shingles: DataFrame,
-      minJac: Double): DataFrame = {
-    val sets = shingles.groupBy("doc_id")
-      .agg(sort_array(collect_list(col("sh"))).as("shs"))
-    jaccardVerifyWithSets(cand, sets, minJac)
-  }
-
-  /** [[jaccardVerifyArrays]] with a prebuilt (doc_id, shs) relation — so
-    * consumers sharing the k=4 index ([[ngramCandPairs]] /
-    * [[ngramShingleSets]]) verify against the memoized arrays.
+    * (SCALING.md r8) with identical hashes. Consumers sharing the k=4
+    * index ([[ngramCandPairs]] / [[ngramShingleSets]]) verify against
+    * the memoized arrays.
     */
   private[ext] def jaccardVerifyWithSets(cand: DataFrame, sets: DataFrame,
       minJac: Double): DataFrame = {
@@ -285,13 +277,11 @@ object DedupQueries {
     }
 
   /** Spark mirror of [[duckMinhashPairCtes]]: verified MinHash duplicate
-    * pairs `(doc_a, doc_b, ni, jac)`, unordered.
-    */
-  /** Verified MinHash pairs memoized per (session, scale dir): FOUR
-    * suite consumers build this identical subtree (cluster membership,
-    * the pair report, the threshold sweep, label-prop's dup edges) —
-    * ~20-30s each at the 100× probe; the q_candidates memoization rule
-    * says pay it once.
+    * pairs `(doc_a, doc_b, ni, jac)`, unordered, memoized per
+    * (session, scale dir): FOUR suite consumers build this identical
+    * subtree (cluster membership, the pair report, the threshold sweep,
+    * label-prop's dup edges) — ~20-30s each at the 100× probe; the
+    * q_candidates memoization rule says pay it once.
     */
   private[ext] def minhashVerifiedPairs(spark: SparkSession,
       d: String): DataFrame =
@@ -337,7 +327,7 @@ object DedupQueries {
         else st.getLong(0).toDouble / st.getLong(1)
       if (dupRatio < 2.0) {
         withTh.unpersist(blocking = false)
-        minhashVerifiedPairsWith(spark, d,
+        minhashVerifiedPairsFrom(docs,
           TextOps.wordShingleHashes(spark, d, 5)).persist()
       } else {
       val groups = withTh.groupBy("th").agg(min(col("doc_id")).as("rep"))
@@ -365,23 +355,18 @@ object DedupQueries {
       }
     }
 
-  /** The candidate+verify stages with an injectable shingle relation —
-    * a bucketed-layout deployment passes `TextOps.wordShingleHashesRel`
-    * over the documents bucketed on doc_id (`Bucketing.writeBucketed`) so
-    * the verify's per-doc aggregates and pair⋈shingle joins read the corpus
-    * side exchange-free (BucketedDocsSpec proves plan + value equality).
-    */
-  def minhashVerifiedPairsWith(spark: SparkSession, d: String,
-      sh: DataFrame): DataFrame =
-    minhashVerifiedPairsFrom(Tables.documents(spark, d), sh)
-
   /** Band + candidate + shingle-level verify over an explicit documents
-    * slice (`sh` must be the shingle relation of the SAME slice) — the
-    * primitive [[minhashVerifiedPairs]] runs over text representatives.
+    * relation; `sh` must be the shingle relation of the SAME documents.
+    * [[minhashVerifiedPairs]] runs it over the corpus or over its text
+    * representatives; a bucketed-layout deployment passes
+    * `TextOps.wordShingleHashesRel` over documents bucketed on doc_id
+    * (`Bucketing.writeBucketed`), so the verify's per-doc aggregates and
+    * pair⋈shingle joins read the corpus side exchange-free
+    * (BucketedDocsSpec proves plan + value equality).
     */
   private[ext] def minhashVerifiedPairsFrom(docs: DataFrame,
       sh: DataFrame): DataFrame = {
-    val bands = minhashBandsFrom(docs, 5)
+    val bands = minhashBands(docs, 5)
     val cand = bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
@@ -391,22 +376,18 @@ object DedupQueries {
     jaccardVerify(cand, sh, MINHASH_JAC)
   }
 
-  /** (doc_id, band, sig) MinHash band signatures in ONE narrow pass:
-    * per document, shingle-set dedup + all NUM_HASH mins + band strings
-    * happen in-memory inside mapPartitions. The first formulation ran
-    * the same integer math as distinct-shuffle → ×NUM_HASH explode →
-    * two hash aggregates (3 shuffles of shingle-scale rows; 5.1s → 1.7s
-    * warm at sf0.1). Bit-identical to the mh/bands oracle CTEs: h60("sh:j")
-    * mins over the distinct shingle set, comma-joined ascending j.
+  /** (doc_id, band, sig) MinHash band signatures of `docs` in ONE narrow
+    * pass: per document, shingle-set dedup + all NUM_HASH mins + band
+    * strings happen in-memory inside mapPartitions. The first
+    * formulation ran the same integer math as distinct-shuffle →
+    * ×NUM_HASH explode → two hash aggregates (3 shuffles of
+    * shingle-scale rows; 5.1s → 1.7s warm at sf0.1). Bit-identical to
+    * the mh/bands oracle CTEs: h60("sh:j") mins over the distinct
+    * shingle set, comma-joined ascending j. The stored-index path bands
+    * ONLY the batch slice through this (the index side reads its
+    * pre-banded table).
     */
-  private def minhashBands(spark: SparkSession, d: String, k: Int): DataFrame =
-    minhashBandsFrom(Tables.documents(spark, d), k)
-
-  /** [[minhashBands]] over an explicit documents relation — the stored-
-    * index path bands ONLY the batch slice through this (the index side
-    * reads its pre-banded table).
-    */
-  private def minhashBandsFrom(docs: DataFrame, k: Int): DataFrame = {
+  private def minhashBands(docs: DataFrame, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select("doc_id", "text").as[(Long, String)]
@@ -670,7 +651,7 @@ object DedupQueries {
       val (idxBands, idxSets) = storedMinhashIndex(spark, d)
       val batchDocs = Tables.documents(spark, d)
         .filter(col("doc_id") % 10 === 3)
-      val cand = minhashBandsFrom(batchDocs, 5).as("a")
+      val cand = minhashBands(batchDocs, 5).as("a")
         .join(idxBands.as("b"),
           col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))

@@ -1007,30 +1007,11 @@ object IvfQueries {
       .map { case (_, c1, c2) => cellId(c1, c2, kHalf) }.toArray
   }
 
-  /** IVF multi-probe candidate PAIRS over the whole corpus — the
-    * weak-band near-dup generator (r11, VERDICT r10 #3; r12: product
-    * quantizer, see [[PAIR_TARGET_OCC]]). Sign-LSH banding is
-    * theorem-bound to miss the cos ∈ [0.4, 0.9) band (sub-quadratic
-    * Σbucket² forces p^bits ≪ 1 — see
-    * SimilarityQueries.bandedCandidates), but a data-adaptive Voronoi
-    * quantizer has no such bound: a pair at cosine τ is found whenever
-    * either side's HOME cell is among the other's [[PAIR_NPROBE]]
-    * nearest cells, which depends on cell geometry, not on a per-plane
-    * agreement probability. Every returned pair is exact-cosine
-    * verified downstream (precision 1, same contract as the banded
-    * arm). Recall is MEASURED per cosine band in SCALING.md's r11
-    * recall table.
-    */
   /** Product-regime probe count: the half-split's geometry loss is
     * bought back with probes (the sf1nd nprobe sweep in SCALING.md's
     * r12 table set this).
     */
   val PAIR_NPROBE_PRODUCT = 32
-
-  private[ext] def probePairCandidates(spark: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    probePairCandidatesFrom(spark, d, Tables.embeddings(spark, d),
-      VectorOps.corpusSize(spark, d))
 
   /** DIRECTED ANN candidates (query → corpus) within probed flat-IVF
     * cells — the hard-negative mining generator (r13, VERDICT r12 #6):
@@ -1081,7 +1062,7 @@ object IvfQueries {
       it.flatMap { case (v, e) =>
         bestC(e, cs, nprobe).iterator.map(c => (v, c.toLong)) }
     }.toDF("query_id", "cell")
-    // same broadcast-vs-salted join shape as probePairCandidatesFrom
+    // same broadcast-vs-salted join shape as probePairCandidates
     val joined =
       if (n <= VectorOps.CORPUS_BROADCAST_MAX)
         probes.join(broadcast(home), "cell")
@@ -1096,14 +1077,26 @@ object IvfQueries {
       .select("query_id", "vec_id").distinct()
   }
 
-  /** [[probePairCandidates]] over an EXPLICIT embeddings slice (r12,
-    * VERDICT r11 #1a): the representative factoring mines over one row
-    * per distinct vector; the cell dial follows the SLICE count while
-    * the codebooks train on the full corpus (cached per (dir, K)).
-    * `forceProduct` reaches the product-quantizer branch at fixture
-    * size (ExtSpec).
+  /** IVF multi-probe candidate PAIRS — the weak-band near-dup generator
+    * (r11, VERDICT r10 #3; r12: product quantizer, see
+    * [[PAIR_TARGET_OCC]]). Sign-LSH banding is theorem-bound to miss the
+    * cos ∈ [0.4, 0.9) band (sub-quadratic Σbucket² forces p^bits ≪ 1 —
+    * see SimilarityQueries.bandedCandidates), but a data-adaptive
+    * Voronoi quantizer has no such bound: a pair at cosine τ is found
+    * whenever either side's HOME cell is among the other's
+    * [[PAIR_NPROBE]] nearest cells, which depends on cell geometry, not
+    * on a per-plane agreement probability. Every returned pair is
+    * exact-cosine verified downstream (precision 1, same contract as
+    * the banded arm). Recall is MEASURED per cosine band in SCALING.md's
+    * r11 recall table.
+    *
+    * `embDf` holds `n` vectors: the corpus, or the representative
+    * factoring's one-row-per-distinct-vector slice (r12, VERDICT r11
+    * #1a). The cell dial follows `n` while the codebooks train on the
+    * full corpus (cached per (dir, K)). `forceProduct` reaches the
+    * product-quantizer branch at fixture size (ExtSpec).
     */
-  private[ext] def probePairCandidatesFrom(
+  private[ext] def probePairCandidates(
       spark: org.apache.spark.sql.SparkSession, d: String,
       embDf: org.apache.spark.sql.DataFrame, n: Long,
       forceProduct: Boolean = false): org.apache.spark.sql.DataFrame = {

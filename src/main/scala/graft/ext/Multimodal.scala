@@ -160,11 +160,6 @@ object Multimodal {
       .toDF("doc_id", "kind", "phash")
   }
 
-  /** [[perceptualHashesOf]] over the [[media]] table. */
-  def perceptualHashes(spark: SparkSession, sfDir: String): DataFrame =
-    perceptualHashesOf(media(spark, sfDir)
-      .filter(col("payload").isNotNull && length(col("payload")) > 0))
-
   val defs: Map[String, QueryDef] = Map(
 
     // ---- metadata + content hashing over the binary column ----

@@ -31,10 +31,10 @@ object SimilarityQueries {
   private val negSlice = "vec_id % 20 = 10"
   private val NEG_K = 3
 
-  /** Hyperplane components: 8 planes × 64 dims, integer weights in
-    * [-1000, 1000] derived from h60 — deterministic in both engines.
+  /** Bands of the top-k LSH ([[lshTopK]]): both registry entries use 2;
+    * the recall/cost trade moves only along the band-width axis.
     */
-  private val NUM_PLANES = 8
+  private val LSH_TOPK_BANDS = 2
 
   /** Sparse tf-idf cosine (q_sim_sparse): hashed feature-space size
     * (fixed → df/idf tables broadcast at any corpus scale), features
@@ -50,16 +50,23 @@ object SimilarityQueries {
   private val SP_RATE = 1000
   private val SP_TAU = 0.5
 
-  private def duckPlanesCte(numPlanes: Int = NUM_PLANES): String =
-    s"""planes AS (
+  /** Oracle SQL for [[lshTopK]] at a fixed band width — the oracle-gated
+    * SCALE parameterization (q_sim_lsh_wide, 2×8-bit): the dial is
+    * hash-verified, not just measured. Plane j's coefficients are
+    * h60("j:i:plane") % 2001 − 1000, bit j of the signature is the sign
+    * of the fixed-point dot with plane j, and band bi is bits
+    * [bandBits·bi, bandBits·(bi + 1)).
+    */
+  private def lshSql(bandBits: Int): String =
+    s"""WITH ${VectorOps.duckElemsCte},
+       |${VectorOps.duckNormsCte},
+       |planes AS (
        |  SELECT j.j, i.i,
        |         ${Hashing.duckH60("j.j", "i.i", "'plane'")} % 2001 - 1000 AS c
-       |  FROM (SELECT unnest(generate_series(0, ${numPlanes - 1})) AS j) j
+       |  FROM (SELECT unnest(generate_series(0, ${bandBits * LSH_TOPK_BANDS - 1})) AS j) j
        |  CROSS JOIN (SELECT unnest(generate_series(1, ${VectorOps.DIM})) AS i) i
-       |)""".stripMargin
-
-  private def duckSigCte(bandBits: Int = 4, numBands: Int = 2): String =
-    s"""sigbits AS (
+       |),
+       |sigbits AS (
        |  SELECT e.vec_id, p.j,
        |    CASE WHEN SUM(e.e * p.c) > 0 THEN CAST(1 AS BIGINT)
        |         ELSE CAST(0 AS BIGINT) END AS b
@@ -69,19 +76,8 @@ object SimilarityQueries {
        |  SELECT vec_id, CAST(SUM(b << j) AS BIGINT) AS sig FROM sigbits GROUP BY vec_id
        |), bands AS (
        |  SELECT vec_id, f.bi, (sig >> ($bandBits * f.bi)) & ${(1 << bandBits) - 1} AS blk
-       |  FROM sigs CROSS JOIN (SELECT unnest(generate_series(0, ${numBands - 1})) AS bi) f
-       |)""".stripMargin
-
-  /** Oracle SQL for [[lshTopK]] at a given banding — shared by the demo
-    * query (2×4-bit) and the oracle-gated SCALE parameterization
-    * (q_sim_lsh_wide, 2×8-bit): the dial is hash-verified, not just
-    * measured.
-    */
-  private def lshSql(bandBits: Int, numBands: Int): String =
-    s"""WITH ${VectorOps.duckElemsCte},
-       |${VectorOps.duckNormsCte},
-       |${duckPlanesCte(bandBits * numBands)},
-       |${duckSigCte(bandBits, numBands)},
+       |  FROM sigs CROSS JOIN (SELECT unnest(generate_series(0, ${LSH_TOPK_BANDS - 1})) AS bi) f
+       |),
        |pairs AS (
        |  SELECT DISTINCT a.vec_id AS query_id, b.vec_id
        |  FROM bands a JOIN bands b
@@ -96,7 +92,7 @@ object SimilarityQueries {
        |WHERE rn <= $LSH_K
        |ORDER BY query_id, rn""".stripMargin
 
-  /** Oracle SQL for [[lshTopKAuto]]: the band width comes from the SAME
+  /** Oracle SQL for q_sim_lsh: the band width comes from the SAME
     * corpus-count dial as the Spark side ([[VectorOps.lshBandBitsFor]],
     * rendered as a CASE chain), so the oracle replays whatever banding
     * the engine picks at any scale. Planes/signature bits are generated
@@ -143,50 +139,12 @@ object SimilarityQueries {
        |ORDER BY query_id, rn""".stripMargin
 
   /** Hyperplane coefficients, JVM twin of the planes CTE:
-    * c(j)(i-1) = h60("j:i:plane") % 2001 − 1000. `n` planes — the demo
-    * query uses [[NUM_PLANES]]; scaled deployments request more (see
-    * [[lshTopK]]).
+    * c(j)(i-1) = h60("j:i:plane") % 2001 − 1000, for `n` planes.
     */
   private def planeMatrixFor(n: Int): Array[Array[Long]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(n, VectorOps.DIM)((j, i0) =>
       Hashing.h60Jvm(md, s"$j:${i0 + 1}:plane") % 2001 - 1000)
-  }
-
-  /** (vec_id, sig): 8-bit hyperplane signatures in ONE narrow pass — the
-    * dot products run per row against the closure-captured 8×64 plane
-    * matrix. The first formulation exploded elems ⋈ planes (25M rows at
-    * sf0.1) through two shuffled aggregates for the same integer dots;
-    * signatures are embarrassingly parallel and must never shuffle.
-    */
-  private def sparkSigs(spark: org.apache.spark.sql.SparkSession, d: String,
-      numPlanes: Int = NUM_PLANES) = {
-    import spark.implicits._
-    val planes = planeMatrixFor(numPlanes)
-    Tables.embeddings(spark, d)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-        .as("e")).as[(Long, Array[Long])]
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        // null/empty embeddings produce no elems rows in the oracle CTE
-        // (and in the join formulation this replaced) — emit no sig
-        it.flatMap { case (v, e) =>
-          if (e == null || e.isEmpty) Iterator.empty
-          else {
-            var sig = 0L
-            var j = 0
-            while (j < planes.length) {
-              var dot = 0L
-              var i = 0
-              while (i < e.length) { dot += e(i) * planes(j)(i); i += 1 }
-              if (dot > 0) sig |= 1L << j
-              j += 1
-            }
-            Iterator.single((v, sig))
-          }
-        }
-      }.toDF("vec_id", "sig")
   }
 
   /** Brute-force top-k, corpus-size aware: under `maxBroadcast` vectors
@@ -206,7 +164,7 @@ object SimilarityQueries {
       val pairs = ids.filter(expr(querySlice)).select(col("vec_id").as("query_id"))
         .crossJoin(ids)
         .filter(col("query_id") =!= col("vec_id"))
-      return VectorOps.cosine(spark, d, pairs)
+      return VectorOps.cosine(Tables.embeddings(spark, d), pairs)
         .withColumn("rn", row_number().over(Window.partitionBy("query_id")
           .orderBy(col("cos").desc, col("vec_id"))))
         .filter(col("rn") <= TOP_K)
@@ -296,7 +254,7 @@ object SimilarityQueries {
     */
   def quantTopKJoin(spark: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    val el = VectorOps.elems(spark, d)
+    val el = VectorOps.elems(Tables.embeddings(spark, d))
     val s = el.groupBy("vec_id").agg(max(abs(col("e"))).as("s"))
     val codes = el.join(s, "vec_id")
       .select(col("vec_id"), col("i"),
@@ -352,9 +310,9 @@ object SimilarityQueries {
     import spark.implicits._
     val embs = Tables.embeddings(spark, d)
     if (embs.filter(expr(evalSlice)).count() > maxBroadcast) {
-      val pairs = bandedCandidates(spark, d,
+      val pairs = bandedCandidates(embs, VectorOps.corpusSize(spark, d),
         not(expr(evalSlice)), expr(evalSlice), lowerTriangle = false)
-      return VectorOps.cosine(spark, d, pairs)
+      return VectorOps.cosine(embs, pairs)
         .withColumn("rn", row_number().over(Window.partitionBy("query_id")
           .orderBy(col("cos").desc, col("vec_id"))))
         .filter(col("rn") === 1 && col("cos") >= DECON_COS)
@@ -448,41 +406,27 @@ object SimilarityQueries {
   private val LSH_NUM_BANDS = 8
 
   /** LSH-banded candidate pairs `(query_id, vec_id)` between a query
-    * slice and a candidate slice of the corpus: vectors agreeing in at
-    * least one of [[LSH_NUM_BANDS]] hyperplane-sign bands, band width
-    * dialed by corpus count ([[VectorOps.lshBandBitsFor]] — Σ bucket²
-    * pair volume per band, never O(n²)). This is THE past-ceiling
-    * candidate generator: every r8 all-pairs crossJoin fallback routes
-    * through it. Recall contract quantified on [[LSH_NUM_BANDS]] (and
-    * measured in SCALING.md's r10 recall table); identical vectors are
-    * never missed (equal blocks by construction), and every RETURNED
-    * pair is exact-cosine verified downstream.
+    * slice and a candidate slice of an embeddings relation: vectors
+    * agreeing in at least one of [[LSH_NUM_BANDS]] hyperplane-sign
+    * bands, band width dialed by the vector count `n`
+    * ([[VectorOps.lshBandBitsFor]] — Σ bucket² pair volume per band,
+    * never O(n²)). This is THE past-ceiling candidate generator: every
+    * r8 all-pairs crossJoin fallback routes through it. Recall contract
+    * quantified on [[LSH_NUM_BANDS]] (and measured in SCALING.md's r10
+    * recall table); identical vectors are never missed (equal blocks by
+    * construction), and every RETURNED pair is exact-cosine verified
+    * downstream. The representative factoring passes a one-row-per-
+    * distinct-vector slice with `n` its count (r12, VERDICT r11 #1a):
+    * band buckets then hold distinct vectors instead of every copy, and
+    * occupancy — hence the recall/cost trade — matches a genuine corpus
+    * of that size.
     */
-  private def bandedCandidates(spark: org.apache.spark.sql.SparkSession,
-      d: String, qFilter: org.apache.spark.sql.Column,
+  private def bandedCandidates(embs: org.apache.spark.sql.DataFrame,
+      n: Long, qFilter: org.apache.spark.sql.Column,
       cFilter: org.apache.spark.sql.Column,
       lowerTriangle: Boolean): org.apache.spark.sql.DataFrame = {
-    val n = VectorOps.corpusSize(spark, d)
-    val bands = sparkBandBlocks(spark, d,
-      VectorOps.lshBandBitsFor(n), LSH_NUM_BANDS)
+    val bands = sparkBandBlocks(embs, VectorOps.lshBandBitsFor(n), LSH_NUM_BANDS)
     bandedJoin(bands.filter(qFilter), bands.filter(cFilter), lowerTriangle)
-  }
-
-  /** Lower-triangle [[bandedCandidates]] over an EXPLICIT embeddings
-    * slice (r12, VERDICT r11 #1a): the representative factoring feeds a
-    * one-row-per-distinct-vector slice, so on duplicated corpora the
-    * band buckets hold distinct vectors instead of every copy — the
-    * quadratic-in-duplication bucket blow-up never happens at any rep
-    * count, not only under the pair-exact ceiling. The band width is
-    * dialed by the SLICE count (`n`): occupancy, and therefore the
-    * recall/cost trade, matches a genuine corpus of that size.
-    */
-  private def bandedCandidatesFrom(spark: org.apache.spark.sql.SparkSession,
-      emb: org.apache.spark.sql.DataFrame, n: Long)
-      : org.apache.spark.sql.DataFrame = {
-    def blocks = sparkBandBlocksFrom(spark, emb,
-      VectorOps.lshBandBitsFor(n), LSH_NUM_BANDS)
-    bandedJoin(blocks, blocks, lowerTriangle = true)
   }
 
   private def bandedJoin(qBands: org.apache.spark.sql.DataFrame,
@@ -498,22 +442,18 @@ object SimilarityQueries {
       .distinct()
   }
 
-  /** Per-band LSH blocks `(vec_id, bi, blk)` in ONE narrow pass — the
-    * banded twin of [[sparkSigs]] without its 63-plane packing cap (a
-    * single long sig bounded bits×bands ≤ 63, which capped recall; bands
-    * now emit directly, `bandBits · numBands` dot products per vector,
-    * no explode, no shuffle).
+  /** Per-band LSH blocks `(vec_id, bi, blk)` in ONE narrow pass: the dot
+    * products run per row against the closure-captured plane matrix
+    * (`bandBits · numBands` planes), and bit j of the signature lands in
+    * band j / bandBits — no explode, no shuffle. Null/empty embeddings
+    * produce no elems rows in the oracle CTE, so they emit no blocks.
     */
-  private def sparkBandBlocks(spark: org.apache.spark.sql.SparkSession,
-      d: String, bandBits: Int, numBands: Int): org.apache.spark.sql.DataFrame =
-    sparkBandBlocksFrom(spark, Tables.embeddings(spark, d), bandBits, numBands)
-
-  private def sparkBandBlocksFrom(spark: org.apache.spark.sql.SparkSession,
-      embDf: org.apache.spark.sql.DataFrame, bandBits: Int,
-      numBands: Int): org.apache.spark.sql.DataFrame = {
+  private def sparkBandBlocks(embs: org.apache.spark.sql.DataFrame,
+      bandBits: Int, numBands: Int): org.apache.spark.sql.DataFrame = {
+    val spark = embs.sparkSession
     import spark.implicits._
     val planes = planeMatrixFor(bandBits * numBands)
-    embDf
+    embs
       .select(col("vec_id"), expr(
         "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
         .as("e")).as[(Long, Array[Long])]
@@ -537,34 +477,26 @@ object SimilarityQueries {
       }.toDF("vec_id", "bi", "blk")
   }
 
-  /** Past-ceiling near-dup candidate generator (r11): banded sign-LSH
-    * (identical + strong-cosine mass, theorem-quantified recall) ∪
-    * IVF multi-probe pairs (the data-adaptive arm serving the
-    * cos ∈ [0.4, 0.9) band sign-LSH is theorem-bound to miss —
-    * IvfQueries.probePairCandidates). Both arms are sub-quadratic and
-    * both feed ONE exact-cosine verify, so precision stays 1 whatever
-    * the mix; a pair reaching both arms collapses in
-    * [[verifiedNearDup]]'s distinct.
+  /** Past-ceiling near-dup candidate generator (r11) over an embeddings
+    * relation of `n` vectors: banded sign-LSH (identical + strong-cosine
+    * mass, theorem-quantified recall) ∪ IVF multi-probe pairs (the
+    * data-adaptive arm serving the cos ∈ [0.4, 0.9) band sign-LSH is
+    * theorem-bound to miss — IvfQueries.probePairCandidates). Both arms
+    * are sub-quadratic and both feed ONE exact-cosine verify, so
+    * precision stays 1 whatever the mix; a pair reaching both arms
+    * collapses in [[verifiedNearDup]]'s distinct. The representative
+    * factoring passes its one-row-per-distinct-vector slice (r12,
+    * VERDICT r11 #1a): both arms dial by the SLICE count, so duplicated
+    * corpora pay generator cost in distinct vectors, never in copies;
+    * IVF centroids keep training on the full corpus — the rep slice has
+    * identical geometry (dedup removes mass, not support) and the
+    * trained codebook is cached per (dir, k).
     */
   private[ext] def nearDupCandidates(spark: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    bandedCandidates(spark, d, lit(true), lit(true), lowerTriangle = true)
-      .union(IvfQueries.probePairCandidates(spark, d))
-
-  /** The union candidate generator over an EXPLICIT embeddings slice —
-    * the past-rep-ceiling arm of the representative factoring (r12,
-    * VERDICT r11 #1a): both arms run over the slice (one row per
-    * distinct vector) with their dials keyed to the SLICE count `n`, so
-    * duplicated corpora pay generator cost in distinct vectors, never in
-    * copies. IVF centroids keep training on the full corpus — the rep
-    * slice has identical geometry (dedup removes mass, not support) and
-    * the trained codebook is cached per (dir, k).
-    */
-  private def nearDupCandidatesFrom(spark: org.apache.spark.sql.SparkSession,
-      d: String, embDf: org.apache.spark.sql.DataFrame, n: Long)
+      d: String, embs: org.apache.spark.sql.DataFrame, n: Long)
       : org.apache.spark.sql.DataFrame =
-    bandedCandidatesFrom(spark, embDf, n)
-      .union(IvfQueries.probePairCandidatesFrom(spark, d, embDf, n))
+    bandedCandidates(embs, n, lit(true), lit(true), lowerTriangle = true)
+      .union(IvfQueries.probePairCandidates(spark, d, embs, n))
 
   /** Exact-cosine verify of candidate pairs against the near-dup
     * threshold — the precision-1 stage shared by every candidate arm.
@@ -642,7 +574,8 @@ object SimilarityQueries {
       if (dupRatio < 2.0) {
         withVh.unpersist(blocking = false)
         groups.unpersist(blocking = false)
-        verifiedNearDup(spark, d, nearDupCandidates(spark, d)).persist()
+        verifiedNearDup(spark, d, nearDupCandidates(spark, d,
+          Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d))).persist()
       } else {
         val members = withVh.join(groups, Seq("vh", "vh2"))
         val repEmb = Tables.embeddings(spark, d)
@@ -664,7 +597,7 @@ object SimilarityQueries {
           val rp =
             (if (nRep <= EMBED_PAIR_EXACT_MAX) embedNearDupFrom(spark, repEmb)
              else verifiedNearDup(spark, d,
-               nearDupCandidatesFrom(spark, d, repEmb, nRep)))
+               nearDupCandidates(spark, d, repEmb, nRep)))
             .select(col("vec_a").as("ra"), col("vec_b").as("rb"), col("cos"))
             .persist()
           rp.count()
@@ -767,7 +700,8 @@ object SimilarityQueries {
       maxBroadcast: Long = VectorOps.CORPUS_BROADCAST_MAX)
       : org.apache.spark.sql.DataFrame = {
     if (VectorOps.corpusSize(spark, d) > maxBroadcast) {
-      return verifiedNearDup(spark, d, nearDupCandidates(spark, d))
+      return verifiedNearDup(spark, d, nearDupCandidates(spark, d,
+          Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d)))
         .orderBy("vec_a", "vec_b")
     }
     embedNearDupFrom(spark, Tables.embeddings(spark, d))
@@ -850,31 +784,24 @@ object SimilarityQueries {
     }.toDF("vec_a", "vec_b", "cos")
   }
 
-  /** Hyperplane-LSH top-k, parameterized by the banding — THE scale dial
-    * of the operator. Bucket occupancy is n / 2^bandBits per band, and
-    * the candidate-pair axis is quadratic in occupancy, so bandBits must
-    * grow with the corpus (≈ log2(n / targetBucket) — the standard LSH
-    * sizing rule): the demo constants (2 bands × 4 bits = 16 buckets)
-    * are right for the oracle-gated sf0.01-0.1 range, while 60 k vectors
-    * already want ≥6-bit bands (measured at 30×: 2×6 bits cut the query
-    * 3× — SCALING.md r5). The signature pass is the same fused narrow
-    * mapPartitions whatever the width; results for any given banding are
-    * deterministic in both engines.
+  /** Hyperplane-LSH top-k, parameterized by the band width — THE scale
+    * dial of the operator. Bucket occupancy is n / 2^bandBits per band,
+    * and the candidate-pair axis is quadratic in occupancy, so bandBits
+    * must grow with the corpus (≈ log2(n / targetBucket) — the standard
+    * LSH sizing rule, [[VectorOps.lshBandBitsFor]], which q_sim_lsh
+    * passes): 4-bit bands (16 buckets) are right for the oracle-gated
+    * sf0.01-0.1 range, while 60 k vectors already want ≥6-bit bands
+    * (measured at 30×: 2×6 bits cut the query 3× — SCALING.md r5).
+    * Candidates come from the same narrow band-block pass and bucket
+    * join as the near-dup generator, over the query slice with a ≠ b;
+    * results for any given band width are deterministic in both engines.
     */
   def lshTopK(spark: org.apache.spark.sql.SparkSession, d: String,
-      bandBits: Int = 4, numBands: Int = 2): org.apache.spark.sql.DataFrame = {
-    val sigs = sparkSigs(spark, d, numPlanes = bandBits * numBands)
-    val bands = sigs
-      .withColumn("bi", explode(sequence(lit(0), lit(numBands - 1))))
-      .select(col("vec_id"), col("bi"),
-        expr(s"shiftright(sig, $bandBits * bi) % ${1 << bandBits}").as("blk"))
-    val pairs = bands.as("a")
-      .join(bands.as("b"),
-        col("a.bi") === col("b.bi") && col("a.blk") === col("b.blk") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .filter(col("a.vec_id") % 20 === 0)
-      .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("vec_id"))
-      .distinct()
+      bandBits: Int): org.apache.spark.sql.DataFrame = {
+    val bands = sparkBandBlocks(Tables.embeddings(spark, d), bandBits,
+      LSH_TOPK_BANDS)
+    val pairs = bandedJoin(bands.filter(expr(querySlice)), bands,
+      lowerTriangle = false)
     // exact re-rank of LSH candidates: broadcast corpus under the
     // size ceiling, distributed join formulation past it
     VectorOps.cosineAuto(spark, d, pairs)
@@ -884,16 +811,6 @@ object SimilarityQueries {
       .select(col("query_id"), col("vec_id"), round(col("cos"), 6).as("cos"), col("rn"))
       .orderBy("query_id", "rn")
   }
-
-  /** [[lshTopK]] with the band width derived from the corpus count —
-    * the registry default. numBands stays 2 (both anchors' value); the
-    * recall/cost trade moves only along the band-width axis.
-    */
-  def lshTopKAuto(spark: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    lshTopK(spark, d,
-      bandBits = VectorOps.lshBandBitsFor(VectorOps.corpusSize(spark, d)),
-      numBands = 2)
 
   /** Past-ceiling hard-negative probe count: 16 probed cells per query,
     * set by the r13 generator ablation (exact top-[[NEG_K]] SET recall
@@ -1232,7 +1149,7 @@ object SimilarityQueries {
          |FROM elems
          |GROUP BY label, i
          |ORDER BY label, i""".stripMargin) { (spark, d) =>
-      VectorOps.elems(spark, d)
+      VectorOps.elems(Tables.embeddings(spark, d))
         .groupBy("label", "i")
         .agg(count(lit(1)).as("n"), sum(col("e")).as("sum_e"),
           round(sum(col("e")).cast("double") / count(lit(1)), 6).as("centroid"))
@@ -1285,7 +1202,7 @@ object SimilarityQueries {
       import spark.implicits._
       // model build: one (label, i) hash agg + a bounded collect —
       // |labels|·dim cells, never the corpus
-      val cents = VectorOps.elems(spark, d)
+      val cents = VectorOps.elems(Tables.embeddings(spark, d))
         .groupBy(col("label").as("cand"), col("i"))
         .agg(expr("CAST(round(CAST(SUM(e) AS DOUBLE) / COUNT(*), 0) AS BIGINT)")
           .as("c"))
@@ -1355,15 +1272,15 @@ object SimilarityQueries {
     //      ~linear in n instead of quadratic; the oracle replays the
     //      dial via lshSqlAuto's CASE chain. ----
     "q_sim_lsh" -> QueryDef(lshSqlAuto) { (spark, d) =>
-      lshTopKAuto(spark, d)
+      lshTopK(spark, d, VectorOps.lshBandBitsFor(VectorOps.corpusSize(spark, d)))
     },
 
     // ---- FIXED banding spec anchor, oracle-gated: 2×8-bit bands (256
     //      buckets/band) — proves a specific dial hash-identically in
     //      both engines independent of corpus size (the auto entry's
     //      behavior varies with n by design) ----
-    "q_sim_lsh_wide" -> QueryDef(lshSql(8, 2)) { (spark, d) =>
-      lshTopK(spark, d, bandBits = 8, numBands = 2)
+    "q_sim_lsh_wide" -> QueryDef(lshSql(8)) { (spark, d) =>
+      lshTopK(spark, d, bandBits = 8)
     },
 
     // ---- embedding-cosine near-duplicate pairs ----
@@ -1486,7 +1403,7 @@ object SimilarityQueries {
          |GROUP BY a.label, b.label
          |ORDER BY label_a, label_b""".stripMargin) { (spark, d) =>
       import org.apache.spark.sql.types.{DecimalType => DT}
-      val sums = VectorOps.elems(spark, d)
+      val sums = VectorOps.elems(Tables.embeddings(spark, d))
         .groupBy("label", "i")
         .agg(sum(col("e")).as("s"), count(lit(1)).as("n"))
       sums.as("a")

@@ -135,18 +135,8 @@ object TextOps {
 
   /** One row per character k-gram occurrence: (doc_id, p, h) where p is
     * the 1-based start position and h = h60 of the k-gram — the rolling
-    * hash stream a fingerprinting pass consumes.
+    * hash stream a fingerprinting pass consumes (DuckDB side).
     */
-  def charShingleHashes(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), explode(expr(
-        s"""CASE WHEN length(text) >= $k
-           |THEN sequence(1, length(text) - ${k - 1})
-           |ELSE array() END""".stripMargin)).as("p"),
-        col("text"))
-      .select(col("doc_id"), col("p"),
-        Hashing.h60(expr(s"substring(text, p, $k)")).as("h"))
-
   def duckCharShingleHashesCte(k: Int): String =
     s"""char_hashes AS (
        |  SELECT doc_id, p, ${Hashing.duckH60(s"substr(text, CAST(p AS BIGINT), $k)")} AS h

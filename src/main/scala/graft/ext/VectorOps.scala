@@ -22,16 +22,12 @@ object VectorOps {
   val DIM = 64
   val SCALE = 1e7
 
-  /** (vec_id, label, i (1-based), e) fixed-point element rows. */
-  def elems(spark: SparkSession, sfDir: String): DataFrame =
-    elemsFrom(Tables.embeddings(spark, sfDir))
-
-  /** [[elems]] over an explicit embeddings relation — purely relational,
-    * so a scan bucketed by vec_id keeps its partitioning through it and
-    * the downstream per-vector aggregates plan exchange-free
-    * (BucketedDocsSpec).
+  /** (vec_id, label, i (1-based), e) fixed-point element rows of an
+    * embeddings relation — purely relational, so a scan bucketed by
+    * vec_id keeps its partitioning through it and the downstream
+    * per-vector aggregates plan exchange-free (BucketedDocsSpec).
     */
-  def elemsFrom(embs: DataFrame): DataFrame =
+  def elems(embs: DataFrame): DataFrame =
     embs
       .select(col("vec_id"), col("label"),
         posexplode(expr(
@@ -48,12 +44,8 @@ object VectorOps {
       |)""".stripMargin
 
   /** (vec_id, nrm) — L2 norm of the fixed-point vector, as DOUBLE. */
-  def norms(spark: SparkSession, sfDir: String): DataFrame =
-    normsFrom(Tables.embeddings(spark, sfDir))
-
-  /** [[norms]] over an explicit embeddings relation. */
-  def normsFrom(embs: DataFrame): DataFrame =
-    elemsFrom(embs)
+  def norms(embs: DataFrame): DataFrame =
+    elems(embs)
       .groupBy("vec_id")
       .agg(sqrt(sum(col("e") * col("e")).cast("double")).as("nrm"))
 
@@ -68,18 +60,13 @@ object VectorOps {
     * index, partial-sum map-side, one shuffle on the pair key. Zero-norm
     * vectors are dropped (nrm > 0 join condition), exactly like the
     * oracle's cosines CTE and [[cosineByBroadcast]]'s skip — the two
-    * formulations are row-identical (ExtSpec fallback-equality).
-    */
-  def cosine(spark: SparkSession, sfDir: String, pairs: DataFrame): DataFrame =
-    cosineFrom(Tables.embeddings(spark, sfDir), pairs)
-
-  /** [[cosine]] over an explicit embeddings relation: with a vec_id-
-    * bucketed table, the element/norm sides of every join read
+    * formulations are row-identical (ExtSpec fallback-equality). With a
+    * vec_id-bucketed `embs`, the element/norm sides of every join read
     * pre-partitioned buckets — only the (small) pair side shuffles.
     */
-  def cosineFrom(embs: DataFrame, pairs: DataFrame): DataFrame = {
-    val el = elemsFrom(embs)
-    val nr = normsFrom(embs).filter(col("nrm") > 0)
+  def cosine(embs: DataFrame, pairs: DataFrame): DataFrame = {
+    val el = elems(embs)
+    val nr = norms(embs).filter(col("nrm") > 0)
     pairs
       .join(el.select(col("vec_id").as("query_id"), col("i"), col("e").as("qe")), "query_id")
       .join(el.select(col("vec_id"), col("i"), col("e").as("ce")), Seq("vec_id", "i"))
@@ -134,10 +121,10 @@ object VectorOps {
     * this box's 74 GB of free disk. 20 bits holds occupancy ≤ 32
     * through n ≈ 33M — past the 10M corpus-broadcast ceiling where
     * every vector path re-plans anyway (the same alignment argument as
-    * the flat pair cap). Costs that move with the cap: band signature
-    * bits·bands ≤ 40 dot products per vector (one narrow pass), and
-    * the lshTopK single-long signature packing needs bits·bands ≤ 63
-    * (40 at the cap).
+    * the flat pair cap). The cost that moves with the cap: band
+    * blocks take bits·bands dot products per vector in one narrow pass
+    * (40 for the 2-band top-k at the cap, 160 for the 8-band near-dup
+    * generator).
     */
   val LSH_MAX_BITS = 20
 
@@ -191,8 +178,9 @@ object VectorOps {
     */
   def cosineAuto(spark: SparkSession, sfDir: String, pairs: DataFrame,
       maxBroadcast: Long = CORPUS_BROADCAST_MAX): DataFrame =
-    if (corpusSize(spark, sfDir) > maxBroadcast) cosine(spark, sfDir, pairs)
-    else cosineByBroadcast(spark, sfDir, pairs)
+    if (corpusSize(spark, sfDir) > maxBroadcast)
+      cosine(Tables.embeddings(spark, sfDir), pairs)
+    else cosineByBroadcast(pairs, broadcastCorpus(spark, sfDir))
 
   /** Fixed-point vectors + norms collected and broadcast: the fast path
     * for cosine math whenever the corpus fits an executor broadcast
@@ -235,17 +223,9 @@ object VectorOps {
     }.toMap)
   }
 
-  /** Exact cosine of explicit (query_id, vec_id) pairs against the
-    * broadcast corpus — one narrow pass, no |pairs|×dim row explosion
+  /** Exact cosine of explicit (query_id, vec_id) pairs against a
+    * [[broadcastCorpus]] — one narrow pass, no |pairs|×dim row explosion
     * (the join formulation materialized 1.3 G rows at 20 k vectors).
-    */
-  def cosineByBroadcast(spark: SparkSession, sfDir: String,
-      pairs: DataFrame): DataFrame =
-    cosineByBroadcast(pairs, broadcastCorpus(spark, sfDir))
-
-  /** [[cosineByBroadcast]] against an already-built corpus broadcast —
-    * callers that bucket candidates against the same corpus (LSH, IVF)
-    * must not collect/broadcast the embeddings twice.
     */
   def cosineByBroadcast(pairs: DataFrame,
       bc: org.apache.spark.broadcast.Broadcast[Map[Long, (Array[Long], Double)]])

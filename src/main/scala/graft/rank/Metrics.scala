@@ -139,15 +139,12 @@ object Metrics {
     * groups per partition, re-sorting every candidate row (measured
     * 7.4s vs 2.3s at sf0.1). Locally the typed boundary costs more than
     * it saves; MetricsSpec proves it rank-identical to [[posRanksJoin]].
-    */
-  def posRanksDigest(spark: SparkSession, sfDir: String, kMax: Int): DataFrame =
-    posRanksDigestFrom(scoredCandidates(spark, sfDir), kMax)
-
-  /** [[posRanksDigest]] over an explicit scored-candidate relation —
-    * lets DigestShuffleSpec measure the digest stage's shuffle bytes in
+    * `scored` is a scored-candidate relation (`user_id, domain, score,
+    * item_id, is_positive`, e.g. [[scoredCandidates]]), so
+    * DigestShuffleSpec can measure the digest stage's shuffle bytes in
     * isolation against the window formulation on identical input.
     */
-  def posRanksDigestFrom(scored: DataFrame, kMax: Int): DataFrame = {
+  def posRanksDigest(scored: DataFrame, kMax: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
     val parts = scored

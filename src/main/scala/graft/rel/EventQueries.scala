@@ -191,13 +191,8 @@ object EventQueries {
         |FROM events
         |GROUP BY 1, 2
         |ORDER BY 1, 2""".stripMargin) { (spark, d) =>
-      val agg = graft.streaming.EventsStream.readEventsStream(spark, d)
-        .withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value").cast(M)), 2).cast("double").as("sum_value"))
-        .select(col("w.start").as("win_start"), col("event_type"), col("n"),
-          col("sum_value"))
+      val agg = graft.streaming.EventsStream.tumblingCounts(
+        graft.streaming.EventsStream.readEventsStream(spark, d))
       graft.streaming.EventsStream.runBounded(agg, "q_events_stream_sink")
         .orderBy("win_start", "event_type")
     },

@@ -7,12 +7,13 @@ import org.apache.spark.sql.functions._
 
 /** SINGLE-SOURCED sessionization primitive (the TextOps.duckTokensCte
   * pattern): every consumer of "a session" — q_events_sessionize,
-  * q_concurrency, q_stream_session's oracle, the mapGroupsWithState
-  * state machine — shares ONE boundary rule so the definitions cannot
-  * drift. The rule is `gap >= GapUs` starts a new session, matching
-  * Spark's native `session_window` exactly (windows [t, t+gap) merge
-  * only while they overlap, i.e. next < prev + gap); a `>` rule here
-  * and `>=` there once coexisted and diverged on exact-boundary gaps.
+  * q_concurrency, q_stream_session and its oracle — shares ONE
+  * boundary rule so the definitions cannot drift. The rule is
+  * `gap >= GapUs` starts a new session; a `>` rule here and `>=` there
+  * once coexisted and diverged on exact-boundary gaps. Spark's native
+  * `session_window` merges windows that merely touch (an event exactly
+  * one gap after the last joins its session), so q_stream_session's
+  * `EventsStream.sessionCounts` passes it a gap of `GapUs − 1` µs.
   */
 object SessionOps {
 

@@ -300,8 +300,10 @@ object TemporalQueries {
     //      including those the watermark hasn't closed (Append drops
     //      the tail — measured 943/946 at sf0.001), which is what makes
     //      the batch oracle replay exact. Session semantics: merge while
-    //      next_ts < prev_ts + gap (STRICT), end = last_ts + gap — the
-    //      oracle's island construction mirrors both. State is bounded
+    //      next_ts < prev_ts + gap (STRICT — session_window itself merges
+    //      touching windows, so sessionCounts runs it at gap − 1 µs),
+    //      end = last_ts + gap — the oracle's island construction
+    //      mirrors both. State is bounded
     //      by the watermark at steady state; the oracle-gated Complete
     //      run is the bounded-backfill shape ----
     "q_stream_session" -> QueryDef(
@@ -311,12 +313,8 @@ object TemporalQueries {
         |  CAST(n_events AS BIGINT) AS n_events
         |FROM sess
         |ORDER BY user_id, sess_start""".stripMargin) { (spark, d) =>
-      val agg = graft.streaming.EventsStream.readEventsStream(spark, d)
-        .withWatermark("ts", "2 hours")
-        .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"), col("w.start").as("sess_start"),
-          col("w.end").as("sess_end"), col("n_events"))
+      val agg = graft.streaming.EventsStream.sessionCounts(
+        graft.streaming.EventsStream.readEventsStream(spark, d))
       graft.streaming.EventsStream.runBounded(agg, "q_stream_session_sink")
         .orderBy("user_id", "sess_start")
     },

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface over the events table (SURVEY.md §2.9).
@@ -16,8 +16,8 @@ import org.apache.spark.sql.types._
   *
   * 100 TB / production shape: event-time windows + watermark bound state;
   * the shuffle keys (window, event_type) / (user_id) match the batch
-  * plans; [[sessionize]] shows `mapGroupsWithState` for state machines
-  * `session_window` can't express (carrying counters across sessions).
+  * plans; [[cappedIntervalJoin]] shows `flatMapGroupsWithState` for a
+  * bounded-state operator the built-in stream-stream join can't express.
   */
 object EventsStream {
 
@@ -99,80 +99,41 @@ object EventsStream {
     spark.table(name)
   }
 
-  /** Tumbling 1-hour event-time aggregate; watermark bounds state. */
-  def tumblingCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("w.start").as("win_start"), col("event_type"), col("n"), col("sum_value"))
+  /** Event-time watermark of the windowed aggregates: bounds their
+    * state at steady state.
+    */
+  private val WATERMARK = "2 hours"
 
-  /** Native session windows: 30-minute inactivity gap per user. */
-  def sessionCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
+  /** q_events_stream's aggregate: tumbling 1-hour event-time windows per
+    * event type, with the decimal-exact rounded value sum (the oracle
+    * parity rule).
+    */
+  def tumblingCounts(events: DataFrame): DataFrame =
+    events.withWatermark("ts", WATERMARK)
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        round(sum(col("value").cast(DecimalType(18, 3))), 2).cast("double")
+          .as("sum_value"))
+      .select(col("w.start").as("win_start"), col("event_type"), col("n"),
+        col("sum_value"))
+
+  /** q_stream_session's aggregate: native session windows per user under
+    * the engine's session rule ([[graft.rel.SessionOps]]: a gap of 30
+    * minutes or more starts a new session). `session_window` merges
+    * windows that merely touch, so with a 30-minute gap an event exactly
+    * 30 minutes after the last would join its session; timestamps are
+    * microseconds, so a gap one microsecond shorter is exactly the rule,
+    * and the session end adds that microsecond back (end = last event +
+    * 30 minutes).
+    */
+  def sessionCounts(events: DataFrame): DataFrame =
+    events.withWatermark("ts", WATERMARK)
+      .groupBy(session_window(col("ts"),
+        s"${graft.rel.SessionOps.GapUs - 1} microseconds").as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("w.start").as("sess_start"),
-        col("w.end").as("sess_end"), col("n_events"))
-
-  final case class Ev(user_id: Long, ts_us: Long)
-  final case class SessState(start_us: Long, last_us: Long, n: Long, closed: Long)
-  final case class SessUpdate(user_id: Long, sess_start_us: Long, n_events: Long,
-      closed_so_far: Long)
-
-  /** Custom sessionization state machine via mapGroupsWithState: carries
-    * a per-user count of CLOSED sessions across triggers — cross-session
-    * state that `session_window` cannot express. Emits the live session
-    * per user and trigger.
-    */
-  def sessionize(events: Dataset[Ev], gapUs: Long = 1800L * 1000000L): Dataset[SessUpdate] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[SessState, SessUpdate](GroupStateTimeout.NoTimeout) {
-        (user, evs, state: GroupState[SessState]) =>
-          val sorted = evs.toSeq.sortBy(_.ts_us)
-          var s = state.getOption.getOrElse(SessState(-1L, -1L, 0L, 0L))
-          sorted.foreach { e =>
-            s = if (s.last_us < 0 || e.ts_us - s.last_us >= gapUs)
-              SessState(e.ts_us, e.ts_us, 1L, if (s.last_us < 0) s.closed else s.closed + 1)
-            else s.copy(last_us = e.ts_us, n = s.n + 1)
-          }
-          state.update(s)
-          SessUpdate(user, s.start_us, s.n, s.closed)
-      }
-  }
-
-  final case class ClosedSession(user_id: Long, start_us: Long, end_us: Long,
-      n_events: Long)
-
-  /** Closed-session emission via flatMapGroupsWithState: emits one row per
-    * session the moment a later event closes it (0..n outputs per group
-    * per trigger — the shape mapGroupsWithState can't express). The live
-    * session stays in state across triggers.
-    */
-  def closedSessions(events: Dataset[Ev],
-      gapUs: Long = 1800L * 1000000L): Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, ClosedSession](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (user, evs, state: GroupState[SessState]) =>
-          val sorted = evs.toSeq.sortBy(_.ts_us)
-          var s = state.getOption.getOrElse(SessState(-1L, -1L, 0L, 0L))
-          val closed = Seq.newBuilder[ClosedSession]
-          sorted.foreach { e =>
-            if (s.last_us >= 0 && e.ts_us - s.last_us >= gapUs) {
-              closed += ClosedSession(user, s.start_us, s.last_us, s.n)
-              s = SessState(e.ts_us, e.ts_us, 1L, s.closed + 1)
-            } else if (s.last_us < 0) {
-              s = SessState(e.ts_us, e.ts_us, 1L, s.closed)
-            } else {
-              s = s.copy(last_us = e.ts_us, n = s.n + 1)
-            }
-          }
-          state.update(s)
-          closed.result().iterator
-      }
-  }
+        (col("w.end") + expr("INTERVAL 1 MICROSECOND")).as("sess_end"),
+        col("n_events"))
 
   final case class TypedEv(user_id: Long, ts_us: Long, event_id: Long,
       is_purchase: Boolean)
@@ -256,8 +217,4 @@ object EventsStream {
           out.result().iterator
       }
   }
-
-  /** Run a streaming aggregate into an in-memory table (dev/test sink). */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode): StreamingQuery =
-    df.writeStream.format("memory").queryName(name).outputMode(mode).start()
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** E1 lifecycle composition: epochs accumulate in the log, the split
   * cache is written once, and best-epoch selection is keep-first.
@@ -19,7 +20,7 @@ class LifecycleSpec extends SparkSpec {
       .select(col("user_id"), col("domain"), col("item_id"), lit(0).as("is_positive"))
       .unionAll(splits.select(col("user_id"), col("domain"),
         col("test_item").as("item_id"), lit(1).as("is_positive")))
-    graft.rank.Metrics.posRanksDigestFrom(
+    graft.rank.Metrics.posRanksDigest(
       cands.withColumn("score", Hashing.h60(col("user_id"), col("item_id"),
         col("domain"), lit(s"epoch$epoch")) % 1000000L), kMax = 10)
   }
@@ -92,6 +93,39 @@ class LifecycleSpec extends SparkSpec {
       assert(fromCkpt.nonEmpty && fromCkpt.sortBy(_.toString)
         .sameElements(direct.sortBy(_.toString)))
     }
+  }
+
+  test("checkpointBest rethrows a failed save only after the other saves finished") {
+    import spark.implicits._
+    val workDir = Files.createTempDirectory("lc_fail").toString
+    val ckpt = java.nio.file.Paths.get(s"$workDir/ckpt")
+    // the first winner's checkpoint path runs under a regular FILE, so
+    // its save fails at once; eleven more saves are still to run
+    Files.createDirectories(ckpt)
+    Files.createFile(ckpt.resolve("best_m0_blocked"))
+    val best = (("blocked/x", 10, "m0", 0.5, 1) +:
+      (1 to 11).map(i => ("a", 10, s"m$i", 0.5, 1 + i % 3)))
+      .toDF("domain", "k", "metric", "value", "epoch").collect().toSeq
+    val e = intercept[Exception] { Lifecycle.checkpointBest(spark, workDir, best) }
+    def causes(t: Throwable): List[Throwable] =
+      if (t == null) Nil else t :: causes(t.getCause)
+    assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("best_m0_blocked")),
+      s"expected the failed save's own error, got: $e")
+    // the status tracker is fed by listener events: deliver the queued
+    // ones, so a job counts as active only if it is still running
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+      .invoke(bus, Long.box(10000L))
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      "checkpointBest threw while a checkpoint save was still running")
+    def written = Files.walk(ckpt).iterator().asScala.map(_.toString).toSet
+    val atThrow = written
+    Thread.sleep(2000)
+    val now = written
+    val changed = (now -- atThrow) ++ (atThrow -- now)
+    assert(changed.isEmpty, s"checkpoint saves kept writing after the throw: $changed")
+    assert(atThrow.count(_.endsWith("_SUCCESS")) == 11)
   }
 
   test("q_lifecycle removes its temp workDir when the build fails") {

@@ -39,7 +39,8 @@ class BucketedDocsSpec extends SparkSpec {
 
   test("minhash verify over the bucketed layout equals q_dedup_minhash") {
     val bucketed = spark.table("t_docs_b")
-    val overBucketed = DedupQueries.minhashVerifiedPairsWith(spark, sf(),
+    val overBucketed = DedupQueries.minhashVerifiedPairsFrom(
+        graft.Tables.documents(spark, sf()),
         TextOps.wordShingleHashesRel(bucketed, 5))
       .collect().toSet
     val production = graft.SparkEntry.defs("q_dedup_minhash")
@@ -51,18 +52,18 @@ class BucketedDocsSpec extends SparkSpec {
   test("norms over bucketed embeddings plan zero exchanges; cosine agrees") {
     val bucketed = Bucketing.writeBucketed(graft.Tables.embeddings(spark, sf()),
       "t_embs_b", 4, Seq("vec_id"))
-    val nB = VectorOps.normsFrom(bucketed)
+    val nB = VectorOps.norms(bucketed)
     assert(shuffles(nB) == 0,
       s"bucketed norm agg must not shuffle:\n${nB.queryExecution.executedPlan}")
-    assert(shuffles(VectorOps.normsFrom(graft.Tables.embeddings(spark, sf()))) >= 1)
+    assert(shuffles(VectorOps.norms(graft.Tables.embeddings(spark, sf()))) >= 1)
     // exact re-rank corpus side: same pair cosines, fewer exchanges
     val pairs = graft.Tables.embeddings(spark, sf())
       .select(col("vec_id")).limit(6).collect().map(_.getLong(0))
     val pairDf = spark.createDataFrame(
       pairs.combinations(2).map(p => (p(0), p(1))).toSeq
     ).toDF("query_id", "vec_id")
-    val cosB = VectorOps.cosineFrom(bucketed, pairDf)
-    val cosP = VectorOps.cosineFrom(graft.Tables.embeddings(spark, sf()), pairDf)
+    val cosB = VectorOps.cosine(bucketed, pairDf)
+    val cosP = VectorOps.cosine(graft.Tables.embeddings(spark, sf()), pairDf)
     assert(cosB.collect().toSet == cosP.collect().toSet)
     assert(shuffles(cosB) < shuffles(cosP),
       "bucketed corpus side must remove exchanges from the cosine join")

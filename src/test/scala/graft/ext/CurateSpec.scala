@@ -161,7 +161,8 @@ class CurateSpec extends SparkSpec {
     seeds.foreach(r => assert(r.getString(1) == langs(r.getLong(0))))
     // r1 docs have at least one even (seed) neighbor; r2 docs have none
     val vp = DedupQueries
-      .minhashVerifiedPairsWith(spark, d, TextOps.wordShingleHashes(spark, d, 5))
+      .minhashVerifiedPairsFrom(graft.Tables.documents(spark, d),
+        TextOps.wordShingleHashes(spark, d, 5))
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val nbrs = (vp ++ vp.map(_.swap)).groupBy(_._1)

@@ -142,8 +142,10 @@ class ExtSpec extends SparkSpec {
     // flat codebook: the query path's candidate plan; product codebook:
     // the forced product-quantizer arm (fixture size is far below its
     // regime edge)
-    SimilarityQueries.nearDupCandidates(spark, sf())
-    IvfQueries.probePairCandidatesFrom(spark, sf(),
+    def nearDupCandidates() = SimilarityQueries.nearDupCandidates(spark, sf(),
+      graft.Tables.embeddings(spark, sf()), VectorOps.corpusSize(spark, sf()))
+    nearDupCandidates()
+    IvfQueries.probePairCandidates(spark, sf(),
       graft.Tables.embeddings(spark, sf()), VectorOps.corpusSize(spark, sf()),
       forceProduct = true)
     val after = objEntries
@@ -154,11 +156,11 @@ class ExtSpec extends SparkSpec {
       .map(_._3).sum
     val flatBuilds = builds("sim.pairFlatCents")
     // cached: a second plan build must NOT re-train
-    SimilarityQueries.nearDupCandidates(spark, sf())
+    nearDupCandidates()
     assert(builds("sim.pairFlatCents") == flatBuilds, "second build must hit the cache")
     graft.Memo.release(spark, sf())
     assert(objEntries.isEmpty, s"release must drop codebook entries: $objEntries")
-    SimilarityQueries.nearDupCandidates(spark, sf())
+    nearDupCandidates()
     assert(builds("sim.pairFlatCents") == flatBuilds + 1,
       "post-release build must re-train")
     graft.Memo.release(spark, sf())
@@ -184,7 +186,7 @@ class ExtSpec extends SparkSpec {
     // the product-quantizer IVF arm, forced at fixture size and run
     // through the same exact verify: precision 1 against the exact set
     def productArm(d: String) = SimilarityQueries.verifiedNearDup(spark, d,
-      IvfQueries.probePairCandidatesFrom(spark, d,
+      IvfQueries.probePairCandidates(spark, d,
         graft.Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d),
         forceProduct = true)).collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")) ->
@@ -233,7 +235,8 @@ class ExtSpec extends SparkSpec {
       (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSeq
       .toDF("query_id", "vec_id")
     // same rounding as the query's round(cos, 6): HALF_UP away from zero
-    val exact = VectorOps.cosineByBroadcast(spark, sf(), pairs)
+    val exact = VectorOps.cosineByBroadcast(pairs,
+      VectorOps.broadcastCorpus(spark, sf()))
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         BigDecimal(r.getDouble(2))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
@@ -286,7 +289,8 @@ class ExtSpec extends SparkSpec {
       sD.map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("eval_id"))).toSeq
         .toDF("query_id", "vec_id")
     }
-    val decExact = VectorOps.cosineByBroadcast(spark, sf(), decPairs)
+    val decExact = VectorOps.cosineByBroadcast(decPairs,
+      VectorOps.broadcastCorpus(spark, sf()))
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         BigDecimal(r.getDouble(2))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
@@ -308,7 +312,8 @@ class ExtSpec extends SparkSpec {
       import spark.implicits._
       hD.map(t => (t._1, t._2)).toSeq.toDF("query_id", "vec_id")
     }
-    val hnExact = VectorOps.cosineByBroadcast(spark, sf(), hnPairs)
+    val hnExact = VectorOps.cosineByBroadcast(hnPairs,
+      VectorOps.broadcastCorpus(spark, sf()))
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         BigDecimal(r.getDouble(2))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
@@ -393,7 +398,8 @@ class ExtSpec extends SparkSpec {
     }
     // pigeonhole completeness: brute force over ALL same-kind signature
     // pairs must find nothing the 15-bit block join missed
-    val ph = Multimodal.perceptualHashes(spark, sf())
+    val ph = Multimodal.perceptualHashesOf(Multimodal.media(spark, sf())
+        .filter(col("payload").isNotNull && length(col("payload")) > 0))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     val brute = (for {
       (a, ka, pa) <- ph; (b, kb, pb) <- ph

@@ -55,7 +55,7 @@ class DigestShuffleSpec extends SparkSpec {
         .select("user_id", "domain", "rn").collect()
     }
     val digestBytes = shuffleWriteBytes {
-      Metrics.posRanksDigestFrom(scored, 10).collect()
+      Metrics.posRanksDigest(scored, 10).collect()
     }
     scored.unpersist()
     assert(windowBytes > 0 && digestBytes > 0)
@@ -75,7 +75,7 @@ class DigestShuffleSpec extends SparkSpec {
       .filter(col("is_positive") === 1)
       .select("user_id", "domain", "rn")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    val dig = Metrics.posRanksDigestFrom(scored, 10).collect()
+    val dig = Metrics.posRanksDigest(scored, 10).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
       // digest reports rank 0 when the positive fell below kMax — drop
       // those and the window rows they correspond to

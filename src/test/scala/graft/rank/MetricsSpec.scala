@@ -75,7 +75,7 @@ class MetricsSpec extends SparkSpec {
     val join = Metrics.posRanksJoin(spark, sf())
       .withColumn("rn", when(col("rn") <= 10, col("rn")).otherwise(0))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    val digest = Metrics.posRanksDigest(spark, sf(), 10)
+    val digest = Metrics.posRanksDigest(Metrics.scoredCandidates(spark, sf()), 10)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
     assert(join.nonEmpty && join == digest)
   }

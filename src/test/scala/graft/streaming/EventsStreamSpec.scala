@@ -6,12 +6,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming plans produce the same results as their batch twins, and the
-  * custom sessionizer carries state across triggers.
+  * capped interval join carries its bounded state across triggers.
   */
 class EventsStreamSpec extends SparkSpec {
 
   private def ts(minute: Int) = java.sql.Timestamp.valueOf(
     f"2026-01-01 ${10 + minute / 60}%02d:${minute % 60}%02d:00")
+
+  /** Start `df` into an in-memory table named `name`. */
+  private def toMemory(df: org.apache.spark.sql.DataFrame, name: String,
+      mode: OutputMode) =
+    df.writeStream.format("memory").queryName(name).outputMode(mode).start()
 
   test("streaming tumbling aggregate equals the batch plan") {
     import spark.implicits._
@@ -22,7 +27,7 @@ class EventsStreamSpec extends SparkSpec {
     val stream = MemoryStream[(Long, java.sql.Timestamp, String, Double)]
     val sdf = stream.toDF().toDF("event_id", "ts", "event_type", "value")
       .withColumn("user_id", col("event_id"))
-    val q = EventsStream.runToMemory(
+    val q = toMemory(
       EventsStream.tumblingCounts(sdf), "tumb", OutputMode.Complete())
     stream.addData(rows)
     q.processAllAvailable()
@@ -41,7 +46,7 @@ class EventsStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, java.sql.Timestamp, Double)]
     val sdf = stream.toDF().toDF("user_id", "ts", "value")
-    val q = EventsStream.runToMemory(
+    val q = toMemory(
       EventsStream.sessionCounts(sdf), "sess", OutputMode.Complete())
     // user 7: events at t0, t10 (one session), then t60 (a second one)
     stream.addData(Seq((7L, ts(0), 1.0), (7L, ts(10), 1.0), (7L, ts(60), 1.0)))
@@ -51,24 +56,6 @@ class EventsStreamSpec extends SparkSpec {
     assert(sess.length == 2)
     assert(sess(0).getAs[Long]("n_events") == 2)
     assert(sess(1).getAs[Long]("n_events") == 1)
-  }
-
-  test("flatMapGroupsWithState emits sessions as they close, keeps live state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[EventsStream.Ev]
-    val q = EventsStream.closedSessions(stream.toDS())
-      .writeStream.format("memory").queryName("fmgws").outputMode("append").start()
-    val min = 60L * 1000000L
-    // session 1: t0..t5; the t40 event closes it (gap 35 > 30)
-    stream.addData(EventsStream.Ev(9L, 0L), EventsStream.Ev(9L, 5 * min))
-    q.processAllAvailable()
-    assert(spark.table("fmgws").count() == 0) // nothing closed yet
-    stream.addData(EventsStream.Ev(9L, 40 * min))
-    q.processAllAvailable()
-    val closed = spark.table("fmgws").as[EventsStream.ClosedSession].collect()
-    q.stop()
-    assert(closed.toSeq == Seq(EventsStream.ClosedSession(9L, 0L, 5 * min, 2L)))
   }
 
   test("checkpointed file sink is exactly-once across restarts") {
@@ -173,50 +160,26 @@ class EventsStreamSpec extends SparkSpec {
   }
 
   test("a gap of exactly 30 minutes starts a new session (>= boundary)") {
-    // the one input where `>` and `>=` differ — locks the >= gap rule
-    // that matches SessionOps/session_window semantics
+    // the one input where `>` and `>=` differ — locks SessionOps' >= gap
+    // rule on the session_window aggregate q_stream_session runs (a bare
+    // 30-minute session_window merges the two touching windows)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val gap = 1800L * 1000000L
-    val stream = MemoryStream[EventsStream.Ev]
-    val q = EventsStream.closedSessions(stream.toDS())
-      .writeStream.format("memory").queryName("boundary").outputMode("append").start()
-    stream.addData(EventsStream.Ev(3L, 0L), EventsStream.Ev(3L, gap))
-    q.processAllAvailable()
-    val closed = spark.table("boundary").as[EventsStream.ClosedSession].collect()
-    q.stop()
-    assert(closed.toSeq == Seq(EventsStream.ClosedSession(3L, 0L, 0L, 1L)),
-      "event exactly 1800s after the last must close the first session")
-
-    val stream2 = MemoryStream[EventsStream.Ev]
-    val q2 = EventsStream.sessionize(stream2.toDS())
-      .writeStream.format("memory").queryName("boundary2").outputMode("update").start()
-    stream2.addData(EventsStream.Ev(3L, 0L), EventsStream.Ev(3L, gap))
-    q2.processAllAvailable()
-    q2.stop()
-    val updates = spark.table("boundary2").as[EventsStream.SessUpdate].collect()
-    assert(updates.toSeq == Seq(EventsStream.SessUpdate(3L, gap, 1L, 1L)),
-      "live session must be the second one with one closed session behind it")
-  }
-
-  test("mapGroupsWithState sessionizer carries closed-session count across triggers") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[EventsStream.Ev]
-    val q = EventsStream.sessionize(stream.toDS())
-      .writeStream.format("memory").queryName("mgws").outputMode("update").start()
-    val min = 60L * 1000000L
-    stream.addData(EventsStream.Ev(1L, 0L), EventsStream.Ev(1L, 5 * min))
-    q.processAllAvailable()
-    // 40 min later: same session (gap 35 min > 30? yes 35 > 30 -> new session)
-    stream.addData(EventsStream.Ev(1L, 40 * min))
+    val stream = MemoryStream[(Long, java.sql.Timestamp)]
+    val q = toMemory(EventsStream.sessionCounts(
+      stream.toDF().toDF("user_id", "ts")), "boundary", OutputMode.Complete())
+    // user 4: one microsecond under the gap stays in the session
+    val underGap = java.sql.Timestamp.valueOf("2026-01-01 10:29:59.999999")
+    stream.addData(Seq((3L, ts(0)), (3L, ts(30)), (4L, ts(0)), (4L, underGap)))
     q.processAllAvailable()
     q.stop()
-    val updates = spark.table("mgws").as[EventsStream.SessUpdate].collect()
-      .sortBy(_.sess_start_us)
-    assert(updates.length == 2)
-    assert(updates(0) == EventsStream.SessUpdate(1L, 0L, 2L, 0L))
-    assert(updates(1) == EventsStream.SessUpdate(1L, 40 * min, 1L, 1L))
+    val sess = spark.table("boundary").orderBy("user_id", "sess_start")
+      .select("user_id", "sess_start", "sess_end", "n_events")
+      .as[(Long, java.sql.Timestamp, java.sql.Timestamp, Long)].collect().toSeq
+    assert(sess.take(2) == Seq((3L, ts(0), ts(30), 1L), (3L, ts(30), ts(60), 1L)),
+      "an event exactly 30 minutes after the last must start a second session")
+    assert(sess.drop(2) == Seq((4L, ts(0),
+      java.sql.Timestamp.valueOf("2026-01-01 10:59:59.999999"), 2L)))
   }
 
   test("capped interval join: huge cap equals the uncapped per-purchase aggregate") {
@@ -234,7 +197,7 @@ class EventsStreamSpec extends SparkSpec {
       EventsStream.TypedEv(1L, 30L * h, 101L, true),
       EventsStream.TypedEv(2L, 5L * h, 200L, true))
     val stream = MemoryStream[EventsStream.TypedEv]
-    val q = EventsStream.runToMemory(
+    val q = toMemory(
       EventsStream.cappedIntervalJoin(stream.toDS(), cap = 1000,
         winUs = 24L * h).toDF(), "cap_big", OutputMode.Append())
     stream.addData(evs)
@@ -260,7 +223,7 @@ class EventsStreamSpec extends SparkSpec {
       EventsStream.TypedEv(1L, 3L * m, 13L, false),
       EventsStream.TypedEv(1L, 10L * m, 100L, true))
     val stream = MemoryStream[EventsStream.TypedEv]
-    val q = EventsStream.runToMemory(
+    val q = toMemory(
       EventsStream.cappedIntervalJoin(stream.toDS(), cap = 2,
         winUs = 24L * 3600L * 1000000L).toDF(), "cap_small",
       OutputMode.Append())
@@ -279,7 +242,7 @@ class EventsStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val m = 60L * 1000000L
     val stream = MemoryStream[EventsStream.TypedEv]
-    val q = EventsStream.runToMemory(
+    val q = toMemory(
       EventsStream.cappedIntervalJoin(stream.toDS(), cap = 10,
         winUs = 24L * 3600L * 1000000L).toDF(), "cap_multi",
       OutputMode.Append())
@@ -301,7 +264,7 @@ class EventsStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val m = 60L * 1000000L
     val stream = MemoryStream[EventsStream.TypedEv]
-    val q = EventsStream.runToMemory(
+    val q = toMemory(
       EventsStream.cappedIntervalJoin(stream.toDS(), cap = 10,
         winUs = 24L * 3600L * 1000000L).toDF(), "cap_ooo",
       OutputMode.Append())
