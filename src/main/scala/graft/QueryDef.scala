@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One named engine query: a DataFrame builder over a test-data scale
-  * directory, plus (when SQL-expressible) the equivalent DuckDB oracle SQL
-  * the driver hash-compares against (Verify.scala / CORRECTNESS_r{N}.json).
+  * directory, plus the equivalent DuckDB oracle SQL its output is
+  * hash-compared against (Verify.scala, tools/check.py).
   *
   * Oracle-parity rules used throughout (see SURVEY.md §7 "hard parts"):
   *  - money/metric sums run in DECIMAL (exact, order-independent), then
@@ -16,11 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class QueryDef(
     build: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QueryDef {
   def apply(oracleSql: String)(build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(build, Some(oracleSql))
+    QueryDef(build, oracleSql)
 }
 
 /** Thrown by a query whose OUTPUT (not its plan) is provably beyond a

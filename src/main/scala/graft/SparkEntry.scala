@@ -64,7 +64,6 @@ object SparkEntry {
     builds ++ rest
   }
 
-  /** DuckDB-equivalent SQL for each oracle-checkable query. */
-  def oracleSql: Map[String, String] =
-    defs.collect { case (k, QueryDef(_, Some(sql))) => k -> sql }
+  /** DuckDB-equivalent SQL for each query. */
+  def oracleSql: Map[String, String] = defs.map { case (k, q) => k -> q.oracle }
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.{Hashing, QueryDef}
+import graft.{Hashing, Limits, QueryDef}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -132,13 +132,6 @@ object Splits {
       .groupBy("user_id", "domain")
       .agg(collect_set(col("item_id")).as("pos"))
 
-  /** Catalog size above which the executor-broadcast formulation is
-    * refused: past ~2×10⁷ items the collected array risks driver OOM and
-    * the broadcast stops paying for itself — the scalable sampler
-    * switches to the distributed join formulation ([[distributedNegatives]]).
-    */
-  val CATALOG_BROADCAST_MAX: Long = 20000000L
-
   /** Hash-indexed draws per (user, domain) in the scalable sampler: the
     * first [[NUM_NEG]] draws that are neither a repeat nor a positive are
     * kept, so a user ends with fewer only when more than DRAWS − NUM_NEG
@@ -174,13 +167,13 @@ object Splits {
     * (measured 21× bench growth for 10× data). A broadcast variable is
     * materialized once per executor: catalogs are ~10⁶ items even at web
     * scale (megabytes), far under broadcast limits. Guarded: a catalog
-    * past [[CATALOG_BROADCAST_MAX]] fails fast with a pointer to the
-    * scalable sampler instead of OOMing the driver mid-collect.
+    * past [[graft.Limits.catalogBroadcast]] fails fast with a pointer to
+    * the scalable sampler instead of OOMing the driver mid-collect.
     */
   private def itemCatalog(inter: DataFrame): Map[String, Array[Long]] =
-    collectCatalogCapped(distinctItems(inter), CATALOG_BROADCAST_MAX).getOrElse {
+    collectCatalogCapped(distinctItems(inter), Limits.catalogBroadcast).getOrElse {
       throw new IllegalStateException(
-        s"item catalog exceeds the $CATALOG_BROADCAST_MAX-item broadcast " +
+        s"item catalog exceeds the ${Limits.catalogBroadcast}-item broadcast " +
           "ceiling; use negativeSampleScalable, which switches to the " +
           "distributed join formulation past the threshold")
     }
@@ -293,14 +286,13 @@ object Splits {
     * `userFilter` restricts the SAMPLED users only — the item catalog and
     * positives stay global, so each user's draws are identical whether or
     * not other users are sampled (what lets callers slice users without
-    * changing per-user results). Catalogs past `maxBroadcastItems` switch
-    * to the all-join distributed formulation ([[distributedNegatives]]) —
-    * identical results (SplitsSpec proves row equality), unbounded
-    * catalog axis.
+    * changing per-user results). Catalogs past
+    * [[graft.Limits.catalogBroadcast]] switch to the all-join distributed
+    * formulation ([[distributedNegatives]]) — identical results
+    * (SplitsSpec proves row equality), unbounded catalog axis.
     */
-  def negativeSampleScalable(inter: DataFrame, userFilter: Column = lit(true),
-      maxBroadcastItems: Long = CATALOG_BROADCAST_MAX): DataFrame =
-    collectCatalogCapped(distinctItems(inter), maxBroadcastItems) match {
+  def negativeSampleScalable(inter: DataFrame, userFilter: Column = lit(true)): DataFrame =
+    collectCatalogCapped(distinctItems(inter), Limits.catalogBroadcast) match {
       case None =>
         // the distributed long form already shuffles on (user, domain)
         // for its row_number window, so the pack agg reuses that

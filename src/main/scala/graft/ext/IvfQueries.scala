@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Hashing, QueryDef, Tables}
+import graft.{Hashing, Limits, QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -893,7 +893,7 @@ object IvfQueries {
     * acceptance bar.
     */
   def pairUseProduct(n: Long): Boolean =
-    n > VectorOps.CORPUS_BROADCAST_MAX
+    n > Limits.corpusBroadcast
 
   /** Per-half codebook size for the product regime: smallest power of
     * two K with K² product cells holding ≤ [[PAIR_TARGET_OCC]] vectors
@@ -1064,7 +1064,7 @@ object IvfQueries {
     }.toDF("query_id", "cell")
     // same broadcast-vs-salted join shape as probePairCandidates
     val joined =
-      if (n <= VectorOps.CORPUS_BROADCAST_MAX)
+      if (n <= Limits.corpusBroadcast)
         probes.join(broadcast(home), "cell")
       else {
         val s = spark.sparkContext.defaultParallelism
@@ -1093,13 +1093,12 @@ object IvfQueries {
     * `embDf` holds `n` vectors: the corpus, or the representative
     * factoring's one-row-per-distinct-vector slice (r12, VERDICT r11
     * #1a). The cell dial follows `n` while the codebooks train on the
-    * full corpus (cached per (dir, K)). `forceProduct` reaches the
-    * product-quantizer branch at fixture size (ExtSpec).
+    * full corpus (cached per (dir, K)).
     */
   private[ext] def probePairCandidates(
       spark: org.apache.spark.sql.SparkSession, d: String,
-      embDf: org.apache.spark.sql.DataFrame, n: Long,
-      forceProduct: Boolean = false): org.apache.spark.sql.DataFrame = {
+      embDf: org.apache.spark.sql.DataFrame, n: Long)
+      : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val vecs = embDf
       .filter(size(col("embedding")) > 0)
@@ -1108,9 +1107,8 @@ object IvfQueries {
         .as("e"))
       .repartition(spark.sparkContext.defaultParallelism)
       .as[(Long, Array[Long])]
-    val product = forceProduct || pairUseProduct(n)
     val (home, probes) =
-      if (product) {
+      if (pairUseProduct(n)) {
         val nprobe = PAIR_NPROBE_PRODUCT
         val kHalf = pairHalfKFor(n)
         val (cb1, cb2) = graft.StageTiming.timed("embed/ivf-train") {
@@ -1163,7 +1161,7 @@ object IvfQueries {
     //    side (home×S replicas, probes salted by hash(p_id)) so a
     //    hot cell spreads over S tasks — same rows either way.
     val joined =
-      if (n <= VectorOps.CORPUS_BROADCAST_MAX)
+      if (n <= Limits.corpusBroadcast)
         probes.join(broadcast(home), "cell")
       else {
         val s = probes.sparkSession.sparkContext.defaultParallelism

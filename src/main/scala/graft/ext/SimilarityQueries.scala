@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Hashing, QueryDef, Tables}
+import graft.{Hashing, Limits, QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -147,19 +147,19 @@ object SimilarityQueries {
       Hashing.h60Jvm(md, s"$j:${i0 + 1}:plane") % 2001 - 1000)
   }
 
-  /** Brute-force top-k, corpus-size aware: under `maxBroadcast` vectors
-    * the corpus is a broadcast matrix scanned with a bounded top-k buffer
-    * per query (the fast path — the pair-join formulation materialized
-    * |Q|·|C|·d rows, measured 80× bench growth for 10× data); beyond it,
+  /** Brute-force top-k, corpus-size aware: under
+    * [[Limits.corpusBroadcast]] vectors the corpus is a broadcast matrix
+    * scanned with a bounded top-k buffer per query (the fast path — the
+    * pair-join formulation materialized |Q|·|C|·d rows, measured 80×
+    * bench growth for 10× data); beyond it,
     * the distributed [[VectorOps.cosine]] join + window top-k keeps the
     * operator CORRECT with no driver collect (slow by nature — at that
     * corpus scale q_sim_lsh / q_sim_ivf are the real answers).
     */
-  def bruteForceTopK(spark: org.apache.spark.sql.SparkSession, d: String,
-      maxBroadcast: Long = VectorOps.CORPUS_BROADCAST_MAX)
+  def bruteForceTopK(spark: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    if (VectorOps.corpusSize(spark, d) > maxBroadcast) {
+    if (VectorOps.corpusSize(spark, d) > Limits.corpusBroadcast) {
       val ids = Tables.embeddings(spark, d).select("vec_id")
       val pairs = ids.filter(expr(querySlice)).select(col("vec_id").as("query_id"))
         .crossJoin(ids)
@@ -209,11 +209,10 @@ object SimilarityQueries {
     * element-join formulation beyond the ceiling (row-identical —
     * ExtSpec).
     */
-  def quantTopK(spark: org.apache.spark.sql.SparkSession, d: String,
-      maxBroadcast: Long = VectorOps.CORPUS_BROADCAST_MAX)
+  def quantTopK(spark: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    if (VectorOps.corpusSize(spark, d) > maxBroadcast)
+    if (VectorOps.corpusSize(spark, d) > Limits.corpusBroadcast)
       return quantTopKJoin(spark, d)
     val bc = VectorOps.broadcastQuantCorpus(spark, d)
     val ord = Ordering.by((t: (Double, Long)) => (-t._1, t._2))
@@ -295,7 +294,7 @@ object SimilarityQueries {
     *
     * Scale shape: the EVAL side is collected and broadcast — count-gated
     * (the q_decontaminate ADVICE lesson: broadcast only when the eval
-    * slice is genuinely small). Past `maxBroadcast` (r9): train×eval
+    * slice is genuinely small). Past [[Limits.corpusBroadcast]] (r9): train×eval
     * candidates from [[bandedCandidates]] + exact verify + window argmax
     * (the r8 fallback crossJoined train×eval — O(|train|·|eval|) rows).
     * Recall: a contaminated train vector sits at cos ≥ [[DECON_COS]] to
@@ -304,12 +303,11 @@ object SimilarityQueries {
     * with certainty. The 100 TB train side never shuffles on the
     * broadcast path: one narrow scan, per-vector loop over the eval set.
     */
-  def semanticDecontam(spark: org.apache.spark.sql.SparkSession, d: String,
-      maxBroadcast: Long = VectorOps.CORPUS_BROADCAST_MAX)
+  def semanticDecontam(spark: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val embs = Tables.embeddings(spark, d)
-    if (embs.filter(expr(evalSlice)).count() > maxBroadcast) {
+    if (embs.filter(expr(evalSlice)).count() > Limits.corpusBroadcast) {
       val pairs = bandedCandidates(embs, VectorOps.corpusSize(spark, d),
         not(expr(evalSlice)), expr(evalSlice), lowerTriangle = false)
       return VectorOps.cosine(embs, pairs)
@@ -365,25 +363,6 @@ object SimilarityQueries {
       .orderBy("vec_id")
   }
 
-  /** Vector-count ceiling for EXACT all-pairs near-dup inside
-    * [[embedNearDupAuto]]: the O(n²d) pair scan is the r7-documented
-    * exactness anchor, but past ~10⁵ vectors the quadratic is the whole
-    * runtime (333s of q_dedup_embed_cluster's 100× probe), so the
-    * cluster assembly switches to LSH-banded candidates + exact verify —
-    * the same count-driven dial rule as q_sim_lsh/q_sim_ivf (the exact
-    * form stays the oracle-gated anchor at sf0.01-0.1).
-    */
-  val EMBED_PAIR_EXACT_MAX: Long = 100000L
-
-  /** Near-dup pairs with the candidate strategy chosen by corpus count:
-    * exact all-pairs under [[EMBED_PAIR_EXACT_MAX]] (bit-identical to
-    * the oracle), LSH-banded candidates + exact cosine verify above it.
-    * The LSH branch misses a pair only when the two vectors disagree in
-    * BOTH bands (hyperplane sign flips — unlikely at the ≥ 0.4-cosine
-    * threshold and impossible for the identical-vector duplicates that
-    * dominate real corpora); every RETURNED pair carries an exact
-    * verified cosine either way.
-    */
   /** Bands for [[bandedCandidates]]. Recall for a pair at angle θ with
     * per-plane agreement p = 1 − θ/π is 1 − (1 − p^bits)^bands — more
     * bands buy recall LINEARLY in candidate volume (Σ bucket² per band).
@@ -595,7 +574,7 @@ object SimilarityQueries {
         // re-ran the whole mine per consumer)
         val repPairs = graft.StageTiming.timed("embed/rep-mine") {
           val rp =
-            (if (nRep <= EMBED_PAIR_EXACT_MAX) embedNearDupFrom(spark, repEmb)
+            (if (nRep <= Limits.embedPairExact) embedNearDupFrom(spark, repEmb)
              else verifiedNearDup(spark, d,
                nearDupCandidates(spark, d, repEmb, nRep)))
             .select(col("vec_a").as("ra"), col("vec_b").as("rb"), col("cos"))
@@ -662,59 +641,47 @@ object SimilarityQueries {
     * duplicated fixture.
     */
   private[graft] def nearDupClusterEdges(
-      spark: org.apache.spark.sql.SparkSession, d: String,
-      maxExact: Long = EMBED_PAIR_EXACT_MAX)
+      spark: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    val pairs = embedNearDupAuto(spark, d, maxExact)
+    val pairs = embedNearDupAuto(spark, d)
     val n = VectorOps.corpusSize(spark, d)
     val src =
-      if (n <= maxExact) pairs
+      if (n <= Limits.embedPairExact) pairs
       else graft.Memo.peek(spark, d, "sim.nearDupEdges").getOrElse(pairs)
     src.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
   }
 
-  /** Near-dup pairs with the exact-vs-scale switch. `maxExact` gates
-    * only the CORPUS-level branch (tests pass 0 to force the scale
-    * path); the past-ceiling build keeps its own fixed
-    * [[EMBED_PAIR_EXACT_MAX]] rep ceiling — the memo entry is keyed per
-    * (session, dir), so parameterizing the rep gate would fork the
-    * cache per caller.
+  /** Near-dup pairs with the candidate strategy chosen by corpus count:
+    * exact all-pairs ([[embedNearDup]]) under [[Limits.embedPairExact]]
+    * (bit-identical to the oracle), the memoized union-generator + exact
+    * verify relation ([[nearDupPairsPastCeiling]]) above it. Every
+    * RETURNED pair carries an exact verified cosine either way; the
+    * past-ceiling recall contract is on q_dedup_embed.
     */
-  def embedNearDupAuto(spark: org.apache.spark.sql.SparkSession, d: String,
-      maxExact: Long = EMBED_PAIR_EXACT_MAX)
+  def embedNearDupAuto(spark: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     val n = VectorOps.corpusSize(spark, d)
-    if (n <= maxExact) return embedNearDup(spark, d)
+    if (n <= Limits.embedPairExact) return embedNearDup(spark, d)
     nearDupPairsPastCeiling(spark, d)
   }
 
-  /** Embedding near-dup pairs, corpus-size aware like [[bruteForceTopK]]:
-    * EXACT broadcast-matrix partition loop under the ceiling; past it,
-    * [[bandedCandidates]] + exact cosine verify (r9 — the r8 fallback
-    * was an all-pairs relational cosine, O(n²) rows at 100 TB; banding
-    * bounds pair volume at Σ bucket² with the near-dup recall contract
-    * documented on the generator, and the broadcast path below the
-    * ceiling stays the bit-exact oracle anchor).
+  /** Embedding near-dup pairs by the EXACT broadcast-matrix partition
+    * loop over the whole corpus, sorted — the bit-exact oracle anchor.
+    * Its one shipped caller, [[embedNearDupAuto]], reaches it only under
+    * [[Limits.embedPairExact]] vectors, far inside the corpus broadcast
+    * ceiling.
     */
-  def embedNearDup(spark: org.apache.spark.sql.SparkSession, d: String,
-      maxBroadcast: Long = VectorOps.CORPUS_BROADCAST_MAX)
-      : org.apache.spark.sql.DataFrame = {
-    if (VectorOps.corpusSize(spark, d) > maxBroadcast) {
-      return verifiedNearDup(spark, d, nearDupCandidates(spark, d,
-          Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d)))
-        .orderBy("vec_a", "vec_b")
-    }
+  def embedNearDup(spark: org.apache.spark.sql.SparkSession, d: String)
+      : org.apache.spark.sql.DataFrame =
     embedNearDupFrom(spark, Tables.embeddings(spark, d))
       .orderBy("vec_a", "vec_b")
-  }
 
   /** The exact broadcast-matrix pair loop over an explicit embeddings
-    * slice — the primitive behind [[embedNearDup]]'s under-ceiling
-    * branch, and what the representative factoring runs over the
-    * distinct-vector slice. The collect is bounded by the caller's gate:
-    * [[embedNearDup]] checks corpus count against its broadcast ceiling,
-    * the factoring checks the EXACT representative count against
-    * [[EMBED_PAIR_EXACT_MAX]] before calling. Output is UNSORTED (r12,
+    * slice — the primitive behind [[embedNearDup]], and what the
+    * representative factoring runs over the distinct-vector slice. The
+    * collect is bounded by the caller's gate: [[embedNearDupAuto]] checks
+    * the corpus count and the factoring the EXACT representative count
+    * against [[Limits.embedPairExact]] before calling. Output is UNSORTED (r12,
     * ADVICE: the factoring feeds it straight into joins — sorted-output
     * callers order at their edge).
     */
@@ -868,12 +835,11 @@ object SimilarityQueries {
     * anyway.
     */
   def hardNegatives(spark: org.apache.spark.sql.SparkSession, d: String,
-      maxBroadcast: Long = VectorOps.CORPUS_BROADCAST_MAX,
       factorOverride: Option[Boolean] = None)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val labels = Tables.embeddings(spark, d).select(col("vec_id"), col("label"))
-    if (VectorOps.corpusSize(spark, d) > maxBroadcast) {
+    if (VectorOps.corpusSize(spark, d) > Limits.corpusBroadcast) {
       // REPRESENTATIVE factoring, hard-negative edition (r12, VERDICT
       // r11 #6): two vectors with an identical quantized embedding AND
       // identical label receive the identical negative list — the
@@ -946,13 +912,6 @@ object SimilarityQueries {
               .join(labels, "vec_id")
               .filter(col("label") =!= col("qlab"))
               .select("query_id", "vec_id")
-            // cosineAuto (r14): in production this branch only runs past
-            // the corpus-broadcast ceiling, where auto resolves to the
-            // distributed join — but a forced run (maxBroadcast = 0 on a
-            // small dir, as the specs do) scores pairs against the
-            // broadcast matrix instead of spilling a pairs×embeddings
-            // join to disk (the |Q|·n/16-row shuffle at the 100× dial
-            // exceeded the measurement host's disk)
             VectorOps.cosineAuto(spark, d, repPairs)
               .withColumn("rk", rank().over(Window.partitionBy("query_id")
                 .orderBy(col("cos").desc)))
@@ -980,8 +939,6 @@ object SimilarityQueries {
         .join(labels, "vec_id")
         .filter(col("label") =!= col("qlab"))
         .select("query_id", "vec_id")
-      // cosineAuto: same production plan (join form past the ceiling),
-      // broadcast scoring on forced runs — see the factored branch
       return VectorOps.cosineAuto(spark, d, pairs)
         .withColumn("rn", row_number().over(Window.partitionBy("query_id")
           .orderBy(col("cos").desc, col("vec_id"))))
@@ -1302,7 +1259,7 @@ object SimilarityQueries {
          |WHERE round(cos, 6) >= $NEAR_DUP_COS
          |ORDER BY vec_a, vec_b""".stripMargin) { (spark, d) =>
       // Pair-ceiling dial (r11): the exact broadcast loop is the oracle
-      // anchor UNDER EMBED_PAIR_EXACT_MAX (covers every driver scale —
+      // anchor UNDER Limits.embedPairExact (covers every test-data scale —
       // sf0.01 has 200 vectors, sf0.1 has 2000); past it the O(n²d)
       // loop is the suite's worst asymptotic (565s at the 200k-vector
       // 100× probe, hours at 1M), so the query routes through the same

@@ -95,7 +95,7 @@ object TextQueries {
 
   /** Eval-shingle count above which q_decontaminate refuses the
     * broadcast and shuffle-joins instead (~8 B/key × 2×10⁷ ≈ 160 MB —
-    * the same ceiling class as Splits.CATALOG_BROADCAST_MAX; a real
+    * the same ceiling class as Limits.CATALOG_BROADCAST_MAX; a real
     * benchmark suite is far below it, the demo's 10%-of-corpus predicate
     * is not guaranteed to be).
     */

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.Tables
+import graft.{Limits, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -63,11 +63,14 @@ object VectorOps {
     * formulations are row-identical (ExtSpec fallback-equality). With a
     * vec_id-bucketed `embs`, the element/norm sides of every join read
     * pre-partitioned buckets — only the (small) pair side shuffles.
+    * One row per DISTINCT pair: a repeated pair row would repeat its
+    * element rows and multiply the summed dot (the IVF arms emit a pair
+    * once per shared probed cell).
     */
   def cosine(embs: DataFrame, pairs: DataFrame): DataFrame = {
     val el = elems(embs)
     val nr = norms(embs).filter(col("nrm") > 0)
-    pairs
+    pairs.distinct()
       .join(el.select(col("vec_id").as("query_id"), col("i"), col("e").as("qe")), "query_id")
       .join(el.select(col("vec_id"), col("i"), col("e").as("ce")), Seq("vec_id", "i"))
       .groupBy("query_id", "vec_id")
@@ -77,13 +80,6 @@ object VectorOps {
       .select(col("query_id"), col("vec_id"),
         (col("dot").cast("double") / (col("qn") * col("nrm"))).as("cos"))
   }
-
-  /** Vector count above which the collected corpus (~(d+1)·8 bytes per
-    * vector — ~5 GB at 10⁷ × 64 dims) is refused as an executor
-    * broadcast and pair-cosine callers switch to the distributed
-    * [[cosine]] join formulation automatically.
-    */
-  val CORPUS_BROADCAST_MAX: Long = 10000000L
 
   /** Corpus row count, memoized in [[graft.Memo]] — four similarity
     * queries would otherwise each launch an identical count job per build
@@ -173,12 +169,13 @@ object VectorOps {
   }
 
   /** Pair cosines, choosing the formulation by corpus size: broadcast
-    * fast path under [[CORPUS_BROADCAST_MAX]] vectors, distributed join
-    * beyond it. Both produce identical rows.
+    * fast path under [[graft.Limits.corpusBroadcast]] vectors,
+    * distributed join beyond it. Both produce identical rows for
+    * distinct pairs; the join form collapses repeated ones.
     */
-  def cosineAuto(spark: SparkSession, sfDir: String, pairs: DataFrame,
-      maxBroadcast: Long = CORPUS_BROADCAST_MAX): DataFrame =
-    if (corpusSize(spark, sfDir) > maxBroadcast)
+  def cosineAuto(spark: SparkSession, sfDir: String,
+      pairs: DataFrame): DataFrame =
+    if (corpusSize(spark, sfDir) > Limits.corpusBroadcast)
       cosine(Tables.embeddings(spark, sfDir), pairs)
     else cosineByBroadcast(pairs, broadcastCorpus(spark, sfDir))
 

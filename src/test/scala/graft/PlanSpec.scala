@@ -348,18 +348,24 @@ class PlanSpec extends SparkSpec {
     // banded equi-join (hash join on band block), with no cartesian /
     // nested-loop node anywhere in the plan
     spark.catalog.clearCache()
-    val fallbacks = Seq(
-      "embedNearDup" -> ext.SimilarityQueries
-        .embedNearDup(spark, sf(), maxBroadcast = 0),
-      "hardNegatives" -> ext.SimilarityQueries
-        .hardNegatives(spark, sf(), maxBroadcast = 0),
-      "semanticDecontam" -> ext.SimilarityQueries
-        .semanticDecontam(spark, sf(), maxBroadcast = 0),
-      "embedNearDupAuto" -> ext.SimilarityQueries
-        .embedNearDupAuto(spark, sf(), maxExact = 0))
-    fallbacks.foreach { case (name, df) =>
-      val p = df.queryExecution
-        .explainString(ExplainMode.fromString("formatted"))
+    val corpusPast = Limits.Ceilings(corpusBroadcast = 0)
+    val fallbacks = Seq[(String, Limits.Ceilings, () => DataFrame)](
+      ("embedNearDupAuto past both vector ceilings",
+        Limits.Ceilings(corpusBroadcast = 0, embedPairExact = 0),
+        () => ext.SimilarityQueries.embedNearDupAuto(spark, sf())),
+      ("hardNegatives", corpusPast,
+        () => ext.SimilarityQueries.hardNegatives(spark, sf())),
+      ("semanticDecontam", corpusPast,
+        () => ext.SimilarityQueries.semanticDecontam(spark, sf())),
+      ("embedNearDupAuto", Limits.Ceilings(embedPairExact = 0),
+        () => ext.SimilarityQueries.embedNearDupAuto(spark, sf())))
+    fallbacks.foreach { case (name, c, build) =>
+      // the near-dup pair relation is a Memo entry: release it so the
+      // next case (and later specs) never read one built under other
+      // ceilings
+      val p = try Limits.forcing(c)(build().queryExecution
+        .explainString(ExplainMode.fromString("formatted")))
+      finally Memo.release(spark, sf())
       assert(!p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin"),
         s"$name past-ceiling plan is all-pairs:\n$p")

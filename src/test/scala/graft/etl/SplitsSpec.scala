@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.SparkSpec
+import graft.{Limits, SparkSpec}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -24,13 +24,14 @@ class SplitsSpec extends SparkSpec {
       .toDF("user_id", "item_id", "domain")
   }
 
-  /** The scalable sampler's long form; `maxBroadcastItems = 0` forces
-    * the distributed join formulation.
-    */
+  /** A catalog ceiling of 0 forces the distributed join formulation. */
+  private val catalogPast = Limits.Ceilings(catalogBroadcast = 0)
+
+  /** The scalable sampler's long form under ceilings `c`. */
   private def scalable(userFilter: Column = lit(true),
-      maxBroadcastItems: Long = Splits.CATALOG_BROADCAST_MAX): DataFrame =
-    Splits.explodeNegatives(
-      Splits.negativeSampleScalable(fixture, userFilter, maxBroadcastItems))
+      c: Limits.Ceilings = Limits.Ceilings()): DataFrame =
+    Limits.forcing(c)(Splits.explodeNegatives(
+      Splits.negativeSampleScalable(fixture, userFilter)))
 
   test("leave-two-out: degree-1 user gets vali == test") {
     val s = Splits.leaveTwoOut(Splits.ranked(fixture)).collect()
@@ -105,8 +106,8 @@ class SplitsSpec extends SparkSpec {
       Splits.negativeSampleScalable(fixture)))
     assert(viaPackedB.nonEmpty && viaPackedB.sameElements(long))
     // distributed pack (the past-broadcast-ceiling write shape)
-    val viaPackedJ = rows(Splits.explodeNegatives(
-      Splits.negativeSampleScalable(fixture, maxBroadcastItems = 0)))
+    val viaPackedJ = rows(Splits.explodeNegatives(Limits.forcing(catalogPast)(
+      Splits.negativeSampleScalable(fixture))))
     assert(viaPackedJ.sameElements(long))
   }
 
@@ -123,14 +124,13 @@ class SplitsSpec extends SparkSpec {
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getInt(3))).sorted
     val viaBroadcast = rows(scalable())
-    // maxBroadcastItems = 0 forces the distributed join formulation
-    val viaJoin = rows(scalable(maxBroadcastItems = 0))
+    val viaJoin = rows(scalable(c = catalogPast))
     assert(viaJoin.nonEmpty)
     assert(viaJoin.sameElements(viaBroadcast))
     // user slicing must not change any sampled user's rows on either path
     val f = col("user_id") === 1L
     val slicedB = rows(scalable(f))
-    val slicedJ = rows(scalable(f, maxBroadcastItems = 0))
+    val slicedJ = rows(scalable(f, catalogPast))
     assert(slicedB.nonEmpty) // else the equalities below pass vacuously
     assert(slicedB.sameElements(viaBroadcast.filter(_._1 == 1L)))
     assert(slicedJ.sameElements(slicedB))

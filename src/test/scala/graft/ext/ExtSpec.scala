@@ -1,12 +1,23 @@
 package graft.ext
 
-import graft.SparkSpec
+import graft.{Limits, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Invariants for the dedup/similarity/text/multimodal extensions at
   * sf0.001 (500 docs / 500 vectors).
   */
 class ExtSpec extends SparkSpec {
+
+  /** Past the corpus-broadcast ceiling: what a corpus above 10⁷ vectors
+    * runs for top-k, decontamination, hard negatives and the IVF arms.
+    */
+  private val corpusPast = Limits.Ceilings(corpusBroadcast = 0)
+
+  /** Whether a plan carries the salted join key of the past-ceiling
+    * IVF joins (home side replicated per salt, probes salted by id).
+    */
+  private def salted(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.optimizedPlan.toString.contains("salt#")
 
   test("minhash LSH finds exactly the high-jaccard pairs (vs brute force)") {
     val sh = TextOps.wordShingles(spark, sf(), 5)
@@ -63,9 +74,11 @@ class ExtSpec extends SparkSpec {
   }
 
   test("representative factoring over duplicated vectors is bit-exact") {
-    // three copies of every vector under shifted ids → duplication
-    // ratio 3 ≥ 2 with representatives under the pair-exact ceiling, so
-    // nearDupPairsPastCeiling takes the FACTORED branch (exact loop
+    // three copies of every vector under shifted ids, with the pair-exact
+    // ceiling forced to the base count (the base holds every distinct
+    // vector once): the corpus is past it, the representatives are not.
+    // Duplication ratio 3 ≥ 2, so nearDupPairsPastCeiling takes the
+    // FACTORED branch (exact loop
     // over one representative per distinct quantized vector + the
     // output-sized within/cross expansion) — which must equal the plain
     // exact loop over the whole duplicated corpus, pair for pair,
@@ -79,9 +92,10 @@ class ExtSpec extends SparkSpec {
     def rel(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"),
         r.getAs[Double]("cos"))).sorted
+    val repsExact = Limits.Ceilings(embedPairExact = base.count())
     val exact = rel(SimilarityQueries.embedNearDup(spark, tmp))
-    val factored = rel(
-      SimilarityQueries.embedNearDupAuto(spark, tmp, maxExact = 0L))
+    val factored = rel(Limits.forcing(repsExact)(
+      SimilarityQueries.embedNearDupAuto(spark, tmp)))
     // the duplicated fixture must actually exercise both pair kinds:
     // within-group (cos 1.0 synthesized) and cross-group (inherited)
     assert(factored.exists(_._3 == 1.0) && factored.exists(_._3 < 1.0))
@@ -96,9 +110,10 @@ class ExtSpec extends SparkSpec {
     val viaPairs = labels(
       SimilarityQueries.embedNearDup(spark, tmp)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-    val viaReduced = labels(
-      SimilarityQueries.nearDupClusterEdges(spark, tmp, maxExact = 0L))
+    val viaReduced = Limits.forcing(repsExact)(labels(
+      SimilarityQueries.nearDupClusterEdges(spark, tmp)))
     assert(viaReduced.nonEmpty && viaReduced.sameElements(viaPairs))
+    graft.Memo.release(spark, tmp)
   }
 
   test("hard-negative representative factoring matches the unfactored banded path row-for-row") {
@@ -119,14 +134,14 @@ class ExtSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
         java.lang.Double.doubleToLongBits(r.getAs[Double]("cos")),
         r.getAs[Int]("rn"))).sorted
-    val un = rows(SimilarityQueries.hardNegatives(spark, tmp,
-      maxBroadcast = 0, factorOverride = Some(false)))
-    val fa = rows(SimilarityQueries.hardNegatives(spark, tmp,
-      maxBroadcast = 0, factorOverride = Some(true)))
+    val (un, fa) = Limits.forcing(corpusPast)((
+      rows(SimilarityQueries.hardNegatives(spark, tmp, Some(false))),
+      rows(SimilarityQueries.hardNegatives(spark, tmp, Some(true)))))
     assert(un.nonEmpty)
     assert(fa.sameElements(un),
       s"factored ${fa.length} rows != unfactored ${un.length}; " +
         s"first diff: ${fa.zip(un).find { case (a, b) => a != b }}")
+    graft.Memo.release(spark, tmp)
   }
 
   test("pair codebooks register as Memo object entries and release drops them") {
@@ -145,9 +160,8 @@ class ExtSpec extends SparkSpec {
     def nearDupCandidates() = SimilarityQueries.nearDupCandidates(spark, sf(),
       graft.Tables.embeddings(spark, sf()), VectorOps.corpusSize(spark, sf()))
     nearDupCandidates()
-    IvfQueries.probePairCandidates(spark, sf(),
-      graft.Tables.embeddings(spark, sf()), VectorOps.corpusSize(spark, sf()),
-      forceProduct = true)
+    Limits.forcing(corpusPast)(IvfQueries.probePairCandidates(spark, sf(),
+      graft.Tables.embeddings(spark, sf()), VectorOps.corpusSize(spark, sf())))
     val after = objEntries
     assert(after.exists(_.contains("sim.pairFlatCents.k")), s"entries: $after")
     assert(after.exists(_.contains("sim.pairCodebooks.k")), s"entries: $after")
@@ -167,7 +181,7 @@ class ExtSpec extends SparkSpec {
   }
 
   test("LSH near-dup branch returns only exact-verified pairs with full identical-pair recall") {
-    // force the scale branch (maxExact=0) at fixture size and compare
+    // force the scale branch (embedPairExact = 0) at fixture size and compare
     // against the exact generator: every LSH pair must appear in the
     // exact set with the same cosine (candidates are exactly verified),
     // and every cos=1.0 pair (identical vectors — the duplicates that
@@ -176,21 +190,25 @@ class ExtSpec extends SparkSpec {
     val exact = SimilarityQueries.embedNearDup(spark, sf()).collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")) ->
         r.getAs[Double]("cos")).toMap
-    val lsh = SimilarityQueries.embedNearDupAuto(spark, sf(), maxExact = 0L)
-      .collect()
+    val pairPast = Limits.Ceilings(embedPairExact = 0)
+    val lsh = Limits.forcing(pairPast)(
+      SimilarityQueries.embedNearDupAuto(spark, sf()).collect())
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")) ->
         r.getAs[Double]("cos")).toMap
     assert(lsh.nonEmpty)
     lsh.foreach { case (k, c) =>
       assert(exact.get(k).contains(c), s"LSH pair $k not exact-verified") }
-    // the product-quantizer IVF arm, forced at fixture size and run
-    // through the same exact verify: precision 1 against the exact set
-    def productArm(d: String) = SimilarityQueries.verifiedNearDup(spark, d,
-      IvfQueries.probePairCandidates(spark, d,
-        graft.Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d),
-        forceProduct = true)).collect()
-      .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")) ->
-        r.getAs[Double]("cos")).toMap
+    // the product-quantizer IVF arm, forced past the corpus ceiling at
+    // fixture size (so its probes ⋈ home runs as the SALTED join) and
+    // run through the same exact verify: precision 1 against the exact set
+    def productArm(d: String) = Limits.forcing(corpusPast) {
+      val cand = IvfQueries.probePairCandidates(spark, d,
+        graft.Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d))
+      assert(salted(cand), "past the ceiling the pair join must be salted")
+      SimilarityQueries.verifiedNearDup(spark, d, cand).collect()
+        .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")) ->
+          r.getAs[Double]("cos")).toMap
+    }
     val product = productArm(sf())
     assert(product.nonEmpty)
     product.foreach { case (k, c) =>
@@ -198,16 +216,23 @@ class ExtSpec extends SparkSpec {
     // identical-vector recall needs identical vectors — the sf0.001
     // fixture has none, so build one: every base vector duplicated
     // under a shifted id. Identical vectors share every band signature,
-    // so each (v, v+OFF) pair MUST surface with cos 1.0
+    // so each (v, v+OFF) pair MUST surface with cos 1.0. Duplication 2
+    // with the pair-exact ceiling at 0 puts the representatives past it
+    // too: the factored build mines them with the union generator
     val OFF = 100000L
     val tmp = java.nio.file.Files.createTempDirectory("lsh_dup").toString
     val base = spark.read.parquet(sf() + "/embeddings.parquet")
     base.unionByName(base.withColumn("vec_id", col("vec_id") + OFF))
       .write.mode("overwrite").parquet(tmp + "/embeddings.parquet")
-    val dup = SimilarityQueries.embedNearDupAuto(spark, tmp, maxExact = 0L)
-      .collect()
+    val dup = Limits.forcing(pairPast)(
+      SimilarityQueries.embedNearDupAuto(spark, tmp).collect())
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")) ->
         r.getAs[Double]("cos")).toMap
+    val dupExact = SimilarityQueries.embedNearDup(spark, tmp).collect()
+      .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")) ->
+        r.getAs[Double]("cos")).toMap
+    dup.foreach { case (k, c) =>
+      assert(dupExact.get(k).contains(c), s"rep-union pair $k not exact-verified") }
     val nonZero = base.collect().filter { r =>
       r.getAs[scala.collection.Seq[Float]]("embedding")
         .exists(v => math.round(v.toDouble * 1e7) != 0L) }
@@ -222,6 +247,7 @@ class ExtSpec extends SparkSpec {
       assert(dupProduct.get((id, id + OFF)).contains(1.0),
         s"identical pair ($id, ${id + OFF}) missed by the product-IVF arm") }
     graft.Memo.release(spark, tmp)
+    graft.Memo.release(spark, sf())
   }
 
   test("LSH ANN results carry exact cosines for EVERY returned pair") {
@@ -248,41 +274,45 @@ class ExtSpec extends SparkSpec {
   }
 
   test("past the broadcast ceiling, distributed formulations honor their contracts") {
-    // maxBroadcast = 0 forces the path large corpora switch to
+    // corpusBroadcast = 0 forces the path large corpora switch to
     // automatically. Contract split (r9): bruteForceTopK/quantTopK stay
     // EXACT distributed joins — row-identical to the broadcast path.
-    // embedNearDup/semanticDecontam/hardNegatives switch to LSH-banded
-    // candidates + exact verify — every returned row must carry the
-    // exact cosine and satisfy the query's predicate, but full recall
-    // parity is no longer the claim (banding may drop pairs whose
-    // vectors disagree in every band).
+    // Near-dup (a corpus past both vector ceilings), semanticDecontam
+    // and hardNegatives switch to generated candidates + exact verify —
+    // every returned row must carry the exact cosine and satisfy the
+    // query's predicate, but full recall parity is no longer the claim
+    // (a generator may drop pairs it never proposes).
     def topk(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
         r.getAs[Double]("cos"), r.getAs[Int]("rn"))).sortBy(t => (t._1, t._4))
     val tB = topk(SimilarityQueries.bruteForceTopK(spark, sf()))
-    val tD = topk(SimilarityQueries.bruteForceTopK(spark, sf(), maxBroadcast = 0))
+    val tD = topk(Limits.forcing(corpusPast)(
+      SimilarityQueries.bruteForceTopK(spark, sf())))
     assert(tB.nonEmpty && tD.sameElements(tB))
     def qtop(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"),
         r.getAs[Double]("qcos"), r.getAs[Int]("rn"))).sortBy(t => (t._1, t._4))
     val qB = qtop(SimilarityQueries.quantTopK(spark, sf()))
-    val qD = qtop(SimilarityQueries.quantTopK(spark, sf(), maxBroadcast = 0))
+    val qD = qtop(Limits.forcing(corpusPast)(
+      SimilarityQueries.quantTopK(spark, sf())))
     assert(qB.nonEmpty && qD.sameElements(qB))
-    // near-dup: banded output is a SUBSET of the exact pair set, cosines
-    // bit-equal (candidates are exactly verified)
+    // near-dup: generated output is a SUBSET of the exact pair set,
+    // cosines bit-equal (candidates are exactly verified)
     def dup(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => ((r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")),
         r.getAs[Double]("cos")))
     val dB = dup(SimilarityQueries.embedNearDup(spark, sf())).toMap
-    val dD = dup(SimilarityQueries.embedNearDup(spark, sf(), maxBroadcast = 0))
+    val dD = dup(Limits.forcing(
+      Limits.Ceilings(corpusBroadcast = 0, embedPairExact = 0))(
+      SimilarityQueries.embedNearDupAuto(spark, sf())))
     assert(dB.nonEmpty && dD.nonEmpty)
     dD.foreach { case (k, c) =>
       assert(dB.get(k).contains(c), s"banded near-dup pair $k not exact-verified") }
     // decontam: each flagged train vector's reported match must be a real
     // ≥-threshold eval pair with the exact cosine (argmax may differ
     // from the exact path's if the true best match was band-missed)
-    val sD = SimilarityQueries.semanticDecontam(spark, sf(), maxBroadcast = 0)
-      .collect()
+    val sD = Limits.forcing(corpusPast)(
+      SimilarityQueries.semanticDecontam(spark, sf())).collect()
     assert(sD.nonEmpty)
     val decPairs = {
       import spark.implicits._
@@ -301,9 +331,13 @@ class ExtSpec extends SparkSpec {
         s"decontam row $key cos $c not exact/threshold")
       assert(key._2 % 10 == 7 && key._1 % 10 != 7, "slice membership")
     }
-    // hard negatives: every mined negative is label-valid with the exact
+    // hard negatives: mined within probed IVF cells through the SALTED
+    // probe join; every mined negative is label-valid with the exact
     // cosine; ranks are dense per query
-    val hD = topk(SimilarityQueries.hardNegatives(spark, sf(), maxBroadcast = 0))
+    val hDf = Limits.forcing(corpusPast)(
+      SimilarityQueries.hardNegatives(spark, sf()))
+    assert(salted(hDf), "past the ceiling the probe join must be salted")
+    val hD = topk(hDf)
     assert(hD.nonEmpty)
     val labels = graft.Tables.embeddings(spark, sf())
       .select("vec_id", "label").collect()
@@ -324,6 +358,7 @@ class ExtSpec extends SparkSpec {
     hD.groupBy(_._1).foreach { case (_, rs) =>
       assert(rs.map(_._4).sorted.sameElements(1 to rs.length))
     }
+    graft.Memo.release(spark, sf())
   }
 
   test("hard negatives never share the query's label") {

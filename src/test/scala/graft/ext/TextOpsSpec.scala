@@ -16,19 +16,8 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("word shingles: short docs produce empty sets, not errors") {
-    import spark.implicits._
     val df = docsDF(Seq((1L, "a b c d e f"), (2L, "a b"), (3L, "solo")))
-    df.createOrReplaceTempView("x")
-    // reuse the builder expression via a local copy of the k=5 transform
-    val sh = df.select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id"), explode(expr(
-        """CASE WHEN size(w) >= 5
-          |THEN transform(sequence(1, size(w) - 4),
-          |  i -> concat_ws(' ', element_at(w, CAST(i AS INT)),
-          |       element_at(w, CAST(i + 1 AS INT)), element_at(w, CAST(i + 2 AS INT)),
-          |       element_at(w, CAST(i + 3 AS INT)), element_at(w, CAST(i + 4 AS INT))))
-          |ELSE array() END""".stripMargin)).as("sh"))
-    val byDoc = sh.collect().groupBy(_.getLong(0))
+    val byDoc = TextOps.wordShingleHashesRel(df, 5).collect().groupBy(_.getLong(0))
     assert(byDoc(1L).length == 2) // 6 words -> 2 shingles
     assert(!byDoc.contains(2L) && !byDoc.contains(3L))
   }
@@ -41,15 +30,14 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("charShingleHashes: guards texts shorter than k") {
-    val df = docsDF(Seq((1L, "abcdefgh"), (2L, "short"), (3L, "abcdefghi")))
-    df.createOrReplaceTempView("documents_tmp")
-    val h = df.select(col("doc_id"), explode(expr(
-      """CASE WHEN length(text) >= 8
-        |THEN sequence(1, length(text) - 7) ELSE array() END""".stripMargin)).as("p"))
-    val counts = h.groupBy("doc_id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(counts.get(1L).contains(1L))
-    assert(!counts.contains(2L))
-    assert(counts.get(3L).contains(2L))
+    // q_text_fingerprint's builder (k = 8, window 4): a text needs
+    // 8 + 3 chars for one window; shorter ones, including those under
+    // k, yield no row and no error
+    val tmp = java.nio.file.Files.createTempDirectory("short_docs").toString
+    docsDF(Seq((1L, "abcdefghijk"), (2L, "short"), (3L, "abcdefgh")))
+      .write.mode("overwrite").parquet(tmp + "/documents.parquet")
+    val rows = graft.SparkEntry.defs("q_text_fingerprint").build(spark, tmp)
+      .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_fp")).toMap
+    assert(rows == Map(1L -> 1L))
   }
 }

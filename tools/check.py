@@ -112,13 +112,13 @@ def main(sf_dir, out_dir):
         else:
             print(f"PASS {name} ({len(exp)} rows)")
             n_pass += 1
-    no_oracle = []
+    # every registered query carries an oracle: a dumped result without
+    # one is a failure, not a rows-only pass
     import os
     for d in sorted(os.listdir(out_dir)):
         if os.path.isdir(os.path.join(out_dir, d)) and d not in oracle:
-            no_oracle.append(d)
-    if no_oracle:
-        print(f"rows-only (no oracle): {no_oracle}")
+            print(f"FAIL {d}: dumped with no oracle SQL")
+            n_fail += 1
     print(f"== {n_pass} pass / {n_fail} fail ==")
     return 1 if n_fail else 0
 
