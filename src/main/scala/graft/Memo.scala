@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
@@ -33,7 +34,8 @@ import scala.collection.mutable
   *    always re-fetch through `cached`, never hold released references.
   *
   * The regime-gate counts (corpus size, eval-set sizes, hot-user share)
-  * live here too, as 8-byte `cachedObj` entries.
+  * live here too, as 8-byte `cachedObj` entries, and so does
+  * q_decontaminate_bloom's broadcast filter.
   *
   * Builds run under the registry lock: delta-based RDD attribution is only
   * sound when builds don't interleave (a concurrent build's persist would
@@ -147,7 +149,8 @@ object Memo {
     * (codebooks: k·dim·8 exactly); it counts toward [[enforceBudget]]'s
     * total and the entry is LRU-evictable like any other — eviction just
     * drops the reference (next consumer rebuilds), and
-    * [[release]]/[[releaseOne]] drop it deterministically.
+    * [[release]]/[[releaseOne]] drop it deterministically. A `Broadcast`
+    * value is destroyed when its entry is released or evicted.
     */
   def cachedObj[T <: AnyRef](spark: SparkSession, sfDir: String,
       name: String, bytes: T => Long)(build: => T): T = synchronized {
@@ -189,7 +192,7 @@ object Memo {
       def mine(k: Key) = k.session == sessionId(spark) &&
         (sfDir == null || k.sfDir == sfDir)
       reg.keys.filter(mine).toList.foreach(releaseEntry(spark, _))
-      objReg.keys.filter(mine).toList.foreach(objReg.remove)
+      objReg.keys.filter(mine).toList.foreach(releaseObj)
     }
 
   /** Drop and unpersist ONE named entry (no-op if absent). */
@@ -197,7 +200,7 @@ object Memo {
     synchronized {
       val key = Key(sessionId(spark), sfDir, name)
       releaseEntry(spark, key)
-      objReg.remove(key)
+      releaseObj(key)
     }
 
   /** Evict least-recently-used entries of this session until cached
@@ -246,7 +249,7 @@ object Memo {
           else None
         if (objLru.exists(o => dfLru.forall(d => o._2.lastUse < d._2.lastUse))) {
           val k = objLru.get._1
-          objReg.remove(k)
+          releaseObj(k)
           evicted += s"${k.sfDir}:${k.name}"
           mineObj = objReg.filter(_._1.session == sessionId(spark))
         } else {
@@ -316,6 +319,12 @@ object Memo {
       // .unpersist can't free them)
       unpersistIds(spark, e.rddIds, blocking)
     }
+
+  // a Broadcast value is destroyed with its entry, not left to reference GC
+  private def releaseObj(key: Key): Unit = objReg.remove(key).map(_.value) match {
+    case Some(bc: Broadcast[_]) => try bc.destroy() catch { case _: Throwable => }
+    case _ =>
+  }
 
   private def unpersistIds(spark: SparkSession, ids: Set[Int],
       blocking: Boolean): Unit = {

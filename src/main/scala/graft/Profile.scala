@@ -12,30 +12,21 @@ object Profile {
     val names = args.drop(1).filterNot(_ == "explain")
     val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
-    // Spark job counter (r15, VERDICT r14 #3): the ~0.4s floor under the
-    // sub-second queries is 1-3 driver job round-trips each — per-query
-    // job counts pick the fuse-the-actions targets. Async listener: the
-    // count can lag a fast query by one event, fine for dev triage.
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobCount.incrementAndGet()
-      })
     def time(name: String, df: => org.apache.spark.sql.DataFrame): Unit = {
       // clock starts BEFORE the builder is forced: eager builders
       // (streaming runBounded, lifecycle collects) do their work inside
-      // build(), exactly like Bench measures them
-      val t0 = System.nanoTime()
-      val j0 = jobCount.get()
-      val d = df
-      val tBuild = (System.nanoTime() - t0) / 1e9
-      if (explain) { println(s"==== $name plan"); d.explain("formatted") }
-      val n = d.count()
-      val el = (System.nanoTime() - t0) / 1e9 // clock stops BEFORE the event-drain sleep
-      Thread.sleep(50) // let trailing job-start events land
-      println(f"==== $name%-28s $el%8.2f s (build $tBuild%.2f)  rows=$n  jobs=${jobCount.get() - j0}")
+      // build(), exactly like Bench measures them; it stops BEFORE the
+      // listener-bus drain that makes the counts exact
+      val ((el, tBuild, n), c) = SparkCounts.measure(spark) {
+        val t0 = System.nanoTime()
+        val d = df
+        val tBuild = (System.nanoTime() - t0) / 1e9
+        if (explain) { println(s"==== $name plan"); d.explain("formatted") }
+        val n = d.count()
+        ((System.nanoTime() - t0) / 1e9, tBuild, n)
+      }
+      println(f"==== $name%-28s $el%8.2f s (build $tBuild%.2f)  rows=$n  " +
+        s"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}")
     }
     val picked =
       if (names.isEmpty) SparkEntry.defs.keys.toSeq.sorted

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.{Hashing, Limits, QueryDef}
+import graft.{Hashing, Limits}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

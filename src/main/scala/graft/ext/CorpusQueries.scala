@@ -1,9 +1,11 @@
 package graft.ext
 
 import graft.{Hashing, QueryDef, Tables}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Corpus-health operators for the training-data pipeline: exact
   * cross-document substring duplication, Bloom-prefiltered
@@ -143,16 +145,14 @@ object CorpusQueries {
           .filter(col("doc_id") % 7 === 0).count())
       }
       val nEvEst = math.max(nEvDocs * 256L, 1L)
-      // native codegen probe over a BROADCAST filter (r10, see
-      // BloomBcProbe's scaladoc for the measured literal-vs-broadcast
-      // story); r11: filter build + broadcast memoized per
-      // (SparkContext, sfDir) — a long-lived session rebuilding this
-      // query otherwise leaks one ~8 MB broadcast (and one full
-      // eval-side scan) per rebuild
-      val probe = graft.functions.BloomBcProbe.cachedColumn(spark,
-        s"decontaminate_bloom:$d", col("sh")) {
-        ev.stat.bloomFilter("sh", nEvEst, BLOOM_FPP)
+      // native codegen probe over a BROADCAST filter (see BloomBcProbe's
+      // scaladoc). A Memo entry: a rebuild reuses the ~8 MB broadcast and
+      // skips the eval-side scan; release or eviction destroys it
+      val bloom = graft.Memo.cachedObj(spark, d, "corpus.evalBloom",
+          (bc: Broadcast[BloomFilter]) => bc.value.bitSize / 8) {
+        spark.sparkContext.broadcast(ev.stat.bloomFilter("sh", nEvEst, BLOOM_FPP))
       }
+      val probe = graft.functions.BloomBcProbe.column(spark, bloom, col("sh"))
       val tr = sh.filter(col("doc_id") % 7 =!= 0)
       val totals = tr.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
       val evSmall = nEvEst <= TextQueries.EVAL_BROADCAST_MAX

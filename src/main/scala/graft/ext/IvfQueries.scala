@@ -507,21 +507,9 @@ object IvfQueries {
       .orderBy("cent_id", "i")
   }
 
-  private def d2(e: Array[Long], c: Array[Long]): Long = {
-    var s = 0L
-    var i = 0
-    while (i < e.length) { val x = e(i) - c(i); s += x * x; i += 1 }
-    s
-  }
-
-  /** cent ids ranked by (distance, cent_id) — first `n`. */
-  private def best(e: Array[Long], cents: Seq[(Int, Array[Long])],
-      n: Int): Seq[Int] =
-    bestC(e, compile(cents), n).toSeq
-
   /** Flattened centroid table for allocation-free distance loops. The
     * Seq[(Int, Array[Long])] form built and SORTED a boxed k-tuple list
-    * per vector inside [[best]] — at 500 k vectors × k ≥ 1024 cells that
+    * per vector — at 500 k vectors × k ≥ 1024 cells that
     * allocation dominated every assignment pass (r12; the distance mults
     * themselves are ~2 s of SIMD-friendly work). Compile once per task
     * (or per driver loop), then [[bestC]] runs a primitive insertion
@@ -549,9 +537,9 @@ object IvfQueries {
     }
   }
 
-  /** Top-`n` centroid ids by (d2, cent_id) — [[best]]'s exact order
-    * (insertion uses strict comparisons and ascending-id iteration, so
-    * equal distances keep the smaller id, as the tuple sort did).
+  /** Top-`n` centroid ids by (squared distance d2, cent_id): insertion
+    * uses strict comparisons and ascending-id iteration, so equal
+    * distances keep the smaller id, as the oracle's window order does.
     */
   private def bestC(e: Array[Long], c: Cents, n: Int): Array[Int] =
     bestWithDist(e, c, n)._1

@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.{Hashing, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared text primitives for the LLM-data-pipeline operators (the

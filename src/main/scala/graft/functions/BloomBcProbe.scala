@@ -26,7 +26,7 @@ import org.apache.spark.util.sketch.BloomFilter
   *
   * Construction: the filter is a RUNTIME object, so the function-registry
   * builder cannot receive it directly; [[BloomBcProbe.column]] parks the
-  * broadcast in a driver-side registry under a fresh id and the builder
+  * broadcast in a driver-side registry under its id and the builder
   * rehydrates it from the id literal at analysis time (analysis runs on
   * the driver; executors only ever see the serialized expression, which
   * carries the broadcast handle itself).
@@ -60,7 +60,6 @@ case class BloomBcMightContain(bcId: Long,
 object BloomBcProbe {
   private val registry =
     new java.util.concurrent.ConcurrentHashMap[Long, Broadcast[BloomFilter]]
-  private val nextId = new java.util.concurrent.atomic.AtomicLong()
 
   val identifier: FunctionIdentifier = FunctionIdentifier("graft_bloom_probe")
   val info: ExpressionInfo =
@@ -81,65 +80,23 @@ object BloomBcProbe {
   def ensureRegistered(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.registerFunction(identifier, info, builder)
 
-  /** Probe column `might_contain(filter, valueCol)` with the filter
-    * broadcast once per executor. The registry entry serves driver-side
-    * analysis (including any later re-analysis of the same plan); one
-    * small handle is retained per built query — bounded by builds, not
-    * by data.
+  /** Probe column `might_contain(filter, valueCol)` over a filter the
+    * caller broadcast. The broadcast is parked in the registry under its
+    * own id for driver-side analysis (including any later re-analysis of
+    * the same plan); one small handle is retained per broadcast. Its
+    * owner destroys it: q_decontaminate_bloom's is a [[graft.Memo]]
+    * object entry, destroyed when that entry is released or evicted.
     */
-  def column(spark: SparkSession, filter: BloomFilter,
+  def column(spark: SparkSession, bc: Broadcast[BloomFilter],
       value: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     ensureRegistered(spark)
-    val bc = spark.sparkContext.broadcast(filter)
-    val id = nextId.incrementAndGet()
-    registry.put(id, bc)
+    registry.put(bc.id, bc)
     org.apache.spark.sql.functions.call_function("graft_bloom_probe",
-      org.apache.spark.sql.functions.lit(id), value)
+      org.apache.spark.sql.functions.lit(bc.id), value)
   }
 
-  // cacheKey → registry id, scoped to a SparkContext incarnation so a
-  // restarted context never resurrects a dead broadcast handle
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]
-
-  /** [[column]] with the filter BUILT AND BROADCAST at most once per
-    * (SparkContext, cacheKey). A bare `column` call per query build
-    * leaks one multi-MB broadcast per rebuild in a long-lived session
-    * (~8 MB each at the 30× probe) — and the filter construction itself
-    * is a full scan of the probe side. Rebuilding the same query reuses
-    * both. `release()` drops everything deterministically.
+  /** Registry size (specs: a rebuild that reuses the Memo'd broadcast
+    * parks no new handle).
     */
-  def cachedColumn(spark: SparkSession, cacheKey: String,
-      value: org.apache.spark.sql.Column)(
-      build: => BloomFilter): org.apache.spark.sql.Column = {
-    ensureRegistered(spark)
-    val sc = spark.sparkContext
-    val k = s"${sc.applicationId}/${sc.startTime}:$cacheKey"
-    val id = cache.computeIfAbsent(k, _ => {
-      val bc = sc.broadcast(build)
-      val i = nextId.incrementAndGet()
-      registry.put(i, bc)
-      i
-    })
-    org.apache.spark.sql.functions.call_function("graft_bloom_probe",
-      org.apache.spark.sql.functions.lit(id), value)
-  }
-
-  /** Destroy every parked broadcast and clear the registry/cache — the
-    * cleanup hook for a long-lived session between pipeline runs (the
-    * analogue of [[graft.Memo.release]]). Plans already analyzed keep
-    * their own broadcast handle inside the expression; only UN-analyzed
-    * plans referencing a released id would fail, loudly, at analysis.
-    */
-  def release(): Unit = {
-    cache.clear()
-    val it = registry.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next(); it.remove()
-      try e.getValue.destroy() catch { case _: Throwable => }
-    }
-  }
-
-  /** Registry size (specs: proves cachedColumn bounds handle growth). */
   def registeredCount: Int = registry.size()
 }

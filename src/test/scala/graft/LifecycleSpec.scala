@@ -113,11 +113,8 @@ class LifecycleSpec extends SparkSpec {
       s"expected the failed save's own error, got: $e")
     // the status tracker is fed by listener events: deliver the queued
     // ones, so a job counts as active only if it is still running
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-      .invoke(bus, Long.box(10000L))
-    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+    SparkCounts.drain(spark)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
       "checkpointBest threw while a checkpoint save was still running")
     def written = Files.walk(ckpt).iterator().asScala.map(_.toString).toSet
     val atThrow = written
@@ -141,28 +138,10 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("q_lifecycle stays under its Spark job ceiling at sf0.001") {
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        started.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    val jobs = try {
+    val jobs = SparkCounts.measure(spark) {
       SparkEntry.defs("q_lifecycle").build(spark, sf()).collect()
-      // listener events are asynchronous: poll until the count settles
-      var prev = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) {
-        Thread.sleep(100)
-        val cur = started.get
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        waited += 1
-      }
-      started.get
-    } finally spark.sparkContext.removeSparkListener(l)
-    // a cold build runs 42 jobs: one packed-cache rank pass and one
+    }._2.jobs
+    // a cold build runs 43 jobs: one packed-cache rank pass and one
     // metrics aggregate for all epochs, one log read, known-schema
     // read-backs and single-job checkpoint saves
     assert(jobs <= 48, s"q_lifecycle ran $jobs Spark jobs")

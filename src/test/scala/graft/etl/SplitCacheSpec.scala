@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.SparkSpec
+import graft.{SparkCounts, SparkSpec}
 import java.nio.file.Files
 
 /** Write-once memoization semantics (S2): second writer is a no-op, and
@@ -69,11 +69,8 @@ class SplitCacheSpec extends SparkSpec {
     intercept[Exception] { SplitCache.cachedPipeline(spark, sf(), cache) }
     // the status tracker is fed by listener events: deliver the queued
     // ones, so a job counts as active only if it is still running
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-      .invoke(bus, Long.box(10000L))
-    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+    SparkCounts.drain(spark)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
       "cachedPipeline returned while a cache write was still running")
     val strays = new java.io.File(cache).list().filter(_.contains("__tmp"))
     assert(strays.isEmpty, s"temp output left under the cache: ${strays.toSeq}")

@@ -1,13 +1,14 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.functions._
 
 /** The broadcast-shipped codegen Bloom probe: correctness (no false
-  * negatives; confirmable semantics) and the r11 leak fix — cachedColumn
-  * builds/broadcasts at most once per (SparkContext, key), so a
-  * long-lived session rebuilding the same query holds ONE multi-MB
-  * broadcast, not one per rebuild.
+  * negatives; confirmable semantics) and the leak fix — q_decontaminate_bloom's
+  * filter is one Memo entry per (session, scale dir), so a long-lived
+  * session rebuilding the query holds ONE multi-MB broadcast, and
+  * releasing the entry destroys it.
   */
 class BloomBcProbeSpec extends SparkSpec {
   import spark.implicits._
@@ -17,7 +18,8 @@ class BloomBcProbeSpec extends SparkSpec {
     val filter = org.apache.spark.util.sketch.BloomFilter.create(1000, 0.01)
     members.foreach(filter.putLong)
     val df = spark.range(7000).select(col("id").as("v"))
-    val hits = df.filter(BloomBcProbe.column(spark, filter, col("v")))
+    val bc = spark.sparkContext.broadcast(filter)
+    val hits = df.filter(BloomBcProbe.column(spark, bc, col("v")))
       .as[Long].collect().toSet
     assert(members.forall(hits), "Bloom filters never false-negative")
     // fpp 0.01 over 6000 non-members: generous 5x headroom on the bound
@@ -25,24 +27,24 @@ class BloomBcProbeSpec extends SparkSpec {
       s"probe should prune non-members, kept ${hits.size}")
   }
 
-  test("cachedColumn broadcasts once per key; new keys get new entries") {
-    def build = {
-      val f = org.apache.spark.util.sketch.BloomFilter.create(100, 0.03)
-      f.putLong(42L); f
-    }
-    val k = s"spec:${java.util.UUID.randomUUID()}"
-    val before = BloomBcProbe.registeredCount
-    BloomBcProbe.cachedColumn(spark, k, col("id"))(build)
+  test("q_decontaminate_bloom broadcasts once per key; Memo release destroys it") {
+    val q = graft.SparkEntry.defs("q_decontaminate_bloom")
+    val name = s"${sf()}:corpus.evalBloom"
+    def builds = graft.Memo.telemetry(spark).collectFirst {
+      case (`name`, _, b) => b
+    }.getOrElse(0)
+    graft.Memo.releaseOne(spark, sf(), "corpus.evalBloom")
+    val before = builds
+    val first = q.build(spark, sf()).collect()
     val afterFirst = BloomBcProbe.registeredCount
-    assert(afterFirst == before + 1)
-    // same key: reuse, no new broadcast handle
-    val c2 = BloomBcProbe.cachedColumn(spark, k, col("id"))(build)
+    val second = q.build(spark, sf()).collect()
+    assert(builds == before + 1, "two builds must share one filter build")
     assert(BloomBcProbe.registeredCount == afterFirst,
-      "rebuilding the same query must not leak a new broadcast")
-    // the reused handle still evaluates
-    assert(spark.range(100).filter(c2).count() == 1)
-    // a different key is a different filter → new entry
-    BloomBcProbe.cachedColumn(spark, k + "/other", col("id"))(build)
-    assert(BloomBcProbe.registeredCount == afterFirst + 1)
+      "rebuilding the same query must not park a new broadcast")
+    assert(second.toSeq == first.toSeq)
+    val bc = graft.Memo.cachedObj(spark, sf(), "corpus.evalBloom",
+      (_: Broadcast[_]) => 0L)(fail("the filter must be cached"))
+    graft.Memo.release(spark, sf())
+    intercept[org.apache.spark.SparkException](bc.value)
   }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.{SparkCounts, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** The bounded distinct-min-K aggregate's claim (VERDICT r14 #1) is STATE
@@ -59,48 +58,20 @@ class BoundedMinKSetSpec extends SparkSpec {
     assert(bounded(1L).size == 6)
   }
 
-  /** Total shuffle-write bytes across all tasks while `body` runs —
-    * the DigestShuffleSpec measurement (listener events are async; poll
-    * until stable).
-    */
-  private def shuffleWriteBytes(body: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong
-    val l = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) acc.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) {
-        Thread.sleep(100)
-        val cur = acc.get
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        waited += 1
-      }
-      acc.get
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("partial state is K-bounded: the hub shuffles a fraction of collect_set's bytes") {
     val src = inputDf.repartition(4).persist()
     src.count() // materialize OUTSIDE both measured windows
     val minK = udaf(new BoundedMinKSet(K))
-    val boundedBytes = shuffleWriteBytes {
+    val boundedBytes = SparkCounts.measure(spark) {
       src.groupBy("c").agg(minK(col("h"), col("s")).as("ss")).collect()
-    }
-    val collectSetBytes = shuffleWriteBytes {
+    }._2.shuffleWriteBytes
+    val collectSetBytes = SparkCounts.measure(spark) {
       src.groupBy("c")
         .agg(collect_set(struct(col("h"), col("s"))).as("hs"))
         .withColumn("ss", expr(
           s"array_sort(transform(slice(array_sort(hs), 1, $K), x -> x.s))"))
         .select("c", "ss").collect()
-    }
+    }._2.shuffleWriteBytes
     src.unpersist()
     assert(boundedBytes > 0 && collectSetBytes > 0)
     // the hub's 20k distinct (h, s) pairs appear in every mapper's partial

@@ -1,7 +1,6 @@
 package graft.rank
 
-import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.{SparkCounts, SparkSpec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,34 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class DigestShuffleSpec extends SparkSpec {
 
-  /** Total shuffle-write bytes across all tasks while `body` runs.
-    * Listener events are asynchronous — poll until the counter is
-    * stable so late task-end events are counted.
-    */
-  private def shuffleWriteBytes(body: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong
-    val l = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) acc.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) {
-        Thread.sleep(100)
-        val cur = acc.get
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        waited += 1
-      }
-      acc.get
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("digest shuffles a K-bounded fraction of the window formulation's bytes") {
     // ~160 candidates per (user, domain); the digest caps each mapper's
     // contribution at kMax=10 rows per group
@@ -49,14 +20,14 @@ class DigestShuffleSpec extends SparkSpec {
     scored.count() // materialize OUTSIDE both measured windows
     val w = Window.partitionBy("user_id", "domain")
       .orderBy(col("score").desc, col("item_id"))
-    val windowBytes = shuffleWriteBytes {
+    val windowBytes = SparkCounts.measure(spark) {
       scored.withColumn("rn", row_number().over(w))
         .filter(col("is_positive") === 1)
         .select("user_id", "domain", "rn").collect()
-    }
-    val digestBytes = shuffleWriteBytes {
+    }._2.shuffleWriteBytes
+    val digestBytes = SparkCounts.measure(spark) {
       Metrics.posRanksDigest(scored, 10).collect()
-    }
+    }._2.shuffleWriteBytes
     scored.unpersist()
     assert(windowBytes > 0 && digestBytes > 0)
     // 160-row groups digested to ≤10 rows: require at least a 3× byte
