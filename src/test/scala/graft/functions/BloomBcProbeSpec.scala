@@ -27,6 +27,39 @@ class BloomBcProbeSpec extends SparkSpec {
       s"probe should prune non-members, kept ${hits.size}")
   }
 
+  test("cachedColumn broadcasts once per key; new keys get new entries") {
+    // the cached probe column: a Memo-held broadcast under a key, probed
+    // through BloomBcProbe.column
+    val dir = s"spec:${java.util.UUID.randomUUID()}"
+    var broadcasts = 0
+    def cachedColumn(name: String) = {
+      val bc = graft.Memo.cachedObj(spark, dir, name,
+          (b: Broadcast[org.apache.spark.util.sketch.BloomFilter]) =>
+            b.value.bitSize / 8) {
+        val f = org.apache.spark.util.sketch.BloomFilter.create(100, 0.03)
+        f.putLong(42L)
+        broadcasts += 1
+        spark.sparkContext.broadcast(f)
+      }
+      BloomBcProbe.column(spark, bc, col("id"))
+    }
+    try {
+      val before = BloomBcProbe.registeredCount
+      cachedColumn("k")
+      val afterFirst = BloomBcProbe.registeredCount
+      assert(afterFirst == before + 1 && broadcasts == 1)
+      // same key: reuse, no new broadcast handle
+      val c2 = cachedColumn("k")
+      assert(broadcasts == 1 && BloomBcProbe.registeredCount == afterFirst,
+        "rebuilding the same query must not leak a new broadcast")
+      // the reused handle still evaluates
+      assert(spark.range(100).filter(c2).count() == 1)
+      // a different key is a different filter → new entry
+      cachedColumn("k/other")
+      assert(broadcasts == 2 && BloomBcProbe.registeredCount == afterFirst + 1)
+    } finally graft.Memo.release(spark, dir)
+  }
+
   test("q_decontaminate_bloom broadcasts once per key; Memo release destroys it") {
     val q = graft.SparkEntry.defs("q_decontaminate_bloom")
     val name = s"${sf()}:corpus.evalBloom"
