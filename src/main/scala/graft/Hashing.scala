@@ -73,7 +73,10 @@ object Hashing {
     first60(md.digest())
   }
 
-  private def first60(d: Array[Byte]): Long = {
+  /** First 60 bits of an md5 digest as a non-negative long — the one
+    * JVM bit extraction, shared with [[graft.functions.H60Expr.hash]].
+    */
+  private[graft] def first60(d: Array[Byte]): Long = {
     var v = 0L
     var i = 0
     while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }

@@ -22,9 +22,7 @@ import scala.jdk.CollectionConverters._
   */
 object Lifecycle {
 
-  /** Stage timer: records into the bench artifact via StageTiming,
-    * stderr echo only when GRAFT_STAGE_TIMING is set.
-    */
+  /** Stage timer: records into the bench artifact via StageTiming. */
   private def timed[A](stage: String)(body: => A): A =
     StageTiming.timed(s"lifecycle/$stage")(body)
 

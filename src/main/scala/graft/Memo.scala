@@ -183,6 +183,16 @@ object Memo {
     }
   }
 
+  /** The live `Broadcast` with this id held by an object entry, if any —
+    * [[graft.functions.BloomBcProbe]]'s function builder resolves its id
+    * literal here, so a released or evicted entry's id stops resolving.
+    */
+  private[graft] def broadcast(id: Long): Option[Broadcast[_]] = synchronized {
+    objReg.valuesIterator.map(_.value).collectFirst {
+      case bc: Broadcast[_] if bc.id == id => bc
+    }
+  }
+
   /** Drop and unpersist every entry of this session (one sfDir, or all
     * when sfDir is null). Safe to call at any point between queries; the
     * next consumer rebuilds.

@@ -1,7 +1,8 @@
 package graft
 
 /** Dev-only profiler: time named queries (all if none given) against a
-  * scale dir, optionally dumping the formatted physical plan first.
+  * scale dir, optionally dumping the formatted physical plan first. Each
+  * query's timing line is followed by its builder stages ([[StageTiming]]).
   *
   *   sbt "runMain graft.Profile /root/testdata/sf0.1 explain q_candidates"
   */
@@ -27,6 +28,9 @@ object Profile {
       }
       println(f"==== $name%-28s $el%8.2f s (build $tBuild%.2f)  rows=$n  " +
         s"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}")
+      StageTiming.drain().foreach { case (stage, sec) =>
+        println(f"[stage] $stage%-36s $sec%8.2f s")
+      }
     }
     val picked =
       if (names.isEmpty) SparkEntry.defs.keys.toSeq.sorted

@@ -10,7 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - money/metric sums run in DECIMAL (exact, order-independent), then
   *    `round(_, k)` and cast to DOUBLE identically in both engines;
   *  - float arrays are fixed-pointed: `CAST(round(x * 1e7) AS BIGINT)`
-  *    before any sum/dot so arithmetic is integer-exact in both engines;
+  *    before any sum/dot so arithmetic is integer-exact in both engines —
+  *    spelled only by [[graft.ext.VectorOps.fixedEmbeddingSql]] (Spark)
+  *    and [[graft.ext.VectorOps.duckFixed]] (DuckDB);
   *  - sampling order is [[Hashing.h60]] in both engines;
   *  - every ORDER BY carries a total tiebreaker (unique key column).
   */

@@ -5,13 +5,11 @@ package graft
   * the buffer after every query and embeds the stages in the bench
   * artifact, so a capstone tail's host-vs-plan attribution (is the 600 s
   * in the kmeans train, the pair join, or spread evenly — i.e. load?)
-  * is readable from the JSON alone, without a re-run under
-  * GRAFT_STAGE_TIMING.
+  * is readable from the JSON alone, without a re-run. Profile prints
+  * each query's drained stages after its timing line.
   *
   * Collection is always on — the cost is one queue append per stage, a
-  * handful per query. Stderr echo only under GRAFT_STAGE_TIMING (the
-  * pre-r12 behavior of the lifecycle/split-cache timers, which now
-  * delegate here).
+  * handful per query.
   */
 object StageTiming {
 
@@ -67,14 +65,11 @@ object StageTiming {
     if (size.incrementAndGet() > CAP && buf.poll() != null)
       size.decrementAndGet()
     buf.add(tagged -> sec)
-    if (sys.env.contains("GRAFT_STAGE_TIMING"))
-      System.err.println(
-        f"[stage] $tagged%-36s $sec%8.2f s")
   }
 
   /** Entries recorded since the last drain, in record order, repeated
     * stage names summed (an epoch loop hits the same stage per epoch).
-    * Bench calls this once per query, so the drained list is exactly
+    * Bench and Profile call this once per query, so the drained list is exactly
     * that query's stages — memoized builds report on the query that
     * actually built.
     */

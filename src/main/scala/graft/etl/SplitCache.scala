@@ -16,9 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SplitCache {
 
-  /** Stage timer: records into the bench artifact via StageTiming,
-    * stderr echo only when GRAFT_STAGE_TIMING is set.
-    */
+  /** Stage timer: records into the bench artifact via StageTiming. */
   private def timed[A](stage: String)(body: => A): A =
     graft.StageTiming.timed(s"splitcache/$stage")(body)
 

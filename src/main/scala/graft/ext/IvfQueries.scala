@@ -444,9 +444,7 @@ object IvfQueries {
     import spark.implicits._
     kmeansVecs(spark, Tables.embeddings(spark, d)
       .filter(size(col("embedding")) > 0)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-        .as("e"))
+      .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
       .as[(Long, Array[Long])], k)
   }
 
@@ -631,9 +629,7 @@ object IvfQueries {
     Tables.embeddings(spark, d)
       .filter(size(col("embedding")) > 0)
       .filter(slice)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-        .as("e"))
+      .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
       .repartition(spark.sparkContext.defaultParallelism)
       .as[(Long, Array[Long])]
       .mapPartitions { it =>
@@ -678,9 +674,7 @@ object IvfQueries {
       Tables.embeddings(spark, d)
         .filter(size(col("embedding")) > 0)
         .filter(expr(trainWhere))
-        .select(col("vec_id"), expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-          .as("e"))
+        .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
         .orderBy(Hashing.h60(col("vec_id")), col("vec_id"))
         .limit(k * 256)
         .as[(Long, Array[Long])].collect()
@@ -736,9 +730,7 @@ object IvfQueries {
         // they must not be assigned to a cell here either (same guard as
         // the training slice above and MmdRbf's minibatch)
         .filter(size(col("embedding")) > 0)
-        .select(col("vec_id"), expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-          .as("e"))
+        .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
         .repartition(spark.sparkContext.defaultParallelism)
         .as[(Long, Array[Long])]
       val assign1 = vecs.mapPartitions { it =>
@@ -935,9 +927,7 @@ object IvfQueries {
       import spark.implicits._
       val vecs = Tables.embeddings(spark, d)
         .filter(size(col("embedding")) > 0)
-        .select(col("vec_id"), expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-          .as("e"))
+        .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
         .as[(Long, Array[Long])]
       def train(lo: Boolean): Cents = {
         val hv = vecs.map { case (v, e) =>
@@ -1036,9 +1026,7 @@ object IvfQueries {
     val bc = spark.sparkContext.broadcast(cents)
     def fixed(df: org.apache.spark.sql.DataFrame) = df
       .filter(size(col("embedding")) > 0)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-        .as("e"))
+      .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
       .repartition(spark.sparkContext.defaultParallelism)
       .as[(Long, Array[Long])]
     val home = fixed(cEmb).mapPartitions { it =>
@@ -1090,9 +1078,7 @@ object IvfQueries {
     import spark.implicits._
     val vecs = embDf
       .filter(size(col("embedding")) > 0)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-        .as("e"))
+      .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
       .repartition(spark.sparkContext.defaultParallelism)
       .as[(Long, Array[Long])]
     val (home, probes) =

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * estimator divisions — are mirrored op-for-op in the oracle SQL, and
   * the 6-decimal output rounding absorbs any ±1-ulp exp() drift.
   * MmdRbfSpec additionally asserts the statistic's mathematical
-  * properties (self-distance 0, symmetry, order agreement with the
-  * linear-kernel q_mmd_linear).
+  * properties on [[kernelSumScaled]] (self-distance exactly 0, near <
+  * far, exact symmetry).
   *
   * Execution shape: label matrices are small (the reference computes MMD
   * per mini-batch); each matrix is collected once and broadcast, and each
@@ -33,35 +33,6 @@ object MmdRbf {
   /** my_utils.py:14 `sigma_list` — fixed, NOT data-dependent. */
   val SIGMAS: Array[Double] = Array(1e-2, 1e-1, 1.0, 10.0, 100.0)
   private val GAMMAS: Array[Double] = SIGMAS.map(s => 1.0 / (2.0 * s * s))
-
-  /** Biased mixed-RBF MMD² between row-matrices a and b — the exact
-    * kernel and estimator of my_utils.py (fixed σ list, γ = 1/(2σ²),
-    * diagonal-inclusive means).
-    */
-  def mmd2(a: Array[Array[Double]], b: Array[Array[Double]]): Double = {
-    def d2(x: Array[Double], y: Array[Double]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < x.length) { val d = x(i) - y(i); s += d * d; i += 1 }
-      s
-    }
-    def kmean(x: Array[Array[Double]], y: Array[Array[Double]]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < x.length) {
-        var j = 0
-        while (j < y.length) {
-          val d = d2(x(i), y(j))
-          var k = 0
-          while (k < GAMMAS.length) { s += math.exp(-GAMMAS(k) * d); k += 1 }
-          j += 1
-        }
-        i += 1
-      }
-      s / (x.length.toLong * y.length)
-    }
-    kmean(a, a) + kmean(b, b) - 2.0 * kmean(a, b)
-  }
 
   /** Oracle-parity formulation: fixed-point vectors (the engine's ×1e7
     * grid), per-pair kernel values ROUNDED to integers at 1e-9 so the
@@ -153,9 +124,7 @@ object MmdRbf {
       // NPE the kernel either).
       val mats: Map[Int, Array[Array[Long]]] = Tables.embeddings(spark, d)
         .filter(size(col("embedding")) > 0)
-        .select(col("label"), col("vec_id"), expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-          .as("e"))
+        .select(col("label"), col("vec_id"), VectorOps.fixedEmbedding.as("e"))
         .withColumn("rn", row_number().over(Window.partitionBy("label")
           .orderBy(Hashing.h60(col("vec_id")), col("vec_id"))))
         .filter(col("rn") <= BATCH_N)

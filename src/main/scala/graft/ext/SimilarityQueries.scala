@@ -258,7 +258,7 @@ object SimilarityQueries {
     val codes = el.join(s, "vec_id")
       .select(col("vec_id"), col("i"),
         when(col("s") === 0, lit(0L))
-          .otherwise(expr("((e + s) * 254 + s) DIV (2 * s) - 127")).as("c"))
+          .otherwise(expr(VectorOps.quantCodeSql("e", "s"))).as("c"))
     val cn = codes.groupBy("vec_id")
       .agg(sqrt(sum(col("c") * col("c")).cast("double")).as("nrm"))
     val q = codes.filter(col("vec_id") % 20 === 0)
@@ -318,23 +318,22 @@ object SimilarityQueries {
           round(col("cos"), 6).as("cos"))
         .orderBy("vec_id")
     }
-    val fp = expr(
-      "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
     val evals = embs.filter(expr(evalSlice))
-      .select(col("vec_id"), fp.as("e")).as[(Long, Array[Long])].collect()
+      .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
+      .as[(Long, Array[Long])].collect()
       .collect { case (id, e) if e != null && e.nonEmpty =>
-        (id, e, math.sqrt(e.map(x => x * x).sum.toDouble))
+        (id, e, VectorOps.norm(e))
       }
     val bc = spark.sparkContext.broadcast(evals)
     embs.filter(not(expr(evalSlice)))
-      .select(col("vec_id"), fp.as("e")).as[(Long, Array[Long])]
+      .select(col("vec_id"), VectorOps.fixedEmbedding.as("e")).as[(Long, Array[Long])]
       .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions { it =>
         val ev = bc.value
         it.flatMap { case (tid, te) =>
           if (te == null || te.isEmpty) Iterator.empty
           else {
-            val tn = math.sqrt(te.map(x => x * x).sum.toDouble)
+            val tn = VectorOps.norm(te)
             if (tn == 0.0) Iterator.empty
             else {
               var bestCos = Double.NegativeInfinity
@@ -433,9 +432,7 @@ object SimilarityQueries {
     import spark.implicits._
     val planes = planeMatrixFor(bandBits * numBands)
     embs
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-        .as("e")).as[(Long, Array[Long])]
+      .select(col("vec_id"), VectorOps.fixedEmbedding.as("e")).as[(Long, Array[Long])]
       .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions { it =>
         it.flatMap { case (v, e) =>
@@ -533,9 +530,7 @@ object SimilarityQueries {
       // contract over the rep slice past it.
       val withVh = Tables.embeddings(spark, d)
         .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-        .select(col("vec_id"), expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-          .as("e"))
+        .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
         .filter(expr("exists(e, x -> x != 0L)"))
         .select(col("vec_id"), xxhash64(col("e")).as("vh"),
           xxhash64(col("e"), lit(88L)).as("vh2"))
@@ -691,13 +686,10 @@ object SimilarityQueries {
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     val fixed = embDf
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-        .as("e")).as[(Long, Array[Long])]
+      .select(col("vec_id"), VectorOps.fixedEmbedding.as("e")).as[(Long, Array[Long])]
     val corpus = spark.sparkContext.broadcast(
       fixed.collect().sortBy(_._1).map { case (id, e) =>
-        // long accumulation: exact like the oracle's CAST(SUM(e*e) AS DOUBLE)
-        (id, e, math.sqrt(e.map(x => x * x).sum.toDouble))
+        (id, e, VectorOps.norm(e))
       })
     // single-file scans arrive as 1-2 partitions; spread the O(n²d)
     // loop across the cluster before it runs (measured: pinned 2 cores
@@ -707,7 +699,7 @@ object SimilarityQueries {
       val c = corpus.value
       val n = c.length
       it.flatMap { case (ida, ea) =>
-        val na = math.sqrt(ea.map(x => x * x).sum.toDouble)
+        val na = VectorOps.norm(ea)
         if (na == 0.0) Iterator.empty
         else {
           // corpus is sorted by vec_id — binary-search the first id > ida
@@ -859,9 +851,7 @@ object SimilarityQueries {
       // Count-gated on the query slice's measured duplication, like
       // the other factorings.
       val e8 = Tables.embeddings(spark, d)
-        .select(col("vec_id"), col("label"), expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-          .as("e"))
+        .select(col("vec_id"), col("label"), VectorOps.fixedEmbedding.as("e"))
         .select(col("vec_id"), col("label"),
           xxhash64(col("e")).as("vh"), xxhash64(col("e"), lit(88L)).as("vh2"))
       // stage-attributed (r13, VERDICT r12 #5): the zipf 100× capstone's
@@ -1061,7 +1051,7 @@ object SimilarityQueries {
          |), codes AS (
          |  SELECT el.vec_id, el.i,
          |         CASE WHEN s.s = 0 THEN 0
-         |              ELSE ((el.e + s.s) * 254 + s.s) // (2 * s.s) - 127
+         |              ELSE ${VectorOps.duckQuantCode("el.e", "s.s")}
          |         END AS c
          |  FROM elems el JOIN s ON s.vec_id = el.vec_id
          |), cn AS (
@@ -1175,8 +1165,7 @@ object SimilarityQueries {
       val bc = spark.sparkContext.broadcast(model)
       Tables.embeddings(spark, d)
         .select(col("label"),
-          expr("transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-            .as("q"))
+          VectorOps.fixedEmbedding.as("q"))
         .as[(Int, Array[Long])]
         .mapPartitions { it =>
           val m = bc.value

@@ -910,7 +910,7 @@ object TextQueries {
          |    row_number() OVER (ORDER BY s DESC, vec_id) AS rd
          |  FROM (
          |    SELECT vec_id,
-         |      SUM(CAST(round(CAST(x AS DOUBLE) * 10000000) AS BIGINT)
+         |      SUM(${VectorOps.duckFixed("x")}
          |          * ((i * 2654435761) % 2001 - 1000)) AS s
          |    FROM (SELECT vec_id, unnest(embedding) AS x,
          |          generate_subscripts(embedding, 1) AS i FROM embeddings)
@@ -929,8 +929,8 @@ object TextQueries {
         .select(col("doc_id"), row_number().over(w50).cast("long").as("rl"))
       val dense = graft.Tables.embeddings(spark, d)
         .select(col("vec_id"),
-          expr("""fixed_dot(
-            |  transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint)),
+          expr(s"""fixed_dot(
+            |  ${VectorOps.fixedEmbeddingSql},
             |  transform(sequence(1, size(embedding)),
             |            i -> (cast(i as bigint) * 2654435761L) % 2001 - 1000))"""
             .stripMargin).as("s"))

@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.{Limits, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared embedding-vector primitives: fixed-point element rows and L2
@@ -20,7 +20,44 @@ import org.apache.spark.sql.functions._
 object VectorOps {
 
   val DIM = 64
-  val SCALE = 1e7
+
+  /** The fixed-point grid, Spark side: `embedding` as its BIGINT vector
+    * `round(x * 1e7)` — SQL text for plans that embed it in a larger
+    * expression (`fixed_dot(…)`). The one spelling of the grid in Spark;
+    * [[duckFixed]] is the DuckDB one.
+    */
+  val fixedEmbeddingSql: String =
+    "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))"
+
+  /** [[fixedEmbeddingSql]] as a Column. */
+  def fixedEmbedding: Column = expr(fixedEmbeddingSql)
+
+  /** The fixed-point grid, DuckDB side: SQL text for one element `x`. */
+  def duckFixed(x: String): String =
+    s"CAST(round(CAST($x AS DOUBLE) * 10000000) AS BIGINT)"
+
+  /** int8 code of grid value `v` under per-vector max-abs scale `s`
+    * (Spark SQL text, `s` > 0): ((v + s)·254 + s) DIV (2s) − 127 keeps the
+    * numerator non-negative, so Spark's truncating DIV and DuckDB's floor
+    * `//` ([[duckQuantCode]]) agree. [[broadcastQuantCorpus]] holds the
+    * JVM copy.
+    */
+  def quantCodeSql(v: String, s: String): String =
+    s"(($v + $s) * 254 + $s) DIV (2 * $s) - 127"
+
+  /** DuckDB side of [[quantCodeSql]]. */
+  def duckQuantCode(v: String, s: String): String =
+    s"(($v + $s) * 254 + $s) // (2 * $s) - 127"
+
+  /** L2 norm of a grid vector: the `Long` sum of squares is exact in any
+    * order, like the oracle's `CAST(SUM(e * e) AS DOUBLE)`.
+    */
+  def norm(e: Array[Long]): Double = {
+    var s = 0L
+    var i = 0
+    while (i < e.length) { s += e(i) * e(i); i += 1 }
+    math.sqrt(s.toDouble)
+  }
 
   /** (vec_id, label, i (1-based), e) fixed-point element rows of an
     * embeddings relation — purely relational, so a scan bucketed by
@@ -30,16 +67,14 @@ object VectorOps {
   def elems(embs: DataFrame): DataFrame =
     embs
       .select(col("vec_id"), col("label"),
-        posexplode(expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))"))
-          .as(Seq("i0", "e")))
+        posexplode(fixedEmbedding).as(Seq("i0", "e")))
       .select(col("vec_id"), col("label"), (col("i0") + 1).as("i"), col("e"))
 
   val duckElemsCte: String =
-    """elems AS (
+    s"""elems AS (
       |  SELECT vec_id, label,
       |         generate_subscripts(embedding, 1) AS i,
-      |         CAST(round(CAST(unnest(embedding) AS DOUBLE) * 10000000) AS BIGINT) AS e
+      |         ${duckFixed("unnest(embedding)")} AS e
       |  FROM embeddings
       |)""".stripMargin
 
@@ -188,18 +223,15 @@ object VectorOps {
       : org.apache.spark.broadcast.Broadcast[Map[Long, (Array[Long], Double)]] = {
     import spark.implicits._
     val rows = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-        .as("e")).as[(Long, Array[Long])].collect()
+      .select(col("vec_id"), fixedEmbedding.as("e"))
+      .as[(Long, Array[Long])].collect()
     spark.sparkContext.broadcast(rows.map { case (id, e) =>
-      // long accumulation: exact like the oracle's CAST(SUM(e*e) AS DOUBLE)
-      id -> (e, math.sqrt(e.map(x => x * x).sum.toDouble))
+      id -> (e, norm(e))
     }.toMap)
   }
 
   /** int8-QUANTIZED broadcast corpus: per-vector max-abs-scaled codes
-    * (the exact integer math of q_embed_quant: code = ((e+s)·254+s) DIV
-    * (2s) − 127, truncating division on a non-negative numerator) plus
+    * (the exact integer math of q_embed_quant, [[quantCodeSql]]) plus
     * the code-vector L2 norm. Same ceiling as [[broadcastCorpus]] but
     * ~8× smaller payload (byte codes vs fixed-point longs) — the reason
     * a serving tier quantizes: more corpus per executor, integer dot
@@ -209,9 +241,8 @@ object VectorOps {
       : org.apache.spark.broadcast.Broadcast[Map[Long, (Array[Byte], Double)]] = {
     import spark.implicits._
     val rows = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-        .as("e")).as[(Long, Array[Long])].collect()
+      .select(col("vec_id"), fixedEmbedding.as("e"))
+      .as[(Long, Array[Long])].collect()
     spark.sparkContext.broadcast(rows.map { case (id, e) =>
       val s = e.foldLeft(0L)((a, x) => math.max(a, math.abs(x)))
       val codes = e.map(x =>

@@ -25,11 +25,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * ScalaUDF interpreter).
   *
   * Construction: the filter is a RUNTIME object, so the function-registry
-  * builder cannot receive it directly; [[BloomBcProbe.column]] parks the
-  * broadcast in a driver-side registry under its id and the builder
-  * rehydrates it from the id literal at analysis time (analysis runs on
-  * the driver; executors only ever see the serialized expression, which
-  * carries the broadcast handle itself).
+  * builder cannot receive it directly; [[BloomBcProbe.column]] passes the
+  * broadcast's id as a literal and the builder rehydrates the live
+  * broadcast from [[graft.Memo]]'s object entries at analysis time
+  * (analysis runs on the driver; executors only ever see the serialized
+  * expression, which carries the broadcast handle itself).
   */
 case class BloomBcMightContain(bcId: Long,
     bc: Broadcast[BloomFilter], child: Expression)
@@ -58,9 +58,6 @@ case class BloomBcMightContain(bcId: Long,
 }
 
 object BloomBcProbe {
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[Long, Broadcast[BloomFilter]]
-
   val identifier: FunctionIdentifier = FunctionIdentifier("graft_bloom_probe")
   val info: ExpressionInfo =
     new ExpressionInfo(classOf[BloomBcMightContain].getName, "graft_bloom_probe")
@@ -72,31 +69,25 @@ object BloomBcProbe {
       case other => throw new IllegalArgumentException(
         s"graft_bloom_probe expects a literal broadcast id, got $other")
     }
-    val bc = registry.get(id)
-    require(bc != null, s"graft_bloom_probe: unknown broadcast id $id")
-    BloomBcMightContain(id, bc, children(1))
+    val bc = graft.Memo.broadcast(id).getOrElse(throw new IllegalArgumentException(
+      s"graft_bloom_probe: unknown broadcast id $id"))
+    BloomBcMightContain(id, bc.asInstanceOf[Broadcast[BloomFilter]], children(1))
   }
 
   def ensureRegistered(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.registerFunction(identifier, info, builder)
 
-  /** Probe column `might_contain(filter, valueCol)` over a filter the
-    * caller broadcast. The broadcast is parked in the registry under its
-    * own id for driver-side analysis (including any later re-analysis of
-    * the same plan); one small handle is retained per broadcast. Its
-    * owner destroys it: q_decontaminate_bloom's is a [[graft.Memo]]
-    * object entry, destroyed when that entry is released or evicted.
+  /** Probe column `might_contain(filter, valueCol)` over a broadcast
+    * held by a [[graft.Memo]] object entry ([[graft.Memo.cachedObj]]):
+    * analysis (including any later re-analysis of the same plan) finds
+    * it there by id, so the handle lives exactly as long as the entry —
+    * once the entry is released or evicted, the broadcast is destroyed
+    * and its id no longer resolves.
     */
   def column(spark: SparkSession, bc: Broadcast[BloomFilter],
       value: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     ensureRegistered(spark)
-    registry.put(bc.id, bc)
     org.apache.spark.sql.functions.call_function("graft_bloom_probe",
       org.apache.spark.sql.functions.lit(bc.id), value)
   }
-
-  /** Registry size (specs: a rebuild that reuses the Memo'd broadcast
-    * parks no new handle).
-    */
-  def registeredCount: Int = registry.size()
 }

@@ -52,13 +52,8 @@ object H60Expr {
   /** First 60 bits of md5(bytes of s) as a non-negative long — called
     * from generated code; must stay a cheap static entry point.
     */
-  def hash(s: UTF8String): Long = {
-    val d = tlMd.get().digest(s.getBytes)
-    var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    (v << 4) | ((d(7) & 0xf0L) >> 4)
-  }
+  def hash(s: UTF8String): Long =
+    graft.Hashing.first60(tlMd.get().digest(s.getBytes))
 
   val identifier: FunctionIdentifier = FunctionIdentifier("graft_h60")
   val info: ExpressionInfo =

@@ -1,6 +1,7 @@
 package graft.score
 
 import graft.{Hashing, QueryDef, Tables}
+import graft.ext.VectorOps
 import org.apache.spark.sql.functions._
 
 /** Oracle-checked queries for the scoring layer (SURVEY.md §7 P3):
@@ -166,9 +167,9 @@ object ScoreQueries {
 
     // ---- ArrayType math over embeddings: L1/L2 norms + reversed dot ----
     "q_array_math" -> QueryDef(
-      """WITH fx AS (
+      s"""WITH fx AS (
         |  SELECT vec_id, i, n,
-        |    CAST(round(CAST(x AS DOUBLE) * 10000000) AS BIGINT) AS e
+        |    ${VectorOps.duckFixed("x")} AS e
         |  FROM (SELECT vec_id, unnest(embedding) AS x,
         |        generate_subscripts(embedding, 1) AS i,
         |        len(embedding) AS n
@@ -186,8 +187,7 @@ object ScoreQueries {
       // aggregate(zip_with(...)) is what it replaces
       graft.functions.FixedDot.ensureRegistered(spark)
       Tables.embeddings(spark, d)
-        .withColumn("fx", expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))"))
+        .withColumn("fx", VectorOps.fixedEmbedding)
         .select(
           col("vec_id"),
           (expr("aggregate(fx, 0L, (a, x) -> a + abs(x))") / 10000000.0).as("l1"),
@@ -201,9 +201,8 @@ object ScoreQueries {
     //      prep step: 4× smaller vectors for ANN shards): per-vector
     //      max-abs scale, symmetric round-to-nearest code in [-127,127],
     //      reconstruction-error report. All math is INTEGER on the 1e7
-    //      fixed-point grid — code = ((e+s)·254 + s) DIV (2s) − 127
-    //      keeps the numerator non-negative so truncating DIV (Spark)
-    //      and floor // (DuckDB) agree, and err is the exact integer
+    //      fixed-point grid — the code is VectorOps.quantCodeSql (its
+    //      DuckDB twin duckQuantCode), and err is the exact integer
     //      |e·127 − code·s| (units: 1e7-grid × 127). Quantization is
     //      per-vector LOCAL math, so the engine runs it as ONE narrow
     //      higher-order-function pass (transform/zip_with/aggregate
@@ -211,16 +210,16 @@ object ScoreQueries {
     //      ZERO shuffles at any corpus size; the oracle keeps the
     //      relational element-rows spelling. ----
     "q_embed_quant" -> QueryDef(
-      """WITH elems AS (
+      s"""WITH elems AS (
         |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |         CAST(round(CAST(unnest(embedding) AS DOUBLE) * 10000000) AS BIGINT) AS e
+        |         ${VectorOps.duckFixed("unnest(embedding)")} AS e
         |  FROM embeddings
         |), s AS (
         |  SELECT vec_id, MAX(abs(e)) AS s FROM elems GROUP BY vec_id
         |), q AS (
         |  SELECT el.vec_id, el.i, el.e, s.s,
         |         CASE WHEN s.s = 0 THEN 0
-        |              ELSE ((el.e + s.s) * 254 + s.s) // (2 * s.s) - 127
+        |              ELSE ${VectorOps.duckQuantCode("el.e", "s.s")}
         |         END AS code
         |  FROM elems el JOIN s ON s.vec_id = el.vec_id
         |)
@@ -231,12 +230,10 @@ object ScoreQueries {
         |  CAST(SUM(abs(e * 127 - code * s)) AS BIGINT) AS sum_err_q
         |FROM q GROUP BY vec_id ORDER BY vec_id""".stripMargin) { (spark, d) =>
       Tables.embeddings(spark, d)
-        .select(col("vec_id"), expr(
-          "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-          .as("e"))
+        .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
         .withColumn("s", expr("aggregate(e, 0L, (a, x) -> greatest(a, abs(x)))"))
-        .withColumn("code", expr(
-          "transform(e, x -> CASE WHEN s = 0 THEN 0L ELSE ((x + s) * 254 + s) DIV (2 * s) - 127 END)"))
+        .withColumn("code", expr("transform(e, x -> CASE WHEN s = 0 THEN 0L ELSE " +
+          s"${VectorOps.quantCodeSql("x", "s")} END)"))
         .select(col("vec_id"), col("s").as("scale"),
           expr("aggregate(zip_with(code, sequence(1L, size(code)), (c, i) -> c * i), 0L, (a, x) -> a + x)")
             .as("code_sig"),
@@ -261,9 +258,9 @@ object ScoreQueries {
     //      1-row aggregate. The pairwise O(n²) formulation this
     //      replaces never materializes ----
     "q_auc" -> QueryDef(
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT vec_id, label % 2 AS y,
-        |    SUM(CAST(round(CAST(x AS DOUBLE) * 10000000) AS BIGINT)
+        |    SUM(${VectorOps.duckFixed("x")}
         |        * ((i * 2654435761) % 2001 - 1000)) AS s
         |  FROM (SELECT vec_id, label, unnest(embedding) AS x,
         |        generate_subscripts(embedding, 1) AS i
@@ -289,8 +286,8 @@ object ScoreQueries {
       graft.functions.FixedDot.ensureRegistered(spark)
       val scored = Tables.embeddings(spark, d)
         .select((col("label") % 2).as("y"),
-          expr("""fixed_dot(
-            |  transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint)),
+          expr(s"""fixed_dot(
+            |  ${VectorOps.fixedEmbeddingSql},
             |  transform(sequence(1, size(embedding)),
             |            i -> (cast(i as bigint) * 2654435761L) % 2001 - 1000))"""
             .stripMargin).as("s"))
@@ -324,9 +321,9 @@ object ScoreQueries {
     //      after is a 10-row aggregate + one window sum over 10 rows.
     //      All arithmetic integer-exact to the final divisions. ----
     "q_score_deciles" -> QueryDef(
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT vec_id, label % 2 AS y,
-        |    SUM(CAST(round(CAST(x AS DOUBLE) * 10000000) AS BIGINT)
+        |    SUM(${VectorOps.duckFixed("x")}
         |        * ((i * 2654435761) % 2001 - 1000)) AS s
         |  FROM (SELECT vec_id, label, unnest(embedding) AS x,
         |        generate_subscripts(embedding, 1) AS i
@@ -351,8 +348,8 @@ object ScoreQueries {
       graft.functions.FixedDot.ensureRegistered(spark)
       val scored = Tables.embeddings(spark, d)
         .select(col("vec_id"), (col("label") % 2).as("y"),
-          expr("""fixed_dot(
-            |  transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint)),
+          expr(s"""fixed_dot(
+            |  ${VectorOps.fixedEmbeddingSql},
             |  transform(sequence(1, size(embedding)),
             |            i -> (cast(i as bigint) * 2654435761L) % 2001 - 1000))"""
             .stripMargin).as("s"))
@@ -381,13 +378,12 @@ object ScoreQueries {
     //      label agg; every statistic integer-exact to the final
     //      mirrored mean division ----
     "q_embed_health" -> QueryDef(
-      """WITH v AS (
+      s"""WITH v AS (
         |  SELECT label, len(embedding) AS dim,
         |    CASE WHEN len(list_filter(embedding, x -> isnan(CAST(x AS DOUBLE)))) > 0
         |         THEN 1 ELSE 0 END AS has_nan,
         |    (SELECT CAST(SUM(q * q) AS BIGINT) FROM (
-        |       SELECT CAST(round(CAST(unnest(embedding) AS DOUBLE) * 10000000)
-        |         AS BIGINT) AS q)) AS nrm2
+        |       SELECT ${VectorOps.duckFixed("unnest(embedding)")} AS q)) AS nrm2
         |  FROM embeddings
         |)
         |SELECT label, COUNT(*) AS n,
@@ -401,9 +397,7 @@ object ScoreQueries {
         .select(col("label"), size(col("embedding")).cast("long").as("dim"),
           expr("""CASE WHEN exists(embedding, x -> isnan(CAST(x AS DOUBLE)))
                  |THEN 1L ELSE 0L END""".stripMargin).as("has_nan"),
-          expr("""aggregate(
-                 |  transform(embedding,
-                 |    x -> cast(round(cast(x as double) * 10000000, 0) as bigint)),
+          expr(s"""aggregate(${VectorOps.fixedEmbeddingSql},
                  |  0L, (s, q) -> s + q * q)""".stripMargin).as("nrm2"))
         .groupBy("label")
         .agg(count(lit(1)).as("n"),
@@ -429,7 +423,7 @@ object ScoreQueries {
       s"""WITH scored AS (
          |  SELECT vec_id, ${Hashing.duckH60("vec_id", "'fold'")} % 5 AS fold,
          |    label % 2 AS y,
-         |    SUM(CAST(round(CAST(x AS DOUBLE) * 10000000) AS BIGINT)
+         |    SUM(${VectorOps.duckFixed("x")}
          |        * ((i * 2654435761) % 2001 - 1000)) AS s
          |  FROM (SELECT vec_id, label, unnest(embedding) AS x,
          |        generate_subscripts(embedding, 1) AS i
@@ -458,8 +452,8 @@ object ScoreQueries {
         .select(col("vec_id"),
           (Hashing.h60(col("vec_id"), lit("fold")) % 5).as("fold"),
           (col("label") % 2).as("y"),
-          expr("""fixed_dot(
-            |  transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint)),
+          expr(s"""fixed_dot(
+            |  ${VectorOps.fixedEmbeddingSql},
             |  transform(sequence(1, size(embedding)),
             |            i -> (cast(i as bigint) * 2654435761L) % 2001 - 1000))"""
             .stripMargin).as("s"))
@@ -599,9 +593,9 @@ object ScoreQueries {
     * corpus count `n`, and the upper-triangle exact cell sums `g`.
     */
   private lazy val duckGramCtes: String =
-    """q AS (
+    s"""q AS (
       |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-      |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 10000000) AS BIGINT) AS q
+      |    ${VectorOps.duckFixed("unnest(embedding)")} AS q
       |  FROM embeddings
       |), n AS (SELECT COUNT(*) AS n FROM embeddings),
       |g AS (
@@ -620,9 +614,7 @@ object ScoreQueries {
     val dim = PCA_DIM
     val cells = dim * (dim + 1) / 2
     val partials = Tables.embeddings(spark, d)
-      .select(expr(
-        "transform(embedding, x -> cast(round(cast(x as double) * 10000000, 0) as bigint))")
-        .as("q"))
+      .select(VectorOps.fixedEmbedding.as("q"))
       .as[Array[Long]]
       .mapPartitions { it =>
         val acc = Array.fill(cells)(java.math.BigInteger.ZERO)

@@ -27,18 +27,14 @@ object Scorer {
   val K = 8        // embedding size (EMBED_SIZE analog)
   val NUM_ITEMS = 20 // scored item slice per user in the demo query
 
-  /** JVM-side twin of [[Hashing.h60]] (same md5 → same value). */
-  def h60Local(parts: String*): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(parts.mkString(":").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
-
   /** Deterministic rational in [-1, 1] with 3 decimal digits — the one
     * weight-quantization formula (Lifecycle.epochWeights reuses it).
     */
-  def rat(parts: String*): Double = ((h60Local(parts: _*) % 2001L) - 1000L) / 1000.0
+  def rat(parts: String*): Double = {
+    val h = Hashing.h60Jvm(
+      java.security.MessageDigest.getInstance("MD5"), parts.mkString(":"))
+    ((h % 2001L) - 1000L) / 1000.0
+  }
 
   /** k×k first-layer weights W, row-major. */
   def weightsW: Array[Array[Double]] =

@@ -26,7 +26,7 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("three epochs -> memoized splits, accumulated log, argmax selection") {
-    val workDir = Files.createTempDirectory("lc").toString
+    val workDir = tempDir("lc").toString
     val epochs = 1 to Lifecycle.EPOCHS
     Lifecycle.runEpochs(spark, sf(), workDir, epochs.take(1))
     val cacheStamp = Files.getLastModifiedTime(
@@ -97,7 +97,7 @@ class LifecycleSpec extends SparkSpec {
 
   test("checkpointBest rethrows a failed save only after the other saves finished") {
     import spark.implicits._
-    val workDir = Files.createTempDirectory("lc_fail").toString
+    val workDir = tempDir("lc_fail").toString
     val ckpt = java.nio.file.Paths.get(s"$workDir/ckpt")
     // the first winner's checkpoint path runs under a regular FILE, so
     // its save fails at once; eleven more saves are still to run
@@ -130,7 +130,7 @@ class LifecycleSpec extends SparkSpec {
     def workDirs = tmp.listFiles().map(_.getName)
       .filter(_.startsWith("graft_lifecycle")).toSet
     val before = workDirs
-    val missing = Files.createTempDirectory("lc_missing").resolve("absent")
+    val missing = tempDir("lc_missing").resolve("absent")
     intercept[Exception] {
       SparkEntry.defs("q_lifecycle").build(spark, missing.toString).collect()
     }
@@ -161,7 +161,7 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("known-schema reads of the split cache, metrics log and checkpoints match inference") {
-    val workDir = Files.createTempDirectory("readschema").toString
+    val workDir = tempDir("readschema").toString
     // cache miss: every relation is written and read back with its own schema
     val (splits, negatives) =
       etl.SplitCache.cachedPipeline(spark, sf(), s"$workDir/cache")

@@ -151,7 +151,7 @@ class MemoSpec extends SparkSpec {
   }
 
   test("regime-gate counts are Memo entries: built once, dropped by release") {
-    val d = java.nio.file.Files.createTempDirectory("memospec_gate").toString
+    val d = tempDir("memospec_gate").toString
     spark.range(7).toDF("vec_id").write.parquet(s"$d/embeddings.parquet")
     val entry = s"$d:sim.corpusSize"
     def builds = Memo.telemetry(spark).collectFirst {

@@ -26,7 +26,7 @@ class SourcesSpec extends SparkSpec {
 
   private def assertRoundTrip(tag: String)(write: String => Unit)(
       read: String => DataFrame): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(tag).toString
+    val dir = tempDir(tag).toString
     write(dir)
     val back = read(dir)
     assert(back.count() == base.count())

@@ -11,7 +11,7 @@ class SplitCacheSpec extends SparkSpec {
   private def splitsOf = Splits.leaveTwoOut(Splits.ranked(Interactions(spark, sf())))
 
   test("writeOnce materializes once and replays identically") {
-    val dir = Files.createTempDirectory("splitcache").toString
+    val dir = tempDir("splitcache").toString
     val live = splitsOf.orderBy("user_id", "domain")
     val first = SplitCache.writeOnce(spark, live, s"$dir/splits")
     val mtime = Files.getLastModifiedTime(
@@ -28,7 +28,7 @@ class SplitCacheSpec extends SparkSpec {
   }
 
   test("cachedPipeline: concurrent materialization equals direct recompute") {
-    val dir = Files.createTempDirectory("splitcache").toString
+    val dir = tempDir("splitcache").toString
     val (splits, negs) =
       SplitCache.cachedPipeline(spark, sf(), s"$dir/cache")
     // the concurrently-built caches must equal their sequential
@@ -59,7 +59,7 @@ class SplitCacheSpec extends SparkSpec {
   }
 
   test("cachedPipeline rethrows a failed write only after the other write finished") {
-    val cache = Files.createTempDirectory("splitcache").toString + "/cache"
+    val cache = tempDir("splitcache").toString + "/cache"
     // a committed but corrupt splits table: its read-back fails while the
     // negatives write is still running
     val corrupt = java.nio.file.Paths.get(s"$cache/splits")
@@ -79,7 +79,7 @@ class SplitCacheSpec extends SparkSpec {
   test("racing writeOnce callers converge on one committed copy") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val dir = Files.createTempDirectory("splitcache").toString
+    val dir = tempDir("splitcache").toString
     val path = s"$dir/splits"
     val expected = splitsOf.collect()
       .map(_.toSeq.toString).sorted.toSeq
@@ -103,7 +103,7 @@ class SplitCacheSpec extends SparkSpec {
   }
 
   test("partial write (no _SUCCESS marker) is recomputed, not trusted") {
-    val dir = Files.createTempDirectory("splitcache").toString
+    val dir = tempDir("splitcache").toString
     // simulate a crashed writer: directory exists, data file present,
     // no _SUCCESS commit marker
     val path = java.nio.file.Paths.get(s"$dir/splits")
@@ -122,7 +122,7 @@ class SplitCacheSpec extends SparkSpec {
     val inter = Interactions(spark, sf())
     val preCached = Interactions.cached(spark, sf())
     assert(preCached.storageLevel.useMemory, "pre-persist failed")
-    val dir = Files.createTempDirectory("splitcache").toString
+    val dir = tempDir("splitcache").toString
     try {
       SplitCache.cachedPipeline(spark, sf(), dir)
       assert(inter.storageLevel.useMemory,

@@ -84,7 +84,7 @@ class ExtSpec extends SparkSpec {
     // exact loop over the whole duplicated corpus, pair for pair,
     // cosine for cosine
     val OFF = 1000000L
-    val tmp = java.nio.file.Files.createTempDirectory("rep_factor").toString
+    val tmp = tempDir("rep_factor").toString
     val base = spark.read.parquet(sf() + "/embeddings.parquet")
     base.unionByName(base.withColumn("vec_id", col("vec_id") + OFF))
       .unionByName(base.withColumn("vec_id", col("vec_id") + 2 * OFF))
@@ -123,7 +123,7 @@ class ExtSpec extends SparkSpec {
     // factored path (rep mining + rank-with-ties + member expansion)
     // must reproduce the unfactored banded past-ceiling rows exactly.
     val OFF = 1000000L // multiple of 20: preserves negSlice membership
-    val tmp = java.nio.file.Files.createTempDirectory("hn_factor").toString
+    val tmp = tempDir("hn_factor").toString
     val base = spark.read.parquet(sf() + "/embeddings.parquet")
     base.unionByName(base.withColumn("vec_id", col("vec_id") + OFF))
       .unionByName(base.withColumn("vec_id", col("vec_id") + 2 * OFF))
@@ -220,7 +220,7 @@ class ExtSpec extends SparkSpec {
     // with the pair-exact ceiling at 0 puts the representatives past it
     // too: the factored build mines them with the union generator
     val OFF = 100000L
-    val tmp = java.nio.file.Files.createTempDirectory("lsh_dup").toString
+    val tmp = tempDir("lsh_dup").toString
     val base = spark.read.parquet(sf() + "/embeddings.parquet")
     base.unionByName(base.withColumn("vec_id", col("vec_id") + OFF))
       .write.mode("overwrite").parquet(tmp + "/embeddings.parquet")

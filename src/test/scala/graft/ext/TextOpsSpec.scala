@@ -33,7 +33,7 @@ class TextOpsSpec extends SparkSpec {
     // q_text_fingerprint's builder (k = 8, window 4): a text needs
     // 8 + 3 chars for one window; shorter ones, including those under
     // k, yield no row and no error
-    val tmp = java.nio.file.Files.createTempDirectory("short_docs").toString
+    val tmp = tempDir("short_docs").toString
     docsDF(Seq((1L, "abcdefghijk"), (2L, "short"), (3L, "abcdefgh")))
       .write.mode("overwrite").parquet(tmp + "/documents.parquet")
     val rows = graft.SparkEntry.defs("q_text_fingerprint").build(spark, tmp)

@@ -23,7 +23,7 @@ class RefusalSpec extends SparkSpec {
     */
   private def writeEventsFixture(rows: DataFrame): String = {
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("refusal_ev")
+    val dir = tempDir("refusal_ev")
     val stage = dir.resolve("_stage")
     rows.coalesce(1).write.parquet(stage.toString)
     val p = java.nio.file.Files.list(stage).iterator().asScala

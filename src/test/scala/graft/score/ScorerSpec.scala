@@ -1,7 +1,6 @@
 package graft.score
 
 import graft.SparkSpec
-import java.nio.file.Files
 
 /** Scoring-layer semantics: the S3 checkpoint round-trip and the
   * cross-domain map variants (base orthogonal / v2 independent / v3
@@ -10,7 +9,7 @@ import java.nio.file.Files
 class ScorerSpec extends SparkSpec {
 
   test("checkpoint save/load round-trips weight matrices bit-exactly") {
-    val dir = Files.createTempDirectory("ckpt").toString
+    val dir = tempDir("ckpt").toString
     val weights = Map("W" -> Scorer.weightsW, "E" -> Scorer.itemVecs,
       "W1" -> Scorer.variant2W1)
     Checkpoint.save(spark, s"$dir/m", weights)

@@ -61,7 +61,7 @@ class EventsStreamSpec extends SparkSpec {
   test("checkpointed file sink is exactly-once across restarts") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("eo").toString
+    val base = tempDir("eo").toString
     val stream = MemoryStream[(Long, java.sql.Timestamp, Double)]
     def start() = stream.toDF().toDF("user_id", "ts", "value")
       .writeStream.format("parquet")
