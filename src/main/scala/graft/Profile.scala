@@ -1,8 +1,13 @@
 package graft
 
 /** Dev-only profiler: time named queries (all if none given) against a
-  * scale dir, optionally dumping the formatted physical plan first. Each
-  * query's timing line is followed by its builder stages ([[StageTiming]]).
+  * scale dir, optionally dumping the formatted physical plan first. The
+  * session persists the interaction log up front, as Bench and Verify
+  * do, so plans and timings show the cached-log shapes the suite runs.
+  * Each query's timing line ends with the session's cached storage (all
+  * RDD memory + disk bytes, the figure perfbench samples as
+  * `cached_peak_mb`) and is followed by its builder stages
+  * ([[StageTiming]]).
   *
   *   sbt "runMain graft.Profile /root/testdata/sf0.1 explain q_candidates"
   */
@@ -13,6 +18,9 @@ object Profile {
     val names = args.drop(1).filterNot(_ == "explain")
     val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
+    etl.Interactions.cached(spark, sfDir)
+    def cachedMb = spark.sparkContext.getRDDStorageInfo
+      .map(i => i.memSize + i.diskSize).sum / 1048576.0
     def time(name: String, df: => org.apache.spark.sql.DataFrame): Unit = {
       // clock starts BEFORE the builder is forced: eager builders
       // (streaming runBounded, lifecycle collects) do their work inside
@@ -27,7 +35,8 @@ object Profile {
         ((System.nanoTime() - t0) / 1e9, tBuild, n)
       }
       println(f"==== $name%-28s $el%8.2f s (build $tBuild%.2f)  rows=$n  " +
-        s"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}")
+        s"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}" +
+        f"  cached=$cachedMb%.2f MB")
       StageTiming.drain().foreach { case (stage, sec) =>
         println(f"[stage] $stage%-36s $sec%8.2f s")
       }

@@ -83,22 +83,17 @@ object SplitCache {
   /** The reference's split cache in one call: the splits and the sampled
     * negatives for a scale dir, memoized under `cacheDir`.
     *
-    * The cold build is ONE shared-scan pass: both relations key on the
-    * same (user_id, domain) shuffle, so the pipeline materializes
-    * `Splits.ranked(interactions)` once — the single expensive window
-    * sort — and derives each sink narrowly from it (splits = one hash
-    * agg; negatives = one collect_set agg). Earlier shapes paid the
-    * interactions scan and/or the leave-two-out window up to three times
-    * (r5 cold build ~6s of the 11s q_lifecycle line); this pays it once.
-    * Memory discipline at scale still holds: exactly one full-log window
-    * sort exists in the whole build (the r4 all-parallel variant with
-    * THREE simultaneous full-log sorts spilled and collapsed at 30× —
-    * 269s), and the concurrent writes after `ranked` lands are narrow
-    * consumers of the persisted relation. The persist is owned by this
-    * call and released in `finally`, after every write has finished; the
-    * session-shared interactions cache entry (Bench/Verify pre-persist
-    * it) is never touched, so no cross-query eviction (the r4 bench bug).
-    * On a warm cache this is two `_SUCCESS` stats — no job, no persist.
+    * The cold build reads the session's persisted interaction log
+    * ([[Interactions.cached]]) and persists nothing of its own: the log
+    * is hash-partitioned on (user_id, domain) and stored in
+    * [[Splits.splitOrder]], so the splits (`leaveTwoOut(ranked(log))`)
+    * are a sort-free window plus one hash aggregate over the cache, and
+    * the negatives (`negativeSampleScalable(log)`, which never read the
+    * rank) a narrow pass over the same cache. The two writes run
+    * concurrently, and the build pins no second copy of the log. The
+    * log entry is the session's, shared with every other reader, so it
+    * is never unpersisted here (the r4 bench bug evicted it). On a warm
+    * cache this is two `_SUCCESS` stats — no job, no persist.
     *
     * Returns scans of the written tables, `(splits, negatives)`: splits
     * `(user_id, domain, deg, vali_item, test_item)`, negatives PACKED
@@ -119,41 +114,29 @@ object SplitCache {
     }
     val allCached = Seq("splits", "negatives")
       .forall(n => complete(s"$cacheDir/$n"))
-    val ranked =
-      if (allCached) null
-      else Splits.ranked(Interactions(spark, sfDir)).persist()
-    // always-on stage (r14, VERDICT r13 #4): the r14 skew probe showed
-    // this materialization is the ONLY axis-dependent stage of the
-    // whole lifecycle (89.4s zipf vs 19.1s nd warm — the leave-two-out
-    // window's hot-(user,domain) partition is one task's sort), while
-    // the write and digest stages it used to hide inside are
-    // axis-equal. Folding it into whichever write wins the race made
-    // r13's capstone read "negatives write 74s" for what is really the
-    // ranked window — so the cost now lands under its own name in
-    // every artifact. The extra count() action is shared work: the
-    // concurrent writes reuse the persisted relation it materializes.
-    // It runs inside the try, so a failed materialization still
-    // releases the persisted relation.
-    try {
-      if (ranked != null) timed("ranked materialize") { ranked.count() }
-      // both writes are independent narrow consumers of the one
-      // persisted relation, so they run concurrently: the only full-log
-      // sort in the build is `ranked` itself. Both finish before either
-      // failure is rethrown: a write still running when `ranked` is
-      // unpersisted recomputes it from lineage, and a caller cleaning up
-      // `cacheDir` would race its temp directory.
-      val written = graft.Lifecycle.concurrently(Seq(
-        () => timed("splits write") { writeOnce(spark,
-          Splits.leaveTwoOut(ranked), s"$cacheDir/splits") },
-        // the negatives table is stored PACKED — one (user, domain,
-        // items[99]) row instead of 99 long rows (the long form's
-        // ~300M-row parquet encode was the single longest stage of the
-        // 100× build, VERDICT r10 #6)
-        () => timed("negatives write") { writeOnce(spark,
-          Splits.negativeSampleScalable(ranked), s"$cacheDir/negatives") }))
-      (written(0), written(1))
-    } finally {
-      if (ranked != null) ranked.unpersist(false)
-    }
+    lazy val log = Interactions.cached(spark, sfDir)
+    // always-on stage (r14): the log's materialization (orders ⋈
+    // lineitem, the distinct and the split-order sort) lands under its
+    // own name in every artifact instead of inside whichever write wins
+    // the race; on a session whose log is already in memory it is one
+    // scan of the cache. The r14 skew probe found the leave-two-out
+    // window's hot-(user, domain) partition to be the lifecycle's only
+    // axis-dependent cost (89.4s zipf vs 19.1s nd warm, one task's
+    // sort); that window now runs inside `splits write`.
+    if (!allCached) timed("log materialize") { log.count() }
+    // both writes are independent consumers of the one persisted log, so
+    // they run concurrently, and both finish before either failure is
+    // rethrown: a caller cleaning up `cacheDir` would race a write's
+    // temp directory
+    val written = graft.Lifecycle.concurrently(Seq(
+      () => timed("splits write") { writeOnce(spark,
+        Splits.leaveTwoOut(Splits.ranked(log)), s"$cacheDir/splits") },
+      // the negatives table is stored PACKED — one (user, domain,
+      // items[99]) row instead of 99 long rows (the long form's
+      // ~300M-row parquet encode was the single longest stage of the
+      // 100× build, VERDICT r10 #6)
+      () => timed("negatives write") { writeOnce(spark,
+        Splits.negativeSampleScalable(log), s"$cacheDir/negatives") }))
+    (written(0), written(1))
   }
 }

@@ -39,19 +39,29 @@ object Splits {
   private def duckHOrder(salt: String): String =
     Hashing.duckH60("user_id", "item_id", "domain", s"'$salt'")
 
+  /** The leave-two-out window's order in full: the (user_id, domain)
+    * partition key, then seeded h60 order with `item_id` as tie-break.
+    * [[ranked]] windows in it and [[Interactions]] stores the log sorted
+    * by it within each partition, so the window over the persisted log
+    * plans no sort of its own. The planner drops that sort only when the
+    * stored order and the window's order are the same expressions, hence
+    * one definition for both.
+    */
+  def splitOrder: Seq[Column] =
+    Seq(col("user_id"), col("domain"), hOrder(SEED_SPLIT), col("item_id"))
+
   /** The leave-two-out rank: interactions plus `rn`, each item's
-    * position in seeded order within its (user, domain) — ONE
-    * (user_id, domain) shuffle + ONE in-partition sort. The splits and
-    * the negatives are narrow derivations of this relation (agg /
-    * collect_set agg), so the cache build (SplitCache.cachedPipeline)
-    * pays the expensive window exactly once instead of once per sink —
-    * and every derivation keeps the same hash partitioning, so none of
-    * them re-shuffles.
+    * position in seeded order within its (user, domain). Over the
+    * session's persisted log (hash-partitioned on (user_id, domain) and
+    * sorted by [[splitOrder]]) the window plans neither an exchange nor
+    * a sort; over any other input it pays ONE (user_id, domain) shuffle
+    * and ONE in-partition sort. The splits are a narrow aggregate of
+    * this relation, keeping its hash partitioning.
     */
   def ranked(inter: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id", "domain")
-      .orderBy(hOrder(SEED_SPLIT), col("item_id"))
-    inter.withColumn("rn", row_number().over(w))
+    val (key, order) = splitOrder.splitAt(2)
+    inter.withColumn("rn",
+      row_number().over(Window.partitionBy(key: _*).orderBy(order: _*)))
   }
 
   /** Leave-two-out split (Dataset_CDAE.py:91-145) as the aggregate of a

@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.{Hashing, QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -60,12 +60,6 @@ object CurateQueries {
     */
   private val BOOT_R = 32
 
-  /** Cumulative Poisson(1) CDF boundaries scaled to 2^60, so a 60-bit
-    * uniform hash draws a Poisson weight by integer comparison alone
-    * (w = #{k : h ≥ T_k}, capped at 8; P(w>8) ≈ 1.1e-6). Integer
-    * compares replay bit-exact in any engine — no float RNG parity
-    * risk.
-    */
   /** CUPED pre/post boundary — the same date q_incr_agg splits on, so
     * the "experiment start" is consistent across the event-analytics
     * suite. Pre-period covariate = event count before; metric =
@@ -73,10 +67,20 @@ object CurateQueries {
     */
   private val CUPED_CUTOFF = "2024-01-20 00:00:00"
 
+  /** Cumulative Poisson(1) CDF boundaries scaled to 2^60, so a 60-bit
+    * uniform hash draws a Poisson weight by integer comparison alone
+    * (w = #{k : h ≥ T_k}, capped at 8; P(w>8) ≈ 1.1e-6). Integer
+    * compares replay bit-exact in any engine — no float RNG parity
+    * risk.
+    */
   private val POIS_T = Seq(
     424136118829305329L, 848272237658610659L, 1060340297073263324L,
     1131029650211480879L, 1148701988496035267L, 1152236456152946145L,
     1152825534095764625L, 1152909688087595836L)
+
+  /** The Poisson(1) weight [[POIS_T]] draws from the 60-bit hash `h`. */
+  private[graft] def poissonWeight(h: Column): Column =
+    POIS_T.map(t => when(h >= t, 1).otherwise(0)).reduce(_ + _)
 
   /** Directed near-dup edges (u→v, both directions of every verified
     * MinHash pair) — the label-propagation substrate. PERSISTED once
@@ -364,12 +368,11 @@ object CurateQueries {
         .agg(count(lit(1)).as("n"),
           round(sum("p").cast("double") / count(lit(1)), 6).as("mean"))
       val h = Hashing.h60(col("l_orderkey"), col("l_linenumber"), col("r"))
-      val w = POIS_T.map(t => when(h >= t, 1).otherwise(0)).reduce(_ + _)
       val rm = li
         .select(col("l_returnflag"), col("p"),
           explode(expr(s"sequence(0, ${BOOT_R - 1})")).as("r"),
           col("l_orderkey"), col("l_linenumber"))
-        .withColumn("w", w)
+        .withColumn("w", poissonWeight(h))
         .groupBy("l_returnflag", "r")
         .agg(sum(col("p") * col("w")).as("swx"), sum("w").as("sw"))
         .select(col("l_returnflag"), col("r"),

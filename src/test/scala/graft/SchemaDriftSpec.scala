@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.TimestampType
 
 /** Guard against driver testdata schema drift.
   *

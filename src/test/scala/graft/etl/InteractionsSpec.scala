@@ -1,21 +1,52 @@
 package graft.etl
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The skew-aware interactions shape dial (r10): both physical shapes
   * produce the identical relation, and the dial picks the spread shape
-  * exactly when a user exceeds the hot-share ceiling.
+  * exactly when a user exceeds the hot-share ceiling. The log's layout
+  * (sorted by `Splits.splitOrder` within its partitions) lets the split
+  * window skip its sort and shrinks the columnar cache.
   */
 class InteractionsSpec extends SparkSpec {
 
+  /** The log's rows before the distinct, as `Interactions.apply` joins them. */
+  private def joinedRows(d: String) = graft.Tables.orders(spark, d)
+    .join(graft.Tables.lineitem(spark, d),
+      col("l_orderkey") === col("o_orderkey"))
+    .select(col("o_custkey").as("user_id"),
+      col("l_partkey").as("item_id"),
+      when(col("l_partkey") % 2 === 0, "x").otherwise("y").as("domain"))
+
+  /** Run `body` with the session log of `d` persisted, unpersisting it
+    * afterwards only if this call persisted it.
+    */
+  private def withCachedLog[A](d: String)(body: DataFrame => A): A = {
+    val owned = Interactions(spark, d).storageLevel == StorageLevel.NONE
+    val log = Interactions.cached(spark, d)
+    try body(log) finally if (owned) log.unpersist(true)
+  }
+
+  /** Storage bytes (memory + disk) of a persisted relation, materialized. */
+  private def storedBytes(df: DataFrame): Long = {
+    df.count()
+    val id = df.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+    }.getOrElse(fail("relation is not persisted"))
+    spark.sparkContext.getRDDStorageInfo.filter(_.id == id)
+      .map(i => i.memSize + i.diskSize).sum
+  }
+
   test("one-exchange and spread shapes produce the identical relation") {
-    val joined = graft.Tables.orders(spark, sf())
-      .join(graft.Tables.lineitem(spark, sf()),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("user_id"),
-        col("l_partkey").as("item_id"),
-        when(col("l_partkey") % 2 === 0, "x").otherwise("y").as("domain"))
+    val joined = joinedRows(sf())
     val spread = joined.distinct()
     val oneExchange =
       joined.repartition(col("user_id"), col("domain")).distinct()
@@ -43,5 +74,43 @@ class InteractionsSpec extends SparkSpec {
     // the distinct and the window
     assert(userExchanges == 1,
       s"expected exactly one user_id exchange, plan:\n$plan")
+  }
+
+  test("the split window over the persisted log plans no sort outside the cached plan") {
+    withCachedLog(sf()) { log =>
+      val splits = Splits.leaveTwoOut(Splits.ranked(log))
+      splits.collect()
+      // the final adaptive plan; a cached scan is a leaf, so the walk
+      // stops at it and the sort inside the cached plan is not counted
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => q +: nodes(q.plan)
+        case other => other +: other.children.flatMap(nodes)
+      }
+      val plan = splits.queryExecution.executedPlan
+      val all = nodes(plan)
+      assert(all.exists(_.isInstanceOf[WindowExec]) &&
+        all.exists(_.isInstanceOf[InMemoryTableScanExec]), s"plan:\n$plan")
+      assert(!all.exists(_.isInstanceOf[SortExec]),
+        s"the split window re-sorts the cached log, plan:\n$plan")
+      // nor re-exchanges it: the log's one (u, d) repartition is inside
+      // the cached plan
+      assert(!all.exists(_.isInstanceOf[ShuffleExchangeLike]),
+        s"the split window re-exchanges the cached log, plan:\n$plan")
+    }
+  }
+
+  test("the split-order layout caches the log in at most 0.6x the bytes") {
+    val d = sf("sf0.01")
+    // the same rows in the order the distinct emits them (the
+    // one-exchange shape without the sort); persisted and dropped
+    // before the log, whose plan contains this one as a subtree
+    val hashOrder = joinedRows(d).repartition(col("user_id"), col("domain"))
+      .distinct().persist()
+    val unsortedBytes = try storedBytes(hashOrder)
+      finally hashOrder.unpersist(true)
+    val logBytes = withCachedLog(d)(storedBytes)
+    assert(unsortedBytes > 0 && logBytes <= 0.6 * unsortedBytes,
+      s"log $logBytes B vs hash order $unsortedBytes B")
   }
 }

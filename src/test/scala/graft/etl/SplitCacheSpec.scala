@@ -1,7 +1,8 @@
 package graft.etl
 
-import graft.{SparkCounts, SparkSpec}
+import graft.{SparkCounts, SparkSpec, StageTiming}
 import java.nio.file.Files
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** Write-once memoization semantics (S2): second writer is a no-op, and
   * the cached scan equals the recomputed relation.
@@ -56,6 +57,23 @@ class SplitCacheSpec extends SparkSpec {
       Files.getLastModifiedTime(
         java.nio.file.Paths.get(s"$dir/cache/$n/_SUCCESS")))
     assert(stamps == after)
+  }
+
+  test("a cold cachedPipeline pins no second copy of the log") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    StageTiming.drain()
+    SplitCache.cachedPipeline(spark, sf(), tempDir("splitcache").toString + "/cache")
+    val stages = StageTiming.drain().map(_._1)
+    val added = sc.getPersistentRDDs.keySet -- before
+    // the build read the session log, persisted through Interactions.cached
+    val logRdd = Interactions(spark, sf()).queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id }
+    assert(logRdd.isDefined, "cachedPipeline did not read the session log")
+    assert(added.subsetOf(logRdd.toSet),
+      s"cachedPipeline left $added persisted beside the log ${logRdd.get}")
+    assert(stages.contains("splitcache/log materialize") &&
+      !stages.exists(_.contains("ranked")), s"stages: $stages")
   }
 
   test("cachedPipeline rethrows a failed write only after the other write finished") {

@@ -72,21 +72,23 @@ class CurateSpec extends SparkSpec {
       assert(lo <= mean && mean <= hi,
         s"CI [$lo,$hi] does not bracket mean $mean")
     }
-    // Poisson(1) thresholds: empirical mean weight ≈ 1 over n×32 draws
+    // the engine's own Poisson(1) weights over the query's n×32 draws
     val li = graft.Tables.lineitem(spark, d)
     val n = li.count()
     val h = graft.Hashing.h60(col("l_orderkey"), col("l_linenumber"), col("r"))
-    val t0 = 424136118829305329L
-    val w = expr(s"CASE WHEN h >= ${t0}L THEN 1 ELSE 0 END")
     val draws = li.select(col("l_orderkey"), col("l_linenumber"),
         explode(expr("sequence(0, 31)")).as("r"))
-      .withColumn("h", h)
-      .agg(avg(when(col("h") >= t0, 1).otherwise(0)).as("p1plus"))
-      .head().getDouble(0)
+      .withColumn("w", CurateQueries.poissonWeight(h))
+      .agg(avg("w"), avg(when(col("w") >= 1, 1).otherwise(0)))
+      .head()
+    val (meanW, p1plus) = (draws.getDouble(0), draws.getDouble(1))
+    // unit mass: E[w] = 1 with Poisson variance 1; 5σ at 32n draws
+    assert(math.abs(meanW - 1.0) < 5 * math.sqrt(1.0 / (32.0 * n)),
+      s"empirical mean weight $meanW")
     // P(w >= 1) = 1 - e^-1 ≈ 0.632; 5σ tolerance at 32n draws
     val tol = 5 * math.sqrt(0.632 * 0.368 / (32.0 * n))
-    assert(math.abs(draws - (1 - math.exp(-1))) < tol,
-      s"empirical P(w>=1)=$draws")
+    assert(math.abs(p1plus - (1 - math.exp(-1))) < tol,
+      s"empirical P(w>=1)=$p1plus")
   }
 
   test("abtest chi2 recomputes from the 2x2 table") {

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** fixed_dot: codegen and interpreted paths agree with the HOF

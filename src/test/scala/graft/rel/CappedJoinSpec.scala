@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
 class CappedJoinSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ts(us: Long) = timestamp_micros(lit(us))
-
   test("cappedClicks keeps exactly the ActCap most-recent clicks of a hot user") {
     // hot user 1: 100 clicks at t=0..99s; cold user 2: 3 clicks
     val ev = ((1 to 100).map(i => (1L, i.toLong, i.toLong * 1000000, "click")) ++

@@ -1,7 +1,6 @@
 package graft.rel
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
 
 /** The generalized sorted-pass funnel must agree with the fixed 3-stage
   * join-chain formulation — same greedy earliest-strictly-after
