@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.{Hashing, Limits, QueryDef, Tables}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF-Flat approximate nearest neighbor — the coarse-quantizer scale
@@ -747,12 +746,7 @@ object IvfQueries {
         .filter(col("vec_id") =!= col("query_id"))
         .select("query_id", "vec_id").distinct()
 
-      VectorOps.cosineAuto(spark, d, pairs)
-        .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("cos").desc, col("vec_id"))))
-        .filter(col("rn") <= TOP_K)
-        .select(col("query_id"), col("vec_id"), round(col("cos"), 6).as("cos"), col("rn"))
-        .orderBy("query_id", "rn")
+      VectorOps.windowTopK(VectorOps.cosineAuto(spark, d, pairs), TOP_K)
       }
   }
 

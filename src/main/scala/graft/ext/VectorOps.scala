@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.{Limits, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Shared embedding-vector primitives: fixed-point element rows and L2
@@ -16,6 +17,11 @@ import org.apache.spark.sql.functions._
   * vec_id — dot products become a hash join on the dimension index plus a
   * map-side partial sum, the standard distributed formulation. Norms are
   * one hash-aggregate.
+  *
+  * Under [[graft.Limits.corpusBroadcast]] the cosine math runs in memory
+  * instead, over one broadcast [[Corpus]] type and one exact scan,
+  * [[topK]], whose ties go to the smaller id as in [[windowTopK]] and the
+  * oracle windows.
   */
 object VectorOps {
 
@@ -39,8 +45,8 @@ object VectorOps {
   /** int8 code of grid value `v` under per-vector max-abs scale `s`
     * (Spark SQL text, `s` > 0): ((v + s)·254 + s) DIV (2s) − 127 keeps the
     * numerator non-negative, so Spark's truncating DIV and DuckDB's floor
-    * `//` ([[duckQuantCode]]) agree. [[broadcastQuantCorpus]] holds the
-    * JVM copy.
+    * `//` ([[duckQuantCode]]) agree. [[Corpus.quantized]] holds the JVM
+    * copy.
     */
   def quantCodeSql(v: String, s: String): String =
     s"(($v + $s) * 254 + $s) DIV (2 * $s) - 127"
@@ -212,69 +218,153 @@ object VectorOps {
       pairs: DataFrame): DataFrame =
     if (corpusSize(spark, sfDir) > Limits.corpusBroadcast)
       cosine(Tables.embeddings(spark, sfDir), pairs)
-    else cosineByBroadcast(pairs, broadcastCorpus(spark, sfDir))
+    else cosineByBroadcast(pairs, corpus(Tables.embeddings(spark, sfDir)))
 
-  /** Fixed-point vectors + norms collected and broadcast: the fast path
-    * for cosine math whenever the corpus fits an executor broadcast
-    * (~10⁷ × 64 dims ≈ 5 GB ceiling; fine into the millions). Beyond
-    * that, [[cosine]]'s distributed join formulation is the fallback.
+  /** An in-memory vector corpus: `ids` ascending, row `j`'s `dim`
+    * values at `flat(j·dim until (j+1)·dim)` and its L2 norm at
+    * `norms(j)`. The one shape every broadcast cosine path reads: the
+    * exact grid corpus, the int8 corpus ([[quantized]]), a decontam eval
+    * slice and q_nearest_centroid's label centroids (ids = labels).
     */
-  def broadcastCorpus(spark: SparkSession, sfDir: String)
-      : org.apache.spark.broadcast.Broadcast[Map[Long, (Array[Long], Double)]] = {
-    import spark.implicits._
-    val rows = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), fixedEmbedding.as("e"))
-      .as[(Long, Array[Long])].collect()
-    spark.sparkContext.broadcast(rows.map { case (id, e) =>
-      id -> (e, norm(e))
-    }.toMap)
-  }
+  final case class Corpus(ids: Array[Long], flat: Array[Long],
+      norms: Array[Double], dim: Int) {
+    def size: Int = ids.length
 
-  /** int8-QUANTIZED broadcast corpus: per-vector max-abs-scaled codes
-    * (the exact integer math of q_embed_quant, [[quantCodeSql]]) plus
-    * the code-vector L2 norm. Same ceiling as [[broadcastCorpus]] but
-    * ~8× smaller payload (byte codes vs fixed-point longs) — the reason
-    * a serving tier quantizes: more corpus per executor, integer dot
-    * kernels.
-    */
-  def broadcastQuantCorpus(spark: SparkSession, sfDir: String)
-      : org.apache.spark.broadcast.Broadcast[Map[Long, (Array[Byte], Double)]] = {
-    import spark.implicits._
-    val rows = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), fixedEmbedding.as("e"))
-      .as[(Long, Array[Long])].collect()
-    spark.sparkContext.broadcast(rows.map { case (id, e) =>
+    /** Row of `id` by binary search on `ids`; negative when absent. */
+    def row(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+
+    /** A copy of row `j`'s values. */
+    def vector(j: Int): Array[Long] =
+      java.util.Arrays.copyOfRange(flat, j * dim, (j + 1) * dim)
+
+    /** q_sim_quant's corpus: each row replaced by its int8 code under
+      * its max-abs scale `s` (the one JVM copy of [[quantCodeSql]]; an
+      * all-zero row codes to zeros), widened to `Long` so the same
+      * integer dot runs over it, norms recomputed. It is bounded by the
+      * same [[graft.Limits.corpusBroadcast]] as the exact corpus: the
+      * byte payload the codes once travelled in never admitted a larger
+      * corpus.
+      */
+    def quantized: Corpus = Corpus(Array.tabulate(size) { j =>
+      val e = vector(j)
       val s = e.foldLeft(0L)((a, x) => math.max(a, math.abs(x)))
-      val codes = e.map(x =>
-        (if (s == 0L) 0L else ((x + s) * 254 + s) / (2 * s) - 127).toByte)
-      id -> (codes, math.sqrt(codes.map(c => c.toLong * c).sum.toDouble))
-    }.toMap)
+      (ids(j), e.map(x =>
+        if (s == 0L) 0L else ((x + s) * 254 + s) / (2 * s) - 127))
+    })
+
+    /** `dot(q, row j) / (qn · norms(j))` over the `dim` values of `q`
+      * from offset `qo`: the integer dot and the one float divide of
+      * every broadcast cosine. The caller skips zero norms.
+      */
+    def cos(q: Array[Long], qo: Int, qn: Double, j: Int): Double = {
+      val o = j * dim
+      var dot = 0L
+      var i = 0
+      while (i < dim) { dot += q(qo + i) * flat(o + i); i += 1 }
+      dot.toDouble / (qn * norms(j))
+    }
   }
 
-  /** Exact cosine of explicit (query_id, vec_id) pairs against a
-    * [[broadcastCorpus]] — one narrow pass, no |pairs|×dim row explosion
-    * (the join formulation materialized 1.3 G rows at 20 k vectors).
+  object Corpus {
+    /** A corpus of `(id, vector)` rows in any order, all of one length. */
+    def apply(rows: Array[(Long, Array[Long])]): Corpus = {
+      val rs = rows.sortBy(_._1)
+      val dim = if (rs.isEmpty) 0 else rs(0)._2.length
+      require(rs.forall(_._2.length == dim), "corpus rows differ in length")
+      val flat = new Array[Long](rs.length * dim)
+      var j = 0
+      while (j < rs.length) {
+        System.arraycopy(rs(j)._2, 0, flat, j * dim, dim); j += 1
+      }
+      Corpus(rs.map(_._1), flat, rs.map(r => norm(r._2)), dim)
+    }
+  }
+
+  /** Collect an embeddings slice (one job) as a [[Corpus]] of its
+    * fixed-point vectors. Null and empty embeddings are dropped: they
+    * have no element rows in the oracle, hence no cosine. Broadcast, it
+    * is the fast path for cosine math whenever the corpus fits an
+    * executor (callers gate on [[graft.Limits.corpusBroadcast]],
+    * ~10⁷ × 64 longs ≈ 5 GB); past that, [[cosine]]'s distributed join
+    * is the fallback.
     */
-  def cosineByBroadcast(pairs: DataFrame,
-      bc: org.apache.spark.broadcast.Broadcast[Map[Long, (Array[Long], Double)]])
-      : DataFrame = {
-    import pairs.sparkSession.implicits._
+  def corpus(embs: DataFrame): Corpus = {
+    import embs.sparkSession.implicits._
+    Corpus(embs.select(col("vec_id"), fixedEmbedding.as("e"))
+      .as[(Long, Array[Long])].collect()
+      .filter { case (_, e) => e != null && e.nonEmpty })
+  }
+
+  /** The exact top-`k` rows of `c` by cosine to `q` (norm `qn`), best
+    * first, as `(id, cos)`: the one exact scan behind every broadcast
+    * top-k (q_sim_topk, q_sim_quant, q_hard_negatives, the decontam and
+    * nearest-centroid argmax). Rows with norm 0 or `keep(j)` false are
+    * skipped, and so is every row when `qn` is 0. Rows are walked in
+    * ascending id into a primitive insertion buffer with a strict
+    * compare, so on equal cosines the smaller id wins: the
+    * `(cos DESC, vec_id)` order of every oracle window and of
+    * [[windowTopK]]. Fewer than `k` kept rows return them all.
+    */
+  def topK(c: Corpus, q: Array[Long], qn: Double, k: Int,
+      keep: Int => Boolean): Array[(Long, Double)] = {
+    if (!(qn > 0.0) || k <= 0) return Array.empty
+    val cs = new Array[Double](k)
+    val rs = new Array[Int](k)
+    var m = 0
+    var j = 0
+    while (j < c.size) {
+      if (c.norms(j) > 0.0 && keep(j)) {
+        val x = c.cos(q, 0, qn, j)
+        if (m < k || x > cs(m - 1)) {
+          var p = if (m < k) { m += 1; m - 1 } else k - 1
+          while (p > 0 && cs(p - 1) < x) {
+            cs(p) = cs(p - 1); rs(p) = rs(p - 1); p -= 1
+          }
+          cs(p) = x; rs(p) = j
+        }
+      }
+      j += 1
+    }
+    Array.tabulate(m)(i => (c.ids(rs(i)), cs(i)))
+  }
+
+  /** HALF_UP rounding to 6 decimals on the JVM, as Spark's and DuckDB's
+    * `round(cos, 6)`.
+    */
+  def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The window tail of every distributed top-k over `(query_id, vec_id,
+    * cos)` rows: `row_number` per query in `(cos DESC, vec_id)` order —
+    * [[topK]]'s tie rule — kept to `k`, cosine rounded to 6 decimals,
+    * ordered by (query_id, rn).
+    */
+  def windowTopK(cos: DataFrame, k: Int): DataFrame =
+    cos.withColumn("rn", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("cos").desc, col("vec_id"))))
+      .filter(col("rn") <= k)
+      .select(col("query_id"), col("vec_id"), round(col("cos"), 6).as("cos"),
+        col("rn"))
+      .orderBy("query_id", "rn")
+
+  /** Exact cosine of explicit (query_id, vec_id) pairs against corpus
+    * `c`, broadcast — one narrow pass, no |pairs|×dim row explosion
+    * (the join formulation materialized 1.3 G rows at 20 k vectors).
+    * Zero-norm and absent vectors have no defined cosine and emit no
+    * row, as the oracle's `nrm > 0` joins.
+    */
+  def cosineByBroadcast(pairs: DataFrame, c: Corpus): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(c)
     pairs.select(col("query_id"), col("vec_id")).as[(Long, Long)]
       .mapPartitions { it =>
         val c = bc.value
         it.flatMap { case (q, v) =>
-          val (qe, qn) = c(q)
-          val (ve, vn) = c(v)
-          // zero-norm vectors have no defined cosine — skip (oracle
-          // filters nrm > 0 identically); BigDecimal would throw on the
-          // resulting NaN/Infinity otherwise
-          if (qn == 0.0 || vn == 0.0) None
-          else {
-            var dot = 0L
-            var i = 0
-            while (i < qe.length) { dot += qe(i) * ve(i); i += 1 }
-            Some((q, v, dot.toDouble / (qn * vn)))
-          }
+          val i = c.row(q)
+          val j = c.row(v)
+          if (i < 0 || j < 0 || c.norms(i) == 0.0 || c.norms(j) == 0.0) None
+          else Some((q, v, c.cos(c.flat, i * c.dim, c.norms(i), j)))
         }
       }.toDF("query_id", "vec_id", "cos")
   }

@@ -73,6 +73,41 @@ class ExtSpec extends SparkSpec {
     }
   }
 
+  test("VectorOps.topK equals a sorted brute-force scan, ties by smaller id") {
+    // rows given out of id order; 9 and 3 repeat row 5, and 12 and 20
+    // are 2× and 4× row 7, so each group has bit-equal cosines to any
+    // query (scaling by a power of two is exact in dot, sqrt and divide)
+    val base = Array(
+      5L -> Array(3L, -1L, 4L), 7L -> Array(-2L, 5L, 1L),
+      1L -> Array(0L, 0L, 0L), 2L -> Array(6L, 2L, -3L),
+      11L -> Array(-1L, -1L, 2L))
+    val rows = base ++ Array(
+      9L -> base(0)._2, 3L -> base(0)._2,
+      12L -> base(1)._2.map(_ * 2), 20L -> base(1)._2.map(_ * 4))
+    val c = VectorOps.Corpus(rows)
+    assert(c.ids.sameElements(rows.map(_._1).sorted))
+    assert(c.row(4L) < 0)
+    def ref(q: Array[Long], k: Int, keep: Long => Boolean) = {
+      val qn = math.sqrt(q.map(x => (x * x).toDouble).sum)
+      rows.collect { case (id, v) if keep(id) && v.exists(_ != 0L) =>
+        val n = math.sqrt(v.map(x => (x * x).toDouble).sum)
+        (id, q.zip(v).map { case (a, b) => a * b }.sum.toDouble / (qn * n))
+      }.sortBy { case (id, cos) => (-cos, id) }.take(k).toSeq
+    }
+    val queries = Seq(Array(3L, -1L, 4L), Array(-2L, 5L, 1L), Array(1L, 1L, 0L))
+    val keeps: Seq[Long => Boolean] = Seq(_ => true, _ % 2 == 1, _ != 9L)
+    var tied = 0
+    for (q <- queries; keep <- keeps; k <- 1 to rows.length + 2) {
+      val expect = ref(q, k, keep)
+      val got = VectorOps.topK(c, q, VectorOps.norm(q), k, j => keep(c.ids(j)))
+      assert(got.toSeq == expect, s"q=${q.toSeq} k=$k")
+      if (expect.map(_._2).distinct.length < expect.length) tied += 1
+    }
+    assert(tied > 0, "no planted tie reached a top-k window")
+    // a zero query has no cosine
+    assert(VectorOps.topK(c, Array(0L, 0L, 0L), 0.0, 3, _ => true).isEmpty)
+  }
+
   test("representative factoring over duplicated vectors is bit-exact") {
     // three copies of every vector under shifted ids, with the pair-exact
     // ceiling forced to the base count (the base holds every distinct
@@ -262,7 +297,7 @@ class ExtSpec extends SparkSpec {
       .toDF("query_id", "vec_id")
     // same rounding as the query's round(cos, 6): HALF_UP away from zero
     val exact = VectorOps.cosineByBroadcast(pairs,
-      VectorOps.broadcastCorpus(spark, sf()))
+      VectorOps.corpus(graft.Tables.embeddings(spark, sf())))
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         BigDecimal(r.getDouble(2))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
@@ -320,7 +355,7 @@ class ExtSpec extends SparkSpec {
         .toDF("query_id", "vec_id")
     }
     val decExact = VectorOps.cosineByBroadcast(decPairs,
-      VectorOps.broadcastCorpus(spark, sf()))
+      VectorOps.corpus(graft.Tables.embeddings(spark, sf())))
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         BigDecimal(r.getDouble(2))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
@@ -347,7 +382,7 @@ class ExtSpec extends SparkSpec {
       hD.map(t => (t._1, t._2)).toSeq.toDF("query_id", "vec_id")
     }
     val hnExact = VectorOps.cosineByBroadcast(hnPairs,
-      VectorOps.broadcastCorpus(spark, sf()))
+      VectorOps.corpus(graft.Tables.embeddings(spark, sf())))
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         BigDecimal(r.getDouble(2))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
