@@ -2,10 +2,10 @@ package graft
 
 import scala.util.DynamicVariable
 
-/** The size ceilings at which an operator switches formulation. Every
-  * gate reads the active value on the driver while it builds its plan,
-  * never inside a task closure, so a built DataFrame keeps the branch it
-  * was planned with.
+/** The ceilings (three sizes and one share) at which an operator
+  * switches formulation. Every gate reads the active value on the
+  * driver while it builds its plan, never inside a task closure, so a
+  * built DataFrame keeps the branch it was planned with.
   *
   * [[forcing]] replaces the ceilings inside one block and restores them
   * on exit (also on a throw). It is a test hook: specs use it to reach
@@ -40,17 +40,33 @@ object Limits {
     */
   val CATALOG_BROADCAST_MAX: Long = 20000000L
 
+  /** A user key holding more than this share of the orders fact makes
+    * the interaction log's one-exchange shape a skew bomb (its whole RAW
+    * row mass lands on one reduce task before any dedup); 2% ≈ 0.6× a
+    * 32-way fair share and 20× a 1000-way one — past it
+    * [[graft.etl.Interactions.apply]] takes the spread shape, whose
+    * map-side partial dedup + (u, i, d) exchange is worth its extra
+    * window exchange. Measured A/B at 100× (q_leave_two_out cold):
+    * uniform axis one-exchange 24.5s vs spread 52.8s; zipf axis (hot
+    * user = 20%) one-exchange 237.7s vs spread 106.1s — no single static
+    * shape wins both, so the shape is a count-derived dial like the
+    * broadcast dials above.
+    */
+  val HOT_USER_SHARE_MAX: Double = 0.02
+
   /** One value per ceiling; the defaults are the shipped ceilings. */
   final case class Ceilings(
       corpusBroadcast: Long = CORPUS_BROADCAST_MAX,
       embedPairExact: Long = EMBED_PAIR_EXACT_MAX,
-      catalogBroadcast: Long = CATALOG_BROADCAST_MAX)
+      catalogBroadcast: Long = CATALOG_BROADCAST_MAX,
+      hotUserShare: Double = HOT_USER_SHARE_MAX)
 
   private val active = new DynamicVariable(Ceilings())
 
   def corpusBroadcast: Long = active.value.corpusBroadcast
   def embedPairExact: Long = active.value.embedPairExact
   def catalogBroadcast: Long = active.value.catalogBroadcast
+  def hotUserShare: Double = active.value.hotUserShare
 
   /** Run `body` with `c` as the active ceilings. */
   def forcing[T](c: Ceilings)(body: => T): T = active.withValue(c)(body)

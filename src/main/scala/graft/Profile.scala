@@ -6,8 +6,9 @@ package graft
   * do, so plans and timings show the cached-log shapes the suite runs.
   * Each query's timing line ends with the session's cached storage (all
   * RDD memory + disk bytes, the figure perfbench samples as
-  * `cached_peak_mb`) and is followed by its builder stages
-  * ([[StageTiming]]).
+  * `cached_peak_mb`) and its count of persisted RDDs (materialized or
+  * not, so a new pin shows even before its first action), and is
+  * followed by its builder stages ([[StageTiming]]).
   *
   *   sbt "runMain graft.Profile /root/testdata/sf0.1 explain q_candidates"
   */
@@ -21,6 +22,7 @@ object Profile {
     etl.Interactions.cached(spark, sfDir)
     def cachedMb = spark.sparkContext.getRDDStorageInfo
       .map(i => i.memSize + i.diskSize).sum / 1048576.0
+    def persisted = spark.sparkContext.getPersistentRDDs.size
     def time(name: String, df: => org.apache.spark.sql.DataFrame): Unit = {
       // clock starts BEFORE the builder is forced: eager builders
       // (streaming runBounded, lifecycle collects) do their work inside
@@ -36,7 +38,7 @@ object Profile {
       }
       println(f"==== $name%-28s $el%8.2f s (build $tBuild%.2f)  rows=$n  " +
         s"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}" +
-        f"  cached=$cachedMb%.2f MB")
+        f"  cached=$cachedMb%.2f MB persisted=$persisted")
       StageTiming.drain().foreach { case (stage, sec) =>
         println(f"[stage] $stage%-36s $sec%8.2f s")
       }

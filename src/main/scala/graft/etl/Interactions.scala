@@ -1,8 +1,9 @@
 package graft.etl
 
-import graft.{Memo, Tables}
+import graft.{Limits, Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SortOrders
 
 /** The engine's interaction log — the long-form DataFrame equivalent of the
   * reference's `dict[user_id → list[item_id]]` pickles per domain
@@ -21,19 +22,6 @@ import org.apache.spark.sql.functions._
   * `main_my.py:83,88` is the scale-fatal step we deliberately avoid).
   */
 object Interactions {
-
-  /** A user key holding more than this share of the fact table makes the
-    * one-exchange shape a skew bomb (its whole RAW row mass lands on one
-    * reduce task before any dedup); 2% ≈ 0.6× a 32-way fair share and
-    * 20× a 1000-way one — past it the spread shape's map-side partial
-    * dedup + (u, i, d) exchange is worth its extra window exchange.
-    * Measured A/B at 100× (q_leave_two_out cold): uniform axis
-    * one-exchange 24.5s vs spread 52.8s; zipf axis (hot user = 20%)
-    * one-exchange 237.7s vs spread 106.1s — no single static shape wins
-    * both, so the shape is a count-derived dial like the engine's
-    * broadcast/LSH/IVF dials.
-    */
-  val HOT_USER_SHARE_MAX = 0.02
 
   /** Largest single-user share of the orders fact — ONE tiny two-level
     * aggregate (map-side combinable, 1-row result), memoized in [[Memo]].
@@ -60,7 +48,7 @@ object Interactions {
     *    including scans of the session-persisted cache, whose stored
     *    partitioning is this one — plans zero further exchanges
     *    (q_lifecycle 100× cold build: ranked materialize 52.8 → 24.5s);
-    *  - a hot user past [[HOT_USER_SHARE_MAX]]: the r9 spread shape
+    *  - a hot user past [[graft.Limits.hotUserShare]]: the r9 spread shape
     *    (distinct exchanges on (u, i, d) with map-side partial dedup,
     *    consumers re-exchange for (u, d)) — concentrating the hot
     *    user's RAW pre-dedup rows onto one task measured 2.2× slower
@@ -80,16 +68,24 @@ object Interactions {
     *    order, so the sf0.1 log (599,351 rows) caches in 5.06 MB instead
     *    of 9.13 MB (InteractionsSpec bounds the ratio at sf0.01);
     *  - on the one-exchange shape, the split window over the cache
-    *    (q_leave_two_out's Memo build, SplitCache's splits write) plans
+    *    (q_leave_two_out's Memo build, the user-sliced rankers' own
+    *    splits, SplitCache's splits write) plans
     *    `Window ← Project ← InMemoryTableScan` with no sort.
     *
-    * The price is paid once, by the log's first reader: the sort's
-    * comparator evaluates the md5-based h60 key on every user_id tie.
-    * On a 4-core host at sf0.1 (perfbench `short_queries`, 6 pairs)
-    * q_rank_topk_agg, the first reader there, took +0.35 s in the median
-    * while its `memo/splits.leaveTwoOut` window stage fell 2.84 → 1.88 s.
-    * A cheaper (user_id, domain, item_id) sort compresses the same but
-    * leaves the window's sort in place, and measured no wall-time gain.
+    * The price is paid once, by the log's first reader, and the sort
+    * keeps it to one h60 per row: it projects [[Splits.splitKey]] as a
+    * column, sorts on that column with [[SortOrders.ascendingAs]]
+    * declaring it equal to the key expression, then drops the column.
+    * The comparator therefore compares a long, never the md5, and the
+    * cache stores the same columns as an unsorted log; the sorted plan
+    * still reports the [[Splits.splitOrder]] expressions as its order,
+    * which is what lets the window over the cache skip its sort. A
+    * sort on the expression itself evaluated md5 inside the comparator
+    * on every (user_id, domain) tie, and doubled q_user_collect at a
+    * ScaleGen 10× copy; with the key column it fell again, 16–17 s →
+    * 11.5–12.2 s on a 10× nd copy (4-core host). A cheaper (user_id, domain, item_id) sort
+    * compresses the same but leaves the window's sort in place, and
+    * measured no wall-time gain.
     * On the spread shape the window re-exchanges anyway, so there the
     * sort buys the compression only; a ScaleGen 10× zipf copy (spread
     * shape) still ran q_lifecycle warm in 18.9 s against 28.3 s unsorted,
@@ -103,10 +99,16 @@ object Interactions {
         col("l_partkey").as("item_id"),
         when(col("l_partkey") % 2 === 0, "x").otherwise("y").as("domain"))
     val log =
-      if (maxUserShare(spark, sfDir) > HOT_USER_SHARE_MAX) joined.distinct()
+      if (maxUserShare(spark, sfDir) > Limits.hotUserShare) joined.distinct()
       else joined.repartition(col("user_id"), col("domain")).distinct()
-    log.sortWithinPartitions(Splits.splitOrder: _*)
+    log.withColumn(SplitKeyCol, Splits.splitKey)
+      .sortWithinPartitions(Splits.splitOrderBy(
+        SortOrders.ascendingAs(col(SplitKeyCol), Splits.splitKey)): _*)
+      .drop(SplitKeyCol)
   }
+
+  /** The sort's temporary copy of [[Splits.splitKey]]; never stored. */
+  private val SplitKeyCol = "split_key"
 
   /** [[apply]] persisted for the session — the interaction log is the
     * pipeline's shared base relation (every E2/E3 operator reads it), so

@@ -40,15 +40,24 @@ object Splits {
     Hashing.duckH60("user_id", "item_id", "domain", s"'$salt'")
 
   /** The leave-two-out window's order in full: the (user_id, domain)
-    * partition key, then seeded h60 order with `item_id` as tie-break.
-    * [[ranked]] windows in it and [[Interactions]] stores the log sorted
-    * by it within each partition, so the window over the persisted log
-    * plans no sort of its own. The planner drops that sort only when the
-    * stored order and the window's order are the same expressions, hence
-    * one definition for both.
+    * partition key, then seeded h60 order ([[splitKey]]) with `item_id`
+    * as tie-break. [[ranked]] windows in it and [[Interactions]] stores
+    * the log sorted by it within each partition, so the window over the
+    * persisted log plans no sort of its own. The planner drops that sort
+    * only when the stored order and the window's order are the same
+    * expressions, hence one definition for both.
     */
-  def splitOrder: Seq[Column] =
-    Seq(col("user_id"), col("domain"), hOrder(SEED_SPLIT), col("item_id"))
+  def splitOrder: Seq[Column] = splitOrderBy(splitKey)
+
+  /** The seeded h60 position of [[splitOrder]]. */
+  def splitKey: Column = hOrder(SEED_SPLIT)
+
+  /** [[splitOrder]] with `key` in place of [[splitKey]]: how
+    * [[Interactions]] sorts on a precomputed key column that it declares
+    * equal to [[splitKey]].
+    */
+  def splitOrderBy(key: Column): Seq[Column] =
+    Seq(col("user_id"), col("domain"), key, col("item_id"))
 
   /** The leave-two-out rank: interactions plus `rn`, each item's
     * position in seeded order within its (user, domain). Over the
@@ -421,19 +430,22 @@ object Splits {
        |  WHERE rn <= $NUM_NEG
        |)""".stripMargin
 
-  /** The [[leaveTwoOut]] splits persisted once per (session, scale dir):
-    * the split table is the pipeline's second shared base relation after
-    * the interaction log — candidate assembly AND the join-formulation
-    * positives both read it, and a real evaluation run materializes the
-    * splits once (SplitCache), not per reader. Lazy persist — the first
-    * consumer pays the window.
+  /** The [[leaveTwoOut]] splits of the whole log, persisted once per
+    * (session, scale dir): the split table is the pipeline's second
+    * shared base relation after the interaction log. Its readers all
+    * need every user: q_leave_two_out, the unfiltered [[candidates]]
+    * (hence [[candidatesCached]]) and `Metrics.posRanksJoin`'s
+    * positives, and a real evaluation run materializes the splits once
+    * (SplitCache), not per reader. User-sliced callers do not read it
+    * (see [[candidates]]). Lazy persist — the first consumer pays the
+    * window.
     */
   def leaveTwoOutCached(spark: SparkSession, sfDir: String): DataFrame =
     graft.Memo.cached(spark, sfDir, "splits.leaveTwoOut") {
       leaveTwoOut(ranked(Interactions(spark, sfDir))).persist()
     }
 
-  /** The UNFILTERED [[candidates]] relation persisted once per (session,
+  /** The unfiltered [[candidates]] relation persisted once per (session,
     * scale dir), the way `DedupQueries.clusterMembers` memoizes cluster
     * membership: three suite consumers otherwise rebuild the whole
     * splits→negatives→candidates subtree (q_candidates, q_rank_metrics,
@@ -450,22 +462,40 @@ object Splits {
     }
 
   /** Candidate assembly (my_utils.py:132-133): the 99 negatives plus the
-    * planted held-out positive, per (user, domain). `userFilter` slices
-    * users without changing any user's candidate set (see
-    * [[negativeSampleScalable]]).
+    * planted held-out positive, per (user, domain), for every user. The
+    * positives come from the memoized [[leaveTwoOutCached]] splits.
+    */
+  def candidates(spark: SparkSession, sfDir: String): DataFrame =
+    assemble(Interactions.cached(spark, sfDir), lit(true),
+      leaveTwoOutCached(spark, sfDir))
+
+  /** [[candidates]] for the users `userFilter` keeps, without changing
+    * any user's candidate set (see [[negativeSampleScalable]]). The
+    * slice builds its own splits in its plan, as
+    * `leaveTwoOut(ranked(log.filter(userFilter)))`: the filter keeps
+    * the persisted log's partitioning and order, so the window over it
+    * plans no sort and no exchange, and the slice neither builds nor
+    * pins every user's splits (q_rank_topk reads 1/20 of them). Nothing
+    * is persisted and no Memo entry is added.
     */
   def candidates(spark: SparkSession, sfDir: String,
-      userFilter: Column = lit(true)): DataFrame = {
-    // share one interactions materialization across the query: the E3
-    // pipeline reads it three times (catalog collect, sampler positives,
-    // leave-two-out window) and the CacheManager substitutes the cached
-    // relation into every identical subtree — one persist covers all
-    // three, turning two redundant orders⋈lineitem distincts into
-    // in-memory scans (the same sharing cachedPipeline does explicitly)
+      userFilter: Column): DataFrame = {
     val inter = Interactions.cached(spark, sfDir)
+    assemble(inter, userFilter, leaveTwoOut(ranked(inter.filter(userFilter))))
+  }
+
+  /** The sampled negatives of `userFilter`'s users over `inter` plus the
+    * `test_item` of each of `splits`' rows (the same users) as the
+    * positive. `inter` is the session's persisted log: the pipeline
+    * reads it three times (catalog collect, sampler positives,
+    * leave-two-out window) and the CacheManager substitutes it into
+    * every identical subtree, so all three are in-memory scans.
+    */
+  private def assemble(inter: DataFrame, userFilter: Column,
+      splits: DataFrame): DataFrame = {
     val negs = explodeNegatives(negativeSampleScalable(inter, userFilter))
       .select(col("user_id"), col("domain"), col("item_id"), lit(0).as("is_positive"))
-    val pos = leaveTwoOutCached(spark, sfDir).filter(userFilter)
+    val pos = splits
       .select(col("user_id"), col("domain"), col("test_item").as("item_id"),
         lit(1).as("is_positive"))
     negs.unionAll(pos)

@@ -865,20 +865,11 @@ object SimilarityQueries {
     // stage-attributed (r13, VERDICT r12 #5): at every tested corpus
     // scale (200k vectors at 100× — far under the 10M ceiling) THIS is
     // the branch capstones run, so the artifact needs its split too:
-    // corpus+label broadcast build vs the O(|Q|·n·d) scan loop
-    // (= the query remainder)
-    val bc = graft.StageTiming.timed("hardneg/broadcast") {
-      spark.sparkContext.broadcast(VectorOps.corpus(Tables.embeddings(spark, d)))
-    }
-    // labels aligned with the corpus rows
-    val lab = {
-      val c = bc.value
-      val a = new Array[Int](c.size)
-      labels.as[(Long, Int)].collect().foreach { case (id, l) =>
-        val j = c.row(id)
-        if (j >= 0) a(j) = l
-      }
-      spark.sparkContext.broadcast(a)
+    // corpus+label broadcast build (one collect) vs the O(|Q|·n·d) scan
+    // loop (= the query remainder)
+    val (bc, lab) = graft.StageTiming.timed("hardneg/broadcast") {
+      val (c, a) = VectorOps.labelledCorpus(Tables.embeddings(spark, d))
+      (spark.sparkContext.broadcast(c), spark.sparkContext.broadcast(a))
     }
     labels.filter(expr(negSlice))
       .repartition(spark.sparkContext.defaultParallelism)

@@ -292,8 +292,23 @@ object VectorOps {
     import embs.sparkSession.implicits._
     Corpus(embs.select(col("vec_id"), fixedEmbedding.as("e"))
       .as[(Long, Array[Long])].collect()
-      .filter { case (_, e) => e != null && e.nonEmpty })
+      .filter { case (_, e) => hasCosine(e) })
   }
+
+  /** [[corpus]] plus each kept row's `label`, from the same one collect:
+    * the label array is aligned with the corpus rows (q_hard_negatives'
+    * different-label filter).
+    */
+  def labelledCorpus(embs: DataFrame): (Corpus, Array[Int]) = {
+    import embs.sparkSession.implicits._
+    val rows = embs.select(col("vec_id"), col("label"), fixedEmbedding.as("e"))
+      .as[(Long, Int, Array[Long])].collect()
+      .filter { case (_, _, e) => hasCosine(e) }
+      .sortBy(_._1)
+    (Corpus(rows.map { case (id, _, e) => (id, e) }), rows.map(_._2))
+  }
+
+  private def hasCosine(e: Array[Long]): Boolean = e != null && e.nonEmpty
 
   /** The exact top-`k` rows of `c` by cosine to `q` (norm `qn`), best
     * first, as `(id, cos)`: the one exact scan behind every broadcast

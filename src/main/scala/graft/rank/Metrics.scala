@@ -76,7 +76,8 @@ object Metrics {
 
   /** User-sliced scored candidates: the filter stays pushed into the
     * sampler (beats a post-hoc filter over the full build ~5× when the
-    * slice runs alone — see q_rank_topk).
+    * slice runs alone — see q_rank_topk) and into the slice's own splits
+    * ([[Splits.candidates]]), so no all-user relation is built or pinned.
     */
   def scoredCandidates(spark: SparkSession, sfDir: String,
       userFilter: org.apache.spark.sql.Column): DataFrame =

@@ -1,7 +1,9 @@
 package graft.etl
 
-import graft.SparkSpec
+import graft.{Limits, SparkSpec}
+import graft.functions.H60Expr
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
@@ -112,5 +114,54 @@ class InteractionsSpec extends SparkSpec {
     val logBytes = withCachedLog(d)(storedBytes)
     assert(unsortedBytes > 0 && logBytes <= 0.6 * unsortedBytes,
       s"log $logBytes B vs hash order $unsortedBytes B")
+  }
+
+  test("the log's sort compares a precomputed split key, never the h60 expression") {
+    // every physical node, into cached plans too: other suites may have
+    // persisted this log, and then its sort sits in the cached plan
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case s: InMemoryTableScanExec => s +: nodes(s.relation.cachedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val plan = Interactions(spark, sf()).queryExecution.executedPlan
+    val sorts = nodes(plan).collect { case s: SortExec => s }
+    assert(sorts.nonEmpty, s"the log is not sorted, plan:\n$plan")
+    // a SortOrder's other children (its declared equal orderings) are
+    // never evaluated; only the compared key is
+    val hashed = sorts.flatMap(_.sortOrder.map(_.child))
+      .filter(_.exists(_.isInstanceOf[H60Expr]))
+    assert(hashed.isEmpty, s"the sort compares $hashed, plan:\n$plan")
+  }
+
+  test("the forced spread shape stores the same log in split order") {
+    val spreadCeiling = Limits.Ceilings(hotUserShare = 0.0)
+    val oneExchange = Interactions(spark, sf())
+    val spread = Limits.forcing(spreadCeiling)(Interactions(spark, sf()))
+    def repartitions(df: DataFrame) = df.queryExecution.logical.collect {
+      case r: RepartitionByExpression => r
+    }.size
+    assert(repartitions(oneExchange) == 1 && repartitions(spread) == 0,
+      "the ceiling did not switch the shape")
+    assert(spread.count() == oneExchange.count() &&
+      spread.exceptAll(oneExchange).isEmpty &&
+      oneExchange.exceptAll(spread).isEmpty)
+    // within each partition, rows ascend in (user_id, domain, h60, item_id)
+    import spark.implicits._
+    val inOrder = spread
+      .select(col("user_id"), col("domain"), Splits.splitKey, col("item_id"))
+      .as[(Long, String, Long, Long)]
+      .mapPartitions { it =>
+        val rows = it.toVector
+        Iterator((rows.size, rows.zip(rows.drop(1)).forall { case (a, b) =>
+          Ordering[(Long, String, Long, Long)].lteq(a, b) }))
+      }.collect()
+    assert(inOrder.exists(_._1 > 1) && inOrder.forall(_._2),
+      s"(rows, in order) per partition: ${inOrder.mkString(", ")}")
+    def splits(log: DataFrame) = Splits.leaveTwoOut(Splits.ranked(log))
+      .collect().map(_.toSeq).sortBy(_.mkString(","))
+    val spreadSplits = splits(spread)
+    assert(spreadSplits.nonEmpty && spreadSplits.sameElements(splits(oneExchange)))
   }
 }

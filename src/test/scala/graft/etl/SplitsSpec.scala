@@ -1,8 +1,12 @@
 package graft.etl
 
-import graft.{Limits, SparkSpec}
+import graft.{Limits, Memo, SparkSpec}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Split/sampling semantics against reference-shaped fixtures
   * (FIXTURES.md B1): the degree-1/2/3+ edge cases of Dataset_CDAE.py's
@@ -134,5 +138,42 @@ class SplitsSpec extends SparkSpec {
     assert(slicedB.nonEmpty) // else the equalities below pass vacuously
     assert(slicedB.sameElements(viaBroadcast.filter(_._1 == 1L)))
     assert(slicedJ.sameElements(slicedB))
+  }
+
+  test("user-sliced candidates equal the memoized ones and pin nothing") {
+    val d = sf("sf0.01")
+    val slice = col("user_id") % 20 === 0
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getInt(3))).sorted
+    // the persisted log is the one pin the slice reads; with the
+    // all-user splits dropped, the slice would rebuild them if it read them
+    val owned = Interactions(spark, d).storageLevel == StorageLevel.NONE
+    val log = Interactions.cached(spark, d)
+    try {
+      log.count()
+      Seq("splits.candidates", "splits.leaveTwoOut")
+        .foreach(Memo.releaseOne(spark, d, _))
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val memoBefore = Memo.entries(spark).toSet
+      val sliced = Splits.candidates(spark, d, slice)
+      val slicedRows = rows(sliced)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == rddsBefore,
+        "building the sliced candidates persisted an RDD")
+      assert(Memo.entries(spark).toSet == memoBefore,
+        "building the sliced candidates added a Memo entry")
+      // the final adaptive plan, stopping at cached scans: the sliced
+      // splits window over the filtered log neither sorts nor exchanges
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => q +: nodes(q.plan)
+        case other => other +: other.children.flatMap(nodes)
+      }
+      val plan = sliced.queryExecution.executedPlan
+      assert(!nodes(plan).exists(n =>
+        n.isInstanceOf[SortExec] || n.isInstanceOf[ShuffleExchangeLike]),
+        s"the sliced candidates sort or exchange the log, plan:\n$plan")
+      val full = rows(Splits.candidatesCached(spark, d).filter(slice))
+      assert(slicedRows.nonEmpty && slicedRows.sameElements(full))
+    } finally if (owned) log.unpersist(true)
   }
 }
