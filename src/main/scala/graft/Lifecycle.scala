@@ -68,7 +68,7 @@ object Lifecycle {
     * shuffle per epoch, 92s+29s+27s; persisting the widened candidates
     * across the loop — 480M-row cache thrashed the storage tier;
     * explode → union → per-epoch salted scores → one fused multi-epoch
-    * TopBuf digest pass — paid a |candidates|-row typed digest pass and
+    * rank-digest pass — paid a |candidates|-row typed digest pass and
     * shuffle plus a persist for ranks this loop computes in place.
     *
     * Metrics still append strictly in epoch order, one append per epoch,
@@ -113,10 +113,11 @@ object Lifecycle {
     * negative with the epoch-salted `h60(user, item, domain, epoch<e>)
     * mod 1e6` — streamed md5 over `"<u>:" + item + ":<d>:epoch<e>"`,
     * exactly [[Hashing.h60]]'s bytes — and counts the negatives that
-    * beat the positive in [[graft.rank.TopBuf]]'s order (score desc,
-    * then item asc), stopping at `kMax`. rn = beats + 1, or 0 when the
-    * positive falls below `kMax` — the [[graft.rank.Metrics.posRanksDigest]]
-    * contract, without the digest shuffle.
+    * beat the positive in a descending [[graft.rank.TopKBuffer]]'s order
+    * (score desc, then item asc), stopping at `kMax`. rn = beats + 1, or
+    * 0 when the positive falls below `kMax` — the
+    * [[graft.rank.Metrics.posRanksDigest]] contract, without the digest
+    * shuffle.
     */
   def packedRanks(splits: DataFrame, packedNegatives: DataFrame,
       epochs: Seq[Int], kMax: Int): DataFrame = {

@@ -314,34 +314,33 @@ object VectorOps {
     * first, as `(id, cos)`: the one exact scan behind every broadcast
     * top-k (q_sim_topk, q_sim_quant, q_hard_negatives, the decontam and
     * nearest-centroid argmax). Rows with norm 0 or `keep(j)` false are
-    * skipped, and so is every row when `qn` is 0. Rows are walked in
-    * ascending id into a primitive insertion buffer with a strict
-    * compare, so on equal cosines the smaller id wins: the
-    * `(cos DESC, vec_id)` order of every oracle window and of
-    * [[windowTopK]]. Fewer than `k` kept rows return them all.
+    * skipped, and so is every row when `qn` is 0. Rows go into a
+    * descending [[graft.rank.TopKBuffer]] keyed by [[cosKey]] with the
+    * corpus row as id, so on equal cosines the smaller row, hence the
+    * smaller id, wins: the `(cos DESC, vec_id)` order of every oracle
+    * window and of [[windowTopK]]. Fewer than `k` kept rows return them
+    * all.
     */
   def topK(c: Corpus, q: Array[Long], qn: Double, k: Int,
       keep: Int => Boolean): Array[(Long, Double)] = {
     if (!(qn > 0.0) || k <= 0) return Array.empty
-    val cs = new Array[Double](k)
-    val rs = new Array[Int](k)
-    var m = 0
+    val top = new graft.rank.TopKBuffer(k, descending = true, distinct = false)
     var j = 0
     while (j < c.size) {
-      if (c.norms(j) > 0.0 && keep(j)) {
-        val x = c.cos(q, 0, qn, j)
-        if (m < k || x > cs(m - 1)) {
-          var p = if (m < k) { m += 1; m - 1 } else k - 1
-          while (p > 0 && cs(p - 1) < x) {
-            cs(p) = cs(p - 1); rs(p) = rs(p - 1); p -= 1
-          }
-          cs(p) = x; rs(p) = j
-        }
-      }
+      if (c.norms(j) > 0.0 && keep(j))
+        top.insert(cosKey(java.lang.Double.doubleToRawLongBits(c.cos(q, 0, qn, j))), j)
       j += 1
     }
-    Array.tabulate(m)(i => (c.ids(rs(i)), cs(i)))
+    Array.tabulate(top.size)(i => (c.ids(top.id(i).toInt),
+      java.lang.Double.longBitsToDouble(cosKey(top.key(i)))))
   }
+
+  /** A double's bits as a long whose signed order is the double order
+    * (negative values have their 63 value bits flipped); applied twice it
+    * returns its input. Exact for [[topK]]'s cosines, which are finite
+    * and never `-0.0`: an integer dot divided by a positive norm product.
+    */
+  private def cosKey(bits: Long): Long = bits ^ ((bits >> 63) & Long.MaxValue)
 
   /** HALF_UP rounding to 6 decimals on the JVM, as Spark's and DuckDB's
     * `round(cos, 6)`.

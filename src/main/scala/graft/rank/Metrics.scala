@@ -130,12 +130,12 @@ object Metrics {
 
   /** Network-optimal variant of [[posRanksJoin]] for when the shuffle is
     * the bottleneck (a 1000-executor cluster, not a local[32] box):
-    * per-partition [[TopBuf]] digests — each mapper emits at most kMax
+    * per-partition [[RankDigest]]s — each mapper emits at most kMax
     * rows per (user, domain) it saw, so the shuffle carries a bounded
     * digest (~16× less than the candidate set at 160 candidates/user) —
     * then one merge pass reads off the positive's rank (0 = below kMax,
     * which every @K≤kMax metric treats as out of range). Hand-rolled
-    * partial aggregation rather than a typed Aggregator because
+    * partial aggregation rather than [[TopKBufferAgg]] because
     * ObjectHashAggregate falls back to sort-based aggregation past 128
     * groups per partition, re-sorting every candidate row (measured
     * 7.4s vs 2.3s at sf0.1). Locally the typed boundary costs more than
@@ -154,23 +154,24 @@ object Metrics {
       .as[(Long, String, Long, Long, Int)]
       .mapPartitions { it =>
         import scala.jdk.CollectionConverters._
-        val m = new java.util.HashMap[(Long, String), TopBuf]
+        val m = new java.util.HashMap[(Long, String), RankDigest]
         it.foreach { case (u, dom, s, i, p) =>
           var b = m.get((u, dom))
-          if (b == null) { b = new TopBuf(kMax); m.put((u, dom), b) }
+          if (b == null) { b = new RankDigest(kMax); m.put((u, dom), b) }
           b.insert(s, i, p == 1)
         }
         m.entrySet().iterator().asScala.map { e =>
           val b = e.getValue
-          (e.getKey._1, e.getKey._2,
-            b.scores.take(b.n), b.items.take(b.n), b.pos.take(b.n))
+          val n = b.top.size
+          (e.getKey._1, e.getKey._2, Array.tabulate(n)(b.top.key),
+            Array.tabulate(n)(b.top.id), b.pos.take(n))
         }
       }
     parts
       .groupByKey { case (u, dom, _, _, _) => (u, dom) }
       .mapGroups { (key: (Long, String),
           it: Iterator[(Long, String, Array[Long], Array[Long], Array[Boolean])]) =>
-        val b = new TopBuf(kMax)
+        val b = new RankDigest(kMax)
         it.foreach { case (_, _, ss, ii, pp) =>
           var j = 0
           while (j < ss.length) { b.insert(ss(j), ii(j), pp(j)); j += 1 }
@@ -178,6 +179,26 @@ object Metrics {
         (key._1, key._2, b.rank)
       }
       .toDF("user_id", "domain", "rn")
+  }
+
+  /** A (score DESC, item ASC) [[TopKBuffer]] with each entry's
+    * is-positive flag in a parallel array that shifts with it.
+    */
+  private[rank] final class RankDigest(k: Int) {
+    val top = new TopKBuffer(k, descending = true, distinct = false)
+    val pos = new Array[Boolean](k)
+
+    def insert(s: Long, i: Long, p: Boolean): Unit = {
+      val n = top.size
+      val j = top.insert(s, i)
+      if (j >= 0) {
+        System.arraycopy(pos, j, pos, j + 1, math.min(n, k - 1) - j)
+        pos(j) = p
+      }
+    }
+
+    /** 1-based rank of the positive within the buffer, 0 if it fell out. */
+    def rank: Int = pos.indexOf(true) + 1
   }
 
   /** HR/NDCG/MRR@K from a positive-rank relation (user_id, domain, rn) —
@@ -245,9 +266,10 @@ object Metrics {
       rankingMetricsFromRanks(posRanksJoin(spark, d), Seq(5, 10))
     },
 
-    // ---- same top-K via the typed bounded Aggregator (§4.3): O(K)
-    //      per-group state + map-side combine; must equal the window
-    //      formulation bit-for-bit (same oracle SQL) ----
+    // ---- same top-K via the typed bounded Aggregator (§4.3): a
+    //      (score DESC, item ASC) TopKBuffer per group, O(K) state +
+    //      map-side combine; must equal the window formulation
+    //      bit-for-bit (same oracle SQL) ----
     "q_rank_topk_agg" -> QueryDef(
       s"""$duckPipelinePrefix
          |SELECT user_id, domain, item_id, score, rn FROM (
@@ -258,17 +280,15 @@ object Metrics {
          |WHERE rn <= 5
          |ORDER BY user_id, domain, rn""".stripMargin) { (spark, d) =>
       import spark.implicits._
-      val topK = new TopKAggregator(5).toColumn
+      val topK = new TopKBufferAgg(5, descending = true, distinct = false).toColumn
       scoredCandidates(spark, d, col("user_id") % 20 === 0)
         .select(col("user_id"), col("domain"), col("score"), col("item_id"))
         .as[(Long, String, Long, Long)]
         .groupByKey { case (u, dom, _, _) => (u, dom) }
-        .mapValues { case (_, _, s, i) => ScoredItem(s, i) }
+        .mapValues { case (_, _, s, i) => (s, i) }
         .agg(topK.name("top"))
         .flatMap { case ((u, dom), top) =>
-          top.iterator.zipWithIndex.map { case (si, i) =>
-            (u, dom, si.item_id, si.score, i + 1)
-          }
+          Iterator.tabulate(top.size)(j => (u, dom, top.id(j), top.key(j), j + 1))
         }
         .toDF("user_id", "domain", "item_id", "score", "rn")
         .orderBy("user_id", "domain", "rn")

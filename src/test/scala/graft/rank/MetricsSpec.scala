@@ -45,18 +45,18 @@ class MetricsSpec extends SparkSpec {
     assert(m.getAs[Double]("mrr") == 0.0)
   }
 
-  test("TopBuf insertion order, tiebreaks, rejection, and merge paths") {
+  test("rank digest insertion order, tiebreaks, rejection, and merge paths") {
     def rank(items: Seq[(Long, Long, Boolean)], split: Int): Int = {
-      val direct = new TopBuf(3)
+      val direct = new Metrics.RankDigest(3)
       items.foreach { case (s, i, p) => direct.insert(s, i, p) }
       // partial-merge path must agree with sequential insertion
       val (xs, ys) = items.splitAt(split)
-      val (a, b) = (new TopBuf(3), new TopBuf(3))
+      val (a, b) = (new Metrics.RankDigest(3), new Metrics.RankDigest(3))
       xs.foreach { case (s, i, p) => a.insert(s, i, p) }
       ys.foreach { case (s, i, p) => b.insert(s, i, p) }
-      val m = new TopBuf(3)
+      val m = new Metrics.RankDigest(3)
       Seq(a, b).foreach { t =>
-        (0 until t.n).foreach(j => m.insert(t.scores(j), t.items(j), t.pos(j)))
+        (0 until t.top.size).foreach(j => m.insert(t.top.key(j), t.top.id(j), t.pos(j)))
       }
       assert(direct.rank == m.rank, "merge must agree with sequential insert")
       direct.rank
