@@ -1,91 +1,123 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import java.lang.management.{ManagementFactory, MemoryType}
+import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import QueryRunner.{Failed, Refused, Run}
+
+/** The timing harness: every registered query against one scale dir
+  * (`SPARK_GRAFT_SF_DIR`), `df.count()` timed through [[QueryRunner]]
+  * after an untimed warm-up. Prints two JSON lines ([[lines]]).
+  *
+  * A refusal (see QueryRefusedException) is the query KEEPING its
+  * documented output-budget contract on data where the contract is
+  * ill-posed — a distinct outcome from an error, and its elapsed (just the
+  * bound-computation aggregates) is kept OUT of the completed-query
+  * timings so totals stay comparable between runs where the refusal trips
+  * and runs where it doesn't.
+  */
 object Bench {
-
-  /** Per-query bench outcome. A refusal is the query KEEPING its
-    * documented output-budget contract on data where the contract is
-    * ill-posed (see QueryRefusedException) — a distinct outcome from an
-    * error, and its elapsed (just the bound-computation aggregates) is
-    * kept OUT of the completed-query timings so totals stay comparable
-    * between runs where the refusal trips and runs where it doesn't.
-    */
-  sealed trait Outcome { def sec: Double }
-  final case class Completed(sec: Double) extends Outcome
-  final case class RefusedRun(sec: Double, msg: String) extends Outcome
-  final case class FailedRun(sec: Double, msg: String) extends Outcome
-
-  /** Execute one registered query exactly the way the bench loop does
-    * and classify the outcome. Public so a spec can prove the
-    * refusal-vs-error distinction without running the whole suite.
-    */
-  def runOne(spark: SparkSession, sfDir: String,
-      fn: (SparkSession, String) => DataFrame): Outcome = {
-    val t0 = System.nanoTime()
-    def el = (System.nanoTime() - t0) / 1e9
-    try { fn(spark, sfDir).count(); Completed(el) } catch {
-      case e: QueryRefusedException => RefusedRun(el, e.getMessage)
-      case e: Throwable => FailedRun(el, e.getMessage)
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSession()
-    val cpus = spark.sparkContext.defaultParallelism
-    // Session-wide memoization of the shared interaction-log subtree
-    // (the reference memoizes its derived dicts the same way, S2).
-    // CacheManager substitutes the persisted plan into every query that
-    // contains an identical subtree — ~10 queries rebuild it otherwise.
-    if (!sys.env.contains("SPARK_GRAFT_NOCACHE")) etl.Interactions(spark, sfDir).persist()
-    // Byte budget for the Memo registry's LRU (suite-wide cached storage
-    // stays under budget + one entry). Default: a third of the heap —
-    // at the 100× probe's 48g that leaves execution memory untouched.
-    val memoBudget = sys.env.get("SPARK_GRAFT_MEMO_BUDGET_MB")
-      .map(_.toLong * 1024 * 1024)
-      .getOrElse(Runtime.getRuntime.maxMemory / 3)
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val loadStart = osBean.getSystemLoadAverage
-    // JVM telemetry (VERDICT r14 #2): a degraded window must be provable
-    // from the artifact ALONE — suite GC seconds + peak heap separate
-    // heap-pressure slowdowns (pinned memo state squeezing a 32-thread
-    // heap) from host co-tenancy (uniform inflation at benign GC), and
-    // load_avg_end closes the start-only gap a mid-run co-tenant hides in
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def gcMs: Long = {
-      var t = 0L
-      gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime))
-      t
-    }
-    val gcStartMs = gcMs
-    var errors = List.empty[String]
-    var refused = List.empty[String]
-    var evictions = 0
-    // dev-only exclusion for stress runs (the driver never sets it):
+    val runner = QueryRunner.open(sfDir)
+    val loadStart = QueryRunner.loadAvg
+    val gcStart = gcMs
+    warmUp(runner.spark, sfDir)
+    // dev-only exclusion for stress runs (the timed contract run never sets it):
     // lets a skewed-data suite run the queries whose OUTPUT stays
     // well-posed under the skew, skipping ones that are output-quadratic
     // in a hot key BY SEMANTICS (see SCALING.md on q_stream_join @ zipf)
-    val skip: Set[String] = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").toSet).getOrElse(Set.empty)
-    var refusedSec = Map.empty[String, Double]
-    // per-query internal stage timings (VERDICT r11 #8): operators report
-    // build stages into StageTiming; draining per query attributes them
-    var stages = List.empty[(String, Seq[(String, Double)])]
-    // UNTIMED warm-up (r13, VERDICT r12 #3): the build-first harness
-    // order made the first two bench lines absorb ALL JVM/JIT ramp —
-    // q_sim_index_build/q_dedup_index_build 37.3/30.4s on the r12
-    // judge's first-JVM run vs 15.3/11.5s warm, and the driver artifact
-    // then inherits cold-JIT noise it attributes to host. Warm the
-    // compiled centroid loops directly (same methods the task closures
-    // invoke — local mode shares one JVM) and run one cheap end-to-end
-    // query so Spark's codegen compiler, parquet reader, and shuffle
-    // machinery are primed before anything is timed.
+    val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.split(",").toSet).getOrElse(Set.empty[String])
+    // a failed query must be LOUD — a swallowed error reads as a
+    // suspiciously fast query in the timings
+    val runs = runner(skip = skip)((_, df) => df.count()).tapEach(r => r.outcome match {
+      case Refused(msg) => System.err.println(s"[bench] ${r.name} REFUSED: $msg")
+      case Failed(msg) => System.err.println(s"[bench] ${r.name} FAILED: $msg")
+      case _ =>
+    }).toList
+    val (full, compact) = lines(runner.spark, sfDir, runs, loadStart, gcStart)
+    println(full)
+    // full, untruncated artifact: a reader that keeps only a log tail
+    // drops entries past its window, so comparisons need a file
+    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), full + "\n")
+    }
+    println(compact)
+    runner.spark.stop()
+  }
+
+  /** The full artifact line and the compact summary line over `runs`.
+    * Refused runs are left out of `value`, `queries` and `loads`; failed
+    * runs stay in (and in `errors`). `counts` has every run's Spark work.
+    * A reader that keeps only the LAST ~2000 chars of stdout loses the
+    * full line's head, so the compact line is printed last: totals,
+    * errors/refused and the 20 slowest queries. `gcStartMs` is [[gcMs]]
+    * at the start of the run; JVM telemetry (suite GC seconds, peak heap,
+    * load at both ends) separates heap pressure from host co-tenancy.
+    */
+  def lines(spark: SparkSession, sfDir: String, runs: Seq[Run[Any]],
+      loadStart: Double, gcStartMs: Long): (String, String) = {
+    def obj(kv: Seq[(String, Any)]) = ListMap(kv: _*)
+    val (refusedRuns, timed) = runs.partition(_.outcome.isInstanceOf[Refused])
+    val errors = runs.filter(_.outcome.isInstanceOf[Failed]).map(_.name).sorted
+    val refused = refusedRuns.map(_.name).sorted
+    val total = timed.map(_.sec).sum
+    val cpus = spark.sparkContext.defaultParallelism
+    val evictions = runs.map(_.evictions).sum
+    val peakHeapB = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(p => p.getType == MemoryType.HEAP && p.getPeakUsage != null)
+      .map(_.getPeakUsage.getUsed).sum
+    val jvm = Seq("load_avg_end" -> r1(QueryRunner.loadAvg),
+      "gc_time_sec" -> r1((gcMs - gcStartMs) / 1000.0),
+      "peak_heap_mb" -> peakHeapB / 1048576,
+      "max_heap_mb" -> Runtime.getRuntime.maxMemory / 1048576)
+    val full = obj(Seq("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> obj(timed.map(r => r.name -> r.sec)),
+      "errors" -> errors, "refused" -> refused,
+      "refused_sec" -> obj(refusedRuns.sortBy(_.name).map(r => r.name -> r1(r.sec))),
+      "sf" -> sfDir, "load_avg_start" -> r1(loadStart),
+      "loads" -> obj(timed.map(r => r.name -> r1(r.load))),
+      "cpus" -> cpus) ++ jvm ++ Seq(
+      "memo_budget_mb" -> QueryRunner.MemoBudget / 1048576,
+      "memo_evictions" -> evictions,
+      "memo_entries" -> obj(Memo.telemetry(spark).map { case (n, b, c) =>
+        n -> obj(Seq("peak_mb" -> b / 1048576, "builds" -> c)) }),
+      "stages" -> obj(runs.filter(_.stages.nonEmpty)
+        .map(r => r.name -> obj(r.stages.map { case (s, v) => s -> r1(v) }))),
+      "counts" -> obj(runs.map { r =>
+        r.name -> obj(Seq("jobs" -> r.counts.jobs, "stages" -> r.counts.stages,
+          "tasks" -> r.counts.tasks, "shuffle_write_bytes" -> r.counts.shuffleWriteBytes,
+          "build_s" -> math.rint(r.buildSec * 1000) / 1000))
+      })))
+    val compact = obj(Seq("metric" -> "total", "value" -> r1(total), "unit" -> "sec",
+      "n_queries" -> timed.size, "errors" -> errors, "refused" -> refused,
+      "sf" -> sfDir, "cpus" -> cpus, "load_avg_start" -> r1(loadStart)) ++ jvm ++ Seq(
+      "memo_evictions" -> evictions,
+      "queries" -> obj(timed.sortBy(-_.sec).take(20).map(r => r.name -> r1(r.sec)))))
+    (QueryRunner.json(full), QueryRunner.json(compact))
+  }
+
+  /** JVM-wide GC milliseconds so far. */
+  def gcMs: Long = ManagementFactory.getGarbageCollectorMXBeans.asScala
+    .map(b => math.max(0L, b.getCollectionTime)).sum
+
+  /** `d` to one decimal, half up. */
+  private def r1(d: Double): Double =
+    BigDecimal(d).setScale(1, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** UNTIMED warm-up, so the first timed lines do not absorb the JVM/JIT
+    * ramp (cold, q_sim_index_build/q_dedup_index_build took 37.3/30.4 s
+    * against 15.3/11.5 s warm). Warms the compiled centroid loops
+    * directly (local mode shares one JVM with the task closures), then
+    * runs a synthetic query, NOT a suite entry, so no timed line becomes
+    * a warmed second run: a dim-table scan + broadcast join + shuffle agg
+    * + partitioned window drive the codegen compiler, parquet reader and
+    * shuffle machinery through the suite's code paths.
+    */
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
     ext.IvfQueries.warmJit()
-    // synthetic end-to-end warm-up, NOT a suite entry (ADVICE r13: the
-    // previous q_scalar_funcs warm-up made that one timed line a fully
-    // warmed second run, incomparable to its prior-round readings): a
-    // dim-table scan + broadcast join + shuffle agg + partitioned window
-    // drives the codegen compiler, parquet reader and shuffle machinery
-    // through the same code paths without pre-running any timed query.
     try {
       import org.apache.spark.sql.functions._
       val nat = spark.read.parquet(s"$sfDir/nation.parquet")
@@ -93,99 +125,16 @@ object Bench {
       nat.join(broadcast(reg), nat("n_regionkey") === reg("r_regionkey"))
         .groupBy("r_name")
         .agg(count(lit(1)).as("c"), sum(length(col("n_name"))).as("s"))
-        .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
+        .withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy("r_name")
             .orderBy(col("c").desc)))
         .count()
     } catch {
-      // NonFatal only (ADVICE r13: a swallowed OutOfMemoryError would let
-      // the timed suite continue in an unreliable JVM) — and log it: a
-      // silent warm-up failure otherwise leaves cold-JIT noise in the
-      // first timed lines with nothing in the artifact explaining it
+      // NonFatal only: a swallowed OutOfMemoryError would let the timed
+      // suite continue in an unreliable JVM. Logged, since a silent
+      // warm-up failure leaves cold-JIT noise in the first timed lines
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] warm-up failed (timed suite continues cold): $e")
     }
-    StageTiming.drain() // discard anything from session warm-up
-    val results = SparkEntry.orderedQueries.filterNot(q => skip(q._1)).flatMap { case (name, fn) =>
-      val outcome = runOne(spark, sfDir, fn)
-      val st = StageTiming.drain()
-      if (st.nonEmpty) stages ::= name -> st
-      evictions += Memo.enforceBudget(spark, memoBudget).size
-      // co-tenant noise is the dominant variance source in driver runs
-      // (r8: q_outliers 14.6s under load 18-27 vs 0.6s quiet) — record
-      // the 1-min load at each query's completion so the artifact alone
-      // explains its own outliers
-      outcome match {
-        case Completed(sec) =>
-          Some(name -> (sec, osBean.getSystemLoadAverage))
-        case RefusedRun(sec, msg) =>
-          System.err.println(s"[bench] $name REFUSED: $msg")
-          refused ::= name
-          refusedSec += name -> sec
-          None
-        case FailedRun(sec, msg) =>
-          // a failed query must be LOUD — a swallowed error reads as a
-          // suspiciously fast query in the timings
-          System.err.println(s"[bench] $name FAILED: $msg")
-          errors ::= name
-          Some(name -> (sec, osBean.getSystemLoadAverage))
-      }
-    }
-    // locale-pinned %.1f: the default-locale f"" interpolator emits
-    // "18,3" under comma-decimal locales (de_DE), malformed JSON
-    def f1(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(d))
-    val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val loads = results
-      .map { case (k, (_, l)) => s"\"" + k + "\":" + f1(l) }
-      .mkString("{", ",", "}")
-    val errs = errors.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val refusedJson = refused.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val refusedSecJson = refusedSec.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f1(v) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2._1).sum else 0.0
-    // per-entry memoization telemetry: peak cached bytes + rebuild count
-    // (builds > 1 = LRU thrash) — the zero-eviction claim is reproducible
-    // from the artifact alone
-    val memoEntries = Memo.telemetry(spark)
-      .map { case (n, b, c) =>
-        "\"" + n + "\":{\"peak_mb\":" + (b / 1024 / 1024) +
-          ",\"builds\":" + c + "}"
-      }.mkString("{", ",", "}")
-    val stagesJson = stages.reverse.map { case (q, st) =>
-      "\"" + q + "\":" + st.map { case (s, v) => "\"" + s + "\":" + f1(v) }
-        .mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-    val gcSec = (gcMs - gcStartMs) / 1000.0
-    var peakHeapB = 0L
-    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.forEach { p =>
-      if (p.getType == java.lang.management.MemoryType.HEAP &&
-          p.getPeakUsage != null) peakHeapB += p.getPeakUsage.getUsed
-    }
-    val loadEnd = osBean.getSystemLoadAverage
-    val jvmTelemetry =
-      s""""load_avg_end":${f1(loadEnd)},"gc_time_sec":${f1(gcSec)},"peak_heap_mb":${peakHeapB / 1024 / 1024},"max_heap_mb":${Runtime.getRuntime.maxMemory / 1024 / 1024}"""
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"refused":$refusedJson,"refused_sec":$refusedSecJson,"sf":"$sfDir","load_avg_start":${f1(loadStart)},"loads":$loads,"cpus":$cpus,$jvmTelemetry,"memo_budget_mb":${memoBudget / 1024 / 1024},"memo_evictions":$evictions,"memo_entries":$memoEntries,"stages":$stagesJson}"""
-    println(json)
-    // full, untruncated artifact: the driver's log tail drops entries
-    // past its window (8 of 74 in r5), so round-over-round comparisons
-    // need a file the builder commits (bench_r{N}.json)
-    sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json + "\n")
-    }
-    // the driver keeps only the LAST ~2000 chars of stdout, and the full
-    // line above overflows that window (BENCH_r8-r10 all have parsed:
-    // null — the line's head, with {"metric", is cut off). Emit a compact
-    // summary as the FINAL line, sized to survive the tail window intact:
-    // totals + errors/refused + the 20 slowest queries.
-    val slow = results.sortBy(-_._2._1).take(20)
-      .map { case (k, (v, _)) => "\"" + k + "\":" + f1(v) }
-      .mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total","value":${f1(total)},"unit":"sec","n_queries":${results.size},"errors":$errs,"refused":$refusedJson,"sf":"$sfDir","cpus":$cpus,"load_avg_start":${f1(loadStart)},$jvmTelemetry,"memo_evictions":$evictions,"queries":$slow}""")
-    spark.stop()
   }
 }

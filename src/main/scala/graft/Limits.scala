@@ -2,7 +2,7 @@ package graft
 
 import scala.util.DynamicVariable
 
-/** The ceilings (three sizes and one share) at which an operator
+/** The ceilings (four sizes and one share) at which an operator
   * switches formulation. Every gate reads the active value on the
   * driver while it builds its plan, never inside a task closure, so a
   * built DataFrame keeps the branch it was planned with.
@@ -40,6 +40,15 @@ object Limits {
     */
   val CATALOG_BROADCAST_MAX: Long = 20000000L
 
+  /** Eval-set size (shingle count, or its estimate) above which the
+    * decontamination joins (q_decontaminate, q_decontaminate_bloom) stop
+    * broadcasting the eval side and shuffle-join instead (~8 B/key ×
+    * 2×10⁷ ≈ 160 MB, the same ceiling class as [[CATALOG_BROADCAST_MAX]];
+    * a real benchmark suite is far below it, the demo's 10%-of-corpus
+    * predicate is not guaranteed to be).
+    */
+  val EVAL_BROADCAST_MAX: Long = 20000000L
+
   /** A user key holding more than this share of the orders fact makes
     * the interaction log's one-exchange shape a skew bomb (its whole RAW
     * row mass lands on one reduce task before any dedup); 2% ≈ 0.6× a
@@ -59,6 +68,7 @@ object Limits {
       corpusBroadcast: Long = CORPUS_BROADCAST_MAX,
       embedPairExact: Long = EMBED_PAIR_EXACT_MAX,
       catalogBroadcast: Long = CATALOG_BROADCAST_MAX,
+      evalBroadcast: Long = EVAL_BROADCAST_MAX,
       hotUserShare: Double = HOT_USER_SHARE_MAX)
 
   private val active = new DynamicVariable(Ceilings())
@@ -66,6 +76,7 @@ object Limits {
   def corpusBroadcast: Long = active.value.corpusBroadcast
   def embedPairExact: Long = active.value.embedPairExact
   def catalogBroadcast: Long = active.value.catalogBroadcast
+  def evalBroadcast: Long = active.value.evalBroadcast
   def hotUserShare: Double = active.value.hotUserShare
 
   /** Run `body` with `c` as the active ceilings. */

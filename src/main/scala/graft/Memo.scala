@@ -26,8 +26,9 @@ import scala.collection.mutable
   *  - `release(spark, sfDir)` drops a scale-dir's (or the whole session's)
   *    entries — the hook a long-lived service calls between pipeline runs;
   *  - `enforceBudget(spark, bytes)` evicts least-recently-USED entries
-  *    until cached storage (memory + disk) fits the budget — the harness
-  *    (Bench/Verify) calls it after every query, so suite-wide storage is
+  *    until cached storage (memory + disk) fits the budget — its one
+  *    engine caller, [[QueryRunner]], calls it after every query of
+  *    Verify, Bench and Profile, so suite-wide storage is
   *    bounded by the budget plus the footprint of the single largest
   *    entry, independent of suite length. Evicting an entry only costs a
   *    rebuild on next use — correctness is untouched because consumers
@@ -219,8 +220,8 @@ object Memo {
     * Storage NOT owned by the registry counts toward the budget but is
     * never evicted — the loop stops when no owned entries remain. In
     * practice that storage is the session's persisted interaction log
-    * (`etl.Interactions.cached`; Bench, Verify and perfbench persist it
-    * up front, and SplitCache reads it): every split and negative
+    * (`etl.Interactions.cached`; [[QueryRunner.open]] and perfbench
+    * persist it up front, and SplitCache reads it): every split and negative
     * derives from it, so it stays for the session, and its layout keeps
     * it small (5.06 MB of columnar cache for the 599k-row sf0.1 log,
     * stored in leave-two-out order).

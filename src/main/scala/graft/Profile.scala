@@ -1,14 +1,14 @@
 package graft
 
-/** Dev-only profiler: time named queries (all if none given) against a
-  * scale dir, optionally dumping the formatted physical plan first. The
-  * session persists the interaction log up front, as Bench and Verify
-  * do, so plans and timings show the cached-log shapes the suite runs.
-  * Each query's timing line ends with the session's cached storage (all
-  * RDD memory + disk bytes, the figure perfbench samples as
-  * `cached_peak_mb`) and its count of persisted RDDs (materialized or
-  * not, so a new pin shows even before its first action), and is
-  * followed by its builder stages ([[StageTiming]]).
+import QueryRunner.{Completed, Failed, Refused}
+
+/** Dev-only profiler: time named queries (a repeated name is re-timed
+  * warm; every query in the harness order when none is given) against a
+  * scale dir through [[QueryRunner]], as Bench does. Each query prints one
+  * line: wall and build seconds, rows, exact Spark counts, the session's
+  * cached MB and persisted-RDD count; then its builder stages
+  * ([[StageTiming]]). With `explain`, the formatted physical plan, as
+  * executed, is printed after the timed window, ahead of that line.
   *
   *   sbt "runMain graft.Profile /root/testdata/sf0.1 explain q_candidates"
   */
@@ -16,39 +16,23 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val explain = args.contains("explain")
-    val names = args.drop(1).filterNot(_ == "explain")
-    val spark = LocalSession()
-    spark.sparkContext.setLogLevel("ERROR")
-    etl.Interactions.cached(spark, sfDir)
-    def cachedMb = spark.sparkContext.getRDDStorageInfo
-      .map(i => i.memSize + i.diskSize).sum / 1048576.0
-    def persisted = spark.sparkContext.getPersistentRDDs.size
-    def time(name: String, df: => org.apache.spark.sql.DataFrame): Unit = {
-      // clock starts BEFORE the builder is forced: eager builders
-      // (streaming runBounded, lifecycle collects) do their work inside
-      // build(), exactly like Bench measures them; it stops BEFORE the
-      // listener-bus drain that makes the counts exact
-      val ((el, tBuild, n), c) = SparkCounts.measure(spark) {
-        val t0 = System.nanoTime()
-        val d = df
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        if (explain) { println(s"==== $name plan"); d.explain("formatted") }
-        val n = d.count()
-        ((System.nanoTime() - t0) / 1e9, tBuild, n)
+    val runner = QueryRunner.open(sfDir)
+    runner.spark.sparkContext.setLogLevel("ERROR")
+    val names = args.drop(1).filterNot(_ == "explain").toSeq
+    runner(names)((_, df) => (df.count(), df)).foreach { r =>
+      val rows = r.outcome match {
+        case Completed((n, df)) =>
+          if (explain) { println(s"==== ${r.name} plan"); df.explain("formatted") }
+          s"rows=$n"
+        case Refused(msg) => s"REFUSED: $msg"
+        case Failed(msg) => s"FAILED: $msg"
       }
-      println(f"==== $name%-28s $el%8.2f s (build $tBuild%.2f)  rows=$n  " +
+      val c = r.counts
+      println(f"==== ${r.name}%-28s ${r.sec}%8.2f s (build ${r.buildSec}%.2f)  $rows  " +
         s"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}" +
-        f"  cached=$cachedMb%.2f MB persisted=$persisted")
-      StageTiming.drain().foreach { case (stage, sec) =>
-        println(f"[stage] $stage%-36s $sec%8.2f s")
-      }
+        f"  cached=${r.cachedMb}%.2f MB persisted=${r.persisted}")
+      r.stages.foreach { case (stage, sec) => println(f"[stage] $stage%-36s $sec%8.2f s") }
     }
-    val picked =
-      if (names.isEmpty) SparkEntry.defs.keys.toSeq.sorted
-      else names.toSeq
-    // repeat a name to re-time it warm (first run carries JIT/codegen;
-    // host noise here swings single measurements up to 4× — see SCALING.md)
-    picked.foreach(name => time(name, SparkEntry.defs(name).build(spark, sfDir)))
-    spark.stop()
+    runner.spark.stop()
   }
 }

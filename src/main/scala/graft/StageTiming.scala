@@ -1,12 +1,12 @@
 package graft
 
 /** Per-stage wall-clock collector for the expensive builds (VERDICT r11
-  * #8): operators wrap their internal stages in [[timed]], Bench drains
-  * the buffer after every query and embeds the stages in the bench
-  * artifact, so a capstone tail's host-vs-plan attribution (is the 600 s
-  * in the kmeans train, the pair join, or spread evenly — i.e. load?)
-  * is readable from the JSON alone, without a re-run. Profile prints
-  * each query's drained stages after its timing line.
+  * #8): operators wrap their internal stages in [[timed]], and
+  * [[QueryRunner]] drains the buffer after every query, so Bench embeds
+  * each query's stages in its artifact — a capstone tail's
+  * host-vs-plan attribution (is the 600 s in the kmeans train, the pair
+  * join, or spread evenly — i.e. load?) is readable from the JSON alone,
+  * without a re-run — and Profile prints them after its timing line.
   *
   * Collection is always on — the cost is one queue append per stage, a
   * handful per query.
@@ -16,12 +16,12 @@ object StageTiming {
   private val buf =
     new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]
 
-  /** Ring-buffer cap (r13, ADVICE r12): collection is always-on, but only
-    * Bench drains — a long-lived non-Bench process (Verify, a lifecycle
-    * service) would otherwise grow the queue without bound. Past the cap
-    * the OLDEST entry is dropped per append (recent stages are the ones a
-    * post-hoc drain wants); the cap is far above any single query's stage
-    * count, so Bench's per-query drains never hit it.
+  /** Ring-buffer cap: collection is always-on, and a
+    * long-lived process that never drains (a lifecycle service) would
+    * otherwise grow the queue without bound. Past the cap the OLDEST
+    * entry is dropped per append (recent stages are the ones a post-hoc
+    * drain wants); the cap is far above any single query's stage count,
+    * so the runner's per-query drains never hit it.
     */
   private val CAP = 8192
   private val size = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -69,7 +69,7 @@ object StageTiming {
 
   /** Entries recorded since the last drain, in record order, repeated
     * stage names summed (an epoch loop hits the same stage per epoch).
-    * Bench and Profile call this once per query, so the drained list is exactly
+    * [[QueryRunner]] calls this once per query, so the drained list is exactly
     * that query's stages — memoized builds report on the query that
     * actually built.
     */

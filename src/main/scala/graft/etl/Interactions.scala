@@ -116,7 +116,7 @@ object Interactions {
     * CacheManager keys the entry by canonicalized plan, so each sfDir
     * caches independently and every identical subtree in later queries is
     * substituted automatically. The storageLevel gate makes the call
-    * idempotent: a plan already cached (e.g. by the Bench/Verify harness
+    * idempotent: a plan already cached (e.g. by [[graft.QueryRunner.open]]
     * up front) is returned as-is, so callers can never double-persist —
     * and, critically, must never unpersist what they didn't cache.
     */

@@ -213,9 +213,11 @@ object Splits {
     * broadcast semi-join). A fractional slice (`user_id % m`) keeps the
     * operator quadratic in scale — slice AND catalog both grow with the
     * corpus; a count bound makes it O(n·|catalog|), linear in the corpus
-    * (measured 328s → 11s for q_neg_sample at 30×). The item catalog
-    * still comes from the FULL relation (the complement's universe must
-    * not shrink with the slice). The 100 TB path is
+    * (measured 328s → 11s for q_neg_sample at 30×). The slice is
+    * semi-joined into the log ahead of the positives aggregate, so only
+    * its users' rows are collected; the item catalog still comes from the
+    * FULL relation (the complement's universe must not shrink with the
+    * slice). The 100 TB path is
     * [[negativeSampleScalable]].
     */
   def negativeSampleExact(inter: DataFrame, n: Int): DataFrame = {
@@ -223,7 +225,7 @@ object Splits {
     val users = inter.select("user_id").distinct()
       .orderBy(graft.Hashing.h60(col("user_id")), col("user_id")).limit(n)
     val bcItems = inter.sparkSession.sparkContext.broadcast(itemCatalog(inter))
-    userPositives(inter, lit(true)).join(broadcast(users), "user_id")
+    userPositives(inter.join(broadcast(users), Seq("user_id"), "left_semi"), lit(true))
       .select("user_id", "domain", "pos").as[PosIn]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")

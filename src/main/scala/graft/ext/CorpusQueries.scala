@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Hashing, QueryDef, Tables}
+import graft.{Hashing, Limits, QueryDef, Tables}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
@@ -155,7 +155,7 @@ object CorpusQueries {
       val probe = graft.functions.BloomBcProbe.column(spark, bloom, col("sh"))
       val tr = sh.filter(col("doc_id") % 7 =!= 0)
       val totals = tr.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-      val evSmall = nEvEst <= TextQueries.EVAL_BROADCAST_MAX
+      val evSmall = nEvEst <= Limits.evalBroadcast
       val confirmed = tr.filter(probe)
         .join(if (evSmall) broadcast(ev) else ev, Seq("sh"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))

@@ -26,11 +26,12 @@ import org.apache.spark.storage.StorageLevel
   * pairs per cluster; the propagation tail is small either way. The
   * delta form's win appears when V is large and the diameter isn't 1 —
   * long-tail chains of near-dups — where full re-propagation pays the
-  * whole edge join per round.) For adversarial long-chain graphs the
-  * published alternative is alternating large-star/small-star
-  * contraction (Kiveris et al., "Connected Components in MapReduce and
-  * Beyond", SoCC'14) at O(log n) rounds; propagation is the cheaper
-  * constant for the dedup shape.
+  * whole edge join per round.) Graphs up to [[CC_DRIVER_MAX_EDGES]]
+  * edges never reach the loop: a driver union-find labels them in one
+  * collect. Alternating large-star/small-star contraction (Kiveris et
+  * al., "Connected Components in MapReduce and Beyond", SoCC'14) walks
+  * adversarial long chains in O(log n) rounds; no query needed it, so it
+  * is not kept.
   *
   * Scale shape (100 TB): per round, one shuffle join of edges(u,v) to the
   * frontier plus one hash aggregate, both keyed by 8-byte vertex ids, and
@@ -102,7 +103,7 @@ object DedupCluster {
 
   /** The distributed frontier-propagation loop — [[connectedComponents]]'
     * past-the-gate arm, exposed so DedupClusterSpec can prove it equals
-    * the driver union-find and the star contraction on the same graphs.
+    * the driver union-find on the same graphs.
     */
   private[ext] def connectedComponentsPropagate(pairs: DataFrame): DataFrame = {
     val fwd = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
@@ -207,75 +208,5 @@ object DedupCluster {
     }
     scala.util.Sorting.quickSort(out)(Ordering.by(_._1))
     out
-  }
-
-  /** Both orientations of an edge set (no self-loops assumed). */
-  private def symmetrize(e: DataFrame): DataFrame =
-    e.unionAll(e.select(col("v").as("u"), col("u").as("v"))).distinct()
-
-  /** One star operation (Kiveris et al., SoCC'14 §3) over a SYMMETRIZED
-    * adjacency: every node u with neighborhood minimum m = min(Γ(u) ∪ u)
-    * re-points its strictly-larger neighbors (large-star) or its smaller
-    * neighbors AND itself (small-star) at m. One hash aggregate
-    * (per-node min) + one join — the same per-round shuffle bill as a
-    * propagation round.
-    */
-  private def star(edgesSym: DataFrame, large: Boolean): DataFrame = {
-    val m = edgesSym.groupBy(col("u")).agg(min(col("v")).as("mv"))
-      .select(col("u"), least(col("u"), col("mv")).as("m"))
-    val side =
-      if (large) edgesSym.filter(col("v") > col("u"))
-      else edgesSym.filter(col("v") < col("u"))
-    val pointed = side.join(m, "u").select(col("v").as("u"), col("m").as("v"))
-    val withSelf =
-      if (large) pointed
-      else pointed.unionAll(m.select(col("u"), col("m").as("v")))
-    withSelf.filter(col("u") =!= col("v")).distinct()
-  }
-
-  /** Alternating large-star/small-star connected components — the
-    * O(log n)-round contraction for ADVERSARIAL graphs (long near-dup
-    * chains) where propagation's diameter-many rounds would hurt. Each
-    * round halves component heights instead of walking them; the edge
-    * set converges to a star per component (every non-min member →
-    * component min). Returns the same `(id, label)` relation as
-    * [[connectedComponents]] — `DedupClusterSpec` proves them equal on
-    * chain, triangle and pseudo-random graphs. Propagation stays the
-    * default for dedup's near-clique bundles (diameter 2–3: fewer total
-    * shuffles); this is the documented escape hatch when the dup graph's
-    * shape is unknown.
-    */
-  def connectedComponentsStar(pairs: DataFrame): DataFrame = {
-    val fwd = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-    val vertices = fwd.select(col("u")).unionAll(fwd.select(col("v").as("u")))
-      .distinct().localCheckpoint()
-    var (edges, relEdges) = graft.Memo.checkpointTracked(
-      fwd.filter(col("u") =!= col("v")).distinct())
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < MAX_ROUNDS) {
-      val (afterLarge, relLarge) = graft.Memo.checkpointTracked(
-        star(symmetrize(edges), large = true))
-      val (next, relNext) = graft.Memo.checkpointTracked(
-        star(symmetrize(afterLarge), large = false))
-      // fixpoint = identical edge set round-over-round (both distinct,
-      // so count + one anti-join decide equality exactly)
-      stable = next.count() == edges.count() &&
-        next.join(edges, Seq("u", "v"), "left_anti").count() == 0
-      relLarge() // intermediate star output, superseded immediately
-      relEdges() // previous round's edge set, superseded by `next`
-      edges = next
-      relEdges = relNext
-      rounds += 1
-    }
-    require(stable,
-      s"connectedComponentsStar did not converge in $MAX_ROUNDS rounds")
-    // converged edges are (member, component-min) stars; minima carry no
-    // outgoing row and label themselves via the left join
-    vertices
-      .join(edges.select(col("u").as("id"), col("v").as("lbl")),
-        vertices("u") === col("id"), "left")
-      .select(vertices("u").as("id"),
-        coalesce(col("lbl"), vertices("u")).as("label"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Hashing, QueryDef, Tables}
+import graft.{Hashing, Limits, QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -92,14 +92,6 @@ object TextQueries {
     * tokenizer-prep pass uses 32k–100k).
     */
   val VOCAB_V = 16
-
-  /** Eval-shingle count above which q_decontaminate refuses the
-    * broadcast and shuffle-joins instead (~8 B/key × 2×10⁷ ≈ 160 MB —
-    * the same ceiling class as Limits.CATALOG_BROADCAST_MAX; a real
-    * benchmark suite is far below it, the demo's 10%-of-corpus predicate
-    * is not guaranteed to be).
-    */
-  val EVAL_BROADCAST_MAX: Long = 20000000L
 
   /** Fixed query-term set for q_text_bm25 (mid-frequency corpus terms). */
   private val bm25Terms = Seq("spark", "hash", "merge", "scan")
@@ -315,7 +307,7 @@ object TextQueries {
       // storage for the rest of the session (the r4 cache-pressure class)
       val nEv: Long = graft.Memo.cachedObj(spark, d,
         "text.evalShingleCount", (_: java.lang.Long) => 8L)(Long.box(ev.count()))
-      val evSmall = nEv <= EVAL_BROADCAST_MAX
+      val evSmall = nEv <= Limits.evalBroadcast
       val joined = sh.filter(col("doc_id") % 10 =!= 0)
         .join(if (evSmall) broadcast(ev) else ev, Seq("sh"), "left")
       joined

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Invariants for the corpus-health operators (CorpusQueries) at
   * sf0.001: substring-window dedup vs a JVM brute force, the Bloom
-  * decontamination twin vs a plain exact plan, and PSI bookkeeping.
+  * decontamination twin vs a plain exact plan, both decontaminations
+  * past the eval broadcast ceiling, and PSI bookkeeping.
   */
 class CorpusSpec extends SparkSpec {
 
@@ -58,6 +59,16 @@ class CorpusSpec extends SparkSpec {
         r.getAs[Long]("n_shared"))).toSet
     assert(exact.nonEmpty, "fixture should contain contaminated docs")
     assert(bloom == exact)
+  }
+
+  test("both decontaminations return the same rows past the eval broadcast ceiling") {
+    // evalBroadcast = 0: the eval side is shuffle-joined, never broadcast
+    for (q <- Seq("q_decontaminate", "q_decontaminate_bloom")) {
+      def rows() = graft.SparkEntry.defs(q).build(spark, sf()).collect().toSeq
+      val default = rows()
+      assert(default.nonEmpty, s"$q: fixture should contain contaminated docs")
+      assert(graft.Limits.forcing(graft.Limits.Ceilings(evalBroadcast = 0))(rows()) == default, q)
+    }
   }
 
   test("PSI side counts partition the corpus and terms are non-negative") {

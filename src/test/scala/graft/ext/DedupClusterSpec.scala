@@ -30,19 +30,13 @@ class DedupClusterSpec extends SparkSpec {
     assert(labelsOf(Seq.empty) === Map.empty)
   }
 
-  private def starLabelsOf(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
-    import spark.implicits._
-    DedupCluster.connectedComponentsStar(pairs.toDF("doc_a", "doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
-
   private def propagateLabelsOf(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
     DedupCluster.connectedComponentsPropagate(pairs.toDF("doc_a", "doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
-  test("driver union-find, propagation and star agree on chain, clique and random graphs") {
+  test("union-find and propagation agree on chain, clique and random graphs") {
     val chain = (1L until 16L).map(i => (16L - i, 16L - i + 1))
     val mixed = Seq((1L, 2L), (2L, 3L), (3L, 4L),
       (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L))
@@ -53,11 +47,9 @@ class DedupClusterSpec extends SparkSpec {
       (math.min(a, b), math.max(a, b))
     }.filter { case (a, b) => a != b }
     for (g <- Seq(chain, mixed, rand)) {
-      // labelsOf routes through the count-gated driver union-find;
-      // the distributed propagation loop and the star contraction must
-      // return the identical relation
+      // labelsOf routes through the count-gated driver union-find; the
+      // distributed propagation loop must return the identical relation
       assert(propagateLabelsOf(g) === labelsOf(g), s"propagate differs on $g")
-      assert(starLabelsOf(g) === labelsOf(g), s"star differs on $g")
     }
   }
 
