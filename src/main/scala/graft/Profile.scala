@@ -7,8 +7,11 @@ import QueryRunner.{Completed, Failed, Refused}
   * scale dir through [[QueryRunner]], as Bench does. Each query prints one
   * line: wall and build seconds, rows, exact Spark counts, the session's
   * cached MB and persisted-RDD count; then its builder stages
-  * ([[StageTiming]]). With `explain`, the formatted physical plan, as
-  * executed, is printed after the timed window, ahead of that line.
+  * ([[StageTiming]]). With `explain`, the query's own plan runs once
+  * more after the timed window, untimed and uncounted (the timed
+  * `count()` plans and runs a separate aggregate over it), and its
+  * formatted plan, with AQE's `== Final Plan ==`, is printed ahead of
+  * that line.
   *
   *   sbt "runMain graft.Profile /root/testdata/sf0.1 explain q_candidates"
   */
@@ -22,7 +25,11 @@ object Profile {
     runner(names)((_, df) => (df.count(), df)).foreach { r =>
       val rows = r.outcome match {
         case Completed((n, df)) =>
-          if (explain) { println(s"==== ${r.name} plan"); df.explain("formatted") }
+          if (explain) {
+            df.queryExecution.toRdd.foreach(_ => ())
+            println(s"==== ${r.name} plan")
+            df.explain("formatted")
+          }
           s"rows=$n"
         case Refused(msg) => s"REFUSED: $msg"
         case Failed(msg) => s"FAILED: $msg"

@@ -73,8 +73,8 @@ object ScaleGen {
   /** Column form of [[mutateEmbedding]] for the crossJoin replicator
     * (`embedonly` mode): the replica index is the `rep` COLUMN instead
     * of a literal, so one crossJoin with `range(n)` replaces an n-leg
-    * union — the union plan is fine at n ≤ 100 but the >2.1M-vector
-    * product-regime anchor needs n ≈ 1200 (r13, VERDICT r12 #2).
+    * union — the union plan is fine at n ≤ 100 but the 2.4M-vector
+    * recall anchor needs n ≈ 1200 (r13, SCALING.md Round 13).
     * Bit-compatible with [[mutateEmbedding]]: `xxhash64(vec_id, rep, …)`
     * over a long column equals the literal form's value for the same
     * (vec_id, i), so an `embedonly` dir plants the identical structure.
@@ -166,7 +166,7 @@ object ScaleGen {
 
     // embedonly: write ONLY the embeddings table, replicated by a
     // crossJoin with range(n) under the neardup mutation — the form that
-    // scales to the product-regime anchor (n ≈ 1200 → 2.4M vectors)
+    // scales to the 2.4M-vector recall anchor (n ≈ 1200)
     if (modes.contains("embedonly")) {
       val base = spark.read.parquet(s"$src/embeddings.parquet")
       val out = base.crossJoin(spark.range(0, n).select(col("id").as("rep")))

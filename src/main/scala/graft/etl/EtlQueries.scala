@@ -326,8 +326,11 @@ object EtlQueries {
          |${Splits.duckNegativeSampleCte(subsetWhere)}
          |SELECT user_id, domain, item_id, rn FROM negs
          |ORDER BY user_id, domain, rn""".stripMargin) { (spark, d) =>
+      // the output is bounded (SLICE_N users × domains × NUM_NEG rows):
+      // one partition sorts it, where a range exchange would re-run the
+      // whole sampler in its sampling job
       Splits.negativeSampleExact(Interactions(spark, d), SLICE_N)
-        .orderBy("user_id", "domain", "rn")
+        .repartition(1).sortWithinPartitions("user_id", "domain", "rn")
     },
 
     // ---- scalable rejection-sampled negatives, all users (100 TB path,

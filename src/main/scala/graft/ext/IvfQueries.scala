@@ -438,29 +438,19 @@ object IvfQueries {
        |ORDER BY c.cent_id, c.i""".stripMargin
   }
 
+  /** The distributed Lloyd trainer behind q_kmeans and the pair-mining
+    * codebook ([[pairFlatCents]]): h60-seeded, [[KM_ITERS]] integer-exact
+    * iterations over every non-empty vector of the corpus.
+    */
   private def kmeans(spark: org.apache.spark.sql.SparkSession, d: String,
       k: Int): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    kmeansVecs(spark, Tables.embeddings(spark, d)
+    val fixed = Tables.embeddings(spark, d)
       .filter(size(col("embedding")) > 0)
       .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
-      .as[(Long, Array[Long])], k)
-  }
-
-  /** The distributed Lloyd trainer over an EXPLICIT (vec_id, fixed-point
-    * vector) dataset — [[kmeans]] is the full-embedding instance; the
-    * r12 pair-mining product quantizer trains one codebook per vector
-    * HALF through the same machinery (seeds, iteration count, integer
-    * arithmetic all identical, so half-codebooks inherit q_kmeans'
-    * determinism argument).
-    */
-  private def kmeansVecs(spark: org.apache.spark.sql.SparkSession,
-      vecsIn: org.apache.spark.sql.Dataset[(Long, Array[Long])],
-      k: Int): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val vecs = vecsIn
-      .repartition(spark.sparkContext.defaultParallelism)
-    val seeds = vecsIn.toDF("vec_id", "e")
+    val vecs = fixed.repartition(spark.sparkContext.defaultParallelism)
+      .as[(Long, Array[Long])]
+    val seeds = fixed
       .orderBy(Hashing.h60(col("vec_id"), lit("km")), col("vec_id"))
       .limit(k)
       .as[(Long, Array[Long])].collect()
@@ -538,11 +528,7 @@ object IvfQueries {
     * uses strict comparisons and ascending-id iteration, so equal
     * distances keep the smaller id, as the oracle's window order does.
     */
-  private def bestC(e: Array[Long], c: Cents, n: Int): Array[Int] =
-    bestWithDist(e, c, n)._1
-
-  private def bestWithDist(e: Array[Long], c: Cents,
-      n: Int): (Array[Int], Array[Long]) = {
+  private def bestC(e: Array[Long], c: Cents, n: Int): Array[Int] = {
     val m = math.min(n, c.size)
     val ids = new Array[Int](m)
     val ds = new Array[Long](m)
@@ -569,14 +555,14 @@ object IvfQueries {
       }
       ci += 1
     }
-    (ids, ds)
+    ids
   }
 
   /** JIT warm-up for the compiled centroid loops (r13, VERDICT r12 #3):
     * Bench runs this once, untimed, before its timed loop so the first
     * IVF build lines (q_sim_index_build / q_dedup_index_build run FIRST
     * in harness order) stop absorbing the interpreter→C2 ramp of
-    * [[bestWithDist]]/[[probeCells]] — the r12 judge-run bench measured
+    * [[bestC]] — the r12 judge-run bench measured
     * them at 37.3/30.4s cold vs the builder's 15.3/11.5s warm on the
     * same HEAD, and local-mode executor threads share the driver JVM's
     * JIT state, so a driver-side warm covers the task closures too.
@@ -591,8 +577,6 @@ object IvfQueries {
     }
     val dim = 64
     val c = compile((1 to 256).map(ci => (ci, Array.fill(dim)(next()))))
-    val kHalf = 16
-    val ch = compile((1 to kHalf).map(ci => (ci, Array.fill(dim / 2)(next()))))
     val e = new Array[Long](dim)
     var i = 0
     var sink = 0L
@@ -600,23 +584,12 @@ object IvfQueries {
       var j = 0
       while (j < dim) { e(j) = next(); j += 1 }
       sink += bestC(e, c, 8)(0)
-      sink += probeCells(e, ch, ch, kHalf, 4)(0)
       i += 1
     }
     // the sink keeps the loop observable so it cannot be eliminated
     require(sink != Long.MinValue)
   }
 
-  /** One-refinement IVF centroid trainer with the training POPULATION
-    * parameterized (`trainWhere`) — [[build]] trains on the whole corpus,
-    * the incremental-maintenance query on the index slice only. The
-    * sample is COUNT-bounded and deterministic: sort by h60(vec_id) +
-    * LIMIT executes as a distributed TakeOrderedAndProject, so at most
-    * k·256 rows reach the driver — O(1) memory in corpus size. All
-    * arithmetic matches the oracle SQL bit-for-bit: integer distances,
-    * double division + HALF_UP for the refined centroids. Empty training
-    * slice → empty Seq (the oracle CTEs produce the same empty relation).
-    */
   /** Nearest-centroid assignment of a corpus slice: one narrow pass
     * against the broadcast centroid table, (vec_id, cent_id) out.
     */
@@ -666,6 +639,16 @@ object IvfQueries {
     (centsT, cents, assignT)
   }
 
+  /** One-refinement IVF centroid trainer with the training POPULATION
+    * parameterized (`trainWhere`) — [[build]] trains on the whole corpus,
+    * the incremental-maintenance query on the index slice only. The
+    * sample is COUNT-bounded and deterministic: sort by h60(vec_id) +
+    * LIMIT executes as a distributed TakeOrderedAndProject, so at most
+    * k·256 rows reach the driver — O(1) memory in corpus size. All
+    * arithmetic matches the oracle SQL bit-for-bit: integer distances,
+    * double division + HALF_UP for the refined centroids. Empty training
+    * slice → empty Seq (the oracle CTEs produce the same empty relation).
+    */
   private def refinedCentroids(spark: org.apache.spark.sql.SparkSession,
       d: String, k: Int, trainWhere: String = "true"): Seq[(Int, Array[Long])] = {
     import spark.implicits._
@@ -754,61 +737,40 @@ object IvfQueries {
     * when generating near-dup candidate pairs (its HOME cell is always
     * rank 1, so identical vectors are never missed). Recall at a given
     * cosine rises with nprobe; candidate mass rises linearly in it.
-    * The flat regime's EFFECTIVE probe count is count-derived —
+    * The EFFECTIVE probe count is count-derived —
     * [[pairNprobeFor]] (r13) steps it up as cells shrink.
     */
   val PAIR_NPROBE = 8
 
-  /** Target mean vectors per cell for pair mining (r12, VERDICT r11
-    * #2): the join mass is ≈ nprobe·n·occupancy, so holding occupancy
-    * fixed holds mass LINEAR in n — the r11 flat quantizer was pinned
-    * to k ≈ √n (occupancy √n, mass nprobe·n^1.5) only because its
-    * boxed assignment loop made n·k·dim passes unaffordable; with the
+  /** Target mean vectors per cell for pair mining (r12): the join mass
+    * is ≈ nprobe·n·occupancy, so holding occupancy fixed holds mass
+    * LINEAR in n — the r11 flat quantizer was pinned to k ≈ √n
+    * (occupancy √n, mass nprobe·n^1.5) only because its boxed
+    * assignment loop made n·k·dim passes unaffordable; with the
     * compiled loops the pass is ~2 s per 10¹¹ mults, so k can follow
-    * n / occ up to [[PAIR_FLAT_MAX_K]].
-    *
-    * Past the flat cap the PRODUCT (two-half multi-index) codebook
-    * takes over: k_eff = K² cells at n·2K·(dim/2) = n·K·dim assignment
-    * cost, so the cell count keeps following n / occ with the
-    * assignment term growing only as n·√(n/occ)·dim. The product form
-    * is NOT free — measured at sf1nd (r12 sweep, equal
-    * ~12.6 M candidate mass, nprobe 8): product recall 0.764/0.322 in
-    * the [0.6,0.9)/[0.4,0.6) bands vs the flat arm's 0.962/0.504 (the
-    * full sweep is SCALING.md's r12 table) — the half-split costs cell
-    * geometry, bought back with [[PAIR_NPROBE_PRODUCT]] probes. That
-    * price is why the flat regime stays the default wherever its
-    * assignment pass is affordable.
+    * n / occ up to [[PAIR_FLAT_MAX_K]] (SCALING.md, Round 12).
     */
   val PAIR_TARGET_OCC = 128L
   val PAIR_MIN_K = 16
 
-  /** Flat-regime cell cap — RAISED 16384 → 65536 in r13 on an
-    * at-regime measurement (VERDICT r12 #3): the two-half product
-    * codebook that took over past the old cap was dialed at 20k vectors
-    * by forced ablation (mid-band 0.965 at nprobe 32), but measured AT
-    * its actual activation scale (2.4M vectors, planted anchor —
-    * SCALING.md r13) it recalls only 0.52 of the planted [0.6,0.9)
-    * band and 0.11 of [0.4,0.6) at the same dial — the half-split
-    * geometry loss compounds with at-scale cell shrink, and the 20k
-    * number did not transfer. A FLAT assignment pass at the new cap's
-    * regime edge (n = cap·occ ≈ 8.4M, n·k·dim ≈ 3×10¹³ mults) is
-    * minutes on one 32-core box and embarrassingly parallel on a
-    * cluster, so the flat regime — whose recall is measured to hold at
-    * 2.4M (planted mid 0.99 at flat nprobe 16) — now covers to ~8.4M
-    * vectors, aligning the product switchover with the 10M corpus
-    * broadcast ceiling where every other vector path re-plans anyway
-    * (made literal in r14 — see [[pairUseProduct]]: the r13 guess that
-    * ≥8.4M product recall "lands between the 2.4M row and the flat
-    * arm's" measured at the 8.4M un-forced anchor as mid 0.4259,
-    * BELOW the claimed bound, so the flat arm now carries to the
-    * ceiling at drifting occupancy and the residual/two-level
-    * quantizer is the recorded r15 task for the >10M regime).
+  /** Flat cell cap: occupancy holds at [[PAIR_TARGET_OCC]] up to
+    * n = cap·occ ≈ 8.4M vectors, where the assignment pass is
+    * n·k·dim ≈ 3×10¹³ mults — minutes on one 32-core box and
+    * embarrassingly parallel on a cluster. Past it k stays capped and
+    * occupancy (so candidate mass per vector) grows with n. The flat
+    * codebook is the one pair-mining quantizer at every corpus size:
+    * planted mid-band recall 0.987 at 2.4M vectors, where the two-half
+    * product codebook it replaced recalled 0.525 at equal candidate
+    * mass and 0.426 at 8.4M (SCALING.md, Round 13 and Round 14 tables;
+    * Round 19 records the deletion). A residual two-level quantizer is
+    * the recorded task for the regime past the cap, to ship only with
+    * its own measured crossover.
     */
   val PAIR_FLAT_MAX_K = 65536
-  val PAIR_HALF_MAX_K = 4096
 
   /** Smallest power-of-two k with k·occ ≥ n (expected occupancy at or
-    * below target), capped — the FLAT regime's cell count.
+    * below target), capped at [[PAIR_FLAT_MAX_K]] — the pair-mining
+    * codebook's cell count.
     */
   def pairFlatKFor(n: Long): Int = {
     var k = PAIR_MIN_K
@@ -816,9 +778,9 @@ object IvfQueries {
     k
   }
 
-  /** Count-derived pair-mining probe count for the FLAT regime (r13,
-    * VERDICT r12 #1): fixed-occupancy cells shrink as the corpus grows,
-    * so weak-band pair recall decays at fixed nprobe. Measured against
+  /** Count-derived pair-mining probe count (r13): fixed-occupancy cells
+    * shrink as the corpus grows, so weak-band pair recall decays at
+    * fixed nprobe. Measured against
     * EXACT all-pairs anchors (union path — SCALING.md r13 table):
     * 20k vectors (k=256) 0.548 @8; 60k (k=512) 0.406 @8 / 0.550 @16;
     * 200k (k=2048) 0.217 @8 / 0.315 @16 / 0.386 @24. The dial steps
@@ -843,55 +805,20 @@ object IvfQueries {
   def pairNprobeFor(n: Long): Int =
     if (pairFlatKFor(n) <= 256) PAIR_NPROBE else 16
 
-  /** The regime switch — moved from the flat cap's occupancy edge
-    * (k·occ ≈ 8.39M) to the LITERAL corpus-broadcast ceiling in r14,
-    * on the second at-regime falsification in two rounds: r13's claim
-    * that ≥8.4M product recall "lands between the 2.4M forced row
-    * (mid 0.525) and the flat arm's (0.987)" measured at the 8.4M
-    * un-forced anchor as mid 0.4259 / weak 0.059 / strong 0.9808
-    * (SCALING.md r14) — BELOW the claimed lower bound: the K² cell
-    * jump (kHalf 512 → 262144 cells) drops occupancy to 32, 4× under
-    * target, and the half-split geometry loss compounds again. The
-    * 8.39M–10M stretch now ships the FLAT codebook at its own design
-    * point instead (k capped at [[PAIR_FLAT_MAX_K]], occupancy
-    * drifting 128 → 153 — bracketed by flat measurements at occ 97 /
-    * mid 0.9963 (200k) and occ 73 / mid 0.987 (2.4M); the ~3.5×10¹³-
-    * mult assignment pass this admits is the same cost the cap raise
-    * already priced). Past the ceiling the product form remains the
-    * only sub-(n·k·dim) option and its at-regime numbers above are
-    * its honest contract — replacing it with a RESIDUAL two-level
-    * quantizer (coarse flat cells + shared sub-codebook over cell
-    * residuals: k_eff = k1·k2 data-adaptive cells at n·(k1+k2)·dim
-    * assignment cost, no half-split independence assumption) is the
-    * recorded next-round task, with the 8.4M anchor as its
-    * acceptance bar.
-    */
-  def pairUseProduct(n: Long): Boolean =
-    n > Limits.corpusBroadcast
-
-  /** Per-half codebook size for the product regime: smallest power of
-    * two K with K² product cells holding ≤ [[PAIR_TARGET_OCC]] vectors
-    * each in expectation. The cap bounds the assignment pass at
-    * n·4096·dim — good to ~2×10⁹ vectors at occupancy 128.
-    */
-  def pairHalfKFor(n: Long): Int = {
-    var k = PAIR_MIN_K
-    while (k < PAIR_HALF_MAX_K && k.toLong * k * PAIR_TARGET_OCC < n) k *= 2
-    k
-  }
-
-  // codebooks are deterministic (h60-seeded Lloyd over each half) and
-  // cost KM_ITERS corpus passes per half — memoize per (dir, k) so
-  // q_dedup_embed and q_dedup_embed_cluster train once. Registered as
-  // Memo OBJECT entries (r13, VERDICT r12 #4: the r12 TrieMaps lived
-  // outside Memo accounting — never released by Memo.release(sfDir),
-  // invisible to the byte budget and telemetry); bytes = the flat
-  // centroid arrays' exact size, LRU-evictable like any DataFrame entry.
+  // the codebook is deterministic (h60-seeded Lloyd) and costs KM_ITERS
+  // corpus passes — memoize per (dir, k) so q_dedup_embed,
+  // q_dedup_embed_cluster and the hard-negative mine train once.
+  // Registered as a Memo OBJECT entry (r13): released with its dir,
+  // counted by the byte budget and telemetry; bytes = the flat centroid
+  // arrays' exact size, LRU-evictable like any DataFrame entry.
 
   private def centsBytes(c: Cents): Long = c.flat.length * 8L + c.ids.length * 4L
 
-  /** Flat-regime codebook over the FULL corpus, distributed Lloyd —
-    * same trainer and caching contract as [[pairCodebooks]].
+  /** The pair-mining codebook over the FULL corpus, trained by the
+    * distributed [[kmeans]] (the driver holds k·dim aggregate rows
+    * only). Training on the full corpus keeps it valid for any SLICE a
+    * caller mines over (the representative factorings' distinct-vector
+    * slices have identical geometry — dedup removes mass, not support).
     */
   private def pairFlatCents(spark: org.apache.spark.sql.SparkSession,
       d: String, k: Int): Cents =
@@ -907,112 +834,28 @@ object IvfQueries {
         })
     }
 
-  /** The two per-half codebooks, trained on the FULL corpus via the
-    * DISTRIBUTED Lloyd trainer ([[kmeansVecs]] — the machinery behind
-    * q_kmeans, driver holds k·dim aggregate rows only). Training on the
-    * full corpus keeps the codebooks valid for any SLICE a caller mines
-    * over (the representative factoring's distinct-vector slice has
-    * identical geometry — dedup removes mass, not support).
-    */
-  private def pairCodebooks(spark: org.apache.spark.sql.SparkSession,
-      d: String, kHalf: Int): (Cents, Cents) =
-    graft.Memo.cachedObj(spark, d, s"sim.pairCodebooks.k$kHalf",
-        (p: (Cents, Cents)) => centsBytes(p._1) + centsBytes(p._2)) {
-      import spark.implicits._
-      val vecs = Tables.embeddings(spark, d)
-        .filter(size(col("embedding")) > 0)
-        .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
-        .as[(Long, Array[Long])]
-      def train(lo: Boolean): Cents = {
-        val hv = vecs.map { case (v, e) =>
-          val d1 = e.length / 2
-          (v, if (lo) java.util.Arrays.copyOfRange(e, 0, d1)
-          else java.util.Arrays.copyOfRange(e, d1, e.length))
-        }
-        compile(kmeansVecs(spark, hv, kHalf)
-          .select(col("cent_id"), col("i"), col("c"))
-          .as[(Int, Int, Long)].collect()
-          .groupBy(_._1).toSeq.map { case (ci, rows) =>
-            val c = new Array[Long](rows.map(_._2).max)
-            rows.foreach { case (_, i, v) => c(i - 1) = v }
-            (ci, c)
-          })
-      }
-      (train(lo = true), train(lo = false))
-    }
-
-  /** Product-cell id of the two per-half ids (K ≤ 4096 so the encoding
-    * is collision-free in a Long).
-    */
-  private def cellId(c1: Int, c2: Int, kHalf: Int): Long =
-    c1.toLong * (kHalf + 1) + c2
-
-  /** The [[PAIR_NPROBE]] nearest product cells by d²(e₁,c₁) + d²(e₂,c₂),
-    * ties by (c1, c2) — rank 1 is always the HOME cell (the sum is
-    * minimized half-wise, and bestWithDist's tie order matches the
-    * lexicographic tie order here). Exactness of the t×t grid: a cell
-    * whose halves rank (r1, r2) has at least max(r1, r2) − 1 cells with
-    * strictly smaller sums, so the true top-nprobe by sum always lies
-    * inside the top-nprobe × top-nprobe grid.
-    */
-  private def probeCells(e: Array[Long], cb1: Cents, cb2: Cents,
-      kHalf: Int, nprobe: Int): Array[Long] = {
-    val d1 = cb1.dim
-    val e1 = java.util.Arrays.copyOfRange(e, 0, d1)
-    val e2 = java.util.Arrays.copyOfRange(e, d1, e.length)
-    val (i1, s1) = bestWithDist(e1, cb1, nprobe)
-    val (i2, s2) = bestWithDist(e2, cb2, nprobe)
-    val combos = new Array[(Long, Int, Int)](i1.length * i2.length)
-    var a = 0
-    var w = 0
-    while (a < i1.length) {
-      var b = 0
-      while (b < i2.length) {
-        combos(w) = (s1(a) + s2(b), i1(a), i2(b))
-        w += 1
-        b += 1
-      }
-      a += 1
-    }
-    java.util.Arrays.sort(combos, Ordering.Tuple3[Long, Int, Int])
-    combos.iterator.take(nprobe)
-      .map { case (_, c1, c2) => cellId(c1, c2, kHalf) }.toArray
-  }
-
-  /** Product-regime probe count: the half-split's geometry loss is
-    * bought back with probes (the sf1nd nprobe sweep in SCALING.md's
-    * r12 table set this).
-    */
-  val PAIR_NPROBE_PRODUCT = 32
-
-  /** DIRECTED ANN candidates (query → corpus) within probed flat-IVF
-    * cells — the hard-negative mining generator (r13, VERDICT r12 #6):
-    * each query-slice vector probes its `nprobe` nearest cells and meets
-    * every corpus vector HOMED there; the caller label-filters and
-    * exact-cosine top-K ranks. Mass = nprobe·|Q|·occupancy (occupancy is
-    * the fixed [[PAIR_TARGET_OCC]]), vs the banded mine's Σ|q∩bucket|·
-    * |bucket|. The recall trade vs the banded generator is measured on
-    * exact-anchored dirs in SCALING.md's r13 table — hard negatives live
-    * at the high-cosine end, where the data-adaptive cells recall ≥0.96
-    * and sign-LSH bands recall ~0.45.
+  /** The one flat cell join under both ANN candidate generators: every
+    * `probe` vector meets every `home` vector HOMED in one of its
+    * `nprobe` nearest cells of the [[pairFlatCents]] codebook (dialed by
+    * the corpus count `n` through [[pairFlatKFor]], trained inside the
+    * `stage` timing), as directed (query_id, vec_id) rows, self pairs
+    * dropped. Given one relation as both sides (the pair mine), the
+    * home side's exchange plans as a ReusedExchange of the probe side's.
     *
-    * The slices are EXPLICIT because the hard-negative representative
-    * factoring mines over one row per distinct (vector, label) group on
-    * each side. `n` is the CORPUS count: the cell dial and the codebook
-    * (trained on the full corpus, Memo-cached per (dir, k) — shared with
-    * the near-dup pair arm) stay
-    * the corpus's, so group members land in exactly the cells their rep
-    * does and the rep-level candidate relation is precisely the dedup of
-    * the unfactored one — the row-EQUALITY contract the banded factoring
-    * proved transfers verbatim (ExtSpec).
+    * The home side joins as a BROADCAST under the corpus ceiling: a
+    * shuffled join here gets AQE-coalesced to ~1 partition (both INPUTS
+    * are a few MB — AQE cannot see the 400× fan-out) and the whole
+    * candidate stream then runs single-threaded (SCALING.md, Round 11).
+    * Past the ceiling the exchange is forced wide by salting the home
+    * side (home×S replicas, probes salted by hash(query_id)) so a hot
+    * cell spreads over S tasks — same rows either way.
     */
-  private[ext] def annQueryCandidatesFrom(
-      spark: org.apache.spark.sql.SparkSession, d: String,
-      qEmb: org.apache.spark.sql.DataFrame,
-      cEmb: org.apache.spark.sql.DataFrame, n: Long,
-      nprobe: Int): org.apache.spark.sql.DataFrame = {
+  private def flatCellJoin(spark: org.apache.spark.sql.SparkSession,
+      d: String, stage: String, probe: org.apache.spark.sql.DataFrame,
+      home: org.apache.spark.sql.DataFrame, n: Long, nprobe: Int)
+      : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val cents = graft.StageTiming.timed("hardneg/ivf-train") {
+    val cents = graft.StageTiming.timed(stage) {
       pairFlatCents(spark, d, pairFlatKFor(n))
     }
     if (cents.size == 0)
@@ -1023,123 +866,88 @@ object IvfQueries {
       .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
       .repartition(spark.sparkContext.defaultParallelism)
       .as[(Long, Array[Long])]
-    val home = fixed(cEmb).mapPartitions { it =>
+    val homes = fixed(home).mapPartitions { it =>
       val cs = bc.value
       it.map { case (v, e) => (v, bestC(e, cs, 1)(0).toLong) }
     }.toDF("vec_id", "cell")
-    val probes = fixed(qEmb).mapPartitions { it =>
+    val probes = fixed(probe).mapPartitions { it =>
       val cs = bc.value
       it.flatMap { case (v, e) =>
         bestC(e, cs, nprobe).iterator.map(c => (v, c.toLong)) }
     }.toDF("query_id", "cell")
-    // same broadcast-vs-salted join shape as probePairCandidates
     val joined =
       if (n <= Limits.corpusBroadcast)
-        probes.join(broadcast(home), "cell")
+        probes.join(broadcast(homes), "cell")
       else {
         val s = spark.sparkContext.defaultParallelism
         probes.withColumn("salt", pmod(hash(col("query_id")), lit(s)))
-          .join(home.withColumn("salt",
+          .join(homes.withColumn("salt",
             explode(lit((0 until s).toArray))), Seq("cell", "salt"))
       }
     joined
       .filter(col("query_id") =!= col("vec_id"))
-      .select("query_id", "vec_id").distinct()
+      .select("query_id", "vec_id")
   }
 
+  /** DIRECTED ANN candidates (query → corpus) within probed flat-IVF
+    * cells — the hard-negative mining generator (r13): each query-slice
+    * vector probes its `nprobe` nearest cells and meets every corpus
+    * vector HOMED there ([[flatCellJoin]]); the caller label-filters and
+    * exact-cosine top-K ranks. Mass = nprobe·|Q|·occupancy, vs the
+    * banded mine's Σ|q∩bucket|·|bucket|. The recall trade vs the banded
+    * generator is measured on exact-anchored dirs in SCALING.md's r13
+    * table — hard negatives live at the high-cosine end, where the
+    * data-adaptive cells recall ≥0.96 and sign-LSH bands recall ~0.45.
+    *
+    * The slices are EXPLICIT because the hard-negative representative
+    * factoring mines over one row per distinct (vector, label) group on
+    * each side. `n` is the CORPUS count: the cell dial and the codebook
+    * (shared with the near-dup pair arm) stay the corpus's, so group
+    * members land in exactly the cells their rep does and the rep-level
+    * candidate relation is precisely the dedup of the unfactored one —
+    * the row-EQUALITY contract the banded factoring proved transfers
+    * verbatim (ExtSpec).
+    */
+  private[ext] def annQueryCandidatesFrom(
+      spark: org.apache.spark.sql.SparkSession, d: String,
+      qEmb: org.apache.spark.sql.DataFrame,
+      cEmb: org.apache.spark.sql.DataFrame, n: Long,
+      nprobe: Int): org.apache.spark.sql.DataFrame =
+    flatCellJoin(spark, d, "hardneg/ivf-train", qEmb, cEmb, n, nprobe)
+      .distinct()
+
   /** IVF multi-probe candidate PAIRS — the weak-band near-dup generator
-    * (r11, VERDICT r10 #3; r12: product quantizer, see
-    * [[PAIR_TARGET_OCC]]). Sign-LSH banding is theorem-bound to miss the
-    * cos ∈ [0.4, 0.9) band (sub-quadratic Σbucket² forces p^bits ≪ 1 —
-    * see SimilarityQueries.bandedCandidates), but a data-adaptive
-    * Voronoi quantizer has no such bound: a pair at cosine τ is found
-    * whenever either side's HOME cell is among the other's
-    * [[PAIR_NPROBE]] nearest cells, which depends on cell geometry, not
-    * on a per-plane agreement probability. Every returned pair is
-    * exact-cosine verified downstream (precision 1, same contract as
-    * the banded arm). Recall is MEASURED per cosine band in SCALING.md's
-    * r11 recall table.
+    * (r11; occupancy-dialed cells since r12, see [[PAIR_TARGET_OCC]]).
+    * Sign-LSH banding is theorem-bound to miss the cos ∈ [0.4, 0.9) band
+    * (sub-quadratic Σbucket² forces p^bits ≪ 1 — see
+    * SimilarityQueries.bandedCandidates), but a data-adaptive Voronoi
+    * quantizer has no such bound: a pair at cosine τ is found whenever
+    * either side's HOME cell is among the other's [[pairNprobeFor]]
+    * nearest cells, which depends on cell geometry, not on a per-plane
+    * agreement probability. Every returned pair is exact-cosine
+    * verified downstream (precision 1, same contract as the banded
+    * arm). Recall is MEASURED per cosine band in SCALING.md's r11–r14
+    * recall tables.
     *
     * `embDf` holds `n` vectors: the corpus, or the representative
-    * factoring's one-row-per-distinct-vector slice (r12, VERDICT r11
-    * #1a). The cell dial follows `n` while the codebooks train on the
-    * full corpus (cached per (dir, K)).
+    * factoring's one-row-per-distinct-vector slice (r12). The cell dial
+    * follows `n` while the codebook trains on the full corpus.
+    *
+    * The relation meets itself in [[flatCellJoin]], which covers both
+    * directions of each unordered pair (a finds b if home(b) ∈ probe(a);
+    * b finds a symmetrically); the tail orders each pair and runs NO
+    * pre-verify distinct: the raw join output at 100× is ~5.8×10⁸ rows,
+    * and a distinct on it is a ~10 GB shuffle, while the downstream
+    * exact-cosine verify is a NARROW broadcast dot (64 mults/row, no
+    * exchange). A pair reaches the verify at most 2·nprobe times; the
+    * caller dedups the ~10³× smaller verified survivors instead
+    * (SCALING.md, Round 11).
     */
   private[ext] def probePairCandidates(
       spark: org.apache.spark.sql.SparkSession, d: String,
       embDf: org.apache.spark.sql.DataFrame, n: Long)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val vecs = embDf
-      .filter(size(col("embedding")) > 0)
-      .select(col("vec_id"), VectorOps.fixedEmbedding.as("e"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, Array[Long])]
-    val (home, probes) =
-      if (pairUseProduct(n)) {
-        val nprobe = PAIR_NPROBE_PRODUCT
-        val kHalf = pairHalfKFor(n)
-        val (cb1, cb2) = graft.StageTiming.timed("embed/ivf-train") {
-          pairCodebooks(spark, d, kHalf)
-        }
-        if (cb1.size == 0 || cb2.size == 0)
-          return spark.emptyDataset[(Long, Long)].toDF("query_id", "vec_id")
-        val bc = spark.sparkContext.broadcast((cb1, cb2))
-        (vecs.mapPartitions { it =>
-          val (c1, c2) = bc.value
-          it.map { case (v, e) => (v, probeCells(e, c1, c2, kHalf, 1)(0)) }
-        }.toDF("vec_id", "cell"),
-          vecs.mapPartitions { it =>
-            val (c1, c2) = bc.value
-            it.flatMap { case (v, e) =>
-              probeCells(e, c1, c2, kHalf, nprobe).iterator.map(c => (v, c)) }
-          }.toDF("p_id", "cell"))
-      } else {
-        val nprobe = pairNprobeFor(n)
-        val cents = graft.StageTiming.timed("embed/ivf-train") {
-          pairFlatCents(spark, d, pairFlatKFor(n))
-        }
-        if (cents.size == 0)
-          return spark.emptyDataset[(Long, Long)].toDF("query_id", "vec_id")
-        val bc = spark.sparkContext.broadcast(cents)
-        (vecs.mapPartitions { it =>
-          val cs = bc.value
-          it.map { case (v, e) => (v, bestC(e, cs, 1)(0).toLong) }
-        }.toDF("vec_id", "cell"),
-          vecs.mapPartitions { it =>
-            val cs = bc.value
-            it.flatMap { case (v, e) =>
-              bestC(e, cs, nprobe).iterator.map(c => (v, c.toLong)) }
-          }.toDF("p_id", "cell"))
-      }
-    // probes ⋈ home covers both directions of each unordered pair
-    // (a finds b if home(b) ∈ probe(a); b finds a symmetrically).
-    // Two measured shapes matter here (SCALING.md r11):
-    //  - NO pre-verify distinct: the raw join output at 100× is
-    //    ~5.8×10⁸ rows, and a distinct on it is a ~10 GB shuffle,
-    //    while the downstream exact-cosine verify is a NARROW
-    //    broadcast dot (64 mults/row, no exchange). A pair reaches
-    //    the verify at most 2·nprobe times; the caller dedups the
-    //    ~10³× smaller verified survivors instead.
-    //  - The home side joins as a BROADCAST under the corpus ceiling:
-    //    a shuffled join here gets AQE-coalesced to ~1 partition
-    //    (both INPUTS are a few MB — AQE cannot see the 400× fan-out)
-    //    and the whole pair stream then runs single-threaded. Past
-    //    the ceiling the exchange is forced wide by salting the home
-    //    side (home×S replicas, probes salted by hash(p_id)) so a
-    //    hot cell spreads over S tasks — same rows either way.
-    val joined =
-      if (n <= Limits.corpusBroadcast)
-        probes.join(broadcast(home), "cell")
-      else {
-        val s = probes.sparkSession.sparkContext.defaultParallelism
-        probes.withColumn("salt", pmod(hash(col("p_id")), lit(s)))
-          .join(home.withColumn("salt",
-            explode(lit((0 until s).toArray))), Seq("cell", "salt"))
-      }
-    joined
-      .filter(col("p_id") =!= col("vec_id"))
-      .select(least(col("p_id"), col("vec_id")).as("query_id"),
-        greatest(col("p_id"), col("vec_id")).as("vec_id"))
-  }
+      : org.apache.spark.sql.DataFrame =
+    flatCellJoin(spark, d, "embed/ivf-train", embDf, embDf, n, pairNprobeFor(n))
+      .select(least(col("query_id"), col("vec_id")).as("query_id"),
+        greatest(col("query_id"), col("vec_id")).as("vec_id"))
 }

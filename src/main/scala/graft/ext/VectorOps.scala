@@ -197,8 +197,8 @@ object VectorOps {
   }
 
   // The pair-mining quantizer's dial lives with its implementation:
-  // IvfQueries.pairHalfKFor — a PRODUCT (two-half) codebook whose cell
-  // count follows n / PAIR_TARGET_OCC, r12 (the flat k ≈ √n pair dial
+  // IvfQueries.pairFlatKFor — a flat codebook whose cell count follows
+  // n / PAIR_TARGET_OCC up to PAIR_FLAT_MAX_K, r12 (the k ≈ √n pair dial
   // that sat here was bound to n^1.5 candidate mass by its own
   // assignment cost).
 

@@ -189,17 +189,12 @@ class ExtSpec extends SparkSpec {
     graft.Memo.release(spark, sf())
     def objEntries = graft.Memo.entries(spark)
       .filter(e => e.startsWith(sf()) && e.contains("sim.pair"))
-    // flat codebook: the query path's candidate plan; product codebook:
-    // the forced product-quantizer arm (fixture size is far below its
-    // regime edge)
+    // the flat codebook: the query path's candidate plan
     def nearDupCandidates() = SimilarityQueries.nearDupCandidates(spark, sf(),
       graft.Tables.embeddings(spark, sf()), VectorOps.corpusSize(spark, sf()))
     nearDupCandidates()
-    Limits.forcing(corpusPast)(IvfQueries.probePairCandidates(spark, sf(),
-      graft.Tables.embeddings(spark, sf()), VectorOps.corpusSize(spark, sf())))
     val after = objEntries
     assert(after.exists(_.contains("sim.pairFlatCents.k")), s"entries: $after")
-    assert(after.exists(_.contains("sim.pairCodebooks.k")), s"entries: $after")
     def builds(sub: String) = graft.Memo.telemetry(spark)
       .filter(t => t._1.startsWith(sf()) && t._1.contains(sub))
       .map(_._3).sum
@@ -233,10 +228,10 @@ class ExtSpec extends SparkSpec {
     assert(lsh.nonEmpty)
     lsh.foreach { case (k, c) =>
       assert(exact.get(k).contains(c), s"LSH pair $k not exact-verified") }
-    // the product-quantizer IVF arm, forced past the corpus ceiling at
-    // fixture size (so its probes ⋈ home runs as the SALTED join) and
-    // run through the same exact verify: precision 1 against the exact set
-    def productArm(d: String) = Limits.forcing(corpusPast) {
+    // the flat IVF arm, forced past the corpus ceiling at fixture size
+    // (so its probes ⋈ home runs as the SALTED join) and run through the
+    // same exact verify: precision 1 against the exact set
+    def flatArmPast(d: String) = Limits.forcing(corpusPast) {
       val cand = IvfQueries.probePairCandidates(spark, d,
         graft.Tables.embeddings(spark, d), VectorOps.corpusSize(spark, d))
       assert(salted(cand), "past the ceiling the pair join must be salted")
@@ -244,10 +239,10 @@ class ExtSpec extends SparkSpec {
         .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b")) ->
           r.getAs[Double]("cos")).toMap
     }
-    val product = productArm(sf())
-    assert(product.nonEmpty)
-    product.foreach { case (k, c) =>
-      assert(exact.get(k).contains(c), s"product-IVF pair $k not exact-verified") }
+    val flat = flatArmPast(sf())
+    assert(flat.nonEmpty)
+    flat.foreach { case (k, c) =>
+      assert(exact.get(k).contains(c), s"flat-IVF pair $k not exact-verified") }
     // identical-vector recall needs identical vectors — the sf0.001
     // fixture has none, so build one: every base vector duplicated
     // under a shifted id. Identical vectors share every band signature,
@@ -277,10 +272,10 @@ class ExtSpec extends SparkSpec {
       assert(dup.get((id, id + OFF)).contains(1.0),
         s"identical pair ($id, ${id + OFF}) missed by the LSH branch") }
     // identical vectors share their home cell, which each one probes
-    val dupProduct = productArm(tmp)
+    val dupFlat = flatArmPast(tmp)
     nonZero.foreach { id =>
-      assert(dupProduct.get((id, id + OFF)).contains(1.0),
-        s"identical pair ($id, ${id + OFF}) missed by the product-IVF arm") }
+      assert(dupFlat.get((id, id + OFF)).contains(1.0),
+        s"identical pair ($id, ${id + OFF}) missed by the flat-IVF arm") }
     graft.Memo.release(spark, tmp)
     graft.Memo.release(spark, sf())
   }
